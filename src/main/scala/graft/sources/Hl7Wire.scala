@@ -98,18 +98,42 @@ object Hl7Wire {
     *                                order/result message)
     *   ADT^A05                    → adt (ImpliedAdt) + infections (ZIF)
     *   ADT^A60                    → allergies (IAM) only
+    *
+    * Every channel is built on its first read and then kept. Building a
+    * channel means constructing its family parser over the tagged input,
+    * and Spark analyses that plan on the spot — for the lambda-heavy lab,
+    * condition and consult parsers this planning-time analysis costs far
+    * more than parsing a small micro-batch. A consumer that reads two
+    * channels (an ADT-only batch reads `adt`, and `dead` only when the
+    * batch holds an unroutable frame) therefore never analyses the other
+    * fifteen parsers, nor the tagging projection when it reads none.
     */
-  final case class RoutedWire(adt: DataFrame, labOrders: DataFrame,
-                              winPathLabs: DataFrame, coPathLabs: DataFrame,
-                              ablLabs: DataFrame, bioConnectLabs: DataFrame,
-                              bankManagerLabs: DataFrame, imagingLabs: DataFrame,
-                              labOrderAcks: DataFrame, flowsheets: DataFrame,
-                              problems: DataFrame, consults: DataFrame,
-                              advanceDecisions: DataFrame,
-                              impliedAdt: DataFrame, infections: DataFrame,
-                              allergies: DataFrame, dead: DataFrame)
+  sealed trait RoutedWire {
+    def adt: DataFrame
+    def labOrders: DataFrame
+    def winPathLabs: DataFrame
+    def coPathLabs: DataFrame
+    def ablLabs: DataFrame
+    def bioConnectLabs: DataFrame
+    def bankManagerLabs: DataFrame
+    def imagingLabs: DataFrame
+    def labOrderAcks: DataFrame
+    def flowsheets: DataFrame
+    def problems: DataFrame
+    def consults: DataFrame
+    def advanceDecisions: DataFrame
+    def impliedAdt: DataFrame
+    def infections: DataFrame
+    def allergies: DataFrame
+    def dead: DataFrame
+  }
 
-  /** @param adtSenderAllowlist when non-empty, ADT frames whose MSH-3
+  /** Route the raw frames in `df`'s `rawCol` into [[RoutedWire]]'s
+    * channels. The call itself analyses no plan: each channel's family
+    * parser is built, and analysed by Spark, on that channel's first
+    * read, so an ADT-only fold pays for the ADT parser alone.
+    *
+    * @param adtSenderAllowlist when non-empty, ADT frames whose MSH-3
     *   sending application is not in the list are dead-lettered instead
     *   of parsed — the reference's `ALLOWED_ADT_SENDER` gate
     *   (IdsOperations.java:62,425-429, constant "EPIC").
@@ -120,7 +144,7 @@ object Hl7Wire {
     val msh = segment(raw, "MSH")
     val msgType = cmp(mshFld(msh, 9), 1)
     val trigger = cmp(mshFld(msh, 9), 2)
-    val tagged = df.withColumn("__t", msgType).withColumn("__g", trigger)
+    lazy val tagged = df.withColumn("__t", msgType).withColumn("__g", trigger)
       .withColumn("__cs", LabFunnel.codingSystem(raw))
     val cs = col("__cs")
 
@@ -155,26 +179,30 @@ object Hl7Wire {
       branch((isOrm || isOrr) && cs === system,
         LabFunnel.parseOrderMessages(_, _, system))
 
-    RoutedWire(
+    new RoutedWire {
       // A60 fans to the allergies channel only (the reference's A60 ADT
       // build throws NotImplemented and is swallowed,
       // IdsOperations.java:493-503); every other ADT trigger parses here.
-      adt = branch(is("ADT") && senderOk && !is("ADT", "A60"), parseAdt),
-      labOrders = branch(r01(LabFunnel.WinPath), parseLabOrders),
-      winPathLabs = branch(r01(LabFunnel.WinPath), LabFunnel.parseWinPathResults),
-      coPathLabs = branch(r01(LabFunnel.CoPath), LabFunnel.parseCoPath),
-      ablLabs = branch(is("ORU", "R30") && cs === LabFunnel.Abl90,
-        LabFunnel.parseAbl90),
-      bioConnectLabs = branch(r01(LabFunnel.BioConnect), LabFunnel.parseBioConnect),
-      bankManagerLabs = branch(r01(LabFunnel.BankManager), LabFunnel.parseBankManager),
-      imagingLabs = branch(r01(LabFunnel.Pacs), LabFunnel.parseImage),
-      labOrderAcks = acksFor(LabFunnel.WinPath)
-        .unionByName(acksFor(LabFunnel.CoPath)),
-      flowsheets = branch(r01(LabFunnel.Flowsheet), parseFlowsheets),
-      problems = branch(is("PPR", "PC1", "PC2", "PC3"), parseProblems),
-      consults = branch(isOrm && cs === LabFunnel.ConsultOrder, parseConsults),
-      advanceDecisions = branch(isOrm && cs === LabFunnel.AdvanceDecision,
-        parseAdvanceDecisions),
+      lazy val adt = branch(is("ADT") && senderOk && !is("ADT", "A60"), parseAdt)
+      lazy val labOrders = branch(r01(LabFunnel.WinPath), parseLabOrders)
+      lazy val winPathLabs =
+        branch(r01(LabFunnel.WinPath), LabFunnel.parseWinPathResults)
+      lazy val coPathLabs = branch(r01(LabFunnel.CoPath), LabFunnel.parseCoPath)
+      lazy val ablLabs = branch(is("ORU", "R30") && cs === LabFunnel.Abl90,
+        LabFunnel.parseAbl90)
+      lazy val bioConnectLabs =
+        branch(r01(LabFunnel.BioConnect), LabFunnel.parseBioConnect)
+      lazy val bankManagerLabs =
+        branch(r01(LabFunnel.BankManager), LabFunnel.parseBankManager)
+      lazy val imagingLabs = branch(r01(LabFunnel.Pacs), LabFunnel.parseImage)
+      lazy val labOrderAcks = acksFor(LabFunnel.WinPath)
+        .unionByName(acksFor(LabFunnel.CoPath))
+      lazy val flowsheets = branch(r01(LabFunnel.Flowsheet), parseFlowsheets)
+      lazy val problems = branch(is("PPR", "PC1", "PC2", "PC3"), parseProblems)
+      lazy val consults =
+        branch(isOrm && cs === LabFunnel.ConsultOrder, parseConsults)
+      lazy val advanceDecisions = branch(
+        isOrm && cs === LabFunnel.AdvanceDecision, parseAdvanceDecisions)
       // the reference also derives an implied ADT (person/visit context)
       // from every ORU^R01 and ORM^O01 (IdsOperations.java:431-460
       // buildAndAddAdtMessage with fromAdtStream=false) — parse failures
@@ -184,10 +212,11 @@ object Hl7Wire {
       // the reference's Hl7MessageIgnoredException throws the WHOLE
       // message away, already-built ADT included (LabFunnel
       // determineCodingSystem; OrderAndResultService.java:49-216).
-      impliedAdt = branch((is("ORU", "R01") || isOrm) && handled, parseAdt),
-      infections = branch(is("ADT", "A05") && senderOk, parseInfections),
-      allergies = branch(is("ADT", "A60") && senderOk, parseAllergies),
-      dead = tagged.withColumn("reason",
+      lazy val impliedAdt =
+        branch((is("ORU", "R01") || isOrm) && handled, parseAdt)
+      lazy val infections = branch(is("ADT", "A05") && senderOk, parseInfections)
+      lazy val allergies = branch(is("ADT", "A60") && senderOk, parseAllergies)
+      lazy val dead = tagged.withColumn("reason",
           when(col("__t").isNull, "unroutable")
             .when(is("ADT") && !senderOk,
               concat(lit("skipped_sender:"), coalesce(sender, lit(""))))
@@ -198,7 +227,8 @@ object Hl7Wire {
               "unknown_coding_system")
             .when(!handled, concat(lit("unhandled_type:"), col("__t"),
               lit("^"), coalesce(col("__g"), lit("")))))
-        .filter(col("reason").isNotNull).drop("__t", "__g", "__cs"))
+        .filter(col("reason").isNotNull).drop("__t", "__g", "__cs")
+    }
   }
 
   /** ADT trigger (MSH-9.2) → interchange operation — the FULL dispatch of

@@ -3,9 +3,12 @@ package graft.streaming
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.graftbridge.CacheBridge
 import graft.kernel.BitemporalKernel
 
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.ByteBuffer
+import java.nio.channels.FileChannel
+import java.nio.file.{Files, Path, Paths, StandardCopyOption, StandardOpenOption}
 import scala.jdk.CollectionConverters._
 
 /** S8/W1: the streaming star-maintenance pipeline — every micro-batch of
@@ -21,7 +24,8 @@ import scala.jdk.CollectionConverters._
   *
   *   stateDir/_CURRENT              → name of the live manifest file
   *   stateDir/manifest-v<N>         → lines `table \t bucket \t relPath`
-  *   stateDir/data/<table>/v<N>/__bucket=<k>/  (parquet files)
+  *   stateDir/data/<table>/v<N>/__bucket=<k>/  (parquet files; a replay
+  *                                of batch N writes v<N>.<n> instead)
   *
   * History is hash-partitioned into `nBuckets` buckets on the key. A
   * micro-batch reads ONLY the buckets its keys hash into, folds them with
@@ -77,11 +81,43 @@ object StarPipeline {
       (b, p) <- buckets.toSeq.sortBy(_._1)
     } yield s"$t\t$b\t$p").mkString("\n")
     Files.createDirectories(Paths.get(cfg.stateDir))
-    Files.write(Paths.get(cfg.stateDir, name), body.getBytes)
-    val tmp = Paths.get(cfg.stateDir, "_CURRENT.tmp")
-    Files.write(tmp, name.getBytes)
-    Files.move(tmp, Paths.get(cfg.stateDir, "_CURRENT"),
+    // a replayed batch id rewrites the very manifest `_CURRENT` names:
+    // replace it by rename, never truncate it in place
+    writeAtomically(Paths.get(cfg.stateDir, name), body.getBytes)
+    writeAtomically(Paths.get(cfg.stateDir, "_CURRENT"), name.getBytes)
+  }
+
+  /** Replace `path` with `bytes` so that a crash or a concurrent reader
+    * sees the old content or the new, never a truncated file: write a
+    * sibling `.tmp`, force it to disk, then rename it over `path`.
+    */
+  private[streaming] def writeAtomically(path: Path, bytes: Array[Byte]): Unit = {
+    val tmp = path.resolveSibling(s"${path.getFileName}.tmp")
+    val ch = FileChannel.open(tmp, StandardOpenOption.CREATE,
+      StandardOpenOption.WRITE, StandardOpenOption.TRUNCATE_EXISTING)
+    try {
+      val buf = ByteBuffer.wrap(bytes)
+      while (buf.hasRemaining) ch.write(buf)
+      ch.force(true)
+    } finally ch.close()
+    Files.move(tmp, path,
       StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+  }
+
+  /** The version dir `tbl` is written to at `batchId`: `v<batchId>`, or
+    * `v<batchId>.<n>` while the manifest still references that name. A
+    * replay of a committed batch id (normal under at-least-once
+    * delivery) reads the very files it would otherwise overwrite, and so
+    * may a reader of the live manifest; the superseded dir is left as an
+    * unreferenced orphan.
+    */
+  private def versionDir(man: Map[String, Map[String, String]], tbl: String,
+                         batchId: Long): String = {
+    val live = man.valuesIterator.flatMap(_.valuesIterator)
+      .map(p => p.substring(0, p.lastIndexOf("/__bucket="))).toSet
+    (Iterator.single(s"data/$tbl/v$batchId") ++
+      Iterator.from(1).map(n => s"data/$tbl/v$batchId.$n"))
+      .find(!live.contains(_)).get
   }
 
   /** Bucket ids present under `stateDir/dir` — ONE directory listing per
@@ -108,8 +144,9 @@ object StarPipeline {
 
   /** Fold one micro-batch into the persisted state. Idempotent on replay
     * (W2): re-folding the same batch produces the same history because
-    * the kernel dedups on (key, validFrom, tie), and the rewrite targets
-    * the same version directories.
+    * the kernel dedups on (key, validFrom, tie); the rewrite goes to
+    * version dirs the current manifest does not reference, and the
+    * manifest swap is a rename, so a reader never sees a partial star.
     *
     * Horizon safety: a batch row with validFrom below the compaction
     * horizon automatically un-compacts its bucket — that bucket's cold
@@ -124,15 +161,15 @@ object StarPipeline {
     val man = readManifest(cfg)
 
     // The batch feeds FOUR actions (bucket probe + three table writes);
-    // its lineage is often an expression-heavy parse — evaluate it once.
+    // its lineage is often an expression-heavy parse — evaluate it once,
+    // and plan the kernel over the cached relation, not that lineage.
     // The kernel's state-sized intermediates are deliberately NOT pinned:
     // the three table writes recompute the fold from the pinned batch +
     // columnar state read, and the two window passes share one
     // exchange+sort, so 3× recompute beats materializing two
     // touched-state-sized caches (measured: pinning them regressed the
     // incremental-fold bench 55%, BENCH_r04→r05 w3).
-    val batch = batch0.persist(
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val batch = CacheBridge.pinned(batch0)
     try {
 
     // Which buckets does this batch touch (≤ nBuckets small longs), and
@@ -173,7 +210,7 @@ object StarPipeline {
         case "live"    => r.live
         case "audit"   => r.audit
       }
-      val vDir = s"data/$tbl/v$batchId"
+      val vDir = versionDir(man, tbl, batchId)
       df.withColumn("__bucket", bucketOf(cfg))
         .write.mode("overwrite").partitionBy("__bucket")
         .parquet(s"${cfg.stateDir}/$vDir")
@@ -191,7 +228,7 @@ object StarPipeline {
         m.getOrElse(s"$tbl.cold", Map.empty) -- coldKeysOf(tbl).keys)
     }
     writeManifest(cfg, newMan, batchId)
-    } finally batch.unpersist(false)
+    } finally batch0.unpersist(false)
   }
 
   // =================================================================
@@ -226,12 +263,11 @@ object StarPipeline {
     val spark = batch0.sparkSession
     val man = readManifest(cfg)
 
-    // probe + stamps + two table writes all read the batch — once. The
-    // kernel's state-sized intermediates are NOT pinned (same measured
-    // trade-off as foldBatch: 2× recompute from the pinned batch beats
-    // materializing touched-state-sized caches).
-    val batch = batch0.persist(
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // probe + stamps + two table writes all read the batch — once, over
+    // its cached relation. The kernel's state-sized intermediates are NOT
+    // pinned (same measured trade-off as foldBatch: 2× recompute from the
+    // pinned batch beats materializing touched-state-sized caches).
+    val batch = CacheBridge.pinned(batch0)
     try {
 
     val lateFlag = compactionHorizon(cfg) match {
@@ -266,7 +302,7 @@ object StarPipeline {
 
     val newMan = BtTables.foldLeft(man) { (m, tbl) =>
       val df = if (tbl == "bt_messages") r.messages else r.table
-      val vDir = s"data/$tbl/v$batchId"
+      val vDir = versionDir(man, tbl, batchId)
       df.withColumn("__bucket", bucketOf(cfg))
         .write.mode("overwrite").partitionBy("__bucket")
         .parquet(s"${cfg.stateDir}/$vDir")
@@ -281,7 +317,7 @@ object StarPipeline {
         m.getOrElse(s"$tbl.cold", Map.empty) -- coldKeysOf(tbl).keys)
     }
     writeManifest(cfg, newMan, batchId)
-    } finally batch.unpersist(false)
+    } finally batch0.unpersist(false)
   }
 
   /** The complete bitemporal version table (hot ∪ cold) — query it with
@@ -347,11 +383,11 @@ object StarPipeline {
       ("bt_table", tblHot, tblCold),
       ("bt_messages", msgHot, msgCold)).foldLeft(man) {
       case (m, (t, hot, coldDf)) =>
-        val hotDir = s"data/$t/v$batchId"
+        val hotDir = versionDir(man, t, batchId)
         hot.withColumn("__bucket", bucketOf(cfg))
           .write.mode("overwrite").partitionBy("__bucket")
           .parquet(s"${cfg.stateDir}/$hotDir")
-        val coldDir = s"data/$t.cold/v$batchId"
+        val coldDir = versionDir(man, s"$t.cold", batchId)
         coldDf.withColumn("__bucket", bucketOf(cfg))
           .write.mode("overwrite").partitionBy("__bucket")
           .parquet(s"${cfg.stateDir}/$coldDir")
@@ -363,10 +399,8 @@ object StarPipeline {
             m.getOrElse(s"$t.cold", Map.empty) ++
               entries(coldDir, s"-$batchId"))
     }
-    val hTmp = Paths.get(cfg.stateDir, "_HORIZON.tmp")
-    Files.write(hTmp, horizonUs.toString.getBytes)
-    Files.move(hTmp, Paths.get(cfg.stateDir, "_HORIZON"),
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+    writeAtomically(Paths.get(cfg.stateDir, "_HORIZON"),
+      horizonUs.toString.getBytes)
     writeManifest(cfg, newMan, batchId)
   }
 
@@ -408,12 +442,12 @@ object StarPipeline {
             case _ => col("valid_until_us") < horizonUs
           }
           val flagged = state.withColumn("__cold", coalesce(closed, lit(false)))
-          val hotDir = s"data/$tbl/v$batchId"
+          val hotDir = versionDir(man, tbl, batchId)
           flagged.filter(!col("__cold")).drop("__cold")
             .withColumn("__bucket", bucketOf(cfg))
             .write.mode("overwrite").partitionBy("__bucket")
             .parquet(s"${cfg.stateDir}/$hotDir")
-          val coldDir = s"data/$tbl.cold/v$batchId"
+          val coldDir = versionDir(man, s"$tbl.cold", batchId)
           flagged.filter(col("__cold")).drop("__cold")
             .withColumn("__bucket", bucketOf(cfg))
             .write.mode("overwrite").partitionBy("__bucket")
@@ -427,15 +461,13 @@ object StarPipeline {
                 entries(coldDir, s"-$batchId"))
       }
     }
-    // Horizon FIRST (tmp + atomic move), then the manifest swap: a crash
+    // Horizon FIRST (forced tmp + atomic move), then the manifest swap: a crash
     // between the two leaves the horizon advanced over an un-compacted
     // manifest, which is safe — foldBatch's late-bucket probe finds no
     // cold entries and reads the still-complete hot tier. The reverse
     // order would let pre-horizon arrivals fold over hot-only state.
-    val hTmp = Paths.get(cfg.stateDir, "_HORIZON.tmp")
-    Files.write(hTmp, horizonUs.toString.getBytes)
-    Files.move(hTmp, Paths.get(cfg.stateDir, "_HORIZON"),
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+    writeAtomically(Paths.get(cfg.stateDir, "_HORIZON"),
+      horizonUs.toString.getBytes)
     writeManifest(cfg, newMan, batchId)
   }
 

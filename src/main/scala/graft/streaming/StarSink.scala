@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.CacheBridge
 import graft.kernel.BitemporalKernel
 
 import java.sql.{Connection, DriverManager}
@@ -311,8 +312,7 @@ final class JdbcStarSink(url: String, star: String = "",
       compute: (DataFrame, Array[Long]) =>
         Seq[(String, DataFrame, Seq[String])]): Unit = {
     if (alreadyCommitted(progressTbl, batchId)) return
-    val batch = batch0.persist(
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val batch = CacheBridge.pinned(batch0)
     try {
       val bucket = pmod(xxhash64(cfg.keyCols.map(col): _*),
         lit(cfg.nBuckets))
@@ -327,7 +327,7 @@ final class JdbcStarSink(url: String, star: String = "",
         (t, df.columns.toSeq, keys)
       }
       swapIn(cfg, staged, touched, progressTbl, batchId)
-    } finally batch.unpersist(false)
+    } finally batch0.unpersist(false)
   }
 
   def fold(batch0: DataFrame, batchId: Long,

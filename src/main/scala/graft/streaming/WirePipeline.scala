@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.CacheBridge
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.operators.{IdentityMerge, LocationVisits, PendingMovements}
 import graft.sources.{Hl7Wire, LabFunnel}
@@ -164,11 +165,17 @@ object WirePipeline {
     // dead-letter write + the star fold, sometimes a progress aggregate
     // too), and the parse is the expensive part of this pipeline —
     // materialize each channel ONCE and let every action read the cache.
+    // Downstream frames are also PLANNED over the cached relation: over
+    // the persisted channel itself, every guard, funnel and kernel step
+    // would be re-analysed over the lambda-heavy parse beneath it, which
+    // takes longer than the fold's Spark jobs. No frame built on
+    // a `mat` leaf may escape this fold: after the `finally` below
+    // unpersists the channels, running one would silently rebuild a
+    // cache that nothing tracks.
     val mats = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     def mat(df: DataFrame): DataFrame = {
-      val p = df.persist(
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      mats += p; p
+      val leaf = CacheBridge.pinned(df)
+      mats += df; leaf
     }
     // valid-time fold, or the stored-stamped bitemporal twin — through
     // the deployment's StarSink (parquet+manifest or RDBMS MERGE)
@@ -411,13 +418,9 @@ object WirePipeline {
         .flatMap(rw => Option(rw.get(0)).map(_.asInstanceOf[Long]))
       newProgress.filter(_ > infStart).foreach { p =>
         java.nio.file.Files.createDirectories(progressPath.getParent)
-        // tmp + ATOMIC_MOVE, matching the state manifest: a crash
+        // forced tmp + ATOMIC_MOVE, matching the state manifest: a crash
         // mid-write must never leave a truncated high-water mark
-        val tmp = progressPath.resolveSibling("_INF_PROGRESS.tmp")
-        java.nio.file.Files.write(tmp, p.toString.getBytes)
-        java.nio.file.Files.move(tmp, progressPath,
-          java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+        StarPipeline.writeAtomically(progressPath, p.toString.getBytes)
       }
       Seq(Hl7Wire.wireToInfectionMessages(gatedInf))
     }

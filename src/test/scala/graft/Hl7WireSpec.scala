@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.sources.Hl7Wire
 
@@ -708,24 +709,28 @@ class Hl7WireSpec extends SparkSpecBase {
       ("Contacted team?", "100", "Yes")))
   }
 
+  /** One frame per router outcome: every family the router fans to
+    * at least once, plus unhandled, unroutable and unknown-coding-system
+    * frames. */
+  private val mixedRaws = Seq(
+    "MSH|^~\\&|EPIC|UCLH|||20240101000000||ADT^A01|R1|P|2.4\rPID|1||1^^^MRN^MRN",
+    "MSH|^~\\&|WP|UCLH|||20240101000000||ORU^R01|R2|P|2.4\rOBR|1||O1^LAB|FBC^F^WinPath|||20240101000000\rOBX|1|NM|HGB||13|g|||||F",
+    "MSH|^~\\&|CV|Vitals|||20240101000000||ORU^R01|R3|P|2.4\rOBX|1|NM|5^HR||80|bpm|||||F",
+    "MSH|^~\\&|EPIC|PL|||20240101000000|X|PPR^PC1|R4|P|2.4\rPRB|AD|20240101000000|A^B^C|9",
+    "MSH|^~\\&|EPIC|Consult Orders|||20240101000000|X|ORM^O01|R5|P|2.4\rORC|NW|7^EPC|||||||20240101000000",
+    "MSH|^~\\&|EPIC|XX|||20240101000000||SIU^S12|R6|P|2.4", // unhandled
+    "no MSH here at all",
+    "MSH|^~\\&|ABL90 FLEX Plus|UCLH|||20240101000000||ORU^R30|R7|P|2.4" +
+      "\rOBR|1|1^A|2^B|VBG^Gas|||20240101000000|||||||20240101000000" +
+      "\rOBX|1|NM|pH^pH||7.4|||||F",
+    "MSH|^~\\&|WP|UCLH|||20240101000000||ORR^O02|R8|P|2.4" +
+      "\rORC|NA|94000010|123456789||||||20240101000000" +
+      "\rOBR|1|94000010|123456789|FBC^F^WinPath|||20240101000000",
+    // order/result with no recognisable coding system
+    "MSH|^~\\&|MYSTERY|UCLH|||20240101000000||ORU^R01|R9|P|2.4\rOBR|1||X|Y^Z")
+
   test("central router fans one mixed stream into family channels") {
-    val raws = Seq(
-      "MSH|^~\\&|EPIC|UCLH|||20240101000000||ADT^A01|R1|P|2.4\rPID|1||1^^^MRN^MRN",
-      "MSH|^~\\&|WP|UCLH|||20240101000000||ORU^R01|R2|P|2.4\rOBR|1||O1^LAB|FBC^F^WinPath|||20240101000000\rOBX|1|NM|HGB||13|g|||||F",
-      "MSH|^~\\&|CV|Vitals|||20240101000000||ORU^R01|R3|P|2.4\rOBX|1|NM|5^HR||80|bpm|||||F",
-      "MSH|^~\\&|EPIC|PL|||20240101000000|X|PPR^PC1|R4|P|2.4\rPRB|AD|20240101000000|A^B^C|9",
-      "MSH|^~\\&|EPIC|Consult Orders|||20240101000000|X|ORM^O01|R5|P|2.4\rORC|NW|7^EPC|||||||20240101000000",
-      "MSH|^~\\&|EPIC|XX|||20240101000000||SIU^S12|R6|P|2.4", // unhandled
-      "no MSH here at all",
-      "MSH|^~\\&|ABL90 FLEX Plus|UCLH|||20240101000000||ORU^R30|R7|P|2.4" +
-        "\rOBR|1|1^A|2^B|VBG^Gas|||20240101000000|||||||20240101000000" +
-        "\rOBX|1|NM|pH^pH||7.4|||||F",
-      "MSH|^~\\&|WP|UCLH|||20240101000000||ORR^O02|R8|P|2.4" +
-        "\rORC|NA|94000010|123456789||||||20240101000000" +
-        "\rOBR|1|94000010|123456789|FBC^F^WinPath|||20240101000000",
-      // order/result with no recognisable coding system
-      "MSH|^~\\&|MYSTERY|UCLH|||20240101000000||ORU^R01|R9|P|2.4\rOBR|1||X|Y^Z")
-    val r = Hl7Wire.route(raws.toDF("raw"), "raw")
+    val r = Hl7Wire.route(mixedRaws.toDF("raw"), "raw")
     assert(r.adt.select("sourceMessageId").as[String].collect().toSeq ==
       Seq("R1"))
     assert(r.labOrders.select("sourceMessageId").as[String].collect()
@@ -751,6 +756,78 @@ class Hl7WireSpec extends SparkSpecBase {
     assert(r.adt.count() + r.labOrders.count() + r.flowsheets.count() +
       r.problems.count() + r.consults.count() + r.ablLabs.count() +
       r.labOrderAcks.count() + r.dead.count() == 10)
+  }
+
+  /** Every channel of [[Hl7Wire.RoutedWire]], in declaration order. */
+  private val channels: Seq[(String, Hl7Wire.RoutedWire => DataFrame)] = Seq(
+    "adt" -> (_.adt), "labOrders" -> (_.labOrders),
+    "winPathLabs" -> (_.winPathLabs), "coPathLabs" -> (_.coPathLabs),
+    "ablLabs" -> (_.ablLabs), "bioConnectLabs" -> (_.bioConnectLabs),
+    "bankManagerLabs" -> (_.bankManagerLabs),
+    "imagingLabs" -> (_.imagingLabs), "labOrderAcks" -> (_.labOrderAcks),
+    "flowsheets" -> (_.flowsheets), "problems" -> (_.problems),
+    "consults" -> (_.consults), "advanceDecisions" -> (_.advanceDecisions),
+    "impliedAdt" -> (_.impliedAdt), "infections" -> (_.infections),
+    "allergies" -> (_.allergies), "dead" -> (_.dead))
+
+  /** Row count + a digest of the schema and the sorted JSON rows. */
+  private def digest(df: DataFrame): (Long, String) = {
+    val rows = df.select(to_json(struct(df.columns.map(col): _*)))
+      .as[String].collect().sorted
+    val sha = java.security.MessageDigest.getInstance("SHA-256")
+      .digest((df.schema.json +: rows).mkString("\n").getBytes("UTF-8"))
+    (rows.length.toLong, sha.take(8).map("%02x".format(_)).mkString)
+  }
+
+  test("router channels are built on first read: reading adt alone " +
+      "analyses no other channel, and every channel keeps its rows") {
+    import org.apache.spark.sql.catalyst.rules.RuleExecutor
+    // analyzer + optimizer rule runs, JVM-wide (suites run one at a time
+    // in the forked test JVM, so nothing else moves this counter)
+    def cost(read: => Any): Long = {
+      val before = RuleExecutor.getCurrentMetrics().numRuns
+      read
+      RuleExecutor.getCurrentMetrics().numRuns - before
+    }
+    val adtOnly = Seq(adtRaw, adtRaw.replace("MSG001", "MSG002")).toDF("raw")
+
+    assert(cost(Hl7Wire.route(adtOnly, "raw")) == 0)
+    val r = Hl7Wire.route(adtOnly, "raw")
+    val adtRuns = cost(r.adt)
+    assert(adtRuns > 0)
+    assert(cost(r.adt) == 0) // built once, then kept
+    // a channel that had been built alongside adt would cost nothing now
+    for ((name, ch) <- channels.tail)
+      assert(cost(ch(r)) > 0, s"$name was built before its first read")
+    val fresh = Hl7Wire.route(adtOnly, "raw")
+    assert(cost(channels.foreach(_._2(fresh))) > adtRuns)
+    assert(r.adt.select("sourceMessageId").as[String].collect().toSeq ==
+      Seq("MSG001", "MSG002"))
+
+    // per-channel (rows, digest) of the mixed stream: building channels
+    // on demand must not change what any of them holds
+    val expected = Map[String, (Long, String)](
+      "adt" -> (1L, "cd106f41571fe518"),
+      "labOrders" -> (1L, "a438642f61ce2f8e"),
+      "winPathLabs" -> (1L, "db20ab78c715fb12"),
+      "coPathLabs" -> (0L, "599fbc9239487fc0"),
+      "ablLabs" -> (1L, "5c38196949fc54ce"),
+      "bioConnectLabs" -> (0L, "71c40fd938c9a180"),
+      "bankManagerLabs" -> (0L, "71c40fd938c9a180"),
+      "imagingLabs" -> (0L, "2642b90018034631"),
+      "labOrderAcks" -> (1L, "36400c92e0cd3859"),
+      "flowsheets" -> (1L, "5fbc839cf00bbc89"),
+      "problems" -> (1L, "d1f90cd77e5cedd1"),
+      "consults" -> (1L, "7ed56f672227fad8"),
+      "advanceDecisions" -> (0L, "cd23f9fa607e69c7"),
+      "impliedAdt" -> (3L, "e1c0b5875f751aea"),
+      "infections" -> (0L, "5b9a6c727ae4484b"),
+      "allergies" -> (0L, "e502f11c4c44683d"),
+      "dead" -> (3L, "089056aab9020eb9"))
+    val mixed = Hl7Wire.route(mixedRaws.toDF("raw"), "raw")
+    // read in reverse: no channel may depend on another having been read
+    for ((name, ch) <- channels.reverse)
+      assert(digest(ch(mixed)) == expected(name), name)
   }
 
   test("missing segments and empty fields degrade to nulls, not errors") {

@@ -5,6 +5,7 @@ import graft.operators.{CascadingDelete, PendingMovements}
 import graft.streaming.{DeadLetter, EffectLog, StarPipeline}
 
 import java.nio.file.Files
+import scala.jdk.CollectionConverters._
 
 case class StarMsg(key: Long, ts_us: Long, msg_id: Long, state: String,
                    value: Double)
@@ -213,6 +214,46 @@ class PipelineSpec extends SparkSpecBase {
     jdbc.foldBitemporal(batch(4), 4L, cfg)
     assert(stageIds() == idsBefore,
       "stage tables were re-created (DDL per batch) instead of truncated")
+  }
+
+  test("replaying the committed batch id swaps its manifest by rename: " +
+      "the star reads back identical and no temp file is left behind") {
+    val stateDir = Files.createTempDirectory("star_replay").toString
+    val cfg = StarPipeline.Config(stateDir, Seq("key"), "ts_us", "msg_id",
+      Seq("state", "value"), nBuckets = 8)
+    val b1 = (1L to 4L).map(k => StarMsg(k, 1000L, k, "a", 1.0)).toDF()
+    val b2 = Seq(StarMsg(1L, 2000L, 10L, "b", 2.0),
+      StarMsg(5L, 1000L, 11L, "a", 1.0)).toDF()
+    StarPipeline.foldBatch(b1, 1L, cfg)
+    StarPipeline.foldBatch(b2, 2L, cfg)
+
+    def star = Seq("history", "live", "audit").map { t =>
+      val df = StarPipeline.readState(spark, cfg, t).get
+      t -> df.select(to_json(struct(df.columns.sorted.map(col): _*)))
+        .as[String].collect().toSeq.sorted
+    }
+    val manifest = java.nio.file.Paths.get(stateDir, "manifest-v2")
+    def fileKey = Files.readAttributes(manifest,
+      classOf[java.nio.file.attribute.BasicFileAttributes]).fileKey()
+    val before = star
+    val keyBefore = fileKey
+
+    // at-least-once delivery: the committed batch arrives again, and its
+    // fold reads the very bucket files it replaces
+    StarPipeline.foldBatch(b2, 2L, cfg)
+    assert(star == before)
+    assert(new String(Files.readAllBytes(
+      java.nio.file.Paths.get(stateDir, "_CURRENT"))) == "manifest-v2")
+    // a new file renamed over the old one, not the old one rewritten in
+    // place (a reader holding `_CURRENT`'s target never sees it truncated)
+    if (keyBefore != null) assert(fileKey != keyBefore)
+
+    StarPipeline.compact(spark, cfg, horizonUs = 1500L, batchId = 3L)
+    assert(StarPipeline.compactionHorizon(cfg).contains(1500L))
+    val walk = Files.walk(java.nio.file.Paths.get(stateDir))
+    val tmps = try walk.iterator().asScala.map(_.getFileName.toString)
+      .filter(_.endsWith(".tmp")).toList finally walk.close()
+    assert(tmps.isEmpty, tmps)
   }
 
   test("W6 compaction: cold split preserves history, folds stay identical") {

@@ -4,6 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.kernel.BitemporalKernel
 
+import java.nio.file.Files
+
 /** Plan-shape regression tests: the SCALING.md claims as assertions.
   * These lock the 100× properties in — a refactor that sneaks a second
   * shuffle into the kernel fold, loses a broadcast, or breaks the
@@ -755,5 +757,78 @@ class PlanShapeSpec extends SparkSpecBase {
       seed = 42L))
     assert(!p.contains("CartesianProduct"), p)
     assert(!p.contains("BroadcastNestedLoopJoin"), p)
+  }
+
+  test("wire family folds hand the kernel a one-node cached relation, " +
+      "not the HL7 parse lineage beneath it") {
+    import org.apache.spark.sql.catalyst.expressions.{ArrayFilter, ArrayTransform}
+    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LogicalPlan}
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    import org.apache.spark.sql.util.QueryExecutionListener
+    import org.scalatest.concurrent.Eventually._
+    import org.scalatest.time.SpanSugar._
+    // the star fold's first action is its touched-bucket probe, an
+    // aggregate (`__late`) directly over the batch the kernel folds
+    val kernelInputs =
+      new java.util.concurrent.ConcurrentLinkedQueue[LogicalPlan]()
+    @volatile var flushed = false
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, d: Long): Unit =
+        qe.analyzed match {
+          case a: Aggregate if a.aggregateExpressions.exists(_.name == "__late") =>
+            kernelInputs.add(a.child)
+          case a: Aggregate if a.aggregateExpressions.exists(_.name == "__flush") =>
+            flushed = true
+          case _ =>
+        }
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    val pv1 = (Seq("PV1", "1", "I", "W^R^B") ++ Seq.fill(15)("") :+ "V1")
+      .mkString("|")
+    val batch = Seq(
+      "MSH|^~\\&|EPIC|UCLH|||20240101080000||ADT^A01|P1|P|2.4\r" +
+        "PID|1||M1^^^MRN^MRN\r" + pv1,
+      "MSH|^~\\&|WP|UCLH|||20240101090000||ORU^R01|P2|P|2.4\r" +
+        "PID|1||M2^^^MRN^MRN\r" +
+        "OBR|1||ORD1^LAB|FBC^FBC^WinPath|||20240101090000\r" +
+        "OBX|1|NM|HGB||13.5|g/dL|||||F",
+      "MSH|^~\\&|EPIC|Problem List|||20240101100000|X|PPR^PC1|P3|P|2.4\r" +
+        "PID|1||M3^^^MRN^MRN\r" + pv1 + "\r" +
+        "PRB|AD|20240101100000|C1^Asthma^I10UK|700|||20240101100000")
+      .toDF("raw")
+    spark.listenerManager.register(listener)
+    try {
+      for (bt <- Seq(false, true))
+        graft.streaming.WirePipeline.foldBatch(batch, 1L, "raw",
+          Files.createTempDirectory("plan_kernel_in").toString,
+          bitemporal = bt)
+      // the listener bus delivers in order: once this marker arrives,
+      // every fold action before it has been seen
+      spark.range(1).agg(max(col("id")).as("__flush")).collect()
+      eventually(timeout(30.seconds))(assert(flushed))
+    } finally spark.listenerManager.unregister(listener)
+
+    import scala.jdk.CollectionConverters._
+    val inputs = kernelInputs.asScala.toSeq
+    // adt, labs, conditions and condition_visits, in both modes
+    assert(inputs.size == 8, inputs.map(_.nodeName))
+    for (in <- inputs) {
+      assert(in.isInstanceOf[InMemoryRelation] && in.collectLeaves() == Seq(in),
+        in.treeString)
+      assert(!in.exists(_.expressions.exists(_.exists(e =>
+        e.isInstanceOf[ArrayFilter] || e.isInstanceOf[ArrayTransform]))),
+        in.treeString)
+    }
+  }
+
+  test("a pinned leaf over an ordered plan still plans when it meets " +
+      "itself (the kernel unions a batch with its own empty slice)") {
+    import org.apache.spark.sql.graftbridge.CacheBridge
+    val ordered = spark.range(0, 100, 1, 2).toDF("id")
+      .sortWithinPartitions(col("id"))
+    val leaf = CacheBridge.pinned(ordered)
+    try assert(leaf.unionByName(leaf.limit(0)).count() == 100)
+    finally ordered.unpersist(false)
   }
 }

@@ -477,4 +477,92 @@ class WirePipelineSpec extends SparkSpecBase {
     WirePipeline.foldBatch(batch2, 2L, "raw", roots("jdbc")._2, sink = jdbc)
     assert((rawLive("jdbc"), links("jdbc")) == before)
   }
+
+  test("two batches into one bitemporal root — ADT-only, then mixed with " +
+      "first-seen families and a redelivered ADT frame — equal a one-shot " +
+      "fold of the deduplicated messages, dead letters included") {
+    val a01 = "MSH|^~\\&|EPIC|UCLH|||20240501080000||ADT^A01|B1|P|2.4\r" +
+      "PID|1||M1^^^MRN^MRN\r" + pv1("V1")
+    val a08 = "MSH|^~\\&|EPIC|UCLH|||20240501083000||ADT^A08|B2|P|2.4\r" +
+      "PID|1||M1^^^MRN^MRN||ORANGE^Zest\r" + pv1("V1")
+    val batch1 = Seq(a01, a08,
+      "MSH|^~\\&|EPIC|UCLH|||20240501081000||ADT^A02|B3|P|2.4\r" +
+        "PID|1||M2^^^MRN^MRN\r" + pv1("V2"),
+      // no MRN: the adt guard's nack
+      "MSH|^~\\&|EPIC|UCLH|||20240501082000||ADT^A01|B4|P|2.4\r" +
+        "PID|1||^^^MRN^MRN\r" + pv1("V4"))
+    val batch2 = Seq(
+      a08, // redelivered across the batch boundary
+      // labs appear for the first time, with implied ADT for M3
+      "MSH|^~\\&|WP|UCLH|||20240501090000||ORU^R01|B5|P|2.4\r" +
+        "PID|1||M3^^^MRN^MRN\r" + pv1("V3") + "\r" +
+        "OBR|1||ORD1^LAB|FBC^FBC^WinPath|||20240501090000\r" +
+        "OBX|1|NM|HGB||13.5|g/dL|||||F",
+      // problem list with a visit: conditions + condition_visits
+      "MSH|^~\\&|EPIC|Problem List|||20240501100000|X|PPR^PC1|B6|P|2.4\r" +
+        "PID|1||M1^^^MRN^MRN\r" + pv1("V1") + "\r" +
+        "PRB|AD|20240501100000|C1^Asthma^I10UK|700|||20240501100000",
+      // A60 allergies: one valid IAM, one invalid-action nack
+      "MSH|^~\\&|EPIC|UCLH|||20240501110000||ADT^A60|B7|P|2.4\r" +
+        "EVN|A60|20240501110000\r" + "PID|1||M2^^^MRN^MRN\r" +
+        "IAM|1|DA^Drug|1^PENICILLIN^ALG|SV^Severe|RASH|A|771^EPIC" +
+        "||||20230115||20240501110000||||Active\r" +
+        "IAM|2|DA^Drug|2^ASPIRIN^ALG||R|Q|772^EPIC",
+      // ORM consult with a question: consults + questions
+      "MSH|^~\\&|EPIC|Consult Orders|||20240501120000|X|ORM^O01|B8|P|2.4\r" +
+        "PID|1||M2^^^MRN^MRN\r" + pv1("V2") + "\r" +
+        "ORC|NW|9001^EPC|||||||20240501120000\r" +
+        "NTE|1||Reason?->sepsis",
+      // unhandled type: the router's dead letter
+      "MSH|^~\\&|EPIC|XX|||20240501130000||SIU^S12|B9|P|2.4")
+
+    val split = Files.createTempDirectory("wire_two_batch").toString
+    WirePipeline.foldBatch(batch1.toDF("raw"), 1L, "raw", split,
+      bitemporal = true)
+    WirePipeline.foldBatch(batch2.toDF("raw"), 2L, "raw", split,
+      bitemporal = true)
+    val oneShot = Files.createTempDirectory("wire_one_shot").toString
+    WirePipeline.foldBatch((batch1 ++ batch2).distinct.toDF("raw"), 1L,
+      "raw", oneShot, bitemporal = true)
+
+    def dirs(p: java.nio.file.Path): Seq[java.nio.file.Path] =
+      if (!Files.isDirectory(p)) Nil else {
+        val s = Files.list(p)
+        try s.toArray.toSeq.map(_.asInstanceOf[java.nio.file.Path])
+          .filter(Files.isDirectory(_)).sortBy(_.toString)
+        finally s.close()
+      }
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.select(to_json(struct(df.columns.sorted.map(col): _*)))
+        .as[String].collect().toSeq.sorted
+    // family → rows of its current belief (open stored records)
+    def beliefs(root: String): Map[String, Seq[String]] =
+      dirs(java.nio.file.Paths.get(root))
+        .filter(d => Files.exists(d.resolve("_CURRENT")))
+        .map { d =>
+          val bt = StarPipeline.readBitemporal(spark, d.toString).get
+          d.getFileName.toString -> rows(bt
+            .filter(col("stored_until_us").isNull)
+            .drop("stored_from_us", "stored_until_us"))
+        }.toMap
+    // channel → dead rows over every batch
+    def deadRows(root: String): Map[String, Seq[String]] =
+      dirs(java.nio.file.Paths.get(root, "dead")).map { ch =>
+        ch.getFileName.toString ->
+          dirs(ch).flatMap(b => rows(spark.read.parquet(b.toString))).sorted
+      }.toMap
+
+    val want = beliefs(oneShot)
+    assert(want.keySet == Set("adt", "labs", "conditions",
+      "condition_visits", "consults", "questions"))
+    assert(want.values.forall(_.nonEmpty))
+    assert(beliefs(split) == want)
+    val wantDead = deadRows(oneShot)
+    assert(wantDead.keySet == Set("adt", "allergies", "router", "labs",
+      "conditions", "consults"))
+    assert(wantDead.map { case (k, v) => k -> v.size } == Map("adt" -> 1,
+      "allergies" -> 1, "router" -> 1, "labs" -> 0, "conditions" -> 0,
+      "consults" -> 0))
+    assert(deadRows(split) == wantDead)
+  }
 }
