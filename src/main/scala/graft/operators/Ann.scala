@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.GraftFunctions._
+import graft.streaming.VersionedDir
 
 /** Approximate-nearest-neighbor search over an embedding column.
   *
@@ -557,8 +558,8 @@ object Ann {
     * layers plus `#key=value` metadata lines: readers prefer it when
     * present (falling back to a plain directory scan for pre-manifest
     * indexes), appends register their new layer in it, and compaction
-    * swaps it atomically — the same tmp + ATOMIC_MOVE pointer
-    * discipline as the star pipeline's manifest. Compaction records
+    * swaps it atomically — the [[graft.streaming.VersionedDir.commit]]
+    * pointer swap every persisted family shares. Compaction records
     * `#absorbed=<max batch id folded>`: an append may overwrite its
     * OWN still-live `batch=` layer (the idempotent replay-after-crash
     * path) but must otherwise use an id ABOVE the absorbed high-water
@@ -567,23 +568,15 @@ object Ann {
     * contract (one compactor / appender at a time), like the star
     * pipeline's batches.
     */
-  private def layersPath(indexDir: String) =
-    java.nio.file.Paths.get(indexDir, "_LAYERS")
-
   /** (metadata, live layers) from the manifest, if present. */
   private def readManifest(indexDir: String)
-      : Option[(Map[String, String], Seq[String])] = {
-    val p = layersPath(indexDir)
-    if (!java.nio.file.Files.exists(p)) None
-    else {
-      val lines = new String(java.nio.file.Files.readAllBytes(p),
-        java.nio.charset.StandardCharsets.UTF_8)
-        .split("\n").filter(_.nonEmpty).toSeq
-      val (meta, layers) = lines.partition(_.startsWith("#"))
-      Some((meta.map(_.stripPrefix("#").split("=", 2))
-        .collect { case Array(k, v) => k -> v }.toMap, layers))
+      : Option[(Map[String, String], Seq[String])] =
+    VersionedDir.read(indexDir, "_LAYERS").map { body =>
+      val (meta, layers) = body.split("\n").filter(_.nonEmpty).toSeq
+        .partition(_.startsWith("#"))
+      (meta.map(_.stripPrefix("#").split("=", 2))
+        .collect { case Array(k, v) => k -> v }.toMap, layers)
     }
-  }
 
   /** Epoch indirection — the retrain lifecycle's swap point. An index
     * root MAY contain an `_EPOCH` pointer file naming the active
@@ -594,12 +587,8 @@ object Ann {
     * index without `_EPOCH` is its own (epoch-less) store — full
     * back-compat with every pre-epoch index on disk.
     */
-  private def resolveEpoch(indexDir: String): String = {
-    val p = java.nio.file.Paths.get(indexDir, "_EPOCH")
-    if (java.nio.file.Files.exists(p))
-      s"$indexDir/${java.nio.file.Files.readString(p).trim}"
-    else indexDir
-  }
+  private def resolveEpoch(indexDir: String): String =
+    VersionedDir.read(indexDir, "_EPOCH").fold(indexDir)(e => s"$indexDir/$e")
 
   private def readLayers(indexDir: String): Option[Seq[String]] =
     readManifest(indexDir).map(_._2)
@@ -625,16 +614,10 @@ object Ann {
       .flatMap(_.toLongOption).getOrElse(0L)
 
   private def writeManifest(indexDir: String, meta: Map[String, String],
-                            layers: Seq[String]): Unit = {
-    val tmp = java.nio.file.Paths.get(indexDir, "_LAYERS.tmp")
-    val body = (meta.toSeq.sorted.map { case (k, v) => s"#$k=$v" } ++
-      layers).mkString("\n")
-    java.nio.file.Files.write(tmp,
-      body.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    java.nio.file.Files.move(tmp, layersPath(indexDir),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-  }
+                            layers: Seq[String]): Unit =
+    VersionedDir.commit(indexDir, "_LAYERS",
+      (meta.toSeq.sorted.map { case (k, v) => s"#$k=$v" } ++
+        layers).mkString("\n"))
 
   private def existingLayerDirs(indexDir: String): Seq[String] = {
     val d = new java.io.File(indexDir)
@@ -973,13 +956,7 @@ object Ann {
     java.nio.file.Files.createDirectories(
       java.nio.file.Paths.get(rootDir, next))
     build(s"$rootDir/$next")
-    val tmp = java.nio.file.Paths.get(rootDir, "_EPOCH.tmp")
-    java.nio.file.Files.write(tmp,
-      next.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    java.nio.file.Files.move(tmp,
-      java.nio.file.Paths.get(rootDir, "_EPOCH"),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    VersionedDir.commit(rootDir, "_EPOCH", next)
     // GC superseded stores with ONE-RETRAIN DEFERRAL: a reader that
     // resolved the old pointer just before the swap keeps answering
     // from that store, so nothing THIS swap retired is deleted until
@@ -1000,7 +977,8 @@ object Ann {
     if (cur != rootDir) {
       existingLayerDirs(rootDir)
         .foreach(l => deleteRecursively(s"$rootDir/$l"))
-      java.nio.file.Files.deleteIfExists(layersPath(rootDir))
+      java.nio.file.Files.deleteIfExists(
+        java.nio.file.Paths.get(rootDir, "_LAYERS"))
     }
     next
   }

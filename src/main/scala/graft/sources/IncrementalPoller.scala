@@ -2,8 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import graft.streaming.VersionedDir
 
 /** S1/S6: incremental scan of an append-only upstream table with a
   * durable progress pointer — the reference's IDS polling loop (ref:
@@ -24,12 +23,8 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
   */
 class IncrementalPoller(progressDir: String, idCol: String) {
 
-  private def progressFile = Paths.get(progressDir, "_PROGRESS")
-
-  def lastProgress: Option[Long] = {
-    if (!Files.exists(progressFile)) None
-    else Some(new String(Files.readAllBytes(progressFile)).trim.toLong)
-  }
+  def lastProgress: Option[Long] =
+    VersionedDir.read(progressDir, "_PROGRESS").map(_.toLong)
 
   /** New rows strictly after the committed pointer, oldest first,
     * at most `batchSize` of them.
@@ -40,15 +35,11 @@ class IncrementalPoller(progressDir: String, idCol: String) {
   }
 
   /** Durably record that every row with id <= upTo is processed
-    * (atomic pointer swap, same discipline as StarPipeline's manifest).
+    * ([[VersionedDir.commit]], the pointer swap every persisted family
+    * shares).
     */
-  def commit(upTo: Long): Unit = {
-    Files.createDirectories(Paths.get(progressDir))
-    val tmp = Paths.get(progressDir, "_PROGRESS.tmp")
-    Files.write(tmp, upTo.toString.getBytes)
-    Files.move(tmp, progressFile,
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-  }
+  def commit(upTo: Long): Unit =
+    VersionedDir.commit(progressDir, "_PROGRESS", upTo.toString)
 
   /** Drain the upstream: poll → handle → commit, until a poll returns
     * fewer than batchSize rows. `handle` must make its effects durable

@@ -93,8 +93,8 @@ object PreferenceStream {
         (col("sim10k") / 10000.0).as("sim"),
         (col("pos_sim10k") / 10000.0).as("pos_sim"))
 
-  /** COMPACT both layer families — [[SftStream.compactTurns]]' bounded-
-    * listing maintenance for the preference store: merge each family's
+  /** COMPACT both layer families — [[SftStream.compactLayers]], the
+    * bounded-listing maintenance of the turn store: merge each family's
     * layers (exact-duplicate facts collapse — the read side's own
     * distinct) into ONE `batch=c<maxId>` layer, then delete the old
     * ones. The crash-window argument transfers verbatim: pair and
@@ -106,34 +106,12 @@ object PreferenceStream {
     * Deterministic layer name (max numeric id, 'c'-prefixed) — a
     * re-run compaction is itself idempotent. No-op below two layers.
     */
-  def compact(spark: SparkSession, cfg: Config): Unit =
-    Seq(s"${cfg.root}/pairs" -> Seq("query_id", "pos_id"),
-        s"${cfg.root}/negatives" -> Seq("query_id", "neighbor_id",
-          "rank", "sim10k", "pos_sim10k")).foreach {
-      case (store, cols) =>
-        val dir = new org.apache.hadoop.fs.Path(store)
-        val fs = dir.getFileSystem(
-          spark.sparkContext.hadoopConfiguration)
-        if (fs.exists(dir)) {
-          val layers = fs.listStatus(dir).map(_.getPath)
-            .filter(_.getName.startsWith("batch="))
-          if (layers.length > 1) {
-            val maxId = layers.map(_.getName.stripPrefix("batch=")
-                .stripPrefix("c"))
-              .flatMap(s => scala.util.Try(s.toLong).toOption)
-              .foldLeft(0L)(math.max)
-            val merged = spark.read.parquet(store)
-              .select(cols.map(col): _*).distinct()
-              // the write deletes what it reads via the new layer's
-              // lineage — materialize first (the compactTurns note)
-              .localCheckpoint(true)
-            merged.write.mode("overwrite")
-              .parquet(s"$store/batch=c$maxId")
-            layers.filter(_.getName != s"batch=c$maxId")
-              .foreach(p => fs.delete(p, true))
-          }
-        }
-    }
+  def compact(spark: SparkSession, cfg: Config): Unit = {
+    SftStream.compactLayers(spark, s"${cfg.root}/pairs",
+      Seq("query_id", "pos_id"))
+    SftStream.compactLayers(spark, s"${cfg.root}/negatives",
+      Seq("query_id", "neighbor_id", "rank", "sim10k", "pos_sim10k"))
+  }
 
   /** Start the streaming ingest — the [[SftStream.start]] foreachBatch
     * idiom: the fold is a parquet write, so the engine's

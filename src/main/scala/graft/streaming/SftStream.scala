@@ -110,8 +110,17 @@ object SftStream {
     * numeric id at compaction time, 'c'-prefixed) — no clock, so a
     * re-run compaction is itself idempotent.
     */
-  def compactTurns(spark: SparkSession, cfg: Config): Unit = {
-    val dir = new org.apache.hadoop.fs.Path(s"${cfg.root}/turns")
+  def compactTurns(spark: SparkSession, cfg: Config): Unit =
+    compactLayers(spark, s"${cfg.root}/turns", TurnCols)
+
+  /** The layer compaction of every `batch=<id>` store ([[compactTurns]],
+    * [[PreferenceStream.compact]]): merge the layers' `cols` with a
+    * full-row distinct into ONE `batch=c<maxId>` layer, then delete the
+    * others. No-op below two layers.
+    */
+  private[streaming] def compactLayers(spark: SparkSession, store: String,
+                                       cols: Seq[String]): Unit = {
+    val dir = new org.apache.hadoop.fs.Path(store)
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(dir)) return
     val layers = fs.listStatus(dir).map(_.getPath)
@@ -120,14 +129,13 @@ object SftStream {
     val maxId = layers.map(_.getName.stripPrefix("batch=")
         .stripPrefix("c")).flatMap(s => scala.util.Try(s.toLong).toOption)
       .foldLeft(0L)(math.max)
-    val merged = spark.read.parquet(dir.toString)
-      .select(TurnCols.map(col): _*).distinct()
+    val merged = spark.read.parquet(store)
+      .select(cols.map(col): _*).distinct()
       // the write below deletes what it reads via the new layer's
       // lineage — materialize first (test-scale states; at 100 TB the
       // merged write lands before any delete, same ordering)
       .localCheckpoint(true)
-    merged.write.mode("overwrite")
-      .parquet(s"${cfg.root}/turns/batch=c$maxId")
+    merged.write.mode("overwrite").parquet(s"$store/batch=c$maxId")
     layers.filter(_.getName != s"batch=c$maxId")
       .foreach(p => fs.delete(p, true))
   }

@@ -6,9 +6,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.graftbridge.CacheBridge
 import graft.kernel.BitemporalKernel
 
-import java.nio.ByteBuffer
-import java.nio.channels.FileChannel
-import java.nio.file.{Files, Path, Paths, StandardCopyOption, StandardOpenOption}
+import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 
 /** S8/W1: the streaming star-maintenance pipeline — every micro-batch of
@@ -24,6 +22,7 @@ import scala.jdk.CollectionConverters._
   *
   *   stateDir/_CURRENT              → name of the live manifest file
   *   stateDir/manifest-v<N>         → lines `table \t bucket \t relPath`
+  *   stateDir/_HORIZON              → compaction horizon (epoch µs)
   *   stateDir/data/<table>/v<N>/__bucket=<k>/  (parquet files; a replay
   *                                of batch N writes v<N>.<n> instead)
   *
@@ -37,11 +36,18 @@ import scala.jdk.CollectionConverters._
   * table size — the property that keeps the write path alive at 100×.
   *
   * One manifest covers history/live/audit together, and readers resolve
-  * every table through the single `_CURRENT` pointer (one atomic rename),
-  * so a crash between table writes can never expose mixed versions —
-  * a reader joining live+audit always sees one consistent fold.
-  * (Single-writer parquet-swap; swap in Delta/Iceberg MERGE for
-  * multi-writer production.)
+  * every table through the single `_CURRENT` pointer (one atomic rename,
+  * [[VersionedDir.commit]]), so a crash between table writes can never
+  * expose mixed versions — a reader joining live+audit always sees one
+  * consistent fold. Version dirs follow [[VersionedDir.fresh]]: a write
+  * never lands in a dir the live manifest references, so replaying a
+  * committed batch id reads its old buckets intact. (Single-writer
+  * parquet-swap; swap in Delta/Iceberg MERGE for multi-writer
+  * production.)
+  *
+  * Both temporal axes share one fold body and one compaction writer;
+  * they differ only in the kernel step ([[validStep]] /
+  * [[bitemporalStep]]) and in how compaction classifies cold rows.
   */
 object StarPipeline {
 
@@ -55,69 +61,62 @@ object StarPipeline {
                           payloadCols: Seq[String], nBuckets: Int = 64,
                           storedFromUsCol: String = "storedFromUs")
 
-  private val Tables = Seq("history", "live", "audit")
+  /** table → (bucket id → path relative to stateDir). */
+  private type ManifestMap = Map[String, Map[String, String]]
+
+  /** One axis's kernel step: (pinned batch, config, reader of the
+    * touched prior state of a table) → the tables to persist, each with
+    * its row identity keys (used by the JDBC sink's MERGE; the manifest
+    * sink replaces whole buckets and ignores them).
+    */
+  private[streaming] type Step = (DataFrame, Config,
+    String => Option[DataFrame]) => Seq[(String, DataFrame, Seq[String])]
 
   private def bucketOf(cfg: Config): Column =
     pmod(xxhash64(cfg.keyCols.map(col): _*), lit(cfg.nBuckets))
 
-  /** manifest: table → (bucket id → path relative to stateDir). */
-  private def readManifest(cfg: Config): Map[String, Map[String, String]] = {
-    val cur = Paths.get(cfg.stateDir, "_CURRENT")
-    if (!Files.exists(cur)) return Map.empty
-    val name = new String(Files.readAllBytes(cur)).trim
-    val lines = new String(Files.readAllBytes(Paths.get(cfg.stateDir, name)))
-      .split("\n").filter(_.nonEmpty)
-    lines.map(_.split("\t")).collect { case Array(t, b, p) => (t, b, p) }
-      .groupBy(_._1)
-      .map { case (t, rows) => t -> rows.map(r => r._2 -> r._3).toMap }
-  }
+  private def readManifest(stateDir: String): ManifestMap =
+    VersionedDir.read(stateDir, "_CURRENT").fold(Map.empty: ManifestMap) {
+      name => VersionedDir.read(stateDir, name)
+        .getOrElse(sys.error(s"$stateDir/_CURRENT names missing $name"))
+        .split("\n").map(_.split("\t"))
+        .collect { case Array(t, b, p) => (t, b, p) }
+        .groupBy(_._1)
+        .map { case (t, rows) => t -> rows.map(r => r._2 -> r._3).toMap }
+    }
 
-  private def writeManifest(cfg: Config,
-                            man: Map[String, Map[String, String]],
+  private def writeManifest(cfg: Config, man: ManifestMap,
                             batchId: Long): Unit = {
     val name = s"manifest-v$batchId"
     val body = (for {
       (t, buckets) <- man.toSeq.sortBy(_._1)
       (b, p) <- buckets.toSeq.sortBy(_._1)
     } yield s"$t\t$b\t$p").mkString("\n")
-    Files.createDirectories(Paths.get(cfg.stateDir))
     // a replayed batch id rewrites the very manifest `_CURRENT` names:
     // replace it by rename, never truncate it in place
-    writeAtomically(Paths.get(cfg.stateDir, name), body.getBytes)
-    writeAtomically(Paths.get(cfg.stateDir, "_CURRENT"), name.getBytes)
+    VersionedDir.commit(cfg.stateDir, name, body)
+    VersionedDir.commit(cfg.stateDir, "_CURRENT", name)
   }
 
-  /** Replace `path` with `bytes` so that a crash or a concurrent reader
-    * sees the old content or the new, never a truncated file: write a
-    * sibling `.tmp`, force it to disk, then rename it over `path`.
-    */
-  private[streaming] def writeAtomically(path: Path, bytes: Array[Byte]): Unit = {
-    val tmp = path.resolveSibling(s"${path.getFileName}.tmp")
-    val ch = FileChannel.open(tmp, StandardOpenOption.CREATE,
-      StandardOpenOption.WRITE, StandardOpenOption.TRUNCATE_EXISTING)
-    try {
-      val buf = ByteBuffer.wrap(bytes)
-      while (buf.hasRemaining) ch.write(buf)
-      ch.force(true)
-    } finally ch.close()
-    Files.move(tmp, path,
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-  }
+  /** Was `stateDir` folded on the stored-time axis? */
+  private[streaming] def isBitemporal(stateDir: String): Boolean =
+    readManifest(stateDir).keysIterator.exists(_.startsWith("bt_"))
 
-  /** The version dir `tbl` is written to at `batchId`: `v<batchId>`, or
-    * `v<batchId>.<n>` while the manifest still references that name. A
-    * replay of a committed batch id (normal under at-least-once
-    * delivery) reads the very files it would otherwise overwrite, and so
-    * may a reader of the live manifest; the superseded dir is left as an
-    * unreferenced orphan.
+  /** Write `df` bucket-partitioned into a fresh version dir of `tbl` —
+    * `v<batchId>`, or `v<batchId>.<n>` while the manifest still
+    * references that name — and return the dir with the bucket ids it
+    * holds. A touched bucket with no output rows gets no directory.
     */
-  private def versionDir(man: Map[String, Map[String, String]], tbl: String,
-                         batchId: Long): String = {
+  private def writeVersion(cfg: Config, man: ManifestMap, tbl: String,
+                           batchId: Long,
+                           df: DataFrame): (String, Set[Long]) = {
     val live = man.valuesIterator.flatMap(_.valuesIterator)
       .map(p => p.substring(0, p.lastIndexOf("/__bucket="))).toSet
-    (Iterator.single(s"data/$tbl/v$batchId") ++
-      Iterator.from(1).map(n => s"data/$tbl/v$batchId.$n"))
-      .find(!live.contains(_)).get
+    val dir = VersionedDir.fresh(s"data/$tbl/v$batchId", live)
+    df.withColumn("__bucket", bucketOf(cfg))
+      .write.mode("overwrite").partitionBy("__bucket")
+      .parquet(s"${cfg.stateDir}/$dir")
+    (dir, bucketsIn(cfg.stateDir, dir))
   }
 
   /** Bucket ids present under `stateDir/dir` — ONE directory listing per
@@ -137,7 +136,7 @@ object StarPipeline {
 
   /** Read a table as of the current manifest (all buckets unioned). */
   def readState(spark: SparkSession, cfg: Config, table: String): Option[DataFrame] =
-    readManifest(cfg).get(table).filter(_.nonEmpty).map { buckets =>
+    readManifest(cfg.stateDir).get(table).filter(_.nonEmpty).map { buckets =>
       spark.read.parquet(
         buckets.values.toSeq.sorted.map(p => s"${cfg.stateDir}/$p"): _*)
     }
@@ -156,15 +155,38 @@ object StarPipeline {
     * against the true predecessor). Fast-path batches pay nothing: the
     * late-bucket probe rides the same touched-bucket aggregate.
     */
-  def foldBatch(batch0: DataFrame, batchId: Long, cfg: Config): Unit = {
-    val spark = batch0.sparkSession
-    val man = readManifest(cfg)
+  def foldBatch(batch0: DataFrame, batchId: Long, cfg: Config): Unit =
+    foldWith(batch0, batchId, cfg)(validStep)
 
-    // The batch feeds FOUR actions (bucket probe + three table writes);
+  /** The valid-time kernel step: history → history/live/audit. */
+  private[streaming] def validStep(batch: DataFrame, cfg: Config,
+                                   prior: String => Option[DataFrame])
+      : Seq[(String, DataFrame, Seq[String])] = {
+    val r = BitemporalKernel.applyBatch(
+      prior("history").getOrElse(batch.limit(0)), batch, cfg.keyCols,
+      cfg.validFromUsCol, cfg.tieCol, cfg.payloadCols)
+    // live is one row per key; history and audit one per version
+    val versionKeys = cfg.keyCols ++ Seq(cfg.validFromUsCol, cfg.tieCol)
+    Seq(("history", r.history, versionKeys),
+      ("live", r.live, cfg.keyCols),
+      ("audit", r.audit, versionKeys))
+  }
+
+  /** The one bucketed fold body of both axes: pin the batch, probe its
+    * touched and late buckets, hand `step` a reader of the touched hot ∪
+    * cold state per table, write each output table to a fresh version
+    * dir and swap the manifest once.
+    */
+  private def foldWith(batch0: DataFrame, batchId: Long, cfg: Config)(
+      step: Step): Unit = {
+    val spark = batch0.sparkSession
+    val man = readManifest(cfg.stateDir)
+
+    // The batch feeds every action (bucket probe + one write per table);
     // its lineage is often an expression-heavy parse — evaluate it once,
     // and plan the kernel over the cached relation, not that lineage.
     // The kernel's state-sized intermediates are deliberately NOT pinned:
-    // the three table writes recompute the fold from the pinned batch +
+    // the table writes recompute the fold from the pinned batch +
     // columnar state read, and the two window passes share one
     // exchange+sort, so 3× recompute beats materializing two
     // touched-state-sized caches (measured: pinning them regressed the
@@ -190,42 +212,29 @@ object StarPipeline {
     def coldKeysOf(tbl: String) =
       man.getOrElse(s"$tbl.cold", Map.empty)
         .filter { case (k, _) => lateBuckets.contains(k.split("-")(0)) }
+    // ONLY the touched buckets — hot, plus cold for the buckets a late
+    // arrival un-compacts
+    def readTouched(tbl: String): Option[DataFrame] = {
+      val paths = (touched
+        .flatMap(k => man.getOrElse(tbl, Map.empty).get(k.toString)) ++
+        coldKeysOf(tbl).values).map(p => s"${cfg.stateDir}/$p")
+      if (paths.isEmpty) None else Some(spark.read.parquet(paths: _*))
+    }
 
-    // Read ONLY the touched buckets' history — hot, plus cold for the
-    // buckets a late arrival un-compacts.
-    val histPaths = (touched
-      .flatMap(k => man.getOrElse("history", Map.empty).get(k.toString)) ++
-      coldKeysOf("history").values)
-      .map(p => s"${cfg.stateDir}/$p")
-    val history =
-      if (histPaths.isEmpty) batch.limit(0)
-      else spark.read.parquet(histPaths: _*)
-
-    val r = BitemporalKernel.applyBatch(history, batch, cfg.keyCols,
-      cfg.validFromUsCol, cfg.tieCol, cfg.payloadCols)
-
-    val newMan = Tables.foldLeft(man) { (m, tbl) =>
-      val df = tbl match {
-        case "history" => r.history
-        case "live"    => r.live
-        case "audit"   => r.audit
-      }
-      val vDir = versionDir(man, tbl, batchId)
-      df.withColumn("__bucket", bucketOf(cfg))
-        .write.mode("overwrite").partitionBy("__bucket")
-        .parquet(s"${cfg.stateDir}/$vDir")
-      // A touched bucket with no output rows gets no directory — its
-      // manifest entry is dropped (the bucket is now empty for `tbl`).
-      val present = bucketsIn(cfg.stateDir, vDir)
-      val updated = touched.foldLeft(m.getOrElse(tbl, Map.empty)) { (tm, k) =>
-        if (present.contains(k)) tm.updated(k.toString, s"$vDir/__bucket=$k")
-        else tm - k.toString
-      }
-      // un-compacted buckets' cold rows are folded into hot now
-      val mm = m.updated(tbl, updated)
-      if (lateBuckets.isEmpty) mm
-      else mm.updated(s"$tbl.cold",
-        m.getOrElse(s"$tbl.cold", Map.empty) -- coldKeysOf(tbl).keys)
+    val newMan = step(batch, cfg, readTouched).foldLeft(man) {
+      case (m, (tbl, df, _)) =>
+        val (dir, present) = writeVersion(cfg, man, tbl, batchId, df)
+        // an emptied touched bucket drops its manifest entry
+        val updated = touched.foldLeft(m.getOrElse(tbl, Map.empty)) {
+          (tm, k) =>
+            if (present.contains(k)) tm.updated(k.toString, s"$dir/__bucket=$k")
+            else tm - k.toString
+        }
+        // un-compacted buckets' cold rows are folded into hot now
+        val mm = m.updated(tbl, updated)
+        if (lateBuckets.isEmpty) mm
+        else mm.updated(s"$tbl.cold",
+          m.getOrElse(s"$tbl.cold", Map.empty) -- coldKeysOf(tbl).keys)
     }
     writeManifest(cfg, newMan, batchId)
     } finally batch0.unpersist(false)
@@ -235,89 +244,44 @@ object StarPipeline {
   // Bitemporal mode — the stored-time axis, persisted (O2 both axes)
   // =================================================================
 
-  private val BtTables = Seq("bt_messages", "bt_table")
-
   /** Fold one micro-batch into persisted BITEMPORAL state — the
     * stored-axis twin of [[foldBatch]], persisting
     * [[BitemporalKernel.BitemporalState]] (deduped message log + version
     * records stamped `stored_from_us`/`stored_until_us`) through the same
-    * bucketed manifest layout. This is what makes the reference's
-    * headline reproducibility — "state as the DB knew it at stored time
-    * S" (ref informdb/AuditCore.java:32-35,83-86;
+    * bucketed manifest layout and the same fold body. This is what makes
+    * the reference's headline reproducibility — "state as the DB knew it
+    * at stored time S" (ref informdb/AuditCore.java:32-35,83-86;
     * TemporalCore.java:29-32) — answerable from the PERSISTED star,
     * surviving a process restart: every batch closes superseded records
     * with the batch's stored stamp (`cfg.storedFromUsCol`, e.g.
     * ingestion time) and opens replacements, records once stored-closed
     * are immutable forever.
     *
-    * Scale shape matches [[foldBatch]]: only the buckets the batch's
-    * keys hash into are read and rewritten; untouched buckets carry
-    * forward by manifest reference with zero I/O. Late arrivals below
-    * the compaction horizon auto-un-compact their buckets, exactly as in
-    * [[foldBatch]]. Idempotent on replay: the kernel's message dedup +
-    * the stored-diff's F6 (an update that changes nothing causes no
-    * stored churn) make a re-folded batch a no-op.
+    * Scale, late-arrival and replay behaviour are [[foldBatch]]'s.
+    * Idempotent on replay: the kernel's message dedup + the stored-diff's
+    * F6 (an update that changes nothing causes no stored churn) make a
+    * re-folded batch a no-op.
     */
   def foldBatchBitemporal(batch0: DataFrame, batchId: Long,
-                          cfg: Config): Unit = {
-    val spark = batch0.sparkSession
-    val man = readManifest(cfg)
+                          cfg: Config): Unit =
+    foldWith(batch0, batchId, cfg)(bitemporalStep)
 
-    // probe + stamps + two table writes all read the batch — once, over
-    // its cached relation. The kernel's state-sized intermediates are NOT
-    // pinned (same measured trade-off as foldBatch: 2× recompute from the
-    // pinned batch beats materializing touched-state-sized caches).
-    val batch = CacheBridge.pinned(batch0)
-    try {
-
-    val lateFlag = compactionHorizon(cfg) match {
-      case Some(h) => max(when(col(cfg.validFromUsCol) < h, 1).otherwise(0))
-      case None    => max(lit(0))
-    }
-    val probe = batch.groupBy(bucketOf(cfg).as("__bucket"))
-      .agg(lateFlag.as("__late")).collect()
-    val touched = probe.map(_.getLong(0)).sorted
-    if (touched.isEmpty) return
-    val lateBuckets =
-      probe.filter(_.getInt(1) == 1).map(_.getLong(0).toString).toSet
-
-    def coldKeysOf(tbl: String) =
-      man.getOrElse(s"$tbl.cold", Map.empty)
-        .filter { case (k, _) => lateBuckets.contains(k.split("-")(0)) }
-    def readTouched(tbl: String): Option[DataFrame] = {
-      val paths = (touched
-        .flatMap(k => man.getOrElse(tbl, Map.empty).get(k.toString)) ++
-        coldKeysOf(tbl).values).map(p => s"${cfg.stateDir}/$p")
-      if (paths.isEmpty) None else Some(spark.read.parquet(paths: _*))
-    }
-
+  /** The both-axes kernel step: bt_messages/bt_table → both. */
+  private[streaming] def bitemporalStep(batch: DataFrame, cfg: Config,
+                                        prior: String => Option[DataFrame])
+      : Seq[(String, DataFrame, Seq[String])] = {
     val empty = BitemporalKernel.emptyBitemporal(batch, cfg.keyCols,
       cfg.validFromUsCol, cfg.tieCol, cfg.payloadCols)
     val prev = BitemporalKernel.BitemporalState(
-      messages = readTouched("bt_messages").getOrElse(empty.messages),
-      table = readTouched("bt_table").getOrElse(empty.table))
-
+      messages = prior("bt_messages").getOrElse(empty.messages),
+      table = prior("bt_table").getOrElse(empty.table))
     val r = BitemporalKernel.applyBitemporal(prev, batch, cfg.keyCols,
       cfg.validFromUsCol, cfg.tieCol, cfg.storedFromUsCol, cfg.payloadCols)
-
-    val newMan = BtTables.foldLeft(man) { (m, tbl) =>
-      val df = if (tbl == "bt_messages") r.messages else r.table
-      val vDir = versionDir(man, tbl, batchId)
-      df.withColumn("__bucket", bucketOf(cfg))
-        .write.mode("overwrite").partitionBy("__bucket")
-        .parquet(s"${cfg.stateDir}/$vDir")
-      val present = bucketsIn(cfg.stateDir, vDir)
-      val updated = touched.foldLeft(m.getOrElse(tbl, Map.empty)) { (tm, k) =>
-        if (present.contains(k)) tm.updated(k.toString, s"$vDir/__bucket=$k")
-        else tm - k.toString
-      }
-      val mm = m.updated(tbl, updated)
-      if (lateBuckets.isEmpty) mm
-      else mm.updated(s"$tbl.cold",
-        m.getOrElse(s"$tbl.cold", Map.empty) -- coldKeysOf(tbl).keys)
-    }
-    writeManifest(cfg, newMan, batchId)
-    } finally batch0.unpersist(false)
+    // a message is (key, validFrom, tie); a version record is a message
+    // opened at a stored stamp
+    val msgKeys = cfg.keyCols ++ Seq(cfg.validFromUsCol, cfg.tieCol)
+    Seq(("bt_messages", r.messages, msgKeys),
+      ("bt_table", r.table, msgKeys :+ "stored_from_us"))
   }
 
   /** The complete bitemporal version table (hot ∪ cold) — query it with
@@ -354,11 +318,11 @@ object StarPipeline {
     */
   def compactBitemporal(spark: SparkSession, cfg: Config, horizonUs: Long,
                         batchId: Long): Unit = {
-    val man = readManifest(cfg)
-    if (!man.contains("bt_table")) return
-    val tbl = readState(spark, cfg, "bt_table").get
-    val msgs = readState(spark, cfg, "bt_messages").get
-
+    val (tbl, msgs) = (readState(spark, cfg, "bt_table"),
+      readState(spark, cfg, "bt_messages")) match {
+      case (Some(t), Some(m)) => (t, m)
+      case _ => return
+    }
     // per-key boundary version u*: max (validFrom, tie) over OPEN
     // records starting before the horizon
     val vfTie = struct(col(cfg.validFromUsCol), col(cfg.tieCol))
@@ -366,42 +330,14 @@ object StarPipeline {
         col(cfg.validFromUsCol) < horizonUs)
       .groupBy(cfg.keyCols.map(col): _*)
       .agg(max(vfTie).as("__u"))
-
-    def split(df: DataFrame, isCold: Column): (DataFrame, DataFrame) = {
-      val flagged = df.join(bounds, cfg.keyCols, "left")
-        .withColumn("__cold", coalesce(isCold, lit(false)))
-      (flagged.filter(!col("__cold")).drop("__cold", "__u"),
-        flagged.filter(col("__cold")).drop("__cold", "__u"))
-    }
+    def flag(df: DataFrame, isCold: Column): DataFrame =
+      df.join(bounds, cfg.keyCols, "left")
+        .withColumn("__cold", coalesce(isCold, lit(false))).drop("__u")
     val beforeBoundary = col("__u").isNotNull && vfTie < col("__u")
-    val (tblHot, tblCold) = split(tbl,
-      col("stored_until_us").isNotNull ||
-        (col("stored_until_us").isNull && beforeBoundary))
-    val (msgHot, msgCold) = split(msgs, beforeBoundary)
-
-    val newMan = Seq(
-      ("bt_table", tblHot, tblCold),
-      ("bt_messages", msgHot, msgCold)).foldLeft(man) {
-      case (m, (t, hot, coldDf)) =>
-        val hotDir = versionDir(man, t, batchId)
-        hot.withColumn("__bucket", bucketOf(cfg))
-          .write.mode("overwrite").partitionBy("__bucket")
-          .parquet(s"${cfg.stateDir}/$hotDir")
-        val coldDir = versionDir(man, s"$t.cold", batchId)
-        coldDf.withColumn("__bucket", bucketOf(cfg))
-          .write.mode("overwrite").partitionBy("__bucket")
-          .parquet(s"${cfg.stateDir}/$coldDir")
-        def entries(dir: String, suffix: String) =
-          bucketsIn(cfg.stateDir, dir)
-            .map(k => s"$k$suffix" -> s"$dir/__bucket=$k").toMap
-        m.updated(t, entries(hotDir, ""))
-          .updated(s"$t.cold",
-            m.getOrElse(s"$t.cold", Map.empty) ++
-              entries(coldDir, s"-$batchId"))
-    }
-    writeAtomically(Paths.get(cfg.stateDir, "_HORIZON"),
-      horizonUs.toString.getBytes)
-    writeManifest(cfg, newMan, batchId)
+    retier(cfg, horizonUs, batchId, Seq(
+      "bt_table" -> flag(tbl, col("stored_until_us").isNotNull ||
+        (col("stored_until_us").isNull && beforeBoundary)),
+      "bt_messages" -> flag(msgs, beforeBoundary)))
   }
 
   /** W6/S9 compaction — the maintenance lever that keeps the per-fold
@@ -423,60 +359,55 @@ object StarPipeline {
     * O(hot), not O(archive).
     */
   def compact(spark: SparkSession, cfg: Config, horizonUs: Long,
-              batchId: Long): Unit = {
-    val man = readManifest(cfg)
-    val newMan = Seq("history", "audit").foldLeft(man) { (m, tbl) =>
-      readState(spark, cfg, tbl) match {
-        case None => m
-        case Some(state) =>
-          // history carries no stamped until (folds re-derive it) — a
-          // version is closed iff its successor's validFrom is known and
-          // before the horizon, the same lead() the kernel stamps with;
-          // audit rows carry valid_until_us directly.
-          val closed = tbl match {
-            case "history" =>
-              val byKey = org.apache.spark.sql.expressions.Window
-                .partitionBy(cfg.keyCols.map(col): _*)
-                .orderBy(col(cfg.validFromUsCol), col(cfg.tieCol))
-              lead(col(cfg.validFromUsCol), 1).over(byKey) < horizonUs
-            case _ => col("valid_until_us") < horizonUs
-          }
-          val flagged = state.withColumn("__cold", coalesce(closed, lit(false)))
-          val hotDir = versionDir(man, tbl, batchId)
-          flagged.filter(!col("__cold")).drop("__cold")
-            .withColumn("__bucket", bucketOf(cfg))
-            .write.mode("overwrite").partitionBy("__bucket")
-            .parquet(s"${cfg.stateDir}/$hotDir")
-          val coldDir = versionDir(man, s"$tbl.cold", batchId)
-          flagged.filter(col("__cold")).drop("__cold")
-            .withColumn("__bucket", bucketOf(cfg))
-            .write.mode("overwrite").partitionBy("__bucket")
-            .parquet(s"${cfg.stateDir}/$coldDir")
-          def entries(dir: String, suffix: String) =
-            bucketsIn(cfg.stateDir, dir)
-              .map(k => s"$k$suffix" -> s"$dir/__bucket=$k").toMap
-          m.updated(tbl, entries(hotDir, ""))
-            .updated(s"$tbl.cold",
-              m.getOrElse(s"$tbl.cold", Map.empty) ++
-                entries(coldDir, s"-$batchId"))
+              batchId: Long): Unit =
+    retier(cfg, horizonUs, batchId, Seq("history", "audit").flatMap { tbl =>
+      // history carries no stamped until (folds re-derive it) — a
+      // version is closed iff its successor's validFrom is known and
+      // before the horizon, the same lead() the kernel stamps with;
+      // audit rows carry valid_until_us directly.
+      val closed = tbl match {
+        case "history" =>
+          val byKey = org.apache.spark.sql.expressions.Window
+            .partitionBy(cfg.keyCols.map(col): _*)
+            .orderBy(col(cfg.validFromUsCol), col(cfg.tieCol))
+          lead(col(cfg.validFromUsCol), 1).over(byKey) < horizonUs
+        case _ => col("valid_until_us") < horizonUs
       }
+      readState(spark, cfg, tbl).map(state =>
+        tbl -> state.withColumn("__cold", coalesce(closed, lit(false))))
+    })
+
+  /** The one hot/cold re-tier writer of both axes. Each table's frame
+    * carries a `__cold` flag: its hot rows replace the table's hot
+    * buckets, its cold rows are appended to `<table>.cold` under keys
+    * `<bucket>-<batchId>`.
+    */
+  private def retier(cfg: Config, horizonUs: Long, batchId: Long,
+                     flagged: Seq[(String, DataFrame)]): Unit = {
+    val man = readManifest(cfg.stateDir)
+    val newMan = flagged.foldLeft(man) { case (m, (tbl, df)) =>
+      def tier(t: String, rows: Column, suffix: String) = {
+        val (dir, buckets) = writeVersion(cfg, man, t, batchId,
+          df.filter(rows).drop("__cold"))
+        buckets.map(k => s"$k$suffix" -> s"$dir/__bucket=$k").toMap
+      }
+      val hot = tier(tbl, !col("__cold"), "")
+      val cold = tier(s"$tbl.cold", col("__cold"), s"-$batchId")
+      m.updated(tbl, hot)
+        .updated(s"$tbl.cold", m.getOrElse(s"$tbl.cold", Map.empty) ++ cold)
     }
-    // Horizon FIRST (forced tmp + atomic move), then the manifest swap: a crash
-    // between the two leaves the horizon advanced over an un-compacted
-    // manifest, which is safe — foldBatch's late-bucket probe finds no
-    // cold entries and reads the still-complete hot tier. The reverse
-    // order would let pre-horizon arrivals fold over hot-only state.
-    writeAtomically(Paths.get(cfg.stateDir, "_HORIZON"),
-      horizonUs.toString.getBytes)
+    // Horizon FIRST, then the manifest swap: a crash between the two
+    // leaves the horizon advanced over an un-compacted manifest, which
+    // is safe — the fold's late-bucket probe finds no cold entries and
+    // reads the still-complete hot tier. The reverse order would let
+    // pre-horizon arrivals fold over hot-only state.
+    VersionedDir.commit(cfg.stateDir, "_HORIZON", horizonUs.toString)
     writeManifest(cfg, newMan, batchId)
   }
 
   /** The compaction horizon currently in force, if any. */
-  def compactionHorizon(cfg: Config): Option[Long] = {
-    val p = Paths.get(cfg.stateDir, "_HORIZON")
-    if (Files.exists(p)) Some(new String(Files.readAllBytes(p)).trim.toLong)
-    else None
-  }
+  def compactionHorizon(cfg: Config): Option[Long] =
+    VersionedDir.read(cfg.stateDir, "_HORIZON").map(_.toLong)
 
   /** Split a batch against the compaction horizon: `ok` folds on the
     * fast path; `late` (validFrom < horizon) needs the slow path over

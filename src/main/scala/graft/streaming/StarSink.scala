@@ -3,26 +3,29 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.CacheBridge
-import graft.kernel.BitemporalKernel
 
 import java.sql.{Connection, DriverManager}
 import java.util.Properties
 
 /** S8's production seam: where a folded micro-batch LANDS. The kernel
   * fold (probe touched buckets → read only their state → one-exchange
-  * window fold) is sink-agnostic; what varies between a lakehouse and
-  * the reference's RDBMS star (core/.../informdb via JPA, batched
-  * writes on a 2-connection pool) is purely the state's storage and
-  * the atomic-swap primitive. This trait pins that boundary:
+  * window fold) is sink-agnostic: both sinks run the same per-axis
+  * kernel step ([[StarPipeline.validStep]] /
+  * [[StarPipeline.bitemporalStep]]) over their own touched-state
+  * reader. What varies between a lakehouse and the reference's RDBMS
+  * star (core/.../informdb via JPA, batched writes on a 2-connection
+  * pool) is purely the state's storage and the atomic-swap primitive.
+  * This trait pins that boundary:
   *
   *  - [[ManifestStarSink]] — the engine's native parquet+manifest
-  *    store ([[StarPipeline.foldBatch]]): bucket-granular rewrite,
-  *    atomicity via one `_CURRENT` pointer rename. Single-writer;
-  *    swap in Delta/Iceberg for multi-writer.
+  *    store ([[StarPipeline.foldBatch]]): bucket-granular rewrite into
+  *    fresh version dirs, atomicity via one `_CURRENT` pointer commit
+  *    ([[VersionedDir]]). Single-writer; swap in Delta/Iceberg for
+  *    multi-writer.
   *  - [[JdbcStarSink]] — the RDBMS path the reference ships
-  *    (Emap-Core's postgres star): same kernel, state read back over
-  *    JDBC with bucket predicates pushed down (one JDBC partition per
-  *    touched bucket), results staged via Spark's parallel JDBC
+  *    (Emap-Core's postgres star): same kernel step, state read back
+  *    over JDBC with bucket predicates pushed down (one JDBC partition
+  *    per touched bucket), results staged via Spark's parallel JDBC
   *    writer, then swapped in with ONE driver-side transaction of
   *    set-based MERGE / anti-join DELETE statements — the transaction
   *    commit plays the role of the manifest pointer rename, so
@@ -82,9 +85,8 @@ object ManifestStarSink extends StarSink {
   *   2. `spark.read.jdbc` the touched buckets of the prior state, one
   *      predicate per bucket → one parallel JDBC partition each, the
   *      bucket filter pushed down to the DB's index;
-  *   3. kernel fold (identical to the manifest path — valid axis via
-  *      [[BitemporalKernel.applyBatch]], both axes via
-  *      [[BitemporalKernel.applyBitemporal]]);
+  *   3. kernel fold — the manifest path's own axis step
+  *      ([[StarPipeline.validStep]] / [[StarPipeline.bitemporalStep]]);
   *   4. stage per-table touched-bucket rows to `*_STAGE` tables via
   *      Spark's parallel JDBC writer (executors write). Stage tables
   *      are created ONCE (first batch) and TRUNCATE-and-append
@@ -304,13 +306,12 @@ final class JdbcStarSink(url: String, star: String = "",
     }
 
   /** Shared fold skeleton for both axes: replay guard → pin batch →
-    * touched-bucket probe → axis-specific kernel fold → stage →
+    * touched-bucket probe → the axis's kernel step → stage →
     * one-transaction swap.
     */
   private def foldWith(batch0: DataFrame, batchId: Long,
                        cfg: StarPipeline.Config, progressTbl: String)(
-      compute: (DataFrame, Array[Long]) =>
-        Seq[(String, DataFrame, Seq[String])]): Unit = {
+      step: StarPipeline.Step): Unit = {
     if (alreadyCommitted(progressTbl, batchId)) return
     val batch = CacheBridge.pinned(batch0)
     try {
@@ -320,7 +321,8 @@ final class JdbcStarSink(url: String, star: String = "",
         .collect().map(_.getLong(0)).sorted
       if (touched.isEmpty) return
 
-      val outputs = compute(batch, touched)
+      val outputs = step(batch, cfg,
+        readTouched(batch.sparkSession, cfg, _, touched))
       val staged = outputs.map { case (t, df0, keys) =>
         val df = df0.withColumn("__bucket", bucket)
         stageTable(cfg, t, df)
@@ -332,37 +334,12 @@ final class JdbcStarSink(url: String, star: String = "",
 
   def fold(batch0: DataFrame, batchId: Long,
            cfg: StarPipeline.Config): Unit =
-    foldWith(batch0, batchId, cfg, progressTable(cfg)) { (batch, touched) =>
-      val spark = batch.sparkSession
-      val history = readTouched(spark, cfg, "history", touched)
-        .getOrElse(batch.limit(0))
-      val r = BitemporalKernel.applyBatch(history, batch, cfg.keyCols,
-        cfg.validFromUsCol, cfg.tieCol, cfg.payloadCols)
-      // MERGE identity per table: live is one row per key; history
-      // and audit are one row per version (key, validFrom, tie)
-      val versionKeys = cfg.keyCols ++ Seq(cfg.validFromUsCol, cfg.tieCol)
-      Seq(("history", r.history, versionKeys),
-        ("live", r.live, cfg.keyCols),
-        ("audit", r.audit, versionKeys))
-    }
+    foldWith(batch0, batchId, cfg, progressTable(cfg))(StarPipeline.validStep)
 
   def foldBitemporal(batch0: DataFrame, batchId: Long,
                      cfg: StarPipeline.Config): Unit =
-    foldWith(batch0, batchId, cfg, btProgressTable(cfg)) { (batch, touched) =>
-      val spark = batch.sparkSession
-      val empty = BitemporalKernel.emptyBitemporal(batch, cfg.keyCols,
-        cfg.validFromUsCol, cfg.tieCol, cfg.payloadCols)
-      val prev = BitemporalKernel.BitemporalState(
-        messages = readTouched(spark, cfg, "bt_messages", touched)
-          .getOrElse(empty.messages),
-        table = readTouched(spark, cfg, "bt_table", touched)
-          .getOrElse(empty.table))
-      val r = BitemporalKernel.applyBitemporal(prev, batch, cfg.keyCols,
-        cfg.validFromUsCol, cfg.tieCol, cfg.storedFromUsCol, cfg.payloadCols)
-      val msgKeys = cfg.keyCols ++ Seq(cfg.validFromUsCol, cfg.tieCol)
-      Seq(("bt_messages", r.messages, msgKeys),
-        ("bt_table", r.table, msgKeys :+ "stored_from_us"))
-    }
+    foldWith(batch0, batchId, cfg, btProgressTable(cfg))(
+      StarPipeline.bitemporalStep)
 
   def read(spark: SparkSession, cfg: StarPipeline.Config,
            table: String): Option[DataFrame] =

@@ -6,7 +6,7 @@ import org.apache.spark.sql.streaming.{GroupStateTimeout, StreamingQuery, Trigge
 import graft.operators.ObservationTypes
 import graft.sources.WaveformListener
 
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.{Files, Paths}
 
 /** The composed waveform vertical — the §3.2 lifecycle in ONE entry
   * point, the Spark analog of the reference's waveform-reader +
@@ -24,12 +24,18 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
   *                    at write when the caller supplies intervals, else
   *                    null (orphan) for [[maintain]] to repair
   *   data/vM          consolidated tier written by [[maintain]]
-  *   types/vM         visit_observation_type registry rows for the
+  *   types/vN         visit_observation_type registry rows for the
   *                    streams seen so far (wf: identity, J11)
   *   dead/batch=N     parse rejects with a `reason` — never dropped
   *   _CURRENT         "<dataDir>\t<maxAppendBatchConsolidated>" —
   *                    readers resolve the consolidated tier plus only
   *                    the append batches newer than the marker
+  *   _TYPES           the live types dir
+  *
+  * Both version dirs follow [[VersionedDir.fresh]]: a replayed fold or
+  * a repeated maintain with the same batch id writes `types/vN.<n>` /
+  * `data/vM.<n>` rather than overwrite the dir it reads, and both
+  * pointers move by [[VersionedDir.commit]].
   *
   * Scale: the append path touches nothing but its own batch directory;
   * maintenance is the only full pass, and at scale its input is
@@ -41,23 +47,6 @@ object WaveformPipeline {
                           collator: WaveformCollator.Config =
                             WaveformCollator.Config(),
                           locationMapping: Map[String, String] = Map.empty)
-
-  private def pointer(root: String): Option[(String, Long)] = {
-    val p = Paths.get(root, "_CURRENT")
-    if (!Files.exists(p)) None
-    else new String(Files.readAllBytes(p)).trim.split("\t") match {
-      case Array(dir, mark) => Some((dir, mark.toLong))
-      case _ => None
-    }
-  }
-
-  private def writePointer(root: String, dir: String, mark: Long): Unit = {
-    val tmp = Paths.get(root, "_CURRENT.tmp")
-    Files.createDirectories(Paths.get(root))
-    Files.write(tmp, s"$dir\t$mark".getBytes)
-    Files.move(tmp, Paths.get(root, "_CURRENT"),
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-  }
 
   /** Fold one micro-batch of raw socket text (MLLP/FS-framed HL7) into
     * the waveform star: deframe → parse → dead-letter split → collate →
@@ -87,14 +76,15 @@ object WaveformPipeline {
       val newTypes = ObservationTypes.fromWaveform(
         parsed.filter(col("error").isNull),
         "streamId", "streamDescription", "obsTimeUs")
-      val existing = readTypes(spark, cfg.stateRoot)
-      val types = existing match {
+      val liveTypes = VersionedDir.read(cfg.stateRoot, "_TYPES")
+      val types = liveTypes
+          .map(d => spark.read.parquet(s"${cfg.stateRoot}/$d")) match {
         case None => newTypes
         case Some(cur) => cur.unionByName(
           newTypes.join(cur.select(col("interfaceId")).distinct(),
             Seq("interfaceId"), "left_anti"))
       }
-      val tDir = s"types/v$batchId"
+      val tDir = VersionedDir.fresh(s"types/v$batchId", liveTypes.contains)
       types.write.mode("overwrite").parquet(s"${cfg.stateRoot}/$tDir")
 
       val chunks = WaveformCollator.collateBatch(
@@ -119,21 +109,14 @@ object WaveformPipeline {
         .parquet(s"${cfg.stateRoot}/append/batch=$batchId")
       // the pointer only moves on maintain(); a reader between appends
       // just unions the new batch dirs
-      val tPtr = Paths.get(cfg.stateRoot, "_TYPES.tmp")
-      Files.write(tPtr, tDir.getBytes)
-      Files.move(tPtr, Paths.get(cfg.stateRoot, "_TYPES"),
-        StandardCopyOption.ATOMIC_MOVE,
-        StandardCopyOption.REPLACE_EXISTING)
+      VersionedDir.commit(cfg.stateRoot, "_TYPES", tDir)
     } finally parsed.unpersist()
   }
 
   /** The registered stream-type dim as of the last fold. */
-  def readTypes(spark: SparkSession, stateRoot: String): Option[DataFrame] = {
-    val p = Paths.get(stateRoot, "_TYPES")
-    if (!Files.exists(p)) None
-    else Some(spark.read.parquet(
-      s"$stateRoot/${new String(Files.readAllBytes(p)).trim}"))
-  }
+  def readTypes(spark: SparkSession, stateRoot: String): Option[DataFrame] =
+    VersionedDir.read(stateRoot, "_TYPES")
+      .map(dir => spark.read.parquet(s"$stateRoot/$dir"))
 
   /** Append batch ids newer than `mark` — ONE directory listing. */
   private def listAppendIds(stateRoot: String, mark: Long): List[Long] = {
@@ -150,16 +133,25 @@ object WaveformPipeline {
     } finally ls.close()
   }
 
+  /** What a reader sees now: the live consolidated dir (if any), the
+    * marker advanced over the append batches newer than `_CURRENT`'s,
+    * and the paths of the consolidated tier plus those batches.
+    */
+  private def visible(root: String): (Option[String], Long, Seq[String]) = {
+    val cur = VersionedDir.read(root, "_CURRENT").map(_.split("\t"))
+      .collect { case Array(dir, mark) => (dir, mark.toLong) }
+    val mark = cur.fold(-1L)(_._2)
+    val ids = listAppendIds(root, mark)
+    (cur.map(_._1), (mark :: ids).max,
+      cur.map(c => s"$root/${c._1}").toSeq ++
+        ids.map(id => s"$root/append/batch=$id"))
+  }
+
   /** All chunks visible now: the consolidated tier (if any) plus append
     * batches newer than the consolidation marker.
     */
   def readChunks(spark: SparkSession, stateRoot: String): Option[DataFrame] = {
-    val (baseDirs, mark) = pointer(stateRoot) match {
-      case Some((dir, m)) => (Seq(s"$stateRoot/$dir"), m)
-      case None => (Nil, -1L)
-    }
-    val dirs = baseDirs ++ listAppendIds(stateRoot, mark)
-      .map(id => s"$stateRoot/append/batch=$id")
+    val (_, _, dirs) = visible(stateRoot)
     if (dirs.isEmpty) None else Some(spark.read.parquet(dirs: _*))
   }
 
@@ -178,19 +170,14 @@ object WaveformPipeline {
     // consolidation would let a batch appended mid-maintain be covered
     // by the new marker while its rows are absent from the consolidated
     // tier (permanently invisible to readChunks).
-    val (baseDirs, mark) = pointer(stateRoot) match {
-      case Some((dir, m)) => (Seq(s"$stateRoot/$dir"), m)
-      case None => (Nil, -1L)
-    }
-    val appendIds = listAppendIds(stateRoot, mark)
-    val dirs = baseDirs ++ appendIds.map(id => s"$stateRoot/append/batch=$id")
+    val (cur, mark, dirs) = visible(stateRoot)
     if (dirs.isEmpty) return
     val chunks = spark.read.parquet(dirs: _*)
     val repaired = Maintenance.repairOrphans(chunks, visits)
     val kept = Maintenance.retain(repaired, col("obsTimeUs"), retentionUs)
-    val dir = s"data/v$batchId"
+    val dir = VersionedDir.fresh(s"data/v$batchId", cur.contains)
     kept.write.mode("overwrite").parquet(s"$stateRoot/$dir")
-    writePointer(stateRoot, dir, (mark :: appendIds).max)
+    VersionedDir.commit(stateRoot, "_CURRENT", s"$dir\t$mark")
   }
 
   /** Start the streaming lifecycle over a raw socket-text stream. */

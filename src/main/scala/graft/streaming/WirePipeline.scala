@@ -34,26 +34,18 @@ object WirePipeline {
       payload, nBuckets = 8)
 
   /** Was this state root folded in bitemporal mode? Decided from the
-    * persisted manifests alone (any family manifest listing the
-    * `bt_messages` table), so replay/backfill entry points land in the
-    * SAME table family as the original fold without the caller having
-    * to remember the flag.
+    * persisted manifests alone (any family star folded on the stored
+    * axis, [[StarPipeline.isBitemporal]]), so replay/backfill entry
+    * points land in the SAME table family as the original fold without
+    * the caller having to remember the flag.
     */
   def isBitemporal(stateRoot: String): Boolean = {
     import scala.jdk.CollectionConverters._
     val root = java.nio.file.Paths.get(stateRoot)
     if (!java.nio.file.Files.isDirectory(root)) return false
     val s = java.nio.file.Files.list(root)
-    try s.iterator().asScala.exists { d =>
-      val cur = d.resolve("_CURRENT")
-      java.nio.file.Files.isRegularFile(cur) && {
-        val man = d.resolve(
-          new String(java.nio.file.Files.readAllBytes(cur)).trim)
-        java.nio.file.Files.isRegularFile(man) &&
-          new String(java.nio.file.Files.readAllBytes(man))
-            .contains("bt_messages")
-      }
-    } finally s.close()
+    try s.iterator().asScala.exists(d => StarPipeline.isBitemporal(d.toString))
+    finally s.close()
   }
 
   def start(raw: DataFrame, rawCol: String, stateRoot: String,
@@ -402,26 +394,18 @@ object WirePipeline {
     // does — a tiny high-watermark file advanced per batch (the
     // reference holds it in the factory across a service run,
     // PatientInfectionFactory.infectionProgress).
-    val progressPath = java.nio.file.Paths.get(
-      s"$stateRoot/conditions/_INF_PROGRESS")
+    val progressDir = s"$stateRoot/conditions"
     val infMsgs = if (!hasInfections) Nil else {
-      val infStart =
-        if (java.nio.file.Files.exists(progressPath))
-          new String(java.nio.file.Files.readAllBytes(progressPath))
-            .trim.toLong
-        else 0L
+      val infStart = VersionedDir.read(progressDir, "_INF_PROGRESS")
+        .fold(0L)(_.toLong)
       val gatedInf = mat(Hl7Wire.infectionGate(
         r.infections.filter(col("mrn").isNotNull),
         infStart, Seq("sourceMessageId", "infectionIdx")))
       val newProgress = gatedInf
         .agg(max(col("addedTimeUs"))).collect().headOption
         .flatMap(rw => Option(rw.get(0)).map(_.asInstanceOf[Long]))
-      newProgress.filter(_ > infStart).foreach { p =>
-        java.nio.file.Files.createDirectories(progressPath.getParent)
-        // forced tmp + ATOMIC_MOVE, matching the state manifest: a crash
-        // mid-write must never leave a truncated high-water mark
-        StarPipeline.writeAtomically(progressPath, p.toString.getBytes)
-      }
+      newProgress.filter(_ > infStart).foreach(p =>
+        VersionedDir.commit(progressDir, "_INF_PROGRESS", p.toString))
       Seq(Hl7Wire.wireToInfectionMessages(gatedInf))
     }
 

@@ -36,4 +36,22 @@ class IncrementalPollerSpec extends SparkSpecBase {
     // fully drained: nothing more
     assert(p2.drain(table, 4)(_ => fail("should not be called")) == 0L)
   }
+
+  test("a truncated _PROGRESS.tmp left by a crashed commit is ignored, " +
+      "and the next commit replaces it") {
+    val dir = Files.createTempDirectory("poller_tmp")
+    val tmp = dir.resolve("_PROGRESS.tmp")
+    val p = new IncrementalPoller(dir.toString, "unid")
+    Files.write(tmp, "1".getBytes)
+    assert(p.lastProgress.isEmpty)
+    p.commit(10L)
+    // a commit of 12 died mid-write: only its temp file holds anything
+    Files.write(tmp, "1".getBytes)
+    assert(p.lastProgress.contains(10L))
+    assert(new IncrementalPoller(dir.toString, "unid").lastProgress
+      .contains(10L))
+    p.commit(12L)
+    assert(p.lastProgress.contains(12L))
+    assert(!Files.exists(tmp))
+  }
 }

@@ -55,6 +55,30 @@ class WaveformListenerSpec extends SparkSpecBase {
     rows.toSeq.toDF("streamId", "samplingRate", "unit",
       "streamDescription", "usable")
 
+  private def waveMeta = md(("52912", 100, "uV", "ECG II", true))
+
+  private def waveConfig(root: String) =
+    graft.streaming.WaveformPipeline.Config(root,
+      WaveformCollator.Config(targetSamples = 50, waitLimitUs = 0L))
+
+  // contiguous 100 Hz stream: 25 samples per message = 250 ms apart
+  private def waveBatch(msgIds: Seq[Int]) = msgIds.map { i =>
+    val ms = i * 250L
+    val dtm = f"202406011200${ms / 1000}%02d.${ms % 1000}%03d+0000"
+    hl7Wave(s"W$i", "B1", "52912", dtm, (1 to 25).map(_.toDouble))
+  }.toDF("value")
+
+  private def foldWave(cfg: graft.streaming.WaveformPipeline.Config,
+                       msgIds: Seq[Int], batchId: Long): Unit =
+    graft.streaming.WaveformPipeline.foldBatch(waveBatch(msgIds), batchId,
+      "value", waveMeta, cfg)
+
+  private def waveVisits =
+    Seq(("V1", "B1", 0L, null.asInstanceOf[java.lang.Long]))
+      .toDF("visitId", "location", "admissionUs", "dischargeUs")
+      .select(col("visitId"), col("location"), col("admissionUs"),
+        col("dischargeUs").cast("long"))
+
   test("MLLP deframe + HL7 ORU parse: samples, metadata enrich, errors") {
     val meta = md(("52912", 300, "uV", "ECG II", true),
       ("52913", 50, "mmHg", "ART", false))
@@ -112,19 +136,10 @@ class WaveformListenerSpec extends SparkSpecBase {
     import graft.streaming.{Maintenance, WaveformPipeline}
     val root = java.nio.file.Files
       .createTempDirectory("wv_pipe").toString
-    val meta = md(("52912", 100, "uV", "ECG II", true))
-    val cfg = WaveformPipeline.Config(root,
-      WaveformCollator.Config(targetSamples = 50, waitLimitUs = 0L))
+    val cfg = waveConfig(root)
 
-    // contiguous 100 Hz stream: 25 samples per message = 250 ms apart
-    def batchAt(msgIds: Seq[Int]) = msgIds.map { i =>
-      val ms = i * 250L
-      val dtm = f"202406011200${ms / 1000}%02d.${ms % 1000}%03d+0000"
-      hl7Wave(s"W$i", "B1", "52912", dtm, (1 to 25).map(_.toDouble))
-    }.toDF("value")
-
-    WaveformPipeline.foldBatch(batchAt(Seq(0, 1)), 1L, "value", meta, cfg)
-    WaveformPipeline.foldBatch(batchAt(Seq(2, 3)), 2L, "value", meta, cfg)
+    foldWave(cfg, Seq(0, 1), 1L)
+    foldWave(cfg, Seq(2, 3), 2L)
 
     // stream type registered once, named from metadata
     val types = WaveformPipeline.readTypes(spark, root).get
@@ -137,11 +152,7 @@ class WaveformListenerSpec extends SparkSpecBase {
     assert(Maintenance.orphanAudit(before, "visitId").count() ==
       before.count())
 
-    val visits = Seq(("V1", "B1", 0L, null.asInstanceOf[java.lang.Long]))
-      .toDF("visitId", "location", "admissionUs", "dischargeUs")
-      .select(col("visitId"), col("location"), col("admissionUs"),
-        col("dischargeUs").cast("long"))
-    WaveformPipeline.maintain(spark, root, visits,
+    WaveformPipeline.maintain(spark, root, waveVisits,
       retentionUs = 7L * 86400L * 1000000L, batchId = 3L)
 
     val after = WaveformPipeline.readChunks(spark, root).get
@@ -151,9 +162,35 @@ class WaveformListenerSpec extends SparkSpecBase {
     assert(after.agg(sum(size(col("values")))).as[Long].head() == 100L)
 
     // a post-maintenance append is visible through the pointer
-    WaveformPipeline.foldBatch(batchAt(Seq(4)), 4L, "value", meta, cfg)
+    foldWave(cfg, Seq(4), 4L)
     val withNew = WaveformPipeline.readChunks(spark, root).get
     assert(withNew.agg(sum(size(col("values")))).as[Long].head() == 125L)
+  }
+
+  test("waveform replay: a replayed fold and a repeated maintain read " +
+      "back the types and chunks of a run without them") {
+    import graft.streaming.WaveformPipeline
+    val weekUs = 7L * 86400L * 1000000L
+    def run(replays: Boolean) = {
+      val root = java.nio.file.Files.createTempDirectory("wv_replay").toString
+      val cfg = waveConfig(root)
+      foldWave(cfg, Seq(0, 1), 1L)
+      foldWave(cfg, Seq(2, 3), 2L)
+      // at-least-once delivery: batch 2 arrives again under its id, and
+      // its fold reads the type registry it replaces
+      if (replays) foldWave(cfg, Seq(2, 3), 2L)
+      // a retried maintenance tick reads the tier it replaces
+      (1 to (if (replays) 2 else 1)).foreach(_ =>
+        WaveformPipeline.maintain(spark, root, waveVisits, weekUs, 3L))
+      def rows(df: org.apache.spark.sql.DataFrame) =
+        df.select(to_json(struct(df.columns.sorted.map(col): _*)))
+          .as[String].collect().toSeq.sorted
+      (rows(WaveformPipeline.readTypes(spark, root).get),
+        rows(WaveformPipeline.readChunks(spark, root).get))
+    }
+    val (types, chunks) = run(replays = false)
+    assert(types.nonEmpty && chunks.nonEmpty)
+    assert(run(replays = true) == ((types, chunks)))
   }
 
   test("TCP listener collates frames arriving over a real socket") {
