@@ -1,8 +1,10 @@
 package graft.kernel
 
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
+
+import scala.collection.mutable.ArrayBuffer
 
 /** Bitemporal upsert kernel — the Spark-first re-expression of the
   * reference's `RowState` save pattern (ref: core/.../RowState.java:186-199
@@ -20,9 +22,11 @@ import org.apache.spark.sql.functions._
   *   - audit = every superseded version, with validUntil stamped from the
   *     superseding version's validFrom (ref: informdb/AuditCore.java:32-35).
   *
-  * Batch formulation: one hash-partition shuffle on the key, two window
-  * passes over the SAME partitioning+ordering (Spark reuses the sort), no
-  * driver-side loops — scales linearly with keys at any data size.
+  * Batch formulation: ONE keyed pass. State, batch and (on the stored
+  * axis) the prior version records are unioned, shuffled once on the key,
+  * sorted within partitions and walked key by key; every output table is
+  * a selection from that pass. No window, no join, no driver-side loop —
+  * scales linearly with keys at any data size.
   */
 object BitemporalKernel {
 
@@ -40,6 +44,14 @@ object BitemporalKernel {
     */
   final case class KernelResult(live: DataFrame, audit: DataFrame,
                                 history: DataFrame)
+
+  /** How the kernel's one exchange partitions its rows: by `expr`, a
+    * function of the key columns alone, into exactly `n` partitions (an
+    * explicit count, which AQE does not coalesce). A caller that writes
+    * bucketed state names its bucket expression, so each bucket's rows
+    * leave the kernel in one partition.
+    */
+  final case class KeyPartitioning(expr: Column, n: Int)
 
   /** Fold a batch of updates into (empty or existing) state.
     *
@@ -62,17 +74,14 @@ object BitemporalKernel {
     * @param validFromUsCol event time, epoch µs.
     * @param tieCol      deterministic tie-breaker (e.g. source message id).
     * @param payloadCols mutable payload columns (F6 diff is over these).
-    */
-  /** @param materialize hook applied to the two shared intermediates
-    *   (deduped message log; stamped versions). The returned
-    *   live/audit/history all branch off them; a caller running several
-    *   actions over the result MAY pass a persist here — but measure
-    *   first: the two window passes share one exchange+sort, so
-    *   recomputing the fold per action from cheap inputs (cached batch +
-    *   columnar state) usually beats materializing two state-sized
-    *   caches (StarPipeline measured pinning as a 55% regression and
-    *   passes identity). Default is identity (pure, no cache handles
-    *   leak).
+    * @param materialize hook applied to the one keyed pass; live, audit
+    *   and history are all selections from it. A caller running several
+    *   actions over the result passes a pin here and releases it after
+    *   its last action (StarPipeline pins with `CacheBridge.pinned`, so
+    *   its table writes share one shuffle). The default, identity,
+    *   re-runs the pass per action and leaves no cache behind.
+    * @param partitioning the pass's exchange; default: hash of the key
+    *   columns over `spark.sql.shuffle.partitions`.
     */
   def applyBatch(
       state: DataFrame,
@@ -81,62 +90,200 @@ object BitemporalKernel {
       validFromUsCol: String,
       tieCol: String,
       payloadCols: Seq[String],
-      materialize: DataFrame => DataFrame = identity): KernelResult = {
-    val (history, withUntil) =
-      foldVersions(state, updates, keyCols, validFromUsCol, tieCol,
-        payloadCols, materialize)
+      materialize: DataFrame => DataFrame = identity,
+      partitioning: Option[KeyPartitioning] = None): KernelResult = {
+    val msgCols = keyCols ++ Seq(validFromUsCol, tieCol) ++ payloadCols
+    val out = materialize(keyedPass(state, updates, None, keyCols,
+      validFromUsCol, tieCol, payloadCols, partitioning))
+    val versions = out.filter(col(Kind) === VersionRow)
     KernelResult(
-      live = withUntil.filter(col("valid_until_us").isNull).drop("valid_until_us"),
-      audit = withUntil.filter(col("valid_until_us").isNotNull),
-      history = history)
+      live = versions.filter(col("valid_until_us").isNull)
+        .select(msgCols.map(col): _*),
+      audit = versions.filter(col("valid_until_us").isNotNull)
+        .select((msgCols :+ "valid_until_us").map(col): _*),
+      history = out.filter(col(Kind) === MessageRow)
+        .select(msgCols.map(col): _*))
   }
 
-  /** Shared valid-time fold: returns (deduped message log, kept versions
-    * with valid_until_us stamped), each passed through `materialize`.
+  private val Src = "__src"
+  private val Kind = "__kind"
+  private val StampCols = Seq("valid_until_us", "stored_from_us",
+    "stored_until_us")
+  // sources of the pass's input rows, in the order they sort at one
+  // (key, validFrom, tie)
+  private val StoredMessage = 0
+  private val BatchMessage = 1
+  private val Record = 2
+  // kinds of the pass's output rows
+  private val MessageRow = 0
+  private val VersionRow = 1
+  private val RecordRow = 2
+
+  /** The kernel's one keyed pass. The prior messages, the batch and (on
+    * the stored axis) the prior version records are unioned, tagged by
+    * source, repartitioned once, sorted within partitions by (key,
+    * validFrom, tie, source) and walked key by key ([[KeyWalk]]). The
+    * output carries the message columns, `valid_until_us`,
+    * `stored_from_us`, `stored_until_us` and a `__kind`: deduplicated
+    * messages, then either valid-time versions or stored-axis records.
+    *
+    * @param stored the prior version records and the batch's stored-stamp
+    *   column — the stored axis; None folds valid time only.
     */
-  private def foldVersions(
+  private def keyedPass(
       state: DataFrame,
       updates: DataFrame,
+      stored: Option[(DataFrame, String)],
       keyCols: Seq[String],
       validFromUsCol: String,
       tieCol: String,
       payloadCols: Seq[String],
-      materialize: DataFrame => DataFrame = identity): (DataFrame, DataFrame) = {
+      partitioning: Option[KeyPartitioning]): DataFrame = {
+    val msgCols = keyCols ++ Seq(validFromUsCol, tieCol) ++ payloadCols
+    val noLong = lit(null).cast("long")
+    def tagged(df: DataFrame, src: Int, stamps: Seq[Column],
+               batchStamp: Column) =
+      df.select(msgCols.map(col) ++ stamps :+ batchStamp.as("__stamp") :+
+        lit(src).as(Src): _*)
+    val unstamped = StampCols.map(noLong.as(_))
+    val all = (Seq(
+      tagged(state, StoredMessage, unstamped, noLong),
+      tagged(updates, BatchMessage, unstamped,
+        stored.fold(noLong)(s => col(s._2).cast("long")))) ++
+      stored.map(s => tagged(s._1, Record, StampCols.map(col), noLong)))
+      .reduce(_ unionByName _)
 
-    val cols = keyCols ++ Seq(validFromUsCol, tieCol) ++ payloadCols
-    val all = state.selectExpr(cols: _*).unionByName(updates.selectExpr(cols: _*))
+    val exchanged = partitioning match {
+      case Some(p) => all.repartition(p.n, p.expr)
+      case None    => all.repartition(keyCols.map(col): _*)
+    }
+    val outSchema = StructType(all.schema.fields.take(msgCols.size) ++
+      StampCols.map(StructField(_, LongType)) :+
+      StructField(Kind, IntegerType, nullable = false))
+    val walk = new KeyWalk(keyCols.size, payloadCols.size, stored.isDefined)
+    exchanged
+      .sortWithinPartitions((msgCols.take(keyCols.size + 2) :+ Src).map(col): _*)
+      .mapPartitions(walk.apply _)(Encoders.row(outSchema))
+  }
 
-    val byKey = Window.partitionBy(keyCols.map(col): _*)
-      .orderBy(col(validFromUsCol), col(tieCol))
+  /** Walks one sorted partition of the pass, one key at a time. Input
+    * rows are (message columns, valid_until_us, stored_from_us,
+    * stored_until_us, __stamp, __src); output rows are (message columns,
+    * valid_until_us, stored_from_us, stored_until_us, __kind).
+    */
+  private final class KeyWalk(nKey: Int, nPayload: Int, stored: Boolean)
+      extends Serializable {
+    private val iVf = nKey
+    private val iTie = nKey + 1
+    private val nMsg = nKey + 2 + nPayload
+    private val iVu = nMsg
+    private val iSf = nMsg + 1
+    private val iSu = nMsg + 2
+    private val iStamp = nMsg + 3
+    private val iSrc = nMsg + 4
 
-    // W2: at-least-once delivery — an exact replay of a message (same key,
-    // validFrom, tie) is a no-op (ref Technical_overview_of_EMAP.md:189-196).
-    // `tie` must uniquely identify the source message. Replays are adjacent
-    // in the (validFrom, tie) sort, so a lag-filter dedups them inside the
-    // SAME window pass as the F6/lead steps below — the whole kernel is
-    // ONE hash exchange + ONE sort (a dropDuplicates here planned as two
-    // extra exchanges + a SortAggregate).
-    val msgId = struct(col(validFromUsCol), col(tieCol))
-    val history = materialize(all
-      .withColumn("__prev_id", lag(msgId, 1).over(byKey))
-      .filter(col("__prev_id").isNull || !(msgId <=> col("__prev_id")))
-      .drop("__prev_id"))
+    def apply(rows: Iterator[Row]): Iterator[Row] = {
+      val in = rows.buffered
+      Iterator.continually(in).takeWhile(_.hasNext).flatMap { _ =>
+        val group = ArrayBuffer(in.next())
+        while (in.hasNext && (0 until nKey).forall(i =>
+            same(in.head.get(i), group.head.get(i))))
+          group += in.next()
+        foldKey(group)
+      }
+    }
 
-    val payload = struct(payloadCols.map(col): _*)
-    // F6 (output-side): coalesce runs of identical consecutive payloads —
-    // keep the FIRST of each run (a no-op update does not bump validFrom;
-    // ref RowState.java:155-162).
-    val kept = history
-      .withColumn("__prev_payload", lag(payload, 1).over(byKey))
-      .filter(col("__prev_payload").isNull ||
-        !(payload <=> col("__prev_payload")))
-      .drop("__prev_payload")
+    private def emit(r: Row, vu: Any, sf: Any, su: Any, kind: Int): Row =
+      Row.fromSeq((0 until nMsg).map(r.get) ++ Seq(vu, sf, su, kind))
 
-    // Same partitioning & ordering → no extra shuffle for the second pass.
-    val withUntil = materialize(kept
-      .withColumn("valid_until_us", lead(col(validFromUsCol), 1).over(byKey)))
+    private def samePayload(a: Row, b: Row): Boolean =
+      (iTie + 1 until nMsg).forall(i => same(a.get(i), b.get(i)))
 
-    (history, withUntil)
+    private def foldKey(group: ArrayBuffer[Row]): ArrayBuffer[Row] = {
+      val out = ArrayBuffer.empty[Row]
+      val (records, msgs) = group.partition(_.getInt(iSrc) == Record)
+      // W2: at-least-once delivery — an exact replay of a message (same
+      // key, validFrom, tie) is a no-op (ref
+      // Technical_overview_of_EMAP.md:189-196). `tie` must uniquely
+      // identify the source message. Replays sort adjacent, the stored
+      // copy first, so the first of each run is kept.
+      val history = msgs.indices.collect {
+        case i if i == 0 || !same(msgs(i).get(iVf), msgs(i - 1).get(iVf)) ||
+          !same(msgs(i).get(iTie), msgs(i - 1).get(iTie)) => msgs(i)
+      }
+      history.foreach(h => out += emit(h, null, null, null, MessageRow))
+      // F6 (output-side): coalesce runs of identical consecutive payloads
+      // — keep the FIRST of each run (a no-op update does not bump
+      // validFrom; ref RowState.java:155-162) — and close each kept
+      // version at its successor's validFrom.
+      val kept = history.indices.collect {
+        case i if i == 0 || !samePayload(history(i), history(i - 1)) =>
+          history(i)
+      }
+      def until(i: Int): Any =
+        if (i + 1 < kept.size) kept(i + 1).get(iVf) else null
+      if (!stored) {
+        kept.indices.foreach(i => out += emit(kept(i), until(i), null, null,
+          VersionRow))
+        return out
+      }
+
+      // Stored axis. Identities (key, validFrom, tie) and the key's stamp
+      // match with equi-join semantics: a null part never matches.
+      val keyMatches = (0 until nKey).forall(i => !group.head.isNullAt(i))
+      def matchable(r: Row) =
+        keyMatches && !r.isNullAt(iVf) && !r.isNullAt(iTie)
+      val stamps = msgs.collect {
+        case m if m.getInt(iSrc) == BatchMessage && !m.isNullAt(iStamp) =>
+          m.getLong(iStamp)
+      }
+      val stamp: Any = if (keyMatches && stamps.nonEmpty) stamps.max else null
+      val (closed, open) = records.partition(r => !r.isNullAt(iSu))
+      // stored-closed records are immutable
+      closed.foreach(r => out += emit(r, r.get(iVu), r.get(iSf), r.get(iSu),
+        RecordRow))
+      def id(r: Row) = (r.get(iVf), r.get(iTie))
+      val openById = open.filter(matchable).groupBy(id)
+      kept.indices.foreach { i =>
+        val v = kept(i)
+        val olds =
+          if (matchable(v)) openById.getOrElse(id(v), Nil) else Nil
+        if (olds.isEmpty) out += emit(v, until(i), stamp, null, RecordRow)
+        olds.foreach { o =>
+          if (samePayload(v, o) && same(until(i), o.get(iVu)))
+            // unchanged: keeps its stored_from (F6 on the stored axis)
+            out += emit(v, until(i), o.get(iSf), null, RecordRow)
+          else {
+            out += emit(o, o.get(iVu), o.get(iSf), stamp, RecordRow)
+            out += emit(v, until(i), stamp, null, RecordRow)
+          }
+        }
+      }
+      // vanished (absorbed, superseded or unmatchable): closed
+      val keptIds = kept.filter(matchable).map(id).toSet
+      open.filterNot(o => matchable(o) && keptIds.contains(id(o)))
+        .foreach(o => out += emit(o, o.get(iVu), o.get(iSf), stamp, RecordRow))
+      out
+    }
+  }
+
+  /** Null-safe value equality with Spark's ordering semantics (`<=>` on
+    * structs): NaN equals NaN, 0.0 equals -0.0, and arrays, structs and
+    * binaries compare element by element.
+    */
+  private def same(a: Any, b: Any): Boolean = (a, b) match {
+    case (null, null) => true
+    case (null, _) | (_, null) => false
+    case (x: Double, y: Double) => x == y || (x.isNaN && y.isNaN)
+    case (x: Float, y: Float) => x == y || (x.isNaN && y.isNaN)
+    case (x: java.math.BigDecimal, y: java.math.BigDecimal) =>
+      x.compareTo(y) == 0
+    case (x: Array[Byte], y: Array[Byte]) => java.util.Arrays.equals(x, y)
+    case (x: Row, y: Row) =>
+      x.length == y.length && (0 until x.length).forall(i => same(x.get(i), y.get(i)))
+    case (x: scala.collection.Seq[_], y: scala.collection.Seq[_]) =>
+      x.length == y.length && x.lazyZip(y).forall(same)
+    case _ => a == b
   }
 
   // =================================================================
@@ -189,7 +336,14 @@ object BitemporalKernel {
     *     version causes no stored churn (F6 on the stored axis);
     *   - records that disappeared or changed are closed with
     *     stored_until = the batch's stored stamp for that key;
-    *   - new/changed records open with stored_from = that stamp.
+    *   - new/changed records open with stored_from = that stamp;
+    *   - stored-closed records pass through unchanged.
+    * A version identity (key, validFrom, tie) with a null part never
+    * matches a record, and a key with a null part gets a null stamp
+    * (equi-join semantics).
+    *
+    * Both tables are selections from one keyed pass; `materialize` and
+    * `partitioning` are [[applyBatch]]'s.
     *
     * Stored-time granularity is the batch: all of a key's changes within
     * one batch share one stamp, `max(storedFromUs)` over the key's updates
@@ -215,72 +369,17 @@ object BitemporalKernel {
       tieCol: String,
       storedFromUsCol: String,
       payloadCols: Seq[String],
-      materialize: DataFrame => DataFrame = identity): BitemporalState = {
-
-    val (newMessages, newVersions) = foldVersions(
-      prev.messages, updates, keyCols, validFromUsCol, tieCol, payloadCols,
-      materialize)
-
-    // One stored stamp per touched key (batch granularity — see scaladoc).
-    val stamps = updates
-      .groupBy(keyCols.map(col): _*)
-      .agg(max(col(storedFromUsCol)).as("__stamp"))
-
-    val closed = prev.table.filter(col("stored_until_us").isNotNull)
-    val open = prev.table.filter(col("stored_until_us").isNull)
-      .drop("stored_until_us")
-
-    // Diff open records against the re-derived versions on the version
-    // identity (key, validFrom, tie); payload/validUntil compared
-    // null-safely. Full outer join: left-only = disappeared (absorbed or
-    // superseded shape), right-only = newly created, both = unchanged or
-    // content-changed.
-    val idCols = keyCols :+ validFromUsCol :+ tieCol
-    val oldSide = open.select(
-      idCols.map(col) ++
-        payloadCols.map(c => col(c).as(s"__old_$c")) ++
-        Seq(col("valid_until_us").as("__old_vu"),
-          col("stored_from_us").as("__old_sf"),
-          lit(true).as("__in_old")): _*)
-    val newSide = newVersions.withColumn("__in_new", lit(true))
-
-    val diff = newSide.join(oldSide, idCols, "full_outer")
-      .join(stamps, keyCols, "left")
-
-    val samePayload = struct(payloadCols.map(col): _*) <=>
-      struct(payloadCols.map(c => col(s"__old_$c")): _*)
-    val unchanged = col("__in_new").isNotNull && col("__in_old").isNotNull &&
-      samePayload && (col("valid_until_us") <=> col("__old_vu"))
-
-    val outCols = keyCols ++ Seq(validFromUsCol, tieCol) ++ payloadCols
-    val keepUnchanged = diff.filter(unchanged)
-      .select(outCols.map(col) ++ Seq(col("valid_until_us"),
-        col("__old_sf").as("stored_from_us"),
-        lit(null).cast("long").as("stored_until_us")): _*)
-    val closeOld = diff.filter(col("__in_old").isNotNull && !unchanged)
-      .select(keyCols.map(col) ++ Seq(col(validFromUsCol), col(tieCol)) ++
-        payloadCols.map(c => col(s"__old_$c").as(c)) ++
-        Seq(col("__old_vu").as("valid_until_us"),
-          col("__old_sf").as("stored_from_us"),
-          col("__stamp").as("stored_until_us")): _*)
-    val openNew = diff.filter(col("__in_new").isNotNull && !unchanged)
-      .select(outCols.map(col) ++ Seq(col("valid_until_us"),
-        col("__stamp").as("stored_from_us"),
-        lit(null).cast("long").as("stored_until_us")): _*)
-
-    // Bound the output partition count. The 3 diff branches are narrow
-    // over `open` (the batch side broadcasts), so each carries the
-    // previous table's partitions — without this coalesce the union
-    // compounds 3× per fold (exponential partition growth: measured
-    // 1→4→13→40→121… and a 120k-task stage by fold 10). coalesce is
-    // narrow (closed records don't move); at scale the caller's bucketed
-    // fold keeps per-bucket sizes bounded.
-    val nParts = math.max(1, updates.sparkSession.conf
-      .get("spark.sql.shuffle.partitions", "32").toInt)
+      materialize: DataFrame => DataFrame = identity,
+      partitioning: Option[KeyPartitioning] = None): BitemporalState = {
+    val msgCols = keyCols ++ Seq(validFromUsCol, tieCol) ++ payloadCols
+    val out = materialize(keyedPass(prev.messages, updates,
+      Some((prev.table, storedFromUsCol)), keyCols, validFromUsCol, tieCol,
+      payloadCols, partitioning))
     BitemporalState(
-      messages = newMessages,
-      table = closed.unionByName(keepUnchanged)
-        .unionByName(closeOld).unionByName(openNew).coalesce(nParts))
+      messages = out.filter(col(Kind) === MessageRow)
+        .select(msgCols.map(col): _*),
+      table = out.filter(col(Kind) === RecordRow)
+        .select((msgCols ++ StampCols).map(col): _*))
   }
 
   /** O3: delete-if-newer with audit (ref: core/.../PersonController.java:347-366).

@@ -65,15 +65,33 @@ object StarPipeline {
   private type ManifestMap = Map[String, Map[String, String]]
 
   /** One axis's kernel step: (pinned batch, config, reader of the
-    * touched prior state of a table) → the tables to persist, each with
-    * its row identity keys (used by the JDBC sink's MERGE; the manifest
-    * sink replaces whole buckets and ignores them).
+    * touched prior state of a table, the fold's pins) → the tables to
+    * persist, each with its row identity keys (used by the JDBC sink's
+    * MERGE; the manifest sink replaces whole buckets and ignores them).
     */
   private[streaming] type Step = (DataFrame, Config,
-    String => Option[DataFrame]) => Seq[(String, DataFrame, Seq[String])]
+    String => Option[DataFrame], Pins) => Seq[(String, DataFrame, Seq[String])]
 
-  private def bucketOf(cfg: Config): Column =
+  /** The frames one fold pins with [[CacheBridge.pinned]]: `apply` pins a
+    * frame and returns its cached leaf, `release` unpersists them all.
+    * A fold body releases its pins in a `finally`; no frame over a pinned
+    * leaf may be run after that.
+    */
+  private[streaming] final class Pins extends (DataFrame => DataFrame) {
+    private val held = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    def apply(df: DataFrame): DataFrame = { held += df; CacheBridge.pinned(df) }
+    def release(): Unit = held.foreach(_.unpersist(false))
+  }
+
+  private[streaming] def bucketOf(cfg: Config): Column =
     pmod(xxhash64(cfg.keyCols.map(col): _*), lit(cfg.nBuckets))
+
+  /** The kernel's one exchange for a star: its bucket expression, over
+    * `nBuckets` partitions — each bucket leaves the kernel in one
+    * partition, so each written bucket is one file.
+    */
+  private def byBucket(cfg: Config) =
+    Some(BitemporalKernel.KeyPartitioning(bucketOf(cfg), cfg.nBuckets))
 
   private def readManifest(stateDir: String): ManifestMap =
     VersionedDir.read(stateDir, "_CURRENT").fold(Map.empty: ManifestMap) {
@@ -160,11 +178,12 @@ object StarPipeline {
 
   /** The valid-time kernel step: history → history/live/audit. */
   private[streaming] def validStep(batch: DataFrame, cfg: Config,
-                                   prior: String => Option[DataFrame])
+                                   prior: String => Option[DataFrame],
+                                   pins: Pins)
       : Seq[(String, DataFrame, Seq[String])] = {
     val r = BitemporalKernel.applyBatch(
       prior("history").getOrElse(batch.limit(0)), batch, cfg.keyCols,
-      cfg.validFromUsCol, cfg.tieCol, cfg.payloadCols)
+      cfg.validFromUsCol, cfg.tieCol, cfg.payloadCols, pins, byBucket(cfg))
     // live is one row per key; history and audit one per version
     val versionKeys = cfg.keyCols ++ Seq(cfg.validFromUsCol, cfg.tieCol)
     Seq(("history", r.history, versionKeys),
@@ -182,17 +201,13 @@ object StarPipeline {
     val spark = batch0.sparkSession
     val man = readManifest(cfg.stateDir)
 
-    // The batch feeds every action (bucket probe + one write per table);
-    // its lineage is often an expression-heavy parse — evaluate it once,
-    // and plan the kernel over the cached relation, not that lineage.
-    // The kernel's state-sized intermediates are deliberately NOT pinned:
-    // the table writes recompute the fold from the pinned batch +
-    // columnar state read, and the two window passes share one
-    // exchange+sort, so 3× recompute beats materializing two
-    // touched-state-sized caches (measured: pinning them regressed the
-    // incremental-fold bench 55%, BENCH_r04→r05 w3).
-    val batch = CacheBridge.pinned(batch0)
+    // The batch feeds the bucket probe and the kernel; its lineage is
+    // often an expression-heavy parse — evaluate it once, and plan the
+    // kernel over the cached relation, not that lineage. The step pins
+    // its kernel pass too, so every table write reads the one shuffle.
+    val pins = new Pins
     try {
+    val batch = pins(batch0)
 
     // Which buckets does this batch touch (≤ nBuckets small longs), and
     // which of them carry pre-horizon arrivals (those need their cold
@@ -208,7 +223,7 @@ object StarPipeline {
     val lateBuckets =
       probe.filter(_.getInt(1) == 1).map(_.getLong(0).toString).toSet
 
-    // a cold manifest key is "<bucket>-<compactBatchId>"
+    // a cold manifest key is "<bucket>-<version dir>"
     def coldKeysOf(tbl: String) =
       man.getOrElse(s"$tbl.cold", Map.empty)
         .filter { case (k, _) => lateBuckets.contains(k.split("-")(0)) }
@@ -221,7 +236,7 @@ object StarPipeline {
       if (paths.isEmpty) None else Some(spark.read.parquet(paths: _*))
     }
 
-    val newMan = step(batch, cfg, readTouched).foldLeft(man) {
+    val newMan = step(batch, cfg, readTouched, pins).foldLeft(man) {
       case (m, (tbl, df, _)) =>
         val (dir, present) = writeVersion(cfg, man, tbl, batchId, df)
         // an emptied touched bucket drops its manifest entry
@@ -237,7 +252,7 @@ object StarPipeline {
           m.getOrElse(s"$tbl.cold", Map.empty) -- coldKeysOf(tbl).keys)
     }
     writeManifest(cfg, newMan, batchId)
-    } finally batch0.unpersist(false)
+    } finally pins.release()
   }
 
   // =================================================================
@@ -268,7 +283,8 @@ object StarPipeline {
 
   /** The both-axes kernel step: bt_messages/bt_table → both. */
   private[streaming] def bitemporalStep(batch: DataFrame, cfg: Config,
-                                        prior: String => Option[DataFrame])
+                                        prior: String => Option[DataFrame],
+                                        pins: Pins)
       : Seq[(String, DataFrame, Seq[String])] = {
     val empty = BitemporalKernel.emptyBitemporal(batch, cfg.keyCols,
       cfg.validFromUsCol, cfg.tieCol, cfg.payloadCols)
@@ -276,7 +292,8 @@ object StarPipeline {
       messages = prior("bt_messages").getOrElse(empty.messages),
       table = prior("bt_table").getOrElse(empty.table))
     val r = BitemporalKernel.applyBitemporal(prev, batch, cfg.keyCols,
-      cfg.validFromUsCol, cfg.tieCol, cfg.storedFromUsCol, cfg.payloadCols)
+      cfg.validFromUsCol, cfg.tieCol, cfg.storedFromUsCol, cfg.payloadCols,
+      pins, byBucket(cfg))
     // a message is (key, validFrom, tie); a version record is a message
     // opened at a stored stamp
     val msgKeys = cfg.keyCols ++ Seq(cfg.validFromUsCol, cfg.tieCol)
@@ -380,19 +397,22 @@ object StarPipeline {
   /** The one hot/cold re-tier writer of both axes. Each table's frame
     * carries a `__cold` flag: its hot rows replace the table's hot
     * buckets, its cold rows are appended to `<table>.cold` under keys
-    * `<bucket>-<batchId>`.
+    * `<bucket>-<version dir>` (`3-v7`, or `3-v7.1` when compaction 7 is
+    * replayed), so a replay adds entries beside the first run's instead
+    * of replacing them.
     */
   private def retier(cfg: Config, horizonUs: Long, batchId: Long,
                      flagged: Seq[(String, DataFrame)]): Unit = {
     val man = readManifest(cfg.stateDir)
     val newMan = flagged.foldLeft(man) { case (m, (tbl, df)) =>
-      def tier(t: String, rows: Column, suffix: String) = {
+      def tier(t: String, rows: Column, cold: Boolean) = {
         val (dir, buckets) = writeVersion(cfg, man, t, batchId,
           df.filter(rows).drop("__cold"))
+        val suffix = if (cold) "-" + dir.substring(dir.lastIndexOf('/') + 1) else ""
         buckets.map(k => s"$k$suffix" -> s"$dir/__bucket=$k").toMap
       }
-      val hot = tier(tbl, !col("__cold"), "")
-      val cold = tier(s"$tbl.cold", col("__cold"), s"-$batchId")
+      val hot = tier(tbl, !col("__cold"), cold = false)
+      val cold = tier(s"$tbl.cold", col("__cold"), cold = true)
       m.updated(tbl, hot)
         .updated(s"$tbl.cold", m.getOrElse(s"$tbl.cold", Map.empty) ++ cold)
     }

@@ -1,15 +1,13 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.CacheBridge
 
 import java.sql.{Connection, DriverManager}
 import java.util.Properties
 
 /** S8's production seam: where a folded micro-batch LANDS. The kernel
-  * fold (probe touched buckets → read only their state → one-exchange
-  * window fold) is sink-agnostic: both sinks run the same per-axis
+  * fold (probe touched buckets → read only their state → one keyed
+  * kernel pass) is sink-agnostic: both sinks run the same per-axis
   * kernel step ([[StarPipeline.validStep]] /
   * [[StarPipeline.bitemporalStep]]) over their own touched-state
   * reader. What varies between a lakehouse and the reference's RDBMS
@@ -306,30 +304,30 @@ final class JdbcStarSink(url: String, star: String = "",
     }
 
   /** Shared fold skeleton for both axes: replay guard → pin batch →
-    * touched-bucket probe → the axis's kernel step → stage →
-    * one-transaction swap.
+    * touched-bucket probe → the axis's kernel step (which pins its pass)
+    * → stage → one-transaction swap → release the pins.
     */
   private def foldWith(batch0: DataFrame, batchId: Long,
                        cfg: StarPipeline.Config, progressTbl: String)(
       step: StarPipeline.Step): Unit = {
     if (alreadyCommitted(progressTbl, batchId)) return
-    val batch = CacheBridge.pinned(batch0)
+    val pins = new StarPipeline.Pins
     try {
-      val bucket = pmod(xxhash64(cfg.keyCols.map(col): _*),
-        lit(cfg.nBuckets))
+      val batch = pins(batch0)
+      val bucket = StarPipeline.bucketOf(cfg)
       val touched = batch.select(bucket.as("__bucket")).distinct()
         .collect().map(_.getLong(0)).sorted
       if (touched.isEmpty) return
 
       val outputs = step(batch, cfg,
-        readTouched(batch.sparkSession, cfg, _, touched))
+        readTouched(batch.sparkSession, cfg, _, touched), pins)
       val staged = outputs.map { case (t, df0, keys) =>
         val df = df0.withColumn("__bucket", bucket)
         stageTable(cfg, t, df)
         (t, df.columns.toSeq, keys)
       }
       swapIn(cfg, staged, touched, progressTbl, batchId)
-    } finally batch0.unpersist(false)
+    } finally pins.release()
   }
 
   def fold(batch0: DataFrame, batchId: Long,

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.CacheBridge
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.operators.{IdentityMerge, LocationVisits, PendingMovements}
 import graft.sources.{Hl7Wire, LabFunnel}
@@ -164,11 +163,7 @@ object WirePipeline {
     // a `mat` leaf may escape this fold: after the `finally` below
     // unpersists the channels, running one would silently rebuild a
     // cache that nothing tracks.
-    val mats = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    def mat(df: DataFrame): DataFrame = {
-      val leaf = CacheBridge.pinned(df)
-      mats += df; leaf
-    }
+    val mat = new StarPipeline.Pins
     // valid-time fold, or the stored-stamped bitemporal twin — through
     // the deployment's StarSink (parquet+manifest or RDBMS MERGE)
     def foldStar(msgs: DataFrame, cfgC: StarPipeline.Config): Unit =
@@ -478,7 +473,7 @@ object WirePipeline {
       cfg(stateRoot, "questions",
         Seq("parentTable", "parentId", "questionText"), "updatedTimeUs",
         Seq("answer")))
-    } finally mats.foreach(_.unpersist(false))
+    } finally mat.release()
   }
 
   /** The visit-op payload persisted in the `adt` star — everything the

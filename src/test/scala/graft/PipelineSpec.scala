@@ -256,31 +256,45 @@ class PipelineSpec extends SparkSpecBase {
     assert(tmps.isEmpty, tmps)
   }
 
+  /** The q70 shape: out-of-order valid times across batches (key 1 also
+    * lands earlier every batch), stored stamp = batch number.
+    */
+  private def q70Batch(b: Long) = ((1L to 6L).map { k =>
+    StarMsg(k, 1000L * ((b * 3 + k) % 7 + 1), b * 100 + k,
+      s"s$b", b.toDouble)
+  } :+ StarMsg(1L, 500L * b, 900 + b, "x", 0.5)).toDF()
+    .withColumn("stored_us", lit(b))
+
+  private def q70Config(prefix: String) = StarPipeline.Config(
+    Files.createTempDirectory(prefix).toString, Seq("key"), "ts_us",
+    "msg_id", Seq("state", "value"), nBuckets = 8,
+    storedFromUsCol = "stored_us")
+
+  private def starRows(cfg: StarPipeline.Config, tables: Seq[String]) =
+    tables.map { t =>
+      val df = StarPipeline.readFull(spark, cfg, t).get
+      t -> df.select(to_json(struct(df.columns.sorted.map(col): _*)))
+        .as[String].collect().toSeq.sorted
+    }
+
+  private type Fold = (org.apache.spark.sql.DataFrame, Long,
+    StarPipeline.Config) => Unit
+  private type Compact = (org.apache.spark.sql.SparkSession,
+    StarPipeline.Config, Long, Long) => Unit
+  private val bothAxes = Seq[(Fold, Compact, Seq[String])](
+    (StarPipeline.foldBatch, StarPipeline.compact,
+      Seq("history", "live", "audit")),
+    (StarPipeline.foldBatchBitemporal, StarPipeline.compactBitemporal,
+      Seq("bt_messages", "bt_table")))
+
   test("a crash after the version dirs are written but before the pointer " +
       "moves: replaying converges to a clean fold on both axes, after a " +
       "compaction too, and leaves no temp file") {
-    import org.apache.spark.sql.{DataFrame, SparkSession}
     // the q70 shape: out-of-order valid times, and batch 4's key-1
     // arrival lands below the compaction horizon (un-compacts a bucket)
-    def batch(b: Long) = ((1L to 6L).map { k =>
-      StarMsg(k, 1000L * ((b * 3 + k) % 7 + 1), b * 100 + k,
-        s"s$b", b.toDouble)
-    } :+ StarMsg(1L, 500L * b, 900 + b, "x", 0.5)).toDF()
-      .withColumn("stored_us", lit(b))
-    type Fold = (DataFrame, Long, StarPipeline.Config) => Unit
-    type Compact = (SparkSession, StarPipeline.Config, Long, Long) => Unit
-    val axes = Seq[(Fold, Compact, Seq[String])](
-      (StarPipeline.foldBatch, StarPipeline.compact,
-        Seq("history", "live", "audit")),
-      (StarPipeline.foldBatchBitemporal, StarPipeline.compactBitemporal,
-        Seq("bt_messages", "bt_table")))
-
-    axes.foreach { case (fold, compact, tables) =>
+    bothAxes.foreach { case (fold, compact, tables) =>
       def run(crash: Boolean) = {
-        val cfg = StarPipeline.Config(
-          Files.createTempDirectory("star_crash").toString, Seq("key"),
-          "ts_us", "msg_id", Seq("state", "value"), nBuckets = 8,
-          storedFromUsCol = "stored_us")
+        val cfg = q70Config("star_crash")
         val dir = java.nio.file.Paths.get(cfg.stateDir)
         // the crash: version dirs and the new manifest are on disk, but
         // `_CURRENT` still names the old manifest and the temp files of
@@ -296,15 +310,11 @@ class PipelineSpec extends SparkSpecBase {
             Files.readAllBytes(dir.resolve(man)).take(7))
           op
         }
-        fold(batch(1), 1L, cfg)
-        step(fold(batch(2), 2L, cfg))
+        fold(q70Batch(1), 1L, cfg)
+        step(fold(q70Batch(2), 2L, cfg))
         step(compact(spark, cfg, 3000L, 3L))
-        step(fold(batch(4), 4L, cfg))
-        val star = tables.map { t =>
-          val df = StarPipeline.readFull(spark, cfg, t).get
-          t -> df.select(to_json(struct(df.columns.sorted.map(col): _*)))
-            .as[String].collect().toSeq.sorted
-        }
+        step(fold(q70Batch(4), 4L, cfg))
+        val star = starRows(cfg, tables)
         val walk = Files.walk(dir)
         val tmps = try walk.iterator().asScala.map(_.getFileName.toString)
           .filter(_.endsWith(".tmp")).toList finally walk.close()
@@ -551,5 +561,107 @@ class PipelineSpec extends SparkSpecBase {
     val rows = log.toDF(spark)
     assert(rows.count() >= 1)
     assert(rows.agg(sum("numInputRows")).as[Long].head() >= 2L)
+  }
+
+  test("replaying a compaction after a later fold keeps the first run's " +
+      "cold rows: hot ∪ cold equals a run without the replay") {
+    bothAxes.foreach { case (fold, compact, tables) =>
+      def run(replay: Boolean) = {
+        val cfg = q70Config("star_compact_replay")
+        fold(q70Batch(1), 1L, cfg)
+        fold(q70Batch(2), 2L, cfg)
+        compact(spark, cfg, 3000L, 3L)
+        // arrivals past the horizon (no bucket un-compacts) that close
+        // every key's open stored record, in the buckets compaction 3
+        // archived from
+        fold((1L to 6L).map(k => StarMsg(k, 4000L + k, 400 + k, "s4", 4.0))
+          .toDF().withColumn("stored_us", lit(4L)), 4L, cfg)
+        if (replay) compact(spark, cfg, 3000L, 3L)
+        starRows(cfg, tables)
+      }
+      val clean = run(replay = false)
+      assert(clean.forall(_._2.nonEmpty))
+      assert(run(replay = true) == clean, s"${tables.head}: star diverged")
+    }
+  }
+
+  test("a fold leaves no cache entry behind, also when a table write " +
+      "fails after the kernel pass is pinned") {
+    import graft.streaming.JdbcStarSink
+    import org.apache.spark.sql.graftbridge.CacheProbe
+    def leaves(what: String)(fold: => Unit): Unit = {
+      val before = CacheProbe.entries(spark)
+      fold
+      assert(CacheProbe.entries(spark) == before, what)
+    }
+    def fails(what: String)(fold: => Unit): Unit =
+      leaves(what)(intercept[Exception](fold))
+    // the second table of each fold cannot be written: its table dir
+    // is a plain file (manifest sink) or its stage table has the wrong
+    // columns (JDBC sink), so the first table's write has run the pass
+    def blocked(table: String) = {
+      val cfg = q70Config("star_cache")
+      Files.createDirectories(java.nio.file.Paths.get(cfg.stateDir, "data"))
+      Files.createFile(java.nio.file.Paths.get(cfg.stateDir, "data", table))
+      cfg
+    }
+    val cfg = q70Config("star_cache")
+    leaves("foldBatch")(StarPipeline.foldBatch(q70Batch(1), 1L, cfg))
+    leaves("foldBatchBitemporal")(
+      StarPipeline.foldBatchBitemporal(q70Batch(1), 1L, cfg))
+    fails("foldBatch, failed write")(
+      StarPipeline.foldBatch(q70Batch(1), 1L, blocked("live")))
+    fails("foldBatchBitemporal, failed write")(
+      StarPipeline.foldBatchBitemporal(q70Batch(1), 1L, blocked("bt_table")))
+
+    System.setProperty("derby.system.home",
+      Files.createTempDirectory("derby_home_cache").toString)
+    val url = "jdbc:derby:memory:starcache;create=true"
+    val jdbc = new JdbcStarSink(url, "cached")
+    leaves("JdbcStarSink.foldBitemporal")(
+      jdbc.foldBitemporal(q70Batch(1), 1L, cfg))
+    val c = java.sql.DriverManager.getConnection(url)
+    try c.createStatement().executeUpdate(
+      "CREATE TABLE BROKEN_BT_TABLE_STAGE (junk INT)")
+    finally c.close()
+    fails("JdbcStarSink.foldBitemporal, failed stage")(
+      new JdbcStarSink(url, "broken").foldBitemporal(q70Batch(1), 1L, cfg))
+  }
+
+  test("fold results and file layout do not depend on " +
+      "spark.sql.shuffle.partitions: one parquet file per (table, " +
+      "touched bucket) in every fold's version dir") {
+    val key = "spark.sql.shuffle.partitions"
+    def bucketFiles(cfg: StarPipeline.Config, table: String, b: Long) = {
+      val dir = new java.io.File(s"${cfg.stateDir}/data/$table/v$b")
+      Option(dir.listFiles()).toSeq.flatten
+        .filter(_.getName.startsWith("__bucket="))
+        .map(d => d.getName -> d.listFiles().count(_.getName.endsWith(".parquet")))
+        .toMap
+    }
+    bothAxes.foreach { case (fold, _, tables) =>
+      def run(partitions: Int) = {
+        val saved = spark.conf.get(key)
+        spark.conf.set(key, partitions.toString)
+        try {
+          val cfg = q70Config("star_layout")
+          (1L to 3L).map { b =>
+            fold(q70Batch(b), b, cfg)
+            val touched = q70Batch(b)
+              .select(pmod(xxhash64(col("key")), lit(8)).cast("string"))
+              .distinct().as[String].collect().map("__bucket=" + _).toSet
+            tables.foreach { t =>
+              val files = bucketFiles(cfg, t, b)
+              assert(files.keySet.subsetOf(touched), s"$t v$b: $files")
+              assert(files.values.forall(_ == 1), s"$t v$b: $files")
+            }
+            // every touched key keeps messages, and a live version
+            assert(bucketFiles(cfg, tables.head, b).keySet == touched)
+            starRows(cfg, tables)
+          }
+        } finally spark.conf.set(key, saved)
+      }
+      assert(run(1) == run(8), s"${tables.head}: star depends on partitions")
+    }
   }
 }

@@ -831,4 +831,71 @@ class PlanShapeSpec extends SparkSpecBase {
     try assert(leaf.unionByName(leaf.limit(0)).count() == 100)
     finally ordered.unpersist(false)
   }
+
+  test("one bitemporal fold's table writes run ONE kernel exchange " +
+      "between them, and no window or join") {
+    import org.apache.spark.sql.execution.{CommandResultExec, QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.command.DataWritingCommandExec
+    import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, SortMergeJoinExec}
+    import org.apache.spark.sql.execution.window.WindowExec
+    import org.apache.spark.sql.util.QueryExecutionListener
+    import org.scalatest.concurrent.Eventually._
+    import org.scalatest.time.SpanSugar._
+    import graft.streaming.StarPipeline
+    import scala.jdk.CollectionConverters._
+
+    val executed = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    @volatile var flushed = false
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, d: Long): Unit = {
+        executed.add(qe.executedPlan)
+        if (qe.analyzed.output.exists(_.name == "__flush")) flushed = true
+      }
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    val cfg = StarPipeline.Config(
+      Files.createTempDirectory("plan_bt_fold").toString, Seq("key"),
+      "ts_us", "msg_id", Seq("v"), nBuckets = 8, storedFromUsCol = "stored")
+    def batch(b: Long) = (1L to 6L)
+      .map(k => (k, 1000L * ((b * 3 + k) % 7 + 1), b * 100 + k, s"v$b", b))
+      .toDF("key", "ts_us", "msg_id", "v", "stored")
+    StarPipeline.foldBatchBitemporal(batch(1), 1L, cfg)
+    // the measured fold reads prior messages and records of its buckets
+    spark.listenerManager.register(listener)
+    try {
+      StarPipeline.foldBatchBitemporal(batch(2), 2L, cfg)
+      spark.range(1).agg(max(col("id")).as("__flush")).collect()
+      eventually(timeout(30.seconds))(assert(flushed))
+    } finally spark.listenerManager.unregister(listener)
+
+    // every node a write ran, through adaptive stages and into the
+    // cached relations it scanned
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case c: CommandResultExec => nodes(c.commandPhysicalPlan)
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case q: QueryStageExec => nodes(q.plan)
+      case s: InMemoryTableScanExec => nodes(s.relation.cachedPlan)
+      case o => o.children.flatMap(nodes)
+    })
+    val plans = executed.asScala.toSeq.filter(p => nodes(p).exists {
+      case w: DataWritingCommandExec => w.cmd match {
+        case i: InsertIntoHadoopFsRelationCommand =>
+          i.outputPath.toString.contains("/data/bt_")
+        case _ => false
+      }
+      case _ => false
+    })
+    assert(plans.size == 2, plans.map(_.treeString).mkString("\n"))
+    val all = plans.flatMap(nodes)
+    val exchanges = new java.util.IdentityHashMap[SparkPlan, Unit]()
+    all.collect { case e: ShuffleExchangeExec => exchanges.put(e, ()) }
+    assert(exchanges.size == 1, plans.map(_.treeString).mkString("\n"))
+    val banned = all.filter(n => n.isInstanceOf[WindowExec] ||
+      n.isInstanceOf[SortMergeJoinExec] || n.isInstanceOf[BroadcastHashJoinExec])
+    assert(banned.isEmpty, banned.map(_.nodeName))
+  }
 }
