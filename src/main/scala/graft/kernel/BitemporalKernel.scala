@@ -45,11 +45,12 @@ object BitemporalKernel {
   final case class KernelResult(live: DataFrame, audit: DataFrame,
                                 history: DataFrame)
 
-  /** How the kernel's one exchange partitions its rows: by `expr`, a
-    * function of the key columns alone, into exactly `n` partitions (an
-    * explicit count, which AQE does not coalesce). A caller that writes
-    * bucketed state names its bucket expression, so each bucket's rows
-    * leave the kernel in one partition.
+  /** How the kernel's one exchange partitions its rows: `expr`, a
+    * function of the key columns alone, IS the partition id, in
+    * [0, `n`) (`Dataset.repartitionById`: no second hash, so ids never
+    * collide; an explicit count, which AQE does not coalesce). A caller
+    * that writes bucketed state maps whole buckets to partitions, so
+    * each bucket leaves the kernel in one partition.
     */
   final case class KeyPartitioning(expr: Column, n: Int)
 
@@ -154,7 +155,7 @@ object BitemporalKernel {
       .reduce(_ unionByName _)
 
     val exchanged = partitioning match {
-      case Some(p) => all.repartition(p.n, p.expr)
+      case Some(p) => all.repartitionById(p.n, p.expr.cast("int"))
       case None    => all.repartition(keyCols.map(col): _*)
     }
     val outSchema = StructType(all.schema.fields.take(msgCols.size) ++
@@ -170,6 +171,12 @@ object BitemporalKernel {
     * rows are (message columns, valid_until_us, stored_from_us,
     * stored_until_us, __stamp, __src); output rows are (message columns,
     * valid_until_us, stored_from_us, stored_until_us, __kind).
+    *
+    * Memory: one key's input rows are held at once as deserialized
+    * `Row`s, with that key's output rows (the intermediate buffers share
+    * the input rows, they do not copy them) — about twice the key's
+    * rows, on heap and unspilled. A key's hot history is bounded by the
+    * compaction horizon; see SCALING.md "Per-key memory bound".
     */
   private final class KeyWalk(nKey: Int, nPayload: Int, stored: Boolean)
       extends Serializable {

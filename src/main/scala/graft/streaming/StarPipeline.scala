@@ -65,12 +65,14 @@ object StarPipeline {
   private type ManifestMap = Map[String, Map[String, String]]
 
   /** One axis's kernel step: (pinned batch, config, reader of the
-    * touched prior state of a table, the fold's pins) → the tables to
-    * persist, each with its row identity keys (used by the JDBC sink's
-    * MERGE; the manifest sink replaces whole buckets and ignores them).
+    * touched prior state of a table, the touched bucket ids in ascending
+    * order, the fold's pins) → the tables to persist, each with its row
+    * identity keys (used by the JDBC sink's MERGE; the manifest sink
+    * replaces whole buckets and ignores them).
     */
   private[streaming] type Step = (DataFrame, Config,
-    String => Option[DataFrame], Pins) => Seq[(String, DataFrame, Seq[String])]
+    String => Option[DataFrame], Seq[Long], Pins) =>
+    Seq[(String, DataFrame, Seq[String])]
 
   /** The frames one fold pins with [[CacheBridge.pinned]]: `apply` pins a
     * frame and returns its cached leaf, `release` unpersists them all.
@@ -86,12 +88,19 @@ object StarPipeline {
   private[streaming] def bucketOf(cfg: Config): Column =
     pmod(xxhash64(cfg.keyCols.map(col): _*), lit(cfg.nBuckets))
 
-  /** The kernel's one exchange for a star: its bucket expression, over
-    * `nBuckets` partitions — each bucket leaves the kernel in one
-    * partition, so each written bucket is one file.
+  /** The kernel's one exchange for a fold: the touched buckets
+    * (ascending) dealt round-robin over min(touched, shuffle partitions)
+    * partitions. Each bucket lies whole in one partition, so each
+    * written bucket is one file whatever the core count; partitions'
+    * bucket counts differ by at most one; and no task runs empty — every
+    * write task deserializes its job and runs the commit protocol, rows
+    * or not.
     */
-  private def byBucket(cfg: Config) =
-    Some(BitemporalKernel.KeyPartitioning(bucketOf(cfg), cfg.nBuckets))
+  private def byBucket(cfg: Config, touched: Seq[Long], spark: SparkSession) = {
+    val n = touched.size.min(spark.conf.get("spark.sql.shuffle.partitions").toInt)
+    Some(BitemporalKernel.KeyPartitioning(
+      (array_position(typedLit(touched), bucketOf(cfg)) - 1) % n, n))
+  }
 
   private def readManifest(stateDir: String): ManifestMap =
     VersionedDir.read(stateDir, "_CURRENT").fold(Map.empty: ManifestMap) {
@@ -179,11 +188,12 @@ object StarPipeline {
   /** The valid-time kernel step: history → history/live/audit. */
   private[streaming] def validStep(batch: DataFrame, cfg: Config,
                                    prior: String => Option[DataFrame],
-                                   pins: Pins)
+                                   touched: Seq[Long], pins: Pins)
       : Seq[(String, DataFrame, Seq[String])] = {
     val r = BitemporalKernel.applyBatch(
       prior("history").getOrElse(batch.limit(0)), batch, cfg.keyCols,
-      cfg.validFromUsCol, cfg.tieCol, cfg.payloadCols, pins, byBucket(cfg))
+      cfg.validFromUsCol, cfg.tieCol, cfg.payloadCols, pins,
+      byBucket(cfg, touched, batch.sparkSession))
     // live is one row per key; history and audit one per version
     val versionKeys = cfg.keyCols ++ Seq(cfg.validFromUsCol, cfg.tieCol)
     Seq(("history", r.history, versionKeys),
@@ -236,7 +246,8 @@ object StarPipeline {
       if (paths.isEmpty) None else Some(spark.read.parquet(paths: _*))
     }
 
-    val newMan = step(batch, cfg, readTouched, pins).foldLeft(man) {
+    val outputs = step(batch, cfg, readTouched, touched.toSeq, pins)
+    val newMan = outputs.foldLeft(man) {
       case (m, (tbl, df, _)) =>
         val (dir, present) = writeVersion(cfg, man, tbl, batchId, df)
         // an emptied touched bucket drops its manifest entry
@@ -284,7 +295,7 @@ object StarPipeline {
   /** The both-axes kernel step: bt_messages/bt_table → both. */
   private[streaming] def bitemporalStep(batch: DataFrame, cfg: Config,
                                         prior: String => Option[DataFrame],
-                                        pins: Pins)
+                                        touched: Seq[Long], pins: Pins)
       : Seq[(String, DataFrame, Seq[String])] = {
     val empty = BitemporalKernel.emptyBitemporal(batch, cfg.keyCols,
       cfg.validFromUsCol, cfg.tieCol, cfg.payloadCols)
@@ -293,7 +304,7 @@ object StarPipeline {
       table = prior("bt_table").getOrElse(empty.table))
     val r = BitemporalKernel.applyBitemporal(prev, batch, cfg.keyCols,
       cfg.validFromUsCol, cfg.tieCol, cfg.storedFromUsCol, cfg.payloadCols,
-      pins, byBucket(cfg))
+      pins, byBucket(cfg, touched, batch.sparkSession))
     // a message is (key, validFrom, tie); a version record is a message
     // opened at a stored stamp
     val msgKeys = cfg.keyCols ++ Seq(cfg.validFromUsCol, cfg.tieCol)

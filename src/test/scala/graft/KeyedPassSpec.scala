@@ -282,6 +282,28 @@ class KeyedPassSpec extends SparkSpecBase {
       }
     }
 
+  test("a named partitioning folds bucket b in partition b, alone") {
+    val n = 64
+    val bucket = pmod(xxhash64(col("key")), lit(n))
+    val batch = spark.range(0, 2000).select(col("id").as("key"),
+      (col("id") % 5).as("vf"), col("id").as("tie"),
+      lit("a").as("state"), lit(1.0).as("value"))
+    var pass: DataFrame = null
+    val r = BitemporalKernel.applyBatch(batch.limit(0), batch, Seq("key"),
+      "vf", "tie", Seq("state", "value"),
+      materialize = df => { pass = df; df },
+      partitioning = Some(BitemporalKernel.KeyPartitioning(bucket, n)))
+    val placed = pass.select(bucket).rdd
+      .mapPartitionsWithIndex((i, it) => it.map(b => (i, b.getLong(0))))
+      .distinct().collect()
+    assert(pass.rdd.getNumPartitions == n)
+    assert(placed.map(_._2).distinct.length == n, "every bucket touched")
+    assert(placed.forall { case (i, b) => i == b }, placed.sorted.toSeq)
+    val plain = BitemporalKernel.applyBatch(batch.limit(0), batch, Seq("key"),
+      "vf", "tie", Seq("state", "value"))
+    assert(rows(r.live, scalar.msgCols) == rows(plain.live, scalar.msgCols))
+  }
+
   test("an exact replay with a different payload keeps the stored message") {
     val schema = scalar.schema
     def df(rs: Row*) = spark.createDataFrame(

@@ -894,6 +894,11 @@ class PlanShapeSpec extends SparkSpecBase {
     val exchanges = new java.util.IdentityHashMap[SparkPlan, Unit]()
     all.collect { case e: ShuffleExchangeExec => exchanges.put(e, ()) }
     assert(exchanges.size == 1, plans.map(_.treeString).mkString("\n"))
+    // the touched buckets are dealt over min(touched, shuffle partitions)
+    val touched = batch(2).select(pmod(xxhash64(col("key")), lit(8)))
+      .distinct().count().toInt
+    assert(exchanges.keySet.asScala.head.outputPartitioning.numPartitions ==
+      touched.min(spark.conf.get("spark.sql.shuffle.partitions").toInt))
     val banned = all.filter(n => n.isInstanceOf[WindowExec] ||
       n.isInstanceOf[SortMergeJoinExec] || n.isInstanceOf[BroadcastHashJoinExec])
     assert(banned.isEmpty, banned.map(_.nodeName))
