@@ -98,6 +98,11 @@ object Hl7Wire {
     *                                order/result message)
     *   ADT^A05                    → adt (ImpliedAdt) + infections (ZIF)
     *   ADT^A60                    → allergies (IAM) only
+    *   ADT with no trigger        → dead (unhandled_type:ADT^)
+    *
+    * Every frame lands in exactly one of the primary channels or in
+    * `dead`; `winPathLabs`, `impliedAdt` and `infections` re-read frames
+    * a primary channel already takes.
     *
     * Every channel is built on its first read and then kept. Building a
     * channel means constructing its family parser over the tagged input,
@@ -126,6 +131,16 @@ object Hl7Wire {
     def infections: DataFrame
     def allergies: DataFrame
     def dead: DataFrame
+
+    /** Does any frame route to `channel` (a member name above, `"dead"`
+      * included)? The first call runs one aggregate over the batch — a
+      * `bool_or` of every channel's routing predicate and of "handled by
+      * none" — and every call reads its answer, so a consumer can skip
+      * an absent family without analysing its parser. A frame counts
+      * even where its parser yields no row (a PPR with no PRB segment).
+      * An unknown name fails.
+      */
+    def holds(channel: String): Boolean
   }
 
   /** Route the raw frames in `df`'s `rawCol` into [[RoutedWire]]'s
@@ -142,67 +157,51 @@ object Hl7Wire {
             adtSenderAllowlist: Seq[String] = Nil): RoutedWire = {
     val raw = col(rawCol)
     val msh = segment(raw, "MSH")
-    val msgType = cmp(mshFld(msh, 9), 1)
-    val trigger = cmp(mshFld(msh, 9), 2)
-    lazy val tagged = df.withColumn("__t", msgType).withColumn("__g", trigger)
-      .withColumn("__cs", LabFunnel.codingSystem(raw))
-    val cs = col("__cs")
+    val (t, g, cs) = (col("__t"), col("__g"), col("__cs"))
+    // only order/result frames carry a coding system: the classifier (an
+    // OBR/MSH multi-field probe) never runs over any other frame
+    lazy val tagged = df.withColumn("__t", cmp(mshFld(msh, 9), 1))
+      .withColumn("__g", cmp(mshFld(msh, 9), 2))
+      .withColumn("__cs",
+        when(t.isin("ORU", "ORM", "ORR"), LabFunnel.codingSystem(raw)))
 
-    def is(t: String, gs: String*) =
-      col("__t") === t &&
-        (if (gs.isEmpty) lit(true) else col("__g").isin(gs: _*))
+    def is(tp: String, gs: String*) =
+      t === tp && (if (gs.isEmpty) lit(true) else g.isin(gs: _*))
     val isOrm = is("ORM", "O01")
     val isOrr = is("ORR", "O02")
+    val r01 = (system: String) => is("ORU", "R01") && cs === system
     val sender = cmp(mshFld(msh, 3), 1)
     val senderOk =
       if (adtSenderAllowlist.isEmpty) lit(true)
       else coalesce(sender.isin(adtSenderAllowlist: _*), lit(false))
-    val r01Systems = Seq(LabFunnel.WinPath, LabFunnel.CoPath,
-      LabFunnel.BioConnect, LabFunnel.BankManager, LabFunnel.Pacs,
-      LabFunnel.Flowsheet)
-    // null coding system must read as NOT handled, not three-valued null
-    val handled = coalesce(
-      (is("ADT") && senderOk) ||
-        (is("ORU", "R01") && cs.isin(r01Systems: _*)) ||
-        (is("ORU", "R30") && cs === LabFunnel.Abl90) ||
-        is("PPR", "PC1", "PC2", "PC3") ||
-        (isOrm && cs.isin(LabFunnel.ConsultOrder, LabFunnel.AdvanceDecision,
-          LabFunnel.WinPath, LabFunnel.CoPath)) ||
-        (isOrr && cs.isin(LabFunnel.WinPath, LabFunnel.CoPath)),
-      lit(false))
 
-    def branch(cond: Column, parse: (DataFrame, String) => DataFrame) =
-      parse(tagged.filter(cond), rawCol).drop("__t", "__g", "__cs")
-    def r01(system: String) = is("ORU", "R01") && cs === system
-
-    val acksFor = (system: String) =>
-      branch((isOrm || isOrr) && cs === system,
-        LabFunnel.parseOrderMessages(_, _, system))
-
-    new RoutedWire {
+    // The routing table: each channel's predicate, written once. A
+    // missing type, trigger or coding system reads as "not this channel",
+    // never as a three-valued null.
+    def rule(p: Column) = coalesce(p, lit(false))
+    val primary = Seq(
       // A60 fans to the allergies channel only (the reference's A60 ADT
       // build throws NotImplemented and is swallowed,
-      // IdsOperations.java:493-503); every other ADT trigger parses here.
-      lazy val adt = branch(is("ADT") && senderOk && !is("ADT", "A60"), parseAdt)
-      lazy val labOrders = branch(r01(LabFunnel.WinPath), parseLabOrders)
-      lazy val winPathLabs =
-        branch(r01(LabFunnel.WinPath), LabFunnel.parseWinPathResults)
-      lazy val coPathLabs = branch(r01(LabFunnel.CoPath), LabFunnel.parseCoPath)
-      lazy val ablLabs = branch(is("ORU", "R30") && cs === LabFunnel.Abl90,
-        LabFunnel.parseAbl90)
-      lazy val bioConnectLabs =
-        branch(r01(LabFunnel.BioConnect), LabFunnel.parseBioConnect)
-      lazy val bankManagerLabs =
-        branch(r01(LabFunnel.BankManager), LabFunnel.parseBankManager)
-      lazy val imagingLabs = branch(r01(LabFunnel.Pacs), LabFunnel.parseImage)
-      lazy val labOrderAcks = acksFor(LabFunnel.WinPath)
-        .unionByName(acksFor(LabFunnel.CoPath))
-      lazy val flowsheets = branch(r01(LabFunnel.Flowsheet), parseFlowsheets)
-      lazy val problems = branch(is("PPR", "PC1", "PC2", "PC3"), parseProblems)
-      lazy val consults =
-        branch(isOrm && cs === LabFunnel.ConsultOrder, parseConsults)
-      lazy val advanceDecisions = branch(
-        isOrm && cs === LabFunnel.AdvanceDecision, parseAdvanceDecisions)
+      // IdsOperations.java:493-503); an ADT frame without a trigger
+      // reaches no builder.
+      "adt" -> (is("ADT") && senderOk && g =!= "A60"),
+      "allergies" -> (is("ADT", "A60") && senderOk),
+      "labOrders" -> r01(LabFunnel.WinPath),
+      "coPathLabs" -> r01(LabFunnel.CoPath),
+      "bioConnectLabs" -> r01(LabFunnel.BioConnect),
+      "bankManagerLabs" -> r01(LabFunnel.BankManager),
+      "imagingLabs" -> r01(LabFunnel.Pacs),
+      "flowsheets" -> r01(LabFunnel.Flowsheet),
+      "ablLabs" -> (is("ORU", "R30") && cs === LabFunnel.Abl90),
+      "labOrderAcks" ->
+        ((isOrm || isOrr) && cs.isin(LabFunnel.WinPath, LabFunnel.CoPath)),
+      "consults" -> (isOrm && cs === LabFunnel.ConsultOrder),
+      "advanceDecisions" -> (isOrm && cs === LabFunnel.AdvanceDecision),
+      "problems" -> is("PPR", "PC1", "PC2", "PC3")
+    ).map { case (name, p) => name -> rule(p) }
+    val handled = primary.map(_._2).reduce(_ || _)
+    val rules = (primary ++ Seq(
+      "winPathLabs" -> rule(r01(LabFunnel.WinPath)),
       // the reference also derives an implied ADT (person/visit context)
       // from every ORU^R01 and ORM^O01 (IdsOperations.java:431-460
       // buildAndAddAdtMessage with fromAdtStream=false) — parse failures
@@ -212,22 +211,62 @@ object Hl7Wire {
       // the reference's Hl7MessageIgnoredException throws the WHOLE
       // message away, already-built ADT included (LabFunnel
       // determineCodingSystem; OrderAndResultService.java:49-216).
-      lazy val impliedAdt =
-        branch((is("ORU", "R01") || isOrm) && handled, parseAdt)
-      lazy val infections = branch(is("ADT", "A05") && senderOk, parseInfections)
-      lazy val allergies = branch(is("ADT", "A60") && senderOk, parseAllergies)
-      lazy val dead = tagged.withColumn("reason",
-          when(col("__t").isNull, "unroutable")
-            .when(is("ADT") && !senderOk,
-              concat(lit("skipped_sender:"), coalesce(sender, lit(""))))
-            .when((is("ORU") || isOrm || isOrr) &&
-                cs === LabFunnel.BloodProducts,
-              "ignored_coding_system:BLOOD_PRODUCTS")
-            .when((is("ORU", "R01", "R30") || isOrm || isOrr) && !handled,
-              "unknown_coding_system")
-            .when(!handled, concat(lit("unhandled_type:"), col("__t"),
-              lit("^"), coalesce(col("__g"), lit("")))))
-        .filter(col("reason").isNotNull).drop("__t", "__g", "__cs")
+      "impliedAdt" -> rule((is("ORU", "R01") || isOrm) && handled),
+      "infections" -> rule(is("ADT", "A05") && senderOk))).toMap
+    // Every unhandled frame is dead, labelled with its reason. `handled`
+    // is read once: the optimizer substitutes the tagged columns into
+    // every reference, so each extra reference re-parses MSH per row.
+    val reason = when(t.isNull, "unroutable")
+      .when(is("ADT") && !senderOk,
+        concat(lit("skipped_sender:"), coalesce(sender, lit(""))))
+      .when((is("ORU") || isOrm || isOrr) && cs === LabFunnel.BloodProducts,
+        "ignored_coding_system:BLOOD_PRODUCTS")
+      .when(is("ORU", "R01", "R30") || isOrm || isOrr,
+        "unknown_coding_system")
+      .otherwise(concat(lit("unhandled_type:"), t, lit("^"),
+        coalesce(g, lit(""))))
+
+    def branch(cond: Column, parse: (DataFrame, String) => DataFrame) =
+      parse(tagged.filter(cond), rawCol).drop("__t", "__g", "__cs")
+    def channel(name: String, parse: (DataFrame, String) => DataFrame) =
+      branch(rules(name), parse)
+    val acksFor = (system: String) =>
+      branch(rules("labOrderAcks") && cs === system,
+        LabFunnel.parseOrderMessages(_, _, system))
+
+    new RoutedWire {
+      lazy val adt = channel("adt", parseAdt)
+      lazy val labOrders = channel("labOrders", parseLabOrders)
+      lazy val winPathLabs =
+        channel("winPathLabs", LabFunnel.parseWinPathResults)
+      lazy val coPathLabs = channel("coPathLabs", LabFunnel.parseCoPath)
+      lazy val ablLabs = channel("ablLabs", LabFunnel.parseAbl90)
+      lazy val bioConnectLabs =
+        channel("bioConnectLabs", LabFunnel.parseBioConnect)
+      lazy val bankManagerLabs =
+        channel("bankManagerLabs", LabFunnel.parseBankManager)
+      lazy val imagingLabs = channel("imagingLabs", LabFunnel.parseImage)
+      lazy val labOrderAcks = acksFor(LabFunnel.WinPath)
+        .unionByName(acksFor(LabFunnel.CoPath))
+      lazy val flowsheets = channel("flowsheets", parseFlowsheets)
+      lazy val problems = channel("problems", parseProblems)
+      lazy val consults = channel("consults", parseConsults)
+      lazy val advanceDecisions =
+        channel("advanceDecisions", parseAdvanceDecisions)
+      lazy val impliedAdt = channel("impliedAdt", parseAdt)
+      lazy val infections = channel("infections", parseInfections)
+      lazy val allergies = channel("allergies", parseAllergies)
+      lazy val dead = tagged.filter(!handled).withColumn("reason", reason)
+        .drop("__t", "__g", "__cs")
+
+      private lazy val present: Map[String, Boolean] = {
+        val probes = (rules + ("dead" -> !handled)).toSeq
+        val row = tagged.select(probes.map(p => bool_or(p._2)): _*).head()
+        probes.indices.map(i =>
+          probes(i)._1 -> (!row.isNullAt(i) && row.getBoolean(i))).toMap
+      }
+      def holds(channel: String): Boolean = present.getOrElse(channel,
+        throw new IllegalArgumentException(s"no router channel $channel"))
     }
   }
 

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.operators.{IdentityMerge, LocationVisits, PendingMovements}
@@ -17,7 +17,8 @@ import graft.sources.{Hl7Wire, LabFunnel}
   *
   *   adt/ labs/ flowsheets/ conditions/ consults/   → StarPipeline dirs
   *   dead/router/batch=N   → unroutable / unhandled-type frames
-  *   dead/<family>/batch=N → family-guard rejects (missing key/time)
+  *   dead/<family>/batch=N → family-guard rejects (missing key/time,
+  *                            unimplemented ADT trigger)
   *
   * Dead-letter writes are per-batch overwrites — idempotent on replay,
   * like the folds themselves. Scale shape: one scan of the batch fans
@@ -170,103 +171,38 @@ object WirePipeline {
       if (!bitemporal) sink.fold(msgs, batchId, cfgC)
       else sink.foldBitemporal(
         msgs.withColumn("storedFromUs", lit(batchId)), batchId, cfgC)
-    try {
-
-    // ONE cheap pass over the cached batch decides which family folds
-    // run at all: a production micro-batch is usually single-family,
-    // and an absent family must cost ZERO jobs — not a dead-letter
-    // write plus a bucket probe over an empty parse. (The reference's
-    // consumer pays per message; our unit of work is the family fold.)
-    // Two-phase: the (type, trigger) pass is a cheap MSH-only parse; the
-    // coding-system classifier (an OBR/MSH multi-field probe, the
-    // expensive bit) runs only over the lab/order rows that can carry
-    // one — a pure-ADT batch never pays it. cs is null for every other
-    // kind, exactly as route()'s dead rules read it.
-    val rawc = col(rawCol)
-    val mshStat = Hl7Wire.segment(rawc, "MSH")
-    val tCol = Hl7Wire.cmp(Hl7Wire.mshFld(mshStat, 9), 1)
-    val gCol = Hl7Wire.cmp(Hl7Wire.mshFld(mshStat, 9), 2)
-    val labish = Set("ORU", "ORM", "ORR")
-    val tgKinds = batch.groupBy(tCol.as("t"), gCol.as("g"))
-      .count().collect().map(x => (x.getString(0), x.getString(1)))
-    val csKinds =
-      if (!tgKinds.exists(k => labish.contains(k._1))) Array.empty[(String, String, String)]
-      else batch.filter(tCol.isin(labish.toSeq: _*))
-        .groupBy(tCol.as("t"), gCol.as("g"),
-          LabFunnel.codingSystem(rawc).as("cs"))
-        .count().collect()
-        .map(x => (x.getString(0), x.getString(1), x.getString(2)))
-    val kinds = tgKinds.filterNot(k => labish.contains(k._1))
-      .map { case (t, g) => (t, g, null: String) } ++ csKinds
-    def has(p: (String, String, String) => Boolean) =
-      kinds.exists { case (t, g, cs) => p(t, g, cs) }
-
-    // Driver-side mirror of route()'s `handled` predicate (allowlist
-    // empty ⇒ senderOk always true): if no (type, trigger, coding
-    // system) kind in this batch can produce a dead-letter reason, the
-    // router dead write is skipped outright — same rows, zero jobs.
-    val r01Sys = Set(LabFunnel.WinPath, LabFunnel.CoPath,
-      LabFunnel.BioConnect, LabFunnel.BankManager, LabFunnel.Pacs,
-      LabFunnel.Flowsheet)
-    def handledKind(t: String, g: String, cs: String): Boolean =
-      t == "ADT" ||
-        (t == "ORU" && g == "R01" && r01Sys.contains(cs)) ||
-        (t == "ORU" && g == "R30" && cs == LabFunnel.Abl90) ||
-        (t == "PPR" && Set("PC1", "PC2", "PC3").contains(g)) ||
-        (t == "ORM" && g == "O01" &&
-          Set(LabFunnel.ConsultOrder, LabFunnel.AdvanceDecision,
-            LabFunnel.WinPath, LabFunnel.CoPath).contains(cs)) ||
-        (t == "ORR" && g == "O02" &&
-          Set(LabFunnel.WinPath, LabFunnel.CoPath).contains(cs))
-    val anyDead = kinds.exists { case (t, g, cs) =>
-      t == null || cs == LabFunnel.BloodProducts || !handledKind(t, g, cs)
-    }
-    if (anyDead) r.dead.write.mode("overwrite")
-      .parquet(s"$stateRoot/dead/router/batch=$batchId")
-    def r01Of(sys: String) =
-      has((t, g, cs) => t == "ORU" && g == "R01" && cs == sys)
-    val ormOrr = (t: String, g: String) =>
-      (t == "ORM" && g == "O01") || (t == "ORR" && g == "O02")
-    // implied ADT only comes from HANDLED ORU^R01/ORM^O01 frames — a
-    // dead-lettered coding system discards its implied ADT too
-    val hasImplied = has((t, g, cs) =>
-      ((t == "ORU" && g == "R01") || (t == "ORM" && g == "O01")) &&
-        handledKind(t, g, cs))
-    val hasAdt = has((t, g, _) => t == "ADT" && g != "A60") || hasImplied
-    val hasWinPath = r01Of(LabFunnel.WinPath)
-    val hasCoPath = r01Of(LabFunnel.CoPath)
-    val hasBio = r01Of(LabFunnel.BioConnect)
-    val hasBank = r01Of(LabFunnel.BankManager)
-    val hasImaging = r01Of(LabFunnel.Pacs)
-    val hasAbl = has((t, g, cs) => t == "ORU" && g == "R30" &&
-      cs == LabFunnel.Abl90)
-    val hasAcks = has((t, g, cs) => ormOrr(t, g) &&
-      (cs == LabFunnel.WinPath || cs == LabFunnel.CoPath))
-    val hasFlowsheets = r01Of(LabFunnel.Flowsheet)
-    val hasProblems = has((t, _, _) => t == "PPR")
-    val hasAllergies = has((t, g, _) => t == "ADT" && g == "A60")
-    val hasInfections = has((t, g, _) => t == "ADT" && g == "A05")
-    val hasConsults = has((t, g, cs) => t == "ORM" && g == "O01" &&
-      cs == LabFunnel.ConsultOrder)
-    val hasAdvance = has((t, g, cs) => t == "ORM" && g == "O01" &&
-      cs == LabFunnel.AdvanceDecision)
-
-    def guardAndFold(parsed0: DataFrame, family: String,
-                     rules: Seq[(String, org.apache.spark.sql.Column)],
-                     toMsgs: DataFrame => DataFrame,
-                     key: Seq[String], vf: String,
-                     payload: Seq[String]): DataFrame = {
-      val parsed = mat(parsed0)
-      val routed = DeadLetter.route(parsed, rules)
+    // a family guard: rejects go to dead/<family>, the clean rows on
+    def guard(parsed: DataFrame, family: String,
+              rules: Seq[(String, Column)]): DataFrame = {
+      val routed = DeadLetter.route(mat(parsed), rules)
       routed.dead.write.mode("overwrite")
         .parquet(s"$stateRoot/dead/$family/batch=$batchId")
-      foldStar(toMsgs(routed.clean),
-        cfg(stateRoot, family, key, vf, payload))
       routed.clean
     }
+    def guardAndFold(parsed: DataFrame, family: String,
+                     rules: Seq[(String, Column)],
+                     toMsgs: DataFrame => DataFrame,
+                     c: StarPipeline.Config): DataFrame = {
+      val clean = guard(parsed, family, rules)
+      foldStar(toMsgs(clean), c)
+      clean
+    }
+    // Every gate asks the router whether a channel holds rows: one
+    // aggregate over the cached batch, built from the router's own
+    // predicates, so an absent family costs ZERO jobs — not a
+    // dead-letter write plus a bucket probe over an empty parse. (The
+    // reference's consumer pays per message; our unit of work is the
+    // family fold.)
+    def ifHolds(channel: String)(body: => DataFrame): Seq[DataFrame] =
+      if (r.holds(channel)) Seq(body) else Nil
+    try {
 
-    // ADT proper is guarded (a frame without MRN is a nack); the implied
-    // ADT the reference derives from every ORU^R01/ORM^O01
+    if (r.holds("dead")) r.dead.write.mode("overwrite")
+      .parquet(s"$stateRoot/dead/router/batch=$batchId")
+
+    // ADT proper is guarded by DeadLetter.adtRules (an unimplemented
+    // trigger or a frame without MRN is a nack); the implied ADT the
+    // reference derives from every ORU^R01/ORM^O01
     // (IdsOperations.buildAndAddAdtMessage, fromAdtStream=false) joins
     // the same person/visit fold but fails SILENTLY, as in the reference
     // — order messages legitimately arrive without patient context.
@@ -275,26 +211,19 @@ object WirePipeline {
     // views ([[visitIntervals]], [[mrnToLive]], [[pendingTransfers]])
     // re-derive the reference's location/identity state from the
     // PERSISTED message history alone.
-    // when no handled ORU/ORM kind is in the batch, skip the implied
-    // branch entirely — its filter alone would re-run the coding-system
-    // probe over every row
-    def withImplied(clean: DataFrame): DataFrame =
-      if (!hasImplied) clean
-      else clean.unionByName(
-        r.impliedAdt.filter(col("mrn").isNotNull &&
-          col("validFromUs").isNotNull),
-        allowMissingColumns = true)
-    if (hasAdt) guardAndFold(r.adt, "adt",
-      Seq("missing_mrn" -> col("mrn").isNull,
-        "missing_valid_from" -> col("validFromUs").isNull),
-      clean => withImplied(clean)
-        .select(Seq(col("mrn"), col("validFromUs"), col("sourceMessageId"),
-          when(col("msgType").startsWith("Cancel"),
-            col("eventOccurredDateTimeUs")).as("targetTimeUs"),
-          col("dischargeDateTimeUs").as("dischargeTimeUs")) ++
-          AdtPayload.filterNot(Seq("targetTimeUs", "dischargeTimeUs")
-            .contains).map(col): _*),
-      Seq("mrn"), "validFromUs", AdtPayload)
+    val implied = ifHolds("impliedAdt")(r.impliedAdt.filter(
+      col("mrn").isNotNull && col("validFromUs").isNotNull))
+    if (r.holds("adt") || implied.nonEmpty)
+      guardAndFold(r.adt, "adt", DeadLetter.adtRules,
+        clean => (clean +: implied).reduce(_.unionByName(_,
+          allowMissingColumns = true))
+          .select(Seq(col("mrn"), col("validFromUs"), col("sourceMessageId"),
+            when(col("msgType").startsWith("Cancel"),
+              col("eventOccurredDateTimeUs")).as("targetTimeUs"),
+            col("dischargeDateTimeUs").as("dischargeTimeUs")) ++
+            AdtPayload.filterNot(Seq("targetTimeUs", "dischargeTimeUs")
+              .contains).map(col): _*),
+        adtCfg(stateRoot))
 
     // Labs: the WinPath result stream plus the point-of-care /
     // blood-bank / histopathology / imaging funnel channels union into
@@ -307,26 +236,21 @@ object WirePipeline {
         .parquet(s"$stateRoot/dead/labs_$name/batch=$batchId")
       ch
     }
-    val winPathMsgs = if (!hasWinPath) Nil else {
-      val labGuard = DeadLetter.route(mat(r.labOrders),
-        Seq("missing_order" -> col("fillerOrderNumber").isNull,
+    val labMsgs =
+      ifHolds("labOrders")(Hl7Wire.wireToLabMessages(guard(r.labOrders,
+        "labs", Seq("missing_order" -> col("fillerOrderNumber").isNull,
           "missing_time" -> coalesce(col("observationDateTimeUs"),
-            col("requestedDateTimeUs")).isNull))
-      labGuard.dead.write.mode("overwrite")
-        .parquet(s"$stateRoot/dead/labs/batch=$batchId")
-      Seq(Hl7Wire.wireToLabMessages(labGuard.clean))
-    }
-    val labMsgs = winPathMsgs ++
-      (if (hasAbl) Seq(LabFunnel.toLabMessages(
-        deadErrors(r.ablLabs, "abl"))) else Nil) ++
-      (if (hasBio) Seq(LabFunnel.toLabMessages(
-        deadErrors(r.bioConnectLabs, "bioconnect"))) else Nil) ++
-      (if (hasBank) Seq(LabFunnel.toLabMessages(
-        deadErrors(r.bankManagerLabs, "bankmanager"))) else Nil) ++
-      (if (hasCoPath) Seq(LabFunnel.coPathToLabMessages(
-        deadErrors(r.coPathLabs, "copath"))) else Nil) ++
-      (if (hasImaging) Seq(LabFunnel.imageToLabMessages(
-        deadErrors(r.imagingLabs, "imaging"))) else Nil)
+            col("requestedDateTimeUs")).isNull)))) ++
+      ifHolds("ablLabs")(LabFunnel.toLabMessages(
+        deadErrors(r.ablLabs, "abl"))) ++
+      ifHolds("bioConnectLabs")(LabFunnel.toLabMessages(
+        deadErrors(r.bioConnectLabs, "bioconnect"))) ++
+      ifHolds("bankManagerLabs")(LabFunnel.toLabMessages(
+        deadErrors(r.bankManagerLabs, "bankmanager"))) ++
+      ifHolds("coPathLabs")(LabFunnel.coPathToLabMessages(
+        deadErrors(r.coPathLabs, "copath"))) ++
+      ifHolds("imagingLabs")(LabFunnel.imageToLabMessages(
+        deadErrors(r.imagingLabs, "imaging")))
     if (labMsgs.nonEmpty) foldStar(
       labMsgs.reduce(_ unionByName _),
       cfg(stateRoot, "labs", Seq("battery", "labSpecimenNumber"),
@@ -338,7 +262,7 @@ object WirePipeline {
     // into a status side-table keyed like the labs star, so the read
     // path joins them without risking a null-results overwrite of the
     // result-bearing fold.
-    if (hasAcks) guardAndFold(r.labOrderAcks, "lab_status",
+    if (r.holds("labOrderAcks")) guardAndFold(r.labOrderAcks, "lab_status",
       Seq("builder_error" -> col("error").isNotNull,
         "missing_specimen" -> col("labSpecimenNumber").isNull,
         "missing_time" -> col("statusChangeTimeUs").isNull),
@@ -347,50 +271,43 @@ object WirePipeline {
         col("orderControlId"), col("orderStatus"), col("epicOrderNumber"),
         col("orderTimeUs"), col("sampleReceivedTimeUs"),
         col("resultStatus")),
-      Seq("battery", "labSpecimenNumber"), "statusChangeTimeUs",
-      Seq("orderControlId", "orderStatus", "epicOrderNumber",
-        "orderTimeUs", "sampleReceivedTimeUs", "resultStatus"))
+      cfg(stateRoot, "lab_status", Seq("battery", "labSpecimenNumber"),
+        "statusChangeTimeUs", Seq("orderControlId", "orderStatus",
+          "epicOrderNumber", "orderTimeUs", "sampleReceivedTimeUs",
+          "resultStatus")))
 
-    if (hasFlowsheets) guardAndFold(r.flowsheets, "flowsheets",
+    if (r.holds("flowsheets")) guardAndFold(r.flowsheets, "flowsheets",
       Seq("missing_visit" -> col("visitNumber").isNull,
         "missing_type" -> col("interfaceId").isNull,
         "missing_time" -> col("observationTimeUs").isNull),
       Hl7Wire.wireToFlowsheetMessages(_)
         .withColumnRenamed("msgId", "sourceMessageId"),
-      Seq("visitId", "observationTypeId", "observationTimeUs"),
-      "updatedTimeUs",
-      Seq("valueType", "numericValue", "stringValue", "dateValue", "unit",
-        "comment"))
+      cfg(stateRoot, "flowsheets",
+        Seq("visitId", "observationTypeId", "observationTimeUs"),
+        "updatedTimeUs", Seq("valueType", "numericValue", "stringValue",
+          "dateValue", "unit", "comment")))
 
     // Conditions: problems (PPR) + allergies (A60 IAM) + infections
     // (A05 ZIF, behind the serial progress gate) are three funnels into
     // ONE patient_condition fold — the reference's three condition
     // factories meeting in PatientConditionController.
-    val probMsgs = if (!hasProblems) Nil else {
-      val probGuard = DeadLetter.route(mat(r.problems),
+    val probMsgs = ifHolds("problems")(Hl7Wire.wireToConditionMessages(
+      guard(r.problems, "conditions",
         Seq("missing_mrn" -> col("mrn").isNull,
-          "missing_time" -> col("updatedTimeUs").isNull))
-      probGuard.dead.write.mode("overwrite")
-        .parquet(s"$stateRoot/dead/conditions/batch=$batchId")
-      Seq(Hl7Wire.wireToConditionMessages(probGuard.clean))
-    }
-    val allerMsgs = if (!hasAllergies) Nil else {
-      val allerGuard = DeadLetter.route(mat(r.allergies),
+          "missing_time" -> col("updatedTimeUs").isNull))))
+    val allerMsgs = ifHolds("allergies")(Hl7Wire.wireToAllergyMessages(
+      guard(r.allergies, "allergies",
         Seq("invalid_action" -> col("error").isNotNull,
           "missing_mrn" -> col("mrn").isNull,
-          "missing_time" -> col("updatedTimeUs").isNull))
-      allerGuard.dead.write.mode("overwrite")
-        .parquet(s"$stateRoot/dead/allergies/batch=$batchId")
-      Seq(Hl7Wire.wireToAllergyMessages(allerGuard.clean)
-        .drop("reactions"))
-    }
+          "missing_time" -> col("updatedTimeUs").isNull)))
+      .drop("reactions"))
 
     // Infection progress survives restarts the same way the fold state
     // does — a tiny high-watermark file advanced per batch (the
     // reference holds it in the factory across a service run,
     // PatientInfectionFactory.infectionProgress).
     val progressDir = s"$stateRoot/conditions"
-    val infMsgs = if (!hasInfections) Nil else {
+    val infMsgs = ifHolds("infections") {
       val infStart = VersionedDir.read(progressDir, "_INF_PROGRESS")
         .fold(0L)(_.toLong)
       val gatedInf = mat(Hl7Wire.infectionGate(
@@ -401,7 +318,7 @@ object WirePipeline {
         .flatMap(rw => Option(rw.get(0)).map(_.asInstanceOf[Long]))
       newProgress.filter(_ > infStart).foreach(p =>
         VersionedDir.commit(progressDir, "_INF_PROGRESS", p.toString))
-      Seq(Hl7Wire.wireToInfectionMessages(gatedInf))
+      Hl7Wire.wireToInfectionMessages(gatedInf)
     }
 
     // ConditionVisits link table: problems and allergies (NOT
@@ -419,33 +336,29 @@ object WirePipeline {
         .select(col("mrn"), col("conditionTypeId"), col("internalId"),
           col("visitNumber"), col("updatedTimeUs"),
           col("msgId").as("sourceMessageId"), lit(true).as("linked")),
-      cfg(stateRoot, "condition_visits",
-        Seq("mrn", "conditionTypeId", "internalId", "visitNumber"),
-        "updatedTimeUs", Seq("linked")))
+      conditionVisitsCfg(stateRoot))
 
     val condMsgs = linkMsgs.map(_.drop("visitNumber")) ++ infMsgs
     if (condMsgs.nonEmpty) foldStar(
       condMsgs.reduce(_ unionByName _)
         .withColumnRenamed("msgId", "sourceMessageId"),
-      cfg(stateRoot, "conditions",
-        Seq("mrn", "conditionTypeId", "internalId"), "updatedTimeUs",
-        Seq("status", "severity", "onsetDate", "comment", "action")))
+      conditionsCfg(stateRoot))
 
-    val consultClean = if (!hasConsults) None else Some(
+    val consultClean = ifHolds("consults")(
       guardAndFold(r.consults, "consults",
-      Seq("missing_id" -> col("epicConsultId").isNull,
-        "missing_time" -> col("statusChangeTimeUs").isNull),
-      _.select(col("epicConsultId"), col("statusChangeTimeUs"),
-        col("sourceMessageId"), col("mrn"), col("visitNumber"),
-        col("consultationType"), col("cancelled"),
-        col("closedDueToDischarge")),
-      Seq("epicConsultId"), "statusChangeTimeUs",
-      Seq("mrn", "visitNumber", "consultationType", "cancelled",
-        "closedDueToDischarge")))
+        Seq("missing_id" -> col("epicConsultId").isNull,
+          "missing_time" -> col("statusChangeTimeUs").isNull),
+        _.select(col("epicConsultId"), col("statusChangeTimeUs"),
+          col("sourceMessageId"), col("mrn"), col("visitNumber"),
+          col("consultationType"), col("cancelled"),
+          col("closedDueToDischarge")),
+        cfg(stateRoot, "consults", Seq("epicConsultId"),
+          "statusChangeTimeUs", Seq("mrn", "visitNumber",
+            "consultationType", "cancelled", "closedDueToDischarge"))))
 
     // Advance decisions (O20's second half): same ORM shape, own star
     // (ref core/.../AdvanceDecisionController.java).
-    val advClean = if (!hasAdvance) None else Some(
+    val advClean = ifHolds("advanceDecisions")(
       guardAndFold(r.advanceDecisions, "advance_decisions",
         Seq("missing_id" -> col("advanceDecisionNumber").isNull,
           "missing_time" -> col("statusChangeTimeUs").isNull),
@@ -453,20 +366,20 @@ object WirePipeline {
           col("sourceMessageId"), col("mrn"), col("visitNumber"),
           col("careCode"), col("typeName"), col("requestedTimeUs"),
           col("cancelled"), col("closedDueToDischarge")),
-        Seq("advanceDecisionNumber"), "statusChangeTimeUs",
-        Seq("mrn", "visitNumber", "careCode", "typeName",
-          "requestedTimeUs", "cancelled", "closedDueToDischarge")))
+        cfg(stateRoot, "advance_decisions", Seq("advanceDecisionNumber"),
+          "statusChangeTimeUs", Seq("mrn", "visitNumber", "careCode",
+            "typeName", "requestedTimeUs", "cancelled",
+            "closedDueToDischarge"))))
 
     // O18: consult + advance-decision NTE questions → ONE
     // question/answer star keyed by (parent table, parent id, question
     // text) — the reference dedups question rows by text and keys
     // answers by (question, parent request), QuestionController; newest
     // answer wins under the kernel's F7.
-    val qMsgs =
-      consultClean.map(Hl7Wire.wireToQuestionMessages(_)).toSeq ++
-        advClean.map(Hl7Wire.wireToQuestionMessages(_,
-          parentTable = "ADVANCE_DECISION",
-          parentIdCol = "advanceDecisionNumber")).toSeq
+    val qMsgs = consultClean.map(Hl7Wire.wireToQuestionMessages(_)) ++
+      advClean.map(Hl7Wire.wireToQuestionMessages(_,
+        parentTable = "ADVANCE_DECISION",
+        parentIdCol = "advanceDecisionNumber"))
     if (qMsgs.nonEmpty) foldStar(
       qMsgs.reduce(_ unionByName _)
         .withColumnRenamed("msgId", "sourceMessageId"),
@@ -487,6 +400,16 @@ object WirePipeline {
 
   private def adtCfg(stateRoot: String) =
     cfg(stateRoot, "adt", Seq("mrn"), "validFromUs", AdtPayload)
+
+  private def conditionsCfg(stateRoot: String) =
+    cfg(stateRoot, "conditions", Seq("mrn", "conditionTypeId", "internalId"),
+      "updatedTimeUs", Seq("status", "severity", "onsetDate", "comment",
+        "action"))
+
+  private def conditionVisitsCfg(stateRoot: String) =
+    cfg(stateRoot, "condition_visits",
+      Seq("mrn", "conditionTypeId", "internalId", "visitNumber"),
+      "updatedTimeUs", Seq("linked"))
 
   /** Derived read views over the persisted ADT star — the Spark-first
     * counterpart of the reference's imperatively-maintained
@@ -608,9 +531,7 @@ object WirePipeline {
                      stateRoot: String,
                      bitemporal: Boolean = false,
                      sink: StarSink = ManifestStarSink): Option[DataFrame] = {
-    val c = cfg(stateRoot, "conditions",
-      Seq("mrn", "conditionTypeId", "internalId"), "updatedTimeUs",
-      Seq("status", "severity", "onsetDate", "comment", "action"))
+    val c = conditionsCfg(stateRoot)
     (if (bitemporal) btLive(spark, c, sink)
      else sink.read(spark, c, "live"))
       .map(_.filter(coalesce(col("action") =!= "DE", lit(true))))
@@ -629,9 +550,7 @@ object WirePipeline {
                       stateRoot: String,
                       bitemporal: Boolean = false,
                       sink: StarSink = ManifestStarSink): Option[DataFrame] = {
-    val c = cfg(stateRoot, "condition_visits",
-      Seq("mrn", "conditionTypeId", "internalId", "visitNumber"),
-      "updatedTimeUs", Seq("linked"))
+    val c = conditionVisitsCfg(stateRoot)
     (if (bitemporal) btLive(spark, c, sink)
      else sink.read(spark, c, "live"))
       .map(_.select(col("mrn"), col("conditionTypeId"),

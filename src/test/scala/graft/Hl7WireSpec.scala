@@ -758,6 +758,54 @@ class Hl7WireSpec extends SparkSpecBase {
       r.labOrderAcks.count() + r.dead.count() == 10)
   }
 
+  test("an ADT frame with no trigger dead-letters as unhandled_type:ADT^") {
+    val raws = Seq(
+      "MSH|^~\\&|EPIC|UCLH|||20240101000000||ADT^A01|OK1|P|2.4\rPID|1||1^^^MRN^MRN",
+      "MSH|^~\\&|EPIC|UCLH|||20240101000000||ADT|NT1|P|2.4\rPID|1||2^^^MRN^MRN",
+      "MSH|^~\\&|EPIC|UCLH|||20240101000000||ADT^|NT2|P|2.4\rPID|1||3^^^MRN^MRN")
+    val r = Hl7Wire.route(raws.toDF("raw"), "raw")
+    assert(r.adt.select("sourceMessageId").as[String].collect().toSeq ==
+      Seq("OK1"))
+    assert(r.allergies.isEmpty && r.infections.isEmpty)
+    assert(r.dead.select("reason").as[String].collect().toSeq ==
+      Seq("unhandled_type:ADT^", "unhandled_type:ADT^"))
+    assert(r.holds("adt") && r.holds("dead") && !r.holds("allergies"))
+  }
+
+  test("every frame lands in exactly one primary channel or in dead, " +
+      "and holds() answers for every channel") {
+    val extra = Seq(
+      "MSH|^~\\&|EPIC|UCLH|||20240101000000||ADT|N1|P|2.4\rPID|1||2^^^MRN^MRN",
+      "MSH|^~\\&|EPIC|UCLH|||20240101000000||ADT^|N2|P|2.4\rPID|1||3^^^MRN^MRN",
+      // gated by the sender allowlist below
+      "MSH|^~\\&|ROGUE|UCLH|||20240101000000||ADT^A01|N3|P|2.4\rPID|1||4^^^MRN^MRN",
+      // the deliberately ignored blood-products feed
+      "MSH|^~\\&|BB|UCLH|||20240101000000||ORU^R01|N4|P|2.4" +
+        "\rOBR|1||O4^LAB|BP^Blood^X^Products|||20240101000000" +
+        "\rOBX|1|ST|BG||O+||||||F")
+    val frames = (mixedRaws ++ extra).zipWithIndex.toDF("raw", "frame")
+    val r = Hl7Wire.route(frames, "raw", adtSenderAllowlist = Seq("EPIC"))
+    val primary = channels.filterNot { case (name, _) =>
+      Set("winPathLabs", "impliedAdt", "infections").contains(name) }
+    val landed = primary.flatMap { case (name, ch) =>
+      ch(r).select("frame").distinct().as[Int].collect().map(_ -> name) }
+    val byFrame = landed.groupBy(_._1).map { case (f, ls) => f -> ls.map(_._2) }
+    assert(byFrame.keySet == (mixedRaws ++ extra).indices.toSet,
+      (mixedRaws ++ extra).indices.filterNot(byFrame.contains))
+    assert(byFrame.forall(_._2.size == 1), byFrame.filter(_._2.size > 1))
+    assert(r.dead.select("reason").as[String].collect().toSet ==
+      Set("unhandled_type:SIU^S12", "unroutable", "unknown_coding_system",
+        "unhandled_type:ADT^", "skipped_sender:ROGUE",
+        "ignored_coding_system:BLOOD_PRODUCTS"))
+    // winPathLabs mirrors labOrders
+    assert(r.winPathLabs.select("frame").distinct().as[Int].collect().toSet ==
+      r.labOrders.select("frame").distinct().as[Int].collect().toSet)
+    // the presence probe agrees with every channel it names
+    for ((name, ch) <- channels)
+      assert(r.holds(name) == !ch(r).isEmpty, name)
+    intercept[IllegalArgumentException](r.holds("labs"))
+  }
+
   /** Every channel of [[Hl7Wire.RoutedWire]], in declaration order. */
   private val channels: Seq[(String, Hl7Wire.RoutedWire => DataFrame)] = Seq(
     "adt" -> (_.adt), "labOrders" -> (_.labOrders),

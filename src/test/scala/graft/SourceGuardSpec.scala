@@ -26,4 +26,20 @@ class SourceGuardSpec extends AnyFunSuite {
       finally walk.close()
     assert(movers == List("graft/streaming/VersionedDir.scala"), movers)
   }
+
+  test("one routing decision: WirePipeline restates none of the router's") {
+    // which channels a batch holds is RoutedWire.holds, built from
+    // Hl7Wire.route's own predicates; a driver-side copy of them drifts
+    val src = new String(Files.readAllBytes(
+      Paths.get("src/main/scala/graft/streaming/WirePipeline.scala")), UTF_8)
+    val codingSystems = "LabFunnel\\.[A-Z]\\w*".r.findAllIn(src).toList
+    assert(codingSystems.isEmpty, codingSystems)
+    val mshLiterals = "\"(ADT|ORU|ORM|ORR|PPR|SIU|[AORS]\\d\\d|PC\\d)\"".r
+      .findAllIn(src).toList
+    assert(mshLiterals.isEmpty, mshLiterals)
+    val mirrors = "\\b(handledKind|anyDead|has[A-Z]\\w*)\\b".r
+      .findAllIn(src).toList
+    assert(mirrors.isEmpty, mirrors)
+    assert(src.contains("DeadLetter.adtRules"))
+  }
 }

@@ -565,4 +565,78 @@ class WirePipelineSpec extends SparkSpecBase {
       "consults" -> 0))
     assert(deadRows(split) == wantDead)
   }
+
+  private def adtHistory(root: String) = StarPipeline.readState(spark,
+    StarPipeline.Config(s"$root/adt", Seq("mrn"), "validFromUs",
+      "sourceMessageId", WirePayload, nBuckets = 8), "history").get
+
+  test("an ADT frame with no trigger lands in the router's dead letter") {
+    val root = Files.createTempDirectory("wire_no_trigger").toString
+    val noTrigger = Seq(
+      "MSH|^~\\&|EPIC|UCLH|||20240601080000||ADT|T2|P|2.4\r" +
+        "PID|1||M2^^^MRN^MRN\r" + pv1("V2"),
+      "MSH|^~\\&|EPIC|UCLH|||20240601080000||ADT^|T3|P|2.4\r" +
+        "PID|1||M3^^^MRN^MRN\r" + pv1("V3"))
+    WirePipeline.foldBatch((noTrigger :+
+      ("MSH|^~\\&|EPIC|UCLH|||20240601080000||ADT^A01|T1|P|2.4\r" +
+        "PID|1||M1^^^MRN^MRN\r" + pv1("V1"))).toDF("raw"), 7L, "raw", root)
+    val dead = spark.read.parquet(s"$root/dead/router/batch=7")
+      .select("raw", "reason").as[(String, String)].collect().toSet
+    assert(dead == noTrigger.map(_ -> "unhandled_type:ADT^").toSet)
+    assert(adtHistory(root).select("sourceMessageId").as[String].collect()
+      .toSeq == Seq("T1"))
+  }
+
+  test("unhandled ADT triggers go to the adt dead letter, not the star") {
+    val root = Files.createTempDirectory("wire_unhandled").toString
+    def adt(trig: String, id: String, mrn: String, evn4: String = "") =
+      s"MSH|^~\\&|EPIC|UCLH|||20240601080000||ADT^$trig|$id|P|2.4\r" +
+        s"EVN|$trig|20240601080000||$evn4\r" +
+        s"PID|1||$mrn^^^MRN^MRN\r" + pv1(s"V$mrn")
+    WirePipeline.foldBatch(Seq(adt("A01", "U1", "M1"),
+      adt("A14", "U2", "M2"), adt("A99", "U3", "M3"),
+      adt("A04", "U4", "M4", evn4 = "ENC_CREATE")).toDF("raw"), 1L, "raw",
+      root)
+    val dead = spark.read.parquet(s"$root/dead/adt/batch=1")
+      .select("sourceMessageId", "reason").as[(String, String)].collect()
+    assert(dead.toSet == Set("U2", "U3", "U4").map(_ -> "unhandled_type"))
+    assert(adtHistory(root).select("sourceMessageId", "msgType")
+      .as[(String, String)].collect().toSeq == Seq(("U1", "Admit")))
+    assert(WirePipeline.derived(spark, root).get.intervals
+      .select("visitId").as[String].collect().toSeq == Seq("VM1"))
+  }
+
+  test("an ADT-only fold and a mixed fold run no more Spark jobs than " +
+      "the two-pass kinds probe did") {
+    val adtOnly = Seq(
+      "MSH|^~\\&|EPIC|UCLH|||20240701080000||ADT^A01|J1|P|2.4\r" +
+        "PID|1||M1^^^MRN^MRN\r" + pv1("V1"),
+      "MSH|^~\\&|EPIC|UCLH|||20240701083000||ADT^A08|J2|P|2.4\r" +
+        "PID|1||M1^^^MRN^MRN||ORANGE^Zest\r" + pv1("V1"),
+      // no MRN: the adt guard's nack
+      "MSH|^~\\&|EPIC|UCLH|||20240701082000||ADT^A01|J3|P|2.4\r" +
+        "PID|1||^^^MRN^MRN\r" + pv1("V4"))
+    val mixed = adtOnly ++ Seq(
+      "MSH|^~\\&|WP|UCLH|||20240701090000||ORU^R01|J4|P|2.4\r" +
+        "PID|1||M3^^^MRN^MRN\r" + pv1("V3") + "\r" +
+        "OBR|1||ORD1^LAB|FBC^FBC^WinPath|||20240701090000\r" +
+        "OBX|1|NM|HGB||13.5|g/dL|||||F",
+      "MSH|^~\\&|EPIC|Problem List|||20240701100000|X|PPR^PC1|J5|P|2.4\r" +
+        "PID|1||M1^^^MRN^MRN\r" + pv1("V1") + "\r" +
+        "PRB|AD|20240701100000|C1^Asthma^I10UK|700|||20240701100000",
+      "MSH|^~\\&|EPIC|Consult Orders|||20240701120000|X|ORM^O01|J6|P|2.4\r" +
+        "PID|1||M2^^^MRN^MRN\r" + pv1("V2") + "\r" +
+        "ORC|NW|9001^EPC|||||||20240701120000\r" + "NTE|1||Reason?->sepsis",
+      "MSH|^~\\&|EPIC|XX|||20240701130000||SIU^S12|J7|P|2.4")
+    def jobs(raws: Seq[String]): Int = {
+      val root = Files.createTempDirectory("wire_jobs").toString
+      org.apache.spark.sql.graftbridge.JobCount(spark)(
+        WirePipeline.foldBatch(raws.toDF("raw"), 1L, "raw", root))
+    }
+    // 14 and 58 with the driver-side kinds probe this replaced: a (type,
+    // trigger) pass, plus a coding-system pass over order/result rows
+    val (adtJobs, mixedJobs) = (jobs(adtOnly), jobs(mixed))
+    assert(adtJobs <= 14, adtJobs)
+    assert(mixedJobs <= 58, mixedJobs)
+  }
 }
