@@ -68,6 +68,11 @@ object Hl7Wire {
   private def gf(arr: Column, i: Int): Column =
     nullIfEmpty(get(arr, lit(i)))
 
+  /** Is MSH-9 type `t` / trigger `g` of type `tp`, with one of the
+    * triggers `gs` (any trigger when none is given)? */
+  private def msgIs(t: Column, g: Column, tp: String, gs: String*): Column =
+    t === tp && (if (gs.isEmpty) lit(true) else g.isin(gs: _*))
+
   /** One mixed wire stream → per-family parsed channels, the analog of
     * the reference's central router (IdsOperations.messageFromHl7Message,
     * IdsOperations.java:413-477): MSH-9 type/trigger picks the message
@@ -133,12 +138,12 @@ object Hl7Wire {
     def dead: DataFrame
 
     /** Does any frame route to `channel` (a member name above, `"dead"`
-      * included)? The first call runs one aggregate over the batch — a
-      * `bool_or` of every channel's routing predicate and of "handled by
-      * none" — and every call reads its answer, so a consumer can skip
-      * an absent family without analysing its parser. A frame counts
-      * even where its parser yields no row (a PPR with no PRB segment).
-      * An unknown name fails.
+      * included)? The first call runs one aggregate over the batch — the
+      * set of channels its frames take, secondary ones and `dead`
+      * included — and every call reads its answer, so a consumer can
+      * skip an absent family without analysing its parser. A frame
+      * counts even where its parser yields no row (a PPR with no PRB
+      * segment). An unknown name fails.
       */
     def holds(channel: String): Boolean
   }
@@ -157,51 +162,69 @@ object Hl7Wire {
             adtSenderAllowlist: Seq[String] = Nil): RoutedWire = {
     val raw = col(rawCol)
     val msh = segment(raw, "MSH")
-    val (t, g, cs) = (col("__t"), col("__g"), col("__cs"))
-    // only order/result frames carry a coding system: the classifier (an
-    // OBR/MSH multi-field probe) never runs over any other frame
-    lazy val tagged = df.withColumn("__t", cmp(mshFld(msh, 9), 1))
-      .withColumn("__g", cmp(mshFld(msh, 9), 2))
-      .withColumn("__cs",
-        when(t.isin("ORU", "ORM", "ORR"), LabFunnel.codingSystem(raw)))
-
-    def is(tp: String, gs: String*) =
-      t === tp && (if (gs.isEmpty) lit(true) else g.isin(gs: _*))
-    val isOrm = is("ORM", "O01")
-    val isOrr = is("ORR", "O02")
-    val r01 = (system: String) => is("ORU", "R01") && cs === system
+    val (t, g, ch) = (col("__t"), col("__g"), col("__ch"))
+    def is(tp: String, gs: String*) = msgIs(t, g, tp, gs: _*)
+    val (isOrm, isOrr) = (is("ORM", "O01"), is("ORR", "O02"))
     val sender = cmp(mshFld(msh, 3), 1)
     val senderOk =
       if (adtSenderAllowlist.isEmpty) lit(true)
       else coalesce(sender.isin(adtSenderAllowlist: _*), lit(false))
 
-    // The routing table: each channel's predicate, written once. A
-    // missing type, trigger or coding system reads as "not this channel",
-    // never as a three-valued null.
-    def rule(p: Column) = coalesce(p, lit(false))
-    val primary = Seq(
-      // A60 fans to the allergies channel only (the reference's A60 ADT
-      // build throws NotImplemented and is swallowed,
-      // IdsOperations.java:493-503); an ADT frame without a trigger
-      // reaches no builder.
-      "adt" -> (is("ADT") && senderOk && g =!= "A60"),
-      "allergies" -> (is("ADT", "A60") && senderOk),
-      "labOrders" -> r01(LabFunnel.WinPath),
-      "coPathLabs" -> r01(LabFunnel.CoPath),
-      "bioConnectLabs" -> r01(LabFunnel.BioConnect),
-      "bankManagerLabs" -> r01(LabFunnel.BankManager),
-      "imagingLabs" -> r01(LabFunnel.Pacs),
-      "flowsheets" -> r01(LabFunnel.Flowsheet),
-      "ablLabs" -> (is("ORU", "R30") && cs === LabFunnel.Abl90),
-      "labOrderAcks" ->
-        ((isOrm || isOrr) && cs.isin(LabFunnel.WinPath, LabFunnel.CoPath)),
-      "consults" -> (isOrm && cs === LabFunnel.ConsultOrder),
-      "advanceDecisions" -> (isOrm && cs === LabFunnel.AdvanceDecision),
-      "problems" -> is("PPR", "PC1", "PC2", "PC3")
-    ).map { case (name, p) => name -> rule(p) }
-    val handled = primary.map(_._2).reduce(_ || _)
-    val rules = (primary ++ Seq(
-      "winPathLabs" -> rule(r01(LabFunnel.WinPath)),
+    // The routing table: (channel, message test over MSH-9 type `t` and
+    // trigger `g`, coding systems, if the family has them). A frame's
+    // primary channel is the first row whose test holds, and a frame no
+    // row takes is dead: CASE WHEN reads a missing type, trigger or
+    // coding system as "not this row", so every frame lands exactly once
+    // by construction.
+    def table(t: Column, g: Column) = {
+      def is(tp: String, gs: String*) = msgIs(t, g, tp, gs: _*)
+      val (r01, orm) = (is("ORU", "R01"), is("ORM", "O01"))
+      Seq(
+        // A60 fans to the allergies channel only (the reference's A60 ADT
+        // build throws NotImplemented and is swallowed,
+        // IdsOperations.java:493-503); an ADT frame without a trigger
+        // reaches no builder.
+        ("allergies", is("ADT", "A60") && senderOk, Nil),
+        ("adt", is("ADT") && senderOk && g.isNotNull, Nil),
+        ("problems", is("PPR", "PC1", "PC2", "PC3"), Nil),
+        ("labOrders", r01, Seq(LabFunnel.WinPath)),
+        ("coPathLabs", r01, Seq(LabFunnel.CoPath)),
+        ("bioConnectLabs", r01, Seq(LabFunnel.BioConnect)),
+        ("bankManagerLabs", r01, Seq(LabFunnel.BankManager)),
+        ("imagingLabs", r01, Seq(LabFunnel.Pacs)),
+        ("flowsheets", r01, Seq(LabFunnel.Flowsheet)),
+        ("ablLabs", is("ORU", "R30"), Seq(LabFunnel.Abl90)),
+        ("labOrderAcks", orm || is("ORR", "O02"),
+          Seq(LabFunnel.WinPath, LabFunnel.CoPath)),
+        ("consults", orm, Seq(LabFunnel.ConsultOrder)),
+        ("advanceDecisions", orm, Seq(LabFunnel.AdvanceDecision)))
+    }
+    // The optimizer substitutes `__ch` into every filter over it, and
+    // filters get no common subexpression elimination, so MSH-9 and the
+    // coding system are bound once inside it: the CASE splits the frame
+    // once and runs the classifier (an OBR/MSH multi-field probe) once,
+    // over order/result frames only.
+    val cs = LabFunnel.codingSystem(raw)
+    val channelOf = letC(mshFld(msh, 9)) { f9 =>
+      val (ft, rows) = (cmp(f9, 1), table(cmp(f9, 1), cmp(f9, 2)))
+      letC(when(ft.isin("ORU", "ORM", "ORR"), cs)) { c =>
+        val hits = rows.map { case (name, msg, systems) =>
+          name -> (if (systems.isEmpty) msg else c.isin(systems: _*) && msg) }
+        hits.tail.foldLeft(when(hits.head._2, hits.head._1)) {
+          case (cw, (name, p)) => cw.when(p, name) } } }
+    lazy val tagged = df.withColumn("__t", cmp(mshFld(msh, 9), 1))
+      .withColumn("__g", cmp(mshFld(msh, 9), 2))
+      .withColumn("__ch", channelOf)
+    // A channel's filter: its rows' message test, a cheap necessary
+    // condition that skips the CASE for other families' frames, then the
+    // CASE itself. `<=>`, not `===`: a null-intolerant test would have the
+    // optimizer add an `isnotnull(__ch)` filter, a second CASE per frame.
+    def on(name: String) = table(t, g).collect {
+      case (`name`, msg, _) => msg }.reduce(_ || _) && ch <=> name
+    val handled = ch.isNotNull
+    // Secondary channels re-read frames a primary channel already takes.
+    val secondary = Map(
+      "winPathLabs" -> on("labOrders"),
       // the reference also derives an implied ADT (person/visit context)
       // from every ORU^R01 and ORM^O01 (IdsOperations.java:431-460
       // buildAndAddAdtMessage with fromAdtStream=false) — parse failures
@@ -211,11 +234,10 @@ object Hl7Wire {
       // the reference's Hl7MessageIgnoredException throws the WHOLE
       // message away, already-built ADT included (LabFunnel
       // determineCodingSystem; OrderAndResultService.java:49-216).
-      "impliedAdt" -> rule((is("ORU", "R01") || isOrm) && handled),
-      "infections" -> rule(is("ADT", "A05") && senderOk))).toMap
-    // Every unhandled frame is dead, labelled with its reason. `handled`
-    // is read once: the optimizer substitutes the tagged columns into
-    // every reference, so each extra reference re-parses MSH per row.
+      "impliedAdt" -> ((is("ORU", "R01") || isOrm) && handled),
+      "infections" -> (g <=> "A05" && on("adt")))
+    val channels = table(t, g).map(_._1).toSet ++ secondary.keySet + "dead"
+    // Every unhandled frame is dead, labelled with its reason.
     val reason = when(t.isNull, "unroutable")
       .when(is("ADT") && !senderOk,
         concat(lit("skipped_sender:"), coalesce(sender, lit(""))))
@@ -227,11 +249,11 @@ object Hl7Wire {
         coalesce(g, lit(""))))
 
     def branch(cond: Column, parse: (DataFrame, String) => DataFrame) =
-      parse(tagged.filter(cond), rawCol).drop("__t", "__g", "__cs")
+      parse(tagged.filter(cond), rawCol).drop("__t", "__g", "__ch")
     def channel(name: String, parse: (DataFrame, String) => DataFrame) =
-      branch(rules(name), parse)
+      branch(secondary.getOrElse(name, on(name)), parse)
     val acksFor = (system: String) =>
-      branch(rules("labOrderAcks") && cs === system,
+      branch(on("labOrderAcks") && cs === system,
         LabFunnel.parseOrderMessages(_, _, system))
 
     new RoutedWire {
@@ -257,16 +279,20 @@ object Hl7Wire {
       lazy val infections = channel("infections", parseInfections)
       lazy val allergies = channel("allergies", parseAllergies)
       lazy val dead = tagged.filter(!handled).withColumn("reason", reason)
-        .drop("__t", "__g", "__cs")
+        .drop("__t", "__g", "__ch")
 
-      private lazy val present: Map[String, Boolean] = {
-        val probes = (rules + ("dead" -> !handled)).toSeq
-        val row = tagged.select(probes.map(p => bool_or(p._2)): _*).head()
-        probes.indices.map(i =>
-          probes(i)._1 -> (!row.isNullAt(i) && row.getBoolean(i))).toMap
+      // each frame's primary channel, then each secondary one it feeds
+      // and "dead"; collect_set skips the nulls
+      private lazy val present: Set[String] = {
+        val tags = ch +: (secondary + ("dead" -> !handled)).toSeq.map {
+          case (name, p) => when(p, name) }
+        tagged.select(explode(array(tags: _*)).as("ch"))
+          .agg(collect_set("ch")).head().getSeq[String](0).toSet
       }
-      def holds(channel: String): Boolean = present.getOrElse(channel,
-        throw new IllegalArgumentException(s"no router channel $channel"))
+      def holds(channel: String): Boolean = {
+        require(channels(channel), s"no router channel $channel")
+        present(channel)
+      }
     }
   }
 
