@@ -827,6 +827,24 @@ class Hl7WireSpec extends SparkSpecBase {
     (rows.length.toLong, sha.take(8).map("%02x".format(_)).mkString)
   }
 
+  test("each router filter runs the coding-system classifier at most " +
+      "once per frame") {
+    // an RDD source keeps the optimizer from folding the filters into a
+    // local relation
+    val frames = spark.sparkContext.parallelize(mixedRaws).toDF("raw")
+    val r = Hl7Wire.route(frames, "raw")
+    for ((name, ch) <- channels) {
+      // the classifier's last rule tests OBR-4.4 against 'Products': each
+      // copy in a filter condition is one more run per frame
+      val copies = ch(r).queryExecution.optimizedPlan.collect {
+        case f: org.apache.spark.sql.catalyst.plans.logical.Filter =>
+          "'Products'".r.findAllIn(f.condition.sql).size }
+      // labOrderAcks splits its own frames by coding system once more
+      val bound = if (name == "labOrderAcks") 2 else 1
+      assert(copies.nonEmpty && copies.forall(_ <= bound), s"$name: $copies")
+    }
+  }
+
   test("router channels are built on first read: reading adt alone " +
       "analyses no other channel, and every channel keeps its rows") {
     import org.apache.spark.sql.catalyst.rules.RuleExecutor
