@@ -90,34 +90,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      // the HL7 wire parses project hundreds of fields — far over the
-      // default whole-stage-codegen cap, which silently drops them to
-      // interpreted eval; lift it so the parse hot path stays codegen'd
-      .config("spark.sql.codegen.maxFields", "2000")
-      // Spark 4.1's HybridAnalyzer RANDOMLY samples queries to dual-run
-      // through the experimental single-pass resolver
-      // (SQLConf.ANALYZER_DUAL_RUN_SAMPLE_RATE + a Random in
-      // HybridAnalyzer) and throws when the two resolvers disagree —
-      // a coin-flip analysis failure killed the round-6 bench run. Pin
-      // the legacy fixed-point resolver only.
-      .config("spark.sql.analyzer.singlePassResolver.dualRunWithLegacy", "false")
-      .config("spark.sql.analyzer.singlePassResolver.enabled", "false")
-      // stable generated-class names: the Janino cache keys on source
-      // text (comments excluded), so without the per-stage id in the
-      // class name, structurally identical stages across lanes/reps
-      // compile ONCE (tools/CodegenProbe r15: q195's warm rep
-      // recompiles 0 classes with this off vs 4 with it on)
-      .config("spark.sql.codegen.useIdInClassName", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
 
     def time(body: => Unit): Double = {
       val t0 = System.nanoTime()
@@ -198,12 +172,13 @@ object Bench {
     // Wire-machinery pre-warm (untimed, 64 docs): a cold wire→RAG run
     // pays ~20 s over warm — ~3 s Janino compile of ~80 generated
     // classes, the rest HotSpot JIT of the interpreted-HOF HL7 parse
-    // + funnel expression machinery (tools/CodegenProbe, SCALING.md
-    // r15 adjudication). The warm-up is per-JVM and transfers across
-    // lanes (the expression CLASSES are shared), so one tiny slice
-    // here buys q195/q204/w2/w4 their warm shape from rep 1. On a
-    // long-lived 100 TB cluster this cost amortizes to noise; the
-    // bench pre-warms to measure the engine, not JVM startup.
+    // + funnel expression machinery (SCALING.md round-15 codegen
+    // adjudication; COVERAGE.md round-15 codegen row). The warm-up is
+    // per-JVM and transfers across lanes (the expression CLASSES are
+    // shared), so one tiny slice here buys q195/q204/w2/w4 their warm
+    // shape from rep 1. On a long-lived 100 TB cluster this cost
+    // amortizes to noise; the bench pre-warms to measure the engine,
+    // not JVM startup.
     time {
       SparkEntry.wireRagChain(spark,
         spark.read.parquet(s"$sfDir/documents.parquet").limit(64),

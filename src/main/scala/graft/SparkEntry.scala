@@ -607,10 +607,10 @@ object SparkEntry {
 
   /** The q195 wire→RAG chain over an arbitrary (doc_id, text) frame —
     * shared by the lane and [[graft.Bench]]'s untimed JIT pre-warm
-    * (tools/CodegenProbe, r15: a cold run pays ~20 s over warm, ~3 s
-    * of it Janino compilation of ~80 generated classes and the rest
-    * HotSpot JIT warm-up of the shared interpreted-HOF parse
-    * machinery — per-JVM, and fully transferable: q204 right after
+    * (SCALING.md round-15 codegen adjudication: a cold run pays ~20 s
+    * over warm, ~3 s of it Janino compilation of ~80 generated classes
+    * and the rest HotSpot JIT warm-up of the shared interpreted-HOF
+    * parse machinery — per-JVM, and fully transferable: q204 right after
     * q195 runs warm. Pre-warming this chain on a 64-row slice
     * absorbs the whole tax in an untimed prefix).
     */
@@ -663,7 +663,7 @@ object SparkEntry {
     // forces i = 0 (the residue is a multiple of 100) and then
     // d ≡ 0 (mod 20). Prefiltering docs 20× shrinks the query-side
     // encode (a corpus-wide funnel+chunk+embed pass — measured the
-    // lane's dominant stage, tools/WireRagProbe r14) to 5%; the
+    // lane's dominant stage, SCALING.md "Wire→RAG (q195)") to 5%; the
     // chunk-level filter stays as the exactness guard.
     val qs = RagStream.encodeBatch(
         labDocs.filter(pmod(col("doc_id"), lit(20L)) === 0), cfg)

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -9,29 +8,8 @@ object Verify {
     // optional 3rd arg: comma-separated query-name filter (local iteration)
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // events.parquet stores TIMESTAMP(NANOS); read as epoch-ns longs
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      // wide wire-parse projections must stay inside whole-stage
-      // codegen (default field cap silently drops them to interpreted)
-      .config("spark.sql.codegen.maxFields", "2000")
-      // Disable the sampled dual-run of the experimental single-pass
-      // resolver (HybridAnalyzer throws on resolver disagreement, at
-      // random, per ANALYZER_DUAL_RUN_SAMPLE_RATE) — one flaky analysis
-      // failure must not zero a round's correctness dump.
-      .config("spark.sql.analyzer.singlePassResolver.dualRunWithLegacy", "false")
-      .config("spark.sql.analyzer.singlePassResolver.enabled", "false")
-      // stable generated-class names -> Janino cache hits across
-      // structurally identical stages (tools/CodegenProbe, r15)
-      .config("spark.sql.codegen.useIdInClassName", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }

@@ -46,8 +46,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * re-deserialized with every task), [[BpeApplyBroadcast]] ships a
   * `Broadcast` handle (the table crosses the wire once per executor
   * via TorrentBroadcast and is shared by every task on it — the
-  * production transport; measured in `tools/BpeProbe`, recorded in
-  * SCALING.md). Bit-identical outputs, spec-locked.
+  * production transport; measured and recorded in SCALING.md
+  * "`BpeApply` transport"). Bit-identical outputs, spec-locked.
   */
 object BpeApply {
   /** rank map: pair -> 1-based training step. If the same pair were

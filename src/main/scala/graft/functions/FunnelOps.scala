@@ -16,8 +16,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * tokenizations, quadratic n-gram occurrence counting inside
   * `transform`/`filter` lambdas, and a 5-way language-score reduce —
   * measured as the DOMINANT cost of every funnel-gated encode
-  * (tools/WireRagProbe: a corpus encode pass 0.29 s without the funnel,
-  * 6.12 s with it, single partition). One kernel call computes every
+  * (OPTIMIZATION_r17.md change 5: a corpus encode pass 0.29 s without
+  * the funnel, 6.12 s with it, single partition). One kernel call computes every
   * signal in one pass with hash-map gram counting.
   *
   * Bit-exact replication of the relational form:

@@ -274,7 +274,7 @@ object TextAnalysis {
     * ~1 MB that [[graft.functions.BpeApply]] would re-deserialize with
     * every task's plan; behind TorrentBroadcast it crosses the wire
     * once per executor and is shared by all its tasks (numbers in
-    * SCALING.md, probe in `tools/BpeProbe`). Output is bit-identical
+    * SCALING.md "`BpeApply` transport"). Output is bit-identical
     * to [[bpeEncode]] (spec-locked).
     */
   def bpeEncodeBc(docs: DataFrame, idCol: String, textCol: String,

@@ -165,7 +165,8 @@ object CurationStream {
     // broadcast benchmark join) feeds up to five consumers below (span
     // layer, sig layer ×2, bucket layer, score + index write) and
     // would otherwise re-run per consumer — measured 10.5 s → 6.4 s
-    // on the two sf0.1 folds (tools/CurationProbe)
+    // on the two sf0.1 folds (SCALING.md, the CurationStream stage
+    // breakdown; probe source at commit b92e78f)
     // exact decon gate (round 16, guide §2.4): a per-row PREDICATE
     // over the broadcast eval-sized hash set — no gate aggregation, no
     // survivor join-back (the bloom variant keeps its bit-position

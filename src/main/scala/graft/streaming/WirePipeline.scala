@@ -128,25 +128,9 @@ object WirePipeline {
       if (batch.rdd.getNumPartitions < np) batch.repartition(np) else batch
     val cached = spread.persist(
       org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    liftCodegenCap(batch.sparkSession)
     try foldRouted(cached, batchId, rawCol, stateRoot, bitemporal, sink)
     finally cached.unpersist()
   }
-
-  // the parse projections are hundreds of fields wide — far over the
-  // default whole-stage-codegen field cap, which silently drops them to
-  // interpreted eval (~30% slower measured). Lift the cap ONCE per
-  // session and leave it raised: a per-batch set/restore races with
-  // concurrent queries on the same session (e.g. a WaveformPipeline
-  // stream), which could run a fold under the default cap or leak a
-  // half-restored value.
-  private val codegenLifted = java.util.Collections.newSetFromMap(
-    new java.util.concurrent.ConcurrentHashMap[
-      org.apache.spark.sql.SparkSession, java.lang.Boolean]())
-  private def liftCodegenCap(spark: org.apache.spark.sql.SparkSession): Unit =
-    if (codegenLifted.add(spark) &&
-        spark.conf.get("spark.sql.codegen.maxFields", "100").toInt < 2000)
-      spark.conf.set("spark.sql.codegen.maxFields", "2000")
 
   private def foldRouted(batch: DataFrame, batchId: Long, rawCol: String,
                          stateRoot: String, bitemporal: Boolean,

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Local iteration harness: time ONE named query from SparkEntry.queries
   * repeatedly (first run cold, then repeats), with the same session conf
   * as Bench. Not part of the driver contract.
@@ -11,22 +9,8 @@ object BenchOne {
     val name = args(0)
     val reps = if (args.length > 1) args(1).toInt else 3
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.codegen.maxFields", "2000")
-      .config("spark.sql.analyzer.singlePassResolver.dualRunWithLegacy", "false")
-      .config("spark.sql.analyzer.singlePassResolver.enabled", "false")
-      // stable generated-class names -> Janino cache hits across
-      // structurally identical stages (tools/CodegenProbe, r15)
-      .config("spark.sql.codegen.useIdInClassName", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     // warmup as in Bench
     spark.range(0, 1000000).selectExpr("sum(id)").collect()
     spark.read.parquet(s"$sfDir/nation.parquet").count()

@@ -11,20 +11,42 @@ import scala.jdk.CollectionConverters._
   */
 class SourceGuardSpec extends AnyFunSuite {
 
+  /** Files under `roots` whose text matches `token`, relative to their
+    * root, sorted. */
+  private def filesMatching(token: String, roots: String*): List[String] =
+    roots.toList.flatMap { r =>
+      val root = Paths.get(r)
+      val walk = Files.walk(root)
+      try walk.iterator().asScala
+        .filter(_.toString.endsWith(".scala"))
+        .filter(p => token.r.findFirstIn(
+          new String(Files.readAllBytes(p), UTF_8)).isDefined)
+        .map(p => root.relativize(p).toString).toList
+      finally walk.close()
+    }.sorted
+
   test("one commit path: only VersionedDir renames a file atomically") {
     // every persisted family swaps its pointer through
     // VersionedDir.commit; a second atomic rename would fork the commit
     // protocol (forced temp file, fresh version dirs) again
-    val root = Paths.get("src/main/scala")
-    val walk = Files.walk(root)
-    val movers =
-      try walk.iterator().asScala
-        .filter(_.toString.endsWith(".scala"))
-        .filter(p => new String(Files.readAllBytes(p), UTF_8)
-          .contains("ATOMIC_MOVE"))
-        .map(p => root.relativize(p).toString).toList.sorted
-      finally walk.close()
+    val movers = filesMatching("ATOMIC_MOVE", "src/main/scala")
     assert(movers == List("graft/streaming/VersionedDir.scala"), movers)
+  }
+
+  test("one session configuration: only GraftSession builds a session") {
+    // a second builder drifts from the production conf (codegen cap,
+    // resolver pins), and what a spec exercises then depends on which
+    // session ran it
+    val builders = filesMatching("SparkSession\\.builder",
+      "src/main/scala", "src/test/scala")
+    assert(builders == List("graft/GraftSession.scala"), builders)
+  }
+
+  test("no run-time conf writes: no main source calls conf.set") {
+    // a conf write from library code changes every later query on the
+    // caller's session; the conf is fixed where the session is built
+    val writers = filesMatching("\\bconf\\.set\\w*\\(", "src/main/scala")
+    assert(writers.isEmpty, writers)
   }
 
   test("one routing decision: WirePipeline restates none of the router's") {

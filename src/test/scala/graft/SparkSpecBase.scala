@@ -3,26 +3,13 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** One shared session across all suites (local[4], UTC, ANSI default). */
+/** One shared session across all suites: the production configuration
+  * (`GraftSession`) at local[4], whatever core count the host has. */
 object SharedSpark {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    // no sampled dual-run analysis (flaky HybridAnalyzer disagreement)
-    .config("spark.sql.analyzer.singlePassResolver.dualRunWithLegacy", "false")
-    .config("spark.sql.analyzer.singlePassResolver.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = GraftSession.local(4)
 }
 
 abstract class SparkSpecBase extends AnyFunSuite {
-  lazy val spark: SparkSession = {
-    val s = SharedSpark.spark
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = SharedSpark.spark
   val Sf0001 = "/root/testdata/sf0.001"
 }

@@ -606,16 +606,17 @@ class WirePipelineSpec extends SparkSpecBase {
       .select("visitId").as[String].collect().toSeq == Seq("VM1"))
   }
 
+  private val adtOnly = Seq(
+    "MSH|^~\\&|EPIC|UCLH|||20240701080000||ADT^A01|J1|P|2.4\r" +
+      "PID|1||M1^^^MRN^MRN\r" + pv1("V1"),
+    "MSH|^~\\&|EPIC|UCLH|||20240701083000||ADT^A08|J2|P|2.4\r" +
+      "PID|1||M1^^^MRN^MRN||ORANGE^Zest\r" + pv1("V1"),
+    // no MRN: the adt guard's nack
+    "MSH|^~\\&|EPIC|UCLH|||20240701082000||ADT^A01|J3|P|2.4\r" +
+      "PID|1||^^^MRN^MRN\r" + pv1("V4"))
+
   test("an ADT-only fold and a mixed fold run no more Spark jobs than " +
       "the two-pass kinds probe did") {
-    val adtOnly = Seq(
-      "MSH|^~\\&|EPIC|UCLH|||20240701080000||ADT^A01|J1|P|2.4\r" +
-        "PID|1||M1^^^MRN^MRN\r" + pv1("V1"),
-      "MSH|^~\\&|EPIC|UCLH|||20240701083000||ADT^A08|J2|P|2.4\r" +
-        "PID|1||M1^^^MRN^MRN||ORANGE^Zest\r" + pv1("V1"),
-      // no MRN: the adt guard's nack
-      "MSH|^~\\&|EPIC|UCLH|||20240701082000||ADT^A01|J3|P|2.4\r" +
-        "PID|1||^^^MRN^MRN\r" + pv1("V4"))
     val mixed = adtOnly ++ Seq(
       "MSH|^~\\&|WP|UCLH|||20240701090000||ORU^R01|J4|P|2.4\r" +
         "PID|1||M3^^^MRN^MRN\r" + pv1("V3") + "\r" +
@@ -638,5 +639,16 @@ class WirePipelineSpec extends SparkSpecBase {
     val (adtJobs, mixedJobs) = (jobs(adtOnly), jobs(mixed))
     assert(adtJobs <= 14, adtJobs)
     assert(mixedJobs <= 58, mixedJobs)
+  }
+
+  test("a fold leaves its session's conf as it found it") {
+    // a fresh child session starts from the context's conf; the fold
+    // must run under it as built, not raise or pin anything on it
+    val s2 = SharedSpark.spark.newSession()
+    val before = s2.conf.getAll
+    val root = Files.createTempDirectory("wire_conf").toString
+    WirePipeline.foldBatch(s2.createDataset(adtOnly)(
+      org.apache.spark.sql.Encoders.STRING).toDF("raw"), 1L, "raw", root)
+    assert(s2.conf.getAll == before)
   }
 }
