@@ -3,6 +3,7 @@ package graft.sources
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.functions.Hl7Fields
 import graft.functions.Hl7Timestamp.hl7TsUs
 
 /** S2: HL7 v2 wire parsing — pipe/caret splitting of MSH/EVN/PID/PV1/
@@ -10,11 +11,17 @@ import graft.functions.Hl7Timestamp.hl7TsUs
   * ADT shape (ref: hl7-reader/.../IdsOperations.java:351-477 for WHAT is
   * extracted; the HL7 v2 encoding rules themselves are public spec).
   *
-  * Spark-first: every accessor is a pure `functions._` composition
-  * (split / filter / get / element lookups), so parsing stays inside
-  * whole-stage codegen and distributes like any projection — no UDF, no
-  * driver loop, no per-row JVM object graph. A raw-message DataFrame at
-  * any scale parses in one narrow map stage.
+  * Spark-first: the accessors ([[segment]], [[segments]],
+  * [[segmentsOf]], [[fld]], [[mshFld]], [[cmp]], [[rep1]]) are native
+  * Catalyst expressions ([[graft.functions.Hl7Fields]]), each one byte
+  * scan of the frame with generated code — no regex split, no lambda, no
+  * UDF, no driver loop. A family parser is a projection of such reads, so
+  * it compiles into whole-stage codegen, a segment or field read twice in
+  * one projection is scanned once (subexpression elimination), and a
+  * raw-message DataFrame at any scale parses in one narrow map stage. The
+  * positional builders (OBX/NTE ownership, lab order groups) still group
+  * the native segment array with array higher-order functions, which run
+  * interpreted.
   *
   * Conventions:
   *  - segments split on CR (wire standard) or LF (file corpora);
@@ -29,33 +36,31 @@ import graft.functions.Hl7Timestamp.hl7TsUs
 object Hl7Wire {
 
   /** Non-empty segments of a raw message. */
-  def segments(raw: Column): Column =
-    filter(split(raw, "[\\r\\n]+"), s => length(s) > 0)
+  def segments(raw: Column): Column = Hl7Fields.segments(raw, None)
 
-  /** First segment with the given id ("PID"), null if absent. */
-  def segment(raw: Column, id: String): Column =
-    get(filter(segments(raw), s => substring(s, 1, 3) === id), lit(0))
+  /** Segment `occurrence` (0-based; the first by default) among those
+    * with the given id ("PID"), null if absent. */
+  def segment(raw: Column, id: String, occurrence: Int = 0): Column =
+    Hl7Fields.segment(raw, id, occurrence)
 
   /** All segments with the given id (OBX/OBR/NTE repeat). */
   def segmentsOf(raw: Column, id: String): Column =
-    filter(segments(raw), s => substring(s, 1, 3) === id)
+    Hl7Fields.segments(raw, Some(id))
 
   private def nullIfEmpty(c: Column): Column = when(c === "", lit(null)).otherwise(c)
 
   /** HL7 field i (1-based) of a non-MSH segment. */
-  def fld(seg: Column, i: Int): Column =
-    nullIfEmpty(get(split(seg, "\\|"), lit(i)))
+  def fld(seg: Column, i: Int): Column = Hl7Fields.piece(seg, '|', i)
 
   /** HL7 field i of the MSH segment (MSH-1 is the separator itself). */
   def mshFld(seg: Column, i: Int): Column =
-    if (i == 1) lit("|") else nullIfEmpty(get(split(seg, "\\|"), lit(i - 1)))
+    if (i == 1) lit("|") else Hl7Fields.piece(seg, '|', i - 1)
 
   /** Component k (1-based, `^`-separated) of a field. */
-  def cmp(f: Column, k: Int): Column =
-    nullIfEmpty(get(split(f, "\\^"), lit(k - 1)))
+  def cmp(f: Column, k: Int): Column = Hl7Fields.piece(f, '^', k - 1)
 
   /** First repetition (`~`-separated) of a field. */
-  def rep1(f: Column): Column = nullIfEmpty(get(split(f, "~"), lit(0)))
+  def rep1(f: Column): Column = Hl7Fields.piece(f, '~', 0)
 
   /** Single-element-transform let binding: evaluates `value` once per
     * scope. Needed inside HOF lambdas, which get no subexpression
@@ -200,20 +205,24 @@ object Hl7Wire {
         ("advanceDecisions", orm, Seq(LabFunnel.AdvanceDecision)))
     }
     // The optimizer substitutes `__ch` into every filter over it, and
-    // filters get no common subexpression elimination, so MSH-9 and the
-    // coding system are bound once inside it: the CASE splits the frame
-    // once and runs the classifier (an OBR/MSH multi-field probe) once,
-    // over order/result frames only.
+    // filters get no common subexpression elimination. MSH-9 reads are
+    // native scans of the MSH segment, cheap to repeat per row; the
+    // coding-system classifier (an OBR/MSH multi-field probe) is bound
+    // once, and only in the order/result branch. The plain rows all
+    // precede the coded rows in the table, so testing them first keeps
+    // the first-match order, and the other families' frames never reach
+    // the binding.
     val cs = LabFunnel.codingSystem(raw)
-    val channelOf = letC(mshFld(msh, 9)) { f9 =>
-      val (ft, rows) = (cmp(f9, 1), table(cmp(f9, 1), cmp(f9, 2)))
-      letC(when(ft.isin("ORU", "ORM", "ORR"), cs)) { c =>
-        val hits = rows.map { case (name, msg, systems) =>
-          name -> (if (systems.isEmpty) msg else c.isin(systems: _*) && msg) }
-        hits.tail.foldLeft(when(hits.head._2, hits.head._1)) {
-          case (cw, (name, p)) => cw.when(p, name) } } }
-    lazy val tagged = df.withColumn("__t", cmp(mshFld(msh, 9), 1))
-      .withColumn("__g", cmp(mshFld(msh, 9), 2))
+    val (ft, fg) = (cmp(mshFld(msh, 9), 1), cmp(mshFld(msh, 9), 2))
+    val (plain, coded) = table(ft, fg).partition(_._3.isEmpty)
+    def firstMatch(hits: Seq[(String, Column)]) =
+      hits.tail.foldLeft(when(hits.head._2, hits.head._1)) {
+        case (cw, (name, p)) => cw.when(p, name) }
+    val channelOf = firstMatch(plain.map { case (name, msg, _) => name -> msg })
+      .when(ft.isin("ORU", "ORM", "ORR"), letC(cs) { c =>
+        firstMatch(coded.map { case (name, msg, systems) =>
+          name -> (c.isin(systems: _*) && msg) }) })
+    lazy val tagged = df.withColumn("__t", ft).withColumn("__g", fg)
       .withColumn("__ch", channelOf)
     // A channel's filter: its rows' message test, a cheap necessary
     // condition that skips the CASE for other families' frames, then the
@@ -352,8 +361,8 @@ object Hl7Wire {
     // A17 swap carries a second PID/PV1 group (the other patient of the
     // swap, AdtMessageFactory.buildSwapLocations); A45 nests its MRG+PV1
     // in a MERGE_INFO group, which on the wire is just the segments.
-    val pid2 = get(segmentsOf(raw, "PID"), lit(1))
-    val pv12 = get(segmentsOf(raw, "PV1"), lit(1))
+    val pid2 = segment(raw, "PID", 1)
+    val pv12 = segment(raw, "PV1", 1)
     val mrg = segment(raw, "MRG")
 
     val trigger = cmp(mshFld(msh, 9), 2)
@@ -361,10 +370,7 @@ object Hl7Wire {
     val occurredUs = hl7TsUs(fld(evn, 6))
     val name = fld(pid, 5)
     def nhsOf(pidSeg: Column): Column =
-      get(transform(
-        filter(split(fld(pidSeg, 3), "~"),
-          r => get(split(r, "\\^"), lit(4)) === "NHSNMBR"),
-        r => get(split(r, "\\^"), lit(0))), lit(0))
+      Hl7Fields.idOfType(fld(pidSeg, 3), "NHSNMBR")
 
     val parsed = Seq(
       triggerToOp(trigger, fld(evn, 4)).as("msgType"),
@@ -414,7 +420,7 @@ object Hl7Wire {
       // A40/A45/A47: MRG-1 rep 1 = prior MRN, rep 2 = prior NHS number
       // (AdtMessageFactory.setPreviousIdentifiers); MRG-5 = prior visit
       cmp(rep1(fld(mrg, 1)), 1).as("previousMrn"),
-      cmp(get(split(fld(mrg, 1), "~"), lit(1)), 1).as("previousNhsNumber"),
+      cmp(Hl7Fields.piece(fld(mrg, 1), '~', 1), 1).as("previousNhsNumber"),
       cmp(fld(mrg, 5), 1).as("previousVisitNumber"),
       // A17: the other patient/visit of the swap (second PID/PV1 group)
       cmp(rep1(fld(pid2, 3)), 1).as("otherMrn"),
@@ -516,7 +522,8 @@ object Hl7Wire {
     * Grouping is positional, as the wire format defines it: an OBX
     * belongs to the most recent OBR above it. Implemented entirely with
     * array higher-order functions (transform-with-index / filter /
-    * posexplode), so the builder stays a codegen'd narrow projection —
+    * posexplode; the lambdas run interpreted), so the builder stays a
+    * narrow projection —
     * message count in, order count out, zero shuffles at any scale.
     *
     * Output per order: sourceMessageId/sourceSystem/mrn context,

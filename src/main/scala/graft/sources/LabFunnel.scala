@@ -13,7 +13,8 @@ import Hl7Wire._
   * picks the builder). Here the whole funnel is pure `Column` algebra over
   * the raw message string: routing is a `when` chain and each builder is a
   * per-message array-HOF pipeline (segments → positional groups → order
-  * structs), so at any scale it stays one narrow codegen'd projection —
+  * structs; the lambdas run interpreted), so at any scale it stays one
+  * narrow projection —
   * message count in, order count out, zero shuffles.
   *
   * Cross-order semantics the reference implements imperatively (WinPath
@@ -53,7 +54,7 @@ object LabFunnel {
     */
   def codingSystem(raw: Column): Column = {
     val msh = segment(raw, "MSH")
-    val obr = get(segmentsOf(raw, "OBR"), lit(0))
+    val obr = segment(raw, "OBR")
     val app = cmp(mshFld(msh, 3), 1)
     val fac = trim(coalesce(cmp(mshFld(msh, 4), 1), lit("")))
     val fillerNs = cmp(fld(obr, 3), 2)
@@ -91,8 +92,9 @@ object LabFunnel {
   def orderGroups(raw: Column, anchorId: String): Column =
     // bind the shared per-row arrays once: inside the per-anchor lambda
     // below each reference would otherwise re-evaluate its whole
-    // subtree (split + transform + filter over the full message) per
-    // anchor — HOF lambdas get no subexpression elimination
+    // subtree (the positional transform + filter over the message's
+    // segment array) per anchor — HOF lambdas get no subexpression
+    // elimination
     let(segsWithPos(raw)) { wp =>
     let(ofId(wp, anchorId)) { anchors =>
     let(ofId(wp, "ORC")) { orcs =>
@@ -118,12 +120,13 @@ object LabFunnel {
           get(cands, size(cands) - 1).getField("seg")
         }
       // Segments split into field arrays ONCE at group construction —
-      // every downstream field access is then an O(1) array get instead
-      // of a per-reference split. Inside transform/filter lambdas Spark
-      // has no subexpression elimination (HOFs never codegen), so
-      // without this each of the ~25 field reads per segment re-split
-      // the same string — measured ~20 ms/row on the WinPath builder,
-      // ~10× less with the pre-split.
+      // every downstream field access is then an O(1) array get. Inside
+      // transform/filter lambdas Spark has no subexpression elimination
+      // (HOFs never codegen), so a native [[Hl7Wire.fld]] per read would
+      // rescan the segment up to its field for each of the ~25 reads.
+      // (Against the regex-split accessors this replaced, the pre-split
+      // measured ~10× faster on the WinPath builder; against native
+      // reads it has not been re-measured.)
       struct(orcSeg.as("orc"), obrSeg.as("obr"),
         split(orcSeg, "\\|").as("orcF"), split(obrSeg, "\\|").as("obrF"),
         transform(within(obxs), x => struct(

@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.graftbridge.CacheBridge
 import graft.kernel.BitemporalKernel
 
@@ -64,14 +65,16 @@ object StarPipeline {
   /** table → (bucket id → path relative to stateDir). */
   private type ManifestMap = Map[String, Map[String, String]]
 
-  /** One axis's kernel step: (pinned batch, config, reader of the
-    * touched prior state of a table, the touched bucket ids in ascending
-    * order, the fold's pins) → the tables to persist, each with its row
-    * identity keys (used by the JDBC sink's MERGE; the manifest sink
-    * replaces whole buckets and ignores them).
+  /** A reader of the touched prior state of a table, given the table's
+    * schema; None before the table has rows. */
+  private[streaming] type Prior = (String, StructType) => Option[DataFrame]
+
+  /** One axis's kernel step: (pinned batch, config, [[Prior]] reader, the
+    * touched bucket ids in ascending order, the fold's pins) → the tables
+    * to persist, each with its row identity keys (used by the JDBC sink's
+    * MERGE; the manifest sink replaces whole buckets and ignores them).
     */
-  private[streaming] type Step = (DataFrame, Config,
-    String => Option[DataFrame], Seq[Long], Pins) =>
+  private[streaming] type Step = (DataFrame, Config, Prior, Seq[Long], Pins) =>
     Seq[(String, DataFrame, Seq[String])]
 
   /** The frames one fold pins with [[CacheBridge.pinned]]: `apply` pins a
@@ -187,12 +190,15 @@ object StarPipeline {
 
   /** The valid-time kernel step: history → history/live/audit. */
   private[streaming] def validStep(batch: DataFrame, cfg: Config,
-                                   prior: String => Option[DataFrame],
+                                   prior: Prior,
                                    touched: Seq[Long], pins: Pins)
       : Seq[(String, DataFrame, Seq[String])] = {
+    // history holds the message columns, as the kernel emits them
+    val historySchema = BitemporalKernel.emptyBitemporal(batch, cfg.keyCols,
+      cfg.validFromUsCol, cfg.tieCol, cfg.payloadCols).messages.schema
     val r = BitemporalKernel.applyBatch(
-      prior("history").getOrElse(batch.limit(0)), batch, cfg.keyCols,
-      cfg.validFromUsCol, cfg.tieCol, cfg.payloadCols, pins,
+      prior("history", historySchema).getOrElse(batch.limit(0)), batch,
+      cfg.keyCols, cfg.validFromUsCol, cfg.tieCol, cfg.payloadCols, pins,
       byBucket(cfg, touched, batch.sparkSession))
     // live is one row per key; history and audit one per version
     val versionKeys = cfg.keyCols ++ Seq(cfg.validFromUsCol, cfg.tieCol)
@@ -238,12 +244,14 @@ object StarPipeline {
       man.getOrElse(s"$tbl.cold", Map.empty)
         .filter { case (k, _) => lateBuckets.contains(k.split("-")(0)) }
     // ONLY the touched buckets — hot, plus cold for the buckets a late
-    // arrival un-compacts
-    def readTouched(tbl: String): Option[DataFrame] = {
+    // arrival un-compacts — read with the schema the step knows, so no
+    // job runs to infer it from the files
+    def readTouched(tbl: String, schema: StructType): Option[DataFrame] = {
       val paths = (touched
         .flatMap(k => man.getOrElse(tbl, Map.empty).get(k.toString)) ++
         coldKeysOf(tbl).values).map(p => s"${cfg.stateDir}/$p")
-      if (paths.isEmpty) None else Some(spark.read.parquet(paths: _*))
+      if (paths.isEmpty) None
+      else Some(spark.read.schema(schema).parquet(paths: _*))
     }
 
     val outputs = step(batch, cfg, readTouched, touched.toSeq, pins)
@@ -294,14 +302,15 @@ object StarPipeline {
 
   /** The both-axes kernel step: bt_messages/bt_table → both. */
   private[streaming] def bitemporalStep(batch: DataFrame, cfg: Config,
-                                        prior: String => Option[DataFrame],
+                                        prior: Prior,
                                         touched: Seq[Long], pins: Pins)
       : Seq[(String, DataFrame, Seq[String])] = {
     val empty = BitemporalKernel.emptyBitemporal(batch, cfg.keyCols,
       cfg.validFromUsCol, cfg.tieCol, cfg.payloadCols)
     val prev = BitemporalKernel.BitemporalState(
-      messages = prior("bt_messages").getOrElse(empty.messages),
-      table = prior("bt_table").getOrElse(empty.table))
+      messages = prior("bt_messages", empty.messages.schema)
+        .getOrElse(empty.messages),
+      table = prior("bt_table", empty.table.schema).getOrElse(empty.table))
     val r = BitemporalKernel.applyBitemporal(prev, batch, cfg.keyCols,
       cfg.validFromUsCol, cfg.tieCol, cfg.storedFromUsCol, cfg.payloadCols,
       pins, byBucket(cfg, touched, batch.sparkSession))

@@ -320,8 +320,8 @@ final class JdbcStarSink(url: String, star: String = "",
       if (touched.isEmpty) return
 
       val outputs = step(batch, cfg,
-        readTouched(batch.sparkSession, cfg, _, touched), touched.toSeq,
-        pins)
+        (t, _) => readTouched(batch.sparkSession, cfg, t, touched),
+        touched.toSeq, pins)
       val staged = outputs.map { case (t, df0, keys) =>
         val df = df0.withColumn("__bucket", bucket)
         stageTable(cfg, t, df)

@@ -896,6 +896,25 @@ class Hl7WireSpec extends SparkSpecBase {
       assert(digest(ch(mixed)) == expected(name), name)
   }
 
+  test("the adt channel reads frames with native accessors: no regex " +
+      "split, no array filter, few interpreted expressions") {
+    import org.apache.spark.sql.catalyst.expressions.{ArrayFilter, Expression, StringSplit}
+    import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+    // an RDD source keeps the optimizer from folding the plan into a
+    // local relation
+    val frames = spark.sparkContext.parallelize(Seq(adtRaw)).toDF("raw")
+    val plan = Hl7Wire.route(frames, "raw").adt.queryExecution.sparkPlan
+    val exprs: Seq[Expression] =
+      plan.collect { case p => p.expressions }.flatten.flatMap(_.collect { case e => e })
+    assert(!exprs.exists(e => e.isInstanceOf[ArrayFilter] ||
+      e.isInstanceOf[StringSplit]), plan)
+    // what is left interpreted is the order/result classifier's binding
+    // in the routing CASE, which ADT frames never reach (the regex-split
+    // accessors left 3,060 interpreted nodes in this plan)
+    val interpreted = exprs.count(_.isInstanceOf[CodegenFallback])
+    assert(interpreted <= 13, interpreted)
+  }
+
   test("missing segments and empty fields degrade to nulls, not errors") {
     val bare = "MSH|^~\\&|S|F|||20240101000000||ADT^A03|M1|P|2.4"
     val r = Hl7Wire.parseAdt(Seq(bare).toDF("raw"), "raw").collect().head

@@ -287,6 +287,40 @@ class PipelineSpec extends SparkSpecBase {
     (StarPipeline.foldBatchBitemporal, StarPipeline.compactBitemporal,
       Seq("bt_messages", "bt_table")))
 
+  test("touched reads with the schema a step knows equal the inferred " +
+      "read: both axes, hot and cold") {
+    bothAxes.foreach { case (fold, compact, tables) =>
+      val cfg = q70Config("star_known_schema")
+      fold(q70Batch(1), 1L, cfg)
+      fold(q70Batch(2), 2L, cfg)
+      compact(spark, cfg, 3000L, 3L)
+      // the schemas the steps hand the touched-bucket reader
+      val empty = graft.kernel.BitemporalKernel.emptyBitemporal(q70Batch(4),
+        cfg.keyCols, cfg.validFromUsCol, cfg.tieCol, cfg.payloadCols)
+      val known = Map("history" -> empty.messages.schema,
+        "bt_messages" -> empty.messages.schema,
+        "bt_table" -> empty.table.schema)
+      val read = for {
+        (tbl, schema) <- known.toSeq
+        tier <- Seq(tbl, s"$tbl.cold")
+        inferred <- StarPipeline.readState(spark, cfg, tier)
+      } yield {
+        val dirs = inferred.inputFiles
+          .map(f => f.substring(0, f.lastIndexOf('/'))).distinct
+        val given = spark.read.schema(schema).parquet(dirs: _*)
+        def cols(df: org.apache.spark.sql.DataFrame) =
+          df.schema.map(f => f.name -> f.dataType)
+        def rows(df: org.apache.spark.sql.DataFrame) =
+          df.collect().map(_.toString).sorted.toSeq
+        assert(cols(given) == cols(inferred), tier)
+        assert(rows(given) == rows(inferred) && rows(given).nonEmpty, tier)
+        tier
+      }
+      assert(read.toSet == tables.filter(known.contains)
+        .flatMap(t => Seq(t, s"$t.cold")).toSet, read)
+    }
+  }
+
   test("a crash after the version dirs are written but before the pointer " +
       "moves: replaying converges to a clean fold on both axes, after a " +
       "compaction too, and leaves no temp file") {
