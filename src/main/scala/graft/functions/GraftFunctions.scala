@@ -12,6 +12,16 @@ import org.apache.spark.sql.functions._
   */
 object GraftFunctions {
 
+  /** Let-binding for column expressions: evaluates `value` once and hands
+    * the body a lambda variable, so multi-referenced sub-expressions stay
+    * single nodes in the Catalyst tree instead of duplicating per use —
+    * without this, nested struct rebuilds multiply the tree size per
+    * field and analysis time explodes. HOF lambdas get no subexpression
+    * elimination, so inside them this is the only way to share one.
+    */
+  private[graft] def let(value: Column)(body: Column => Column): Column =
+    get(transform(array(value), v => body(v)), lit(0))
+
   /** Event-time in epoch microseconds. Canonical temporal representation:
     * integer µs avoids ns-vs-µs parquet precision mismatches between
     * engines and is exact under comparison/arithmetic.

@@ -38,13 +38,6 @@ object TextAnalysis {
     docs.select(col(idCol).as("doc_id"),
       fingerprint(tokens(col(textCol))).as("fp"))
 
-  /** Single-element-transform let binding (see LabFunnel.let): inside
-    * per-row expressions a multi-referenced subtree would otherwise
-    * re-evaluate per reference.
-    */
-  private def let(value: Column)(body: Column => Column): Column =
-    get(transform(array(value), v => body(v)), lit(0))
-
   /** Gopher-style repetition signals (MassiveText quality rules, Rae et
     * al. 2021 §A1.1): documents dominated by repeated lines or n-grams
     * are boilerplate/spam. Per-document, zero shuffle:

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.Hl7Fields
+import graft.functions.GraftFunctions.let
 import graft.functions.Hl7Timestamp.hl7TsUs
 
 /** S2: HL7 v2 wire parsing — pipe/caret splitting of MSH/EVN/PID/PV1/
@@ -47,7 +48,7 @@ object Hl7Wire {
   def segmentsOf(raw: Column, id: String): Column =
     Hl7Fields.segments(raw, Some(id))
 
-  private def nullIfEmpty(c: Column): Column = when(c === "", lit(null)).otherwise(c)
+  private[graft] def nullIfEmpty(c: Column): Column = when(c === "", lit(null)).otherwise(c)
 
   /** HL7 field i (1-based) of a non-MSH segment. */
   def fld(seg: Column, i: Int): Column = Hl7Fields.piece(seg, '|', i)
@@ -62,15 +63,9 @@ object Hl7Wire {
   /** First repetition (`~`-separated) of a field. */
   def rep1(f: Column): Column = Hl7Fields.piece(f, '~', 0)
 
-  /** Single-element-transform let binding: evaluates `value` once per
-    * scope. Needed inside HOF lambdas, which get no subexpression
-    * elimination (see LabFunnel.let).
-    */
-  private def letC(value: Column)(body: Column => Column): Column =
-    get(transform(array(value), v => body(v)), lit(0))
-
-  /** Field i from a pre-split field array (same indexing as [[fld]]). */
-  private def gf(arr: Column, i: Int): Column =
+  /** HL7 field i from a pre-split field array (element 0 is the segment
+    * id, so field i sits at index i — same indexing as [[fld]]). */
+  private[graft] def gf(arr: Column, i: Int): Column =
     nullIfEmpty(get(arr, lit(i)))
 
   /** Is MSH-9 type `t` / trigger `g` of type `tp`, with one of the
@@ -219,7 +214,7 @@ object Hl7Wire {
       hits.tail.foldLeft(when(hits.head._2, hits.head._1)) {
         case (cw, (name, p)) => cw.when(p, name) }
     val channelOf = firstMatch(plain.map { case (name, msg, _) => name -> msg })
-      .when(ft.isin("ORU", "ORM", "ORR"), letC(cs) { c =>
+      .when(ft.isin("ORU", "ORM", "ORR"), let(cs) { c =>
         firstMatch(coded.map { case (name, msg, systems) =>
           name -> (c.isin(systems: _*) && msg) }) })
     lazy val tagged = df.withColumn("__t", ft).withColumn("__g", fg)
@@ -564,7 +559,7 @@ object Hl7Wire {
       o => o.getField("pos") > obrPos && o.getField("pos") < nextPos)
     // one split per OBX, not one per field — HOF lambdas get no CSE
     val results = transform(mine, o =>
-      letC(split(o.getField("seg"), "\\|")) { xf =>
+      let(split(o.getField("seg"), "\\|")) { xf =>
         struct(
           gf(xf, 1).cast("int").as("setId"),
           gf(xf, 2).as("valueType"),

@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.functions.GraftFunctions.let
 import graft.functions.Hl7Timestamp.hl7TsUs
 import Hl7Wire._
 
@@ -139,13 +140,6 @@ object LabFunnel {
         lo.as("lo"), hi.as("hi"))
     })}}}}}}}
 
-  /** HL7 field i (1-based) from a pre-split field array (element 0 is
-    * the segment id, so field i sits at index i — same convention as
-    * [[Hl7Wire.fld]]).
-    */
-  private def gf(arr: Column, i: Int): Column =
-    nullIfEmpty(get(arr, lit(i)))
-
   // ------------------------------------------------------------------
   // NTE notes → questions + comments
   // ------------------------------------------------------------------
@@ -209,9 +203,6 @@ object LabFunnel {
   // ------------------------------------------------------------------
 
   private val numRe = "^-?[0-9]+(\\.[0-9]+)?$"
-
-  private def nullIfEmpty(c: Column): Column =
-    when(c === "", lit(null)).otherwise(c)
 
   /** Shared LabResultMsg fields from one OBX segment (ref
     * labs/LabResultBuilder.java:96-235): test ids OBX-3.1/3.3, sub-id
@@ -372,15 +363,6 @@ object LabFunnel {
 
   private def rebuildOrder(o: Column, overrides: Map[String, Column]): Column =
     struct(orderFields.map(f => overrides.getOrElse(f, o.getField(f)).as(f)): _*)
-
-  /** Let-binding for column expressions: evaluates `value` once and hands
-    * the body a lambda variable, so multi-referenced sub-expressions stay
-    * single nodes in the Catalyst tree instead of duplicating per use —
-    * without this, nested struct rebuilds multiply the tree size per
-    * field and analysis time explodes.
-    */
-  private def let(value: Column)(body: Column => Column): Column =
-    get(transform(array(value), v => body(v)), lit(0))
 
   private val nullQuestions =
     lit(null).cast("array<struct<question:string,answer:string>>")

@@ -669,10 +669,5 @@ object CurationStream {
   /** Start the streaming fold over a document stream. */
   def start(stream: DataFrame, cfg: Config,
             checkpointDir: String): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        foldBatch(batch, batchId, cfg)
-      }
-      .start()
+    FoldStream.start(stream, checkpointDir)(foldBatch(_, _, cfg))
 }

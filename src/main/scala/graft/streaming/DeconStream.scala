@@ -26,13 +26,8 @@ object DeconStream {
             checkpointDir: String, idCol: String, textCol: String,
             shingleN: Int = 2, numPerm: Int = 64, bands: Int = 8,
             threshold: Double = 0.8, seed: Long = 42L): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        foldBatch(batch, batchId, benchIndexDir, outDir, idCol,
-          textCol, shingleN, numPerm, bands, threshold, seed)
-      }
-      .start()
+    FoldStream.start(stream, checkpointDir)(foldBatch(_, _, benchIndexDir,
+      outDir, idCol, textCol, shingleN, numPerm, bands, threshold, seed))
 
   /** One micro-batch fold — exposed for batch-mode reuse and replay
     * testing (same code path the stream runs).

@@ -112,14 +112,8 @@ object FormsPipeline {
               org.apache.spark.sql.streaming.Trigger
                 .ProcessingTime("10 seconds"))
       : org.apache.spark.sql.streaming.StreamingQuery =
-    forms.writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        foldBatch(batchId, cfg, forms = Some(batch))
-      }
-      .start()
+    FoldStream.start(forms, checkpointDir, trigger)((batch, batchId) =>
+      foldBatch(batchId, cfg, forms = Some(batch)))
 
   /** The form-definition dim: folded metadata ∪ placeholders for every
     * formId the instance star references but metadata hasn't described

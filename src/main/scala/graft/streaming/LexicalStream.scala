@@ -40,10 +40,5 @@ object LexicalStream {
   /** Start the streaming ingest over a document stream. */
   def start(stream: DataFrame, cfg: Config,
             checkpointDir: String): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        foldBatch(batch, batchId, cfg)
-      }
-      .start()
+    FoldStream.start(stream, checkpointDir)(foldBatch(_, _, cfg))
 }

@@ -128,10 +128,5 @@ object RagStream {
   /** Start the streaming ingest over a document stream. */
   def start(stream: DataFrame, cfg: Config,
             checkpointDir: String): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        foldBatch(batch, batchId, cfg)
-      }
-      .start()
+    FoldStream.start(stream, checkpointDir)(foldBatch(_, _, cfg))
 }

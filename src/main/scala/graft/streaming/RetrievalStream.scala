@@ -54,10 +54,5 @@ object RetrievalStream {
   /** Start the streaming ingest over a vector stream. */
   def start(stream: DataFrame, cfg: Config,
             checkpointDir: String): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        foldBatch(batch, batchId, cfg)
-      }
-      .start()
+    FoldStream.start(stream, checkpointDir)(foldBatch(_, _, cfg))
 }

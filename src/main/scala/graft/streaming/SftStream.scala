@@ -147,10 +147,5 @@ object SftStream {
     */
   def start(stream: DataFrame, cfg: Config,
             checkpointDir: String): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        foldBatch(batch, batchId, cfg)
-      }
-      .start()
+    FoldStream.start(stream, checkpointDir)(foldBatch(_, _, cfg))
 }

@@ -46,9 +46,11 @@ import scala.jdk.CollectionConverters._
   * parquet-swap; swap in Delta/Iceberg MERGE for multi-writer
   * production.)
   *
-  * Both temporal axes share one fold body and one compaction writer;
-  * they differ only in the kernel step ([[validStep]] /
-  * [[bitemporalStep]]) and in how compaction classifies cold rows.
+  * Both temporal axes and every [[StarSink]] share one fold body
+  * ([[foldWith]]); the axes differ only in the kernel step
+  * ([[validStep]] / [[bitemporalStep]]) and in how compaction classifies
+  * cold rows, the sinks only in storage. This manifest layout is
+  * [[ManifestStarSink]]'s.
   */
 object StarPipeline {
 
@@ -63,19 +65,11 @@ object StarPipeline {
                           storedFromUsCol: String = "storedFromUs")
 
   /** table → (bucket id → path relative to stateDir). */
-  private type ManifestMap = Map[String, Map[String, String]]
+  private[streaming] type ManifestMap = Map[String, Map[String, String]]
 
   /** A reader of the touched prior state of a table, given the table's
     * schema; None before the table has rows. */
   private[streaming] type Prior = (String, StructType) => Option[DataFrame]
-
-  /** One axis's kernel step: (pinned batch, config, [[Prior]] reader, the
-    * touched bucket ids in ascending order, the fold's pins) → the tables
-    * to persist, each with its row identity keys (used by the JDBC sink's
-    * MERGE; the manifest sink replaces whole buckets and ignores them).
-    */
-  private[streaming] type Step = (DataFrame, Config, Prior, Seq[Long], Pins) =>
-    Seq[(String, DataFrame, Seq[String])]
 
   /** The frames one fold pins with [[CacheBridge.pinned]]: `apply` pins a
     * frame and returns its cached leaf, `release` unpersists them all.
@@ -105,7 +99,7 @@ object StarPipeline {
       (array_position(typedLit(touched), bucketOf(cfg)) - 1) % n, n))
   }
 
-  private def readManifest(stateDir: String): ManifestMap =
+  private[streaming] def readManifest(stateDir: String): ManifestMap =
     VersionedDir.read(stateDir, "_CURRENT").fold(Map.empty: ManifestMap) {
       name => VersionedDir.read(stateDir, name)
         .getOrElse(sys.error(s"$stateDir/_CURRENT names missing $name"))
@@ -115,8 +109,8 @@ object StarPipeline {
         .map { case (t, rows) => t -> rows.map(r => r._2 -> r._3).toMap }
     }
 
-  private def writeManifest(cfg: Config, man: ManifestMap,
-                            batchId: Long): Unit = {
+  private[streaming] def writeManifest(cfg: Config, man: ManifestMap,
+                                       batchId: Long): Unit = {
     val name = s"manifest-v$batchId"
     val body = (for {
       (t, buckets) <- man.toSeq.sortBy(_._1)
@@ -137,9 +131,9 @@ object StarPipeline {
     * references that name — and return the dir with the bucket ids it
     * holds. A touched bucket with no output rows gets no directory.
     */
-  private def writeVersion(cfg: Config, man: ManifestMap, tbl: String,
-                           batchId: Long,
-                           df: DataFrame): (String, Set[Long]) = {
+  private[streaming] def writeVersion(cfg: Config, man: ManifestMap,
+                                      tbl: String, batchId: Long,
+                                      df: DataFrame): (String, Set[Long]) = {
     val live = man.valuesIterator.flatMap(_.valuesIterator)
       .map(p => p.substring(0, p.lastIndexOf("/__bucket="))).toSet
     val dir = VersionedDir.fresh(s"data/$tbl/v$batchId", live)
@@ -180,18 +174,17 @@ object StarPipeline {
     * Horizon safety: a batch row with validFrom below the compaction
     * horizon automatically un-compacts its bucket — that bucket's cold
     * history folds back into the hot tier (and its cold manifest entries
-    * drop), so folding without an explicit [[lateSplit]] can never
-    * diverge from full-replay history (F6 coalescing always compares
-    * against the true predecessor). Fast-path batches pay nothing: the
-    * late-bucket probe rides the same touched-bucket aggregate.
+    * drop), so a fold can never diverge from full-replay history (F6
+    * coalescing always compares against the true predecessor). Batches
+    * with no such row pay nothing: the late-bucket probe rides the same
+    * touched-bucket aggregate.
     */
   def foldBatch(batch0: DataFrame, batchId: Long, cfg: Config): Unit =
-    foldWith(batch0, batchId, cfg)(validStep)
+    ManifestStarSink.fold(batch0, batchId, cfg)
 
   /** The valid-time kernel step: history → history/live/audit. */
-  private[streaming] def validStep(batch: DataFrame, cfg: Config,
-                                   prior: Prior,
-                                   touched: Seq[Long], pins: Pins)
+  private def validStep(batch: DataFrame, cfg: Config, prior: Prior,
+                        touched: Seq[Long], pins: Pins)
       : Seq[(String, DataFrame, Seq[String])] = {
     // history holds the message columns, as the kernel emits them
     val historySchema = BitemporalKernel.emptyBitemporal(batch, cfg.keyCols,
@@ -207,15 +200,16 @@ object StarPipeline {
       ("audit", r.audit, versionKeys))
   }
 
-  /** The one bucketed fold body of both axes: pin the batch, probe its
-    * touched and late buckets, hand `step` a reader of the touched hot ∪
-    * cold state per table, write each output table to a fresh version
-    * dir and swap the manifest once.
+  /** The one fold body of both axes and every [[StarSink]]: skip a batch
+    * the sink has already committed, pin the batch, probe its touched and
+    * late buckets, hand the axis's kernel step the sink's reader of the
+    * touched state, have the sink persist the step's outputs atomically,
+    * and release the pins.
     */
-  private def foldWith(batch0: DataFrame, batchId: Long, cfg: Config)(
-      step: Step): Unit = {
-    val spark = batch0.sparkSession
-    val man = readManifest(cfg.stateDir)
+  private[streaming] def foldWith(batch0: DataFrame, batchId: Long,
+                                  cfg: Config, sink: StarSink,
+                                  bitemporal: Boolean): Unit = {
+    if (sink.committed(cfg, batchId, bitemporal)) return
 
     // The batch feeds the bucket probe and the kernel; its lineage is
     // often an expression-heavy parse — evaluate it once, and plan the
@@ -226,51 +220,23 @@ object StarPipeline {
     val batch = pins(batch0)
 
     // Which buckets does this batch touch (≤ nBuckets small longs), and
-    // which of them carry pre-horizon arrivals (those need their cold
-    // tier folded back in)?
-    val lateFlag = compactionHorizon(cfg) match {
+    // which of them carry arrivals from before the sink's compaction
+    // horizon (those need their cold tier folded back in)?
+    val lateFlag = sink.horizon(cfg) match {
       case Some(h) => max(when(col(cfg.validFromUsCol) < h, 1).otherwise(0))
       case None    => max(lit(0))
     }
     val probe = batch.groupBy(bucketOf(cfg).as("__bucket"))
       .agg(lateFlag.as("__late")).collect()
-    val touched = probe.map(_.getLong(0)).sorted
+    val touched = probe.map(_.getLong(0)).sorted.toSeq
     if (touched.isEmpty) return
-    val lateBuckets =
-      probe.filter(_.getInt(1) == 1).map(_.getLong(0).toString).toSet
+    val late = probe.filter(_.getInt(1) == 1).map(_.getLong(0)).toSet
 
-    // a cold manifest key is "<bucket>-<version dir>"
-    def coldKeysOf(tbl: String) =
-      man.getOrElse(s"$tbl.cold", Map.empty)
-        .filter { case (k, _) => lateBuckets.contains(k.split("-")(0)) }
-    // ONLY the touched buckets — hot, plus cold for the buckets a late
-    // arrival un-compacts — read with the schema the step knows, so no
-    // job runs to infer it from the files
-    def readTouched(tbl: String, schema: StructType): Option[DataFrame] = {
-      val paths = (touched
-        .flatMap(k => man.getOrElse(tbl, Map.empty).get(k.toString)) ++
-        coldKeysOf(tbl).values).map(p => s"${cfg.stateDir}/$p")
-      if (paths.isEmpty) None
-      else Some(spark.read.schema(schema).parquet(paths: _*))
-    }
-
-    val outputs = step(batch, cfg, readTouched, touched.toSeq, pins)
-    val newMan = outputs.foldLeft(man) {
-      case (m, (tbl, df, _)) =>
-        val (dir, present) = writeVersion(cfg, man, tbl, batchId, df)
-        // an emptied touched bucket drops its manifest entry
-        val updated = touched.foldLeft(m.getOrElse(tbl, Map.empty)) {
-          (tm, k) =>
-            if (present.contains(k)) tm.updated(k.toString, s"$dir/__bucket=$k")
-            else tm - k.toString
-        }
-        // un-compacted buckets' cold rows are folded into hot now
-        val mm = m.updated(tbl, updated)
-        if (lateBuckets.isEmpty) mm
-        else mm.updated(s"$tbl.cold",
-          m.getOrElse(s"$tbl.cold", Map.empty) -- coldKeysOf(tbl).keys)
-    }
-    writeManifest(cfg, newMan, batchId)
+    val prior: Prior = (tbl, schema) =>
+      sink.prior(batch.sparkSession, cfg, tbl, schema, touched, late)
+    val step = if (bitemporal) bitemporalStep _ else validStep _
+    sink.persist(cfg, batchId, bitemporal,
+      step(batch, cfg, prior, touched, pins), touched, late)
     } finally pins.release()
   }
 
@@ -298,12 +264,11 @@ object StarPipeline {
     */
   def foldBatchBitemporal(batch0: DataFrame, batchId: Long,
                           cfg: Config): Unit =
-    foldWith(batch0, batchId, cfg)(bitemporalStep)
+    ManifestStarSink.foldBitemporal(batch0, batchId, cfg)
 
   /** The both-axes kernel step: bt_messages/bt_table → both. */
-  private[streaming] def bitemporalStep(batch: DataFrame, cfg: Config,
-                                        prior: Prior,
-                                        touched: Seq[Long], pins: Pins)
+  private def bitemporalStep(batch: DataFrame, cfg: Config, prior: Prior,
+                             touched: Seq[Long], pins: Pins)
       : Seq[(String, DataFrame, Seq[String])] = {
     val empty = BitemporalKernel.emptyBitemporal(batch, cfg.keyCols,
       cfg.validFromUsCol, cfg.tieCol, cfg.payloadCols)
@@ -386,9 +351,12 @@ object StarPipeline {
     * arrivals with validFrom >= H fold identically to the uncompacted
     * state (cold rows of a key all sort strictly before any such
     * arrival, so the kernel's re-derivation over the hot tail is
-    * unchanged); arrivals BEFORE H must be split out with [[lateSplit]]
-    * and handled on a slow path over [[readFull]]. The horizon persists
-    * in `_HORIZON` under one manifest swap with the data move.
+    * unchanged); an arrival BEFORE H un-compacts its bucket inside
+    * [[foldBatch]] — the bucket folds over hot ∪ cold and its cold
+    * entries drop, every other bucket's tiers carry forward — so no
+    * caller splits a batch against the horizon, and the next compaction
+    * re-tiers the un-compacted buckets. The horizon persists in
+    * `_HORIZON` under one manifest swap with the data move.
     *
     * Cost: one pass over the hot state + the newly-cold rows — the
     * scheduled-job analog of Delta OPTIMIZE; existing cold files are
@@ -449,72 +417,82 @@ object StarPipeline {
   def compactionHorizon(cfg: Config): Option[Long] =
     VersionedDir.read(cfg.stateDir, "_HORIZON").map(_.toLong)
 
-  /** Split a batch against the compaction horizon: `ok` folds on the
-    * fast path; `late` (validFrom < horizon) needs the slow path over
-    * [[readFull]] — or a dead-letter rule built from
-    * [[compactionHorizon]].
-    */
-  def lateSplit(batch: DataFrame, cfg: Config): (DataFrame, DataFrame) =
-    compactionHorizon(cfg) match {
-      case None => (batch, batch.limit(0))
-      case Some(h) =>
-        (batch.filter(col(cfg.validFromUsCol) >= h),
-          batch.filter(col(cfg.validFromUsCol) < h))
-    }
-
-  /** Hot ∪ cold — the complete table, for readers and late repair. */
+  /** Hot ∪ cold — the complete table. */
   def readFull(spark: SparkSession, cfg: Config, table: String): Option[DataFrame] =
     (readState(spark, cfg, table), readState(spark, cfg, s"$table.cold")) match {
       case (Some(h), Some(c)) => Some(h.unionByName(c))
       case (h, c) => h.orElse(c)
     }
 
-  /** The slow path for [[lateSplit]]'s late channel: arrivals older than
-    * the compaction horizon fold over hot ∪ cold of ONLY the buckets
-    * their keys hash into — those buckets un-compact (their cold rows
-    * fold back into the hot tier and their cold manifest entries drop),
-    * every other bucket's hot and cold entries carry forward untouched.
-    * Cost is O(archive ∩ touched buckets), paid only on the rare repair;
-    * the next [[compact]] re-tiers the repaired buckets. Correctness is
-    * the kernel's: with the key's FULL history present, a late arrival
-    * folds exactly as it would have in arrival order.
-    */
-  def repairLate(late: DataFrame, batchId: Long, cfg: Config): Unit =
-    foldBatch(late, batchId, cfg)
-
   /** Start the maintenance query over a message stream. */
   def start(messages: DataFrame, cfg: Config,
             checkpointDir: String,
             trigger: Trigger = Trigger.ProcessingTime("10 seconds")): StreamingQuery =
-    messages.writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch((batch: DataFrame, batchId: Long) =>
-        foldBatch(batch, batchId, cfg))
-      .start()
+    FoldStream.start(messages, checkpointDir, trigger)(foldBatch(_, _, cfg))
+}
 
-  /** Start the maintenance query with S3/S4 ack/nack semantics: each
-    * micro-batch is routed through [[DeadLetter.route]] first; rejects
-    * land under `deadDir/batch=<id>` (overwrite per batch ⇒ idempotent
-    * on replay, like the fold itself), and only the clean channel —
-    * projected to kernel message columns by `toMessages` — enters the
-    * fold. The nack is a persisted row, never a dropped message.
-    */
-  def startWithDeadLetter(parsed: DataFrame,
-                          rules: Seq[(String, Column)],
-                          toMessages: DataFrame => DataFrame,
-                          cfg: Config, deadDir: String,
-                          checkpointDir: String,
-                          trigger: Trigger = Trigger.ProcessingTime("10 seconds")): StreamingQuery =
-    parsed.writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val r = DeadLetter.route(batch, rules)
-        r.dead.write.mode("overwrite").parquet(s"$deadDir/batch=$batchId")
-        foldBatch(toMessages(r.clean), batchId, cfg)
+/** [[StarPipeline]]'s parquet+manifest store as a [[StarSink]]: a fold
+  * writes each output table's touched buckets into a fresh version dir
+  * and commits the new manifest with one `_CURRENT` rename
+  * ([[VersionedDir]]). A bucket a pre-horizon arrival touched is read
+  * hot ∪ cold and its cold entries drop, so it un-compacts. There is no
+  * progress mark: a replayed batch id folds again into fresh dirs, which
+  * the kernel's message dedup makes a no-op. Single-writer; swap in
+  * Delta/Iceberg for multi-writer.
+  */
+object ManifestStarSink extends StarSink {
+  import StarPipeline.{Config, ManifestMap, readManifest}
+
+  private[streaming] def committed(cfg: Config, batchId: Long,
+                                   bitemporal: Boolean): Boolean = false
+
+  private[streaming] def horizon(cfg: Config): Option[Long] =
+    StarPipeline.compactionHorizon(cfg)
+
+  /** `tbl`'s cold entries in the `late` buckets; a cold manifest key is
+    * "<bucket>-<version dir>". */
+  private def coldOf(man: ManifestMap, tbl: String, late: Set[Long]) =
+    man.getOrElse(s"$tbl.cold", Map.empty)
+      .filter { case (k, _) => late.contains(k.takeWhile(_ != '-').toLong) }
+
+  // ONLY the touched buckets — hot, plus cold for the buckets a late
+  // arrival un-compacts — read with the schema the step knows, so no
+  // job runs to infer it from the files
+  private[streaming] def prior(spark: SparkSession, cfg: Config, tbl: String,
+                               schema: StructType, touched: Seq[Long],
+                               late: Set[Long]): Option[DataFrame] = {
+    val man = readManifest(cfg.stateDir)
+    val paths = (touched
+      .flatMap(k => man.getOrElse(tbl, Map.empty).get(k.toString)) ++
+      coldOf(man, tbl, late).values).map(p => s"${cfg.stateDir}/$p")
+    if (paths.isEmpty) None
+    else Some(spark.read.schema(schema).parquet(paths: _*))
+  }
+
+  private[streaming] def persist(cfg: Config, batchId: Long,
+                                 bitemporal: Boolean,
+                                 outputs: Seq[(String, DataFrame, Seq[String])],
+                                 touched: Seq[Long], late: Set[Long]): Unit = {
+    val man = readManifest(cfg.stateDir)
+    val newMan = outputs.foldLeft(man) { case (m, (tbl, df, _)) =>
+      val (dir, present) =
+        StarPipeline.writeVersion(cfg, man, tbl, batchId, df)
+      // an emptied touched bucket drops its manifest entry
+      val hot = touched.foldLeft(m.getOrElse(tbl, Map.empty)) { (tm, k) =>
+        if (present.contains(k)) tm.updated(k.toString, s"$dir/__bucket=$k")
+        else tm - k.toString
       }
-      .start()
+      // un-compacted buckets' cold rows are folded into hot now
+      m.updated(tbl, hot).updated(s"$tbl.cold",
+        m.getOrElse(s"$tbl.cold", Map.empty) -- coldOf(man, tbl, late).keys)
+    }
+    StarPipeline.writeManifest(cfg, newMan, batchId)
+  }
+
+  // readFull (hot ∪ cold): the sink contract is "the state as of the
+  // last fold", which after a compaction spans both tiers; before any
+  // compaction the cold side is absent and this is readState exactly.
+  def read(spark: SparkSession, cfg: Config,
+           table: String): Option[DataFrame] =
+    StarPipeline.readFull(spark, cfg, table)
 }

@@ -1,44 +1,76 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 import java.sql.{Connection, DriverManager}
 import java.util.Properties
 
-/** S8's production seam: where a folded micro-batch LANDS. The kernel
-  * fold (probe touched buckets → read only their state → one keyed
-  * kernel pass) is sink-agnostic: both sinks run the same per-axis
-  * kernel step ([[StarPipeline.validStep]] /
-  * [[StarPipeline.bitemporalStep]]) over their own touched-state
-  * reader. What varies between a lakehouse and the reference's RDBMS
-  * star (core/.../informdb via JPA, batched writes on a 2-connection
-  * pool) is purely the state's storage and the atomic-swap primitive.
-  * This trait pins that boundary:
+/** S8's production seam: the storage a folded micro-batch lands in.
+  * The fold itself — pin the batch, probe its touched and late buckets,
+  * run the axis's kernel step, release the pins — is one body for every
+  * sink and both temporal axes ([[StarPipeline.foldWith]]; [[fold]] and
+  * [[foldBitemporal]] call it). A sink supplies only what differs
+  * between a lakehouse and the reference's RDBMS star (core/.../informdb
+  * via JPA, batched writes on a 2-connection pool): how a fold reads the
+  * touched prior state of a table, how it persists the step's outputs
+  * atomically, and whether a batch is already committed.
   *
   *  - [[ManifestStarSink]] — the engine's native parquet+manifest
-  *    store ([[StarPipeline.foldBatch]]): bucket-granular rewrite into
-  *    fresh version dirs, atomicity via one `_CURRENT` pointer commit
-  *    ([[VersionedDir]]). Single-writer; swap in Delta/Iceberg for
-  *    multi-writer.
+  *    store: bucket-granular rewrite into fresh version dirs, atomicity
+  *    via one `_CURRENT` pointer commit ([[VersionedDir]]), no progress
+  *    mark (a replay refolds to the same state).
   *  - [[JdbcStarSink]] — the RDBMS path the reference ships
-  *    (Emap-Core's postgres star): same kernel step, state read back
-  *    over JDBC with bucket predicates pushed down (one JDBC partition
-  *    per touched bucket), results staged via Spark's parallel JDBC
-  *    writer, then swapped in with ONE driver-side transaction of
-  *    set-based MERGE / anti-join DELETE statements — the transaction
-  *    commit plays the role of the manifest pointer rename, so
-  *    readers never see a torn fold across history/live/audit.
+  *    (Emap-Core's postgres star): touched state read back over JDBC
+  *    with bucket predicates pushed down, outputs staged via Spark's
+  *    parallel JDBC writer and swapped in with ONE driver-side
+  *    transaction whose progress row makes a replay an exact no-op.
   *
   * Both sinks fold the SAME batch to the SAME state on BOTH temporal
   * axes (asserted in `PipelineSpec`), so the choice is an ops
-  * decision, not a semantics one.
+  * decision, not a semantics one. Storage calls take the fold's
+  * `touched` bucket ids (ascending) and the `late` ones among them,
+  * which hold an arrival from before [[horizon]].
   */
 trait StarSink {
+  /** Read a state table ("history" | "live" | "audit" |
+    * "bt_messages" | "bt_table") as of the last committed fold; None
+    * before the first fold of the owning axis.
+    */
+  def read(spark: SparkSession, cfg: StarPipeline.Config,
+           table: String): Option[DataFrame]
+
+  /** Has this sink already committed `batchId` on this axis? The fold
+    * then does nothing. */
+  private[streaming] def committed(cfg: StarPipeline.Config, batchId: Long,
+                                   bitemporal: Boolean): Boolean
+
+  /** The valid time below which rows may sit in a compacted cold tier;
+    * None for a store without one. */
+  private[streaming] def horizon(cfg: StarPipeline.Config): Option[Long]
+
+  /** Table `tbl`'s prior state in the touched buckets (hot ∪ cold in the
+    * late ones), read with `schema`; None before the table has rows. */
+  private[streaming] def prior(spark: SparkSession, cfg: StarPipeline.Config,
+                               tbl: String, schema: StructType,
+                               touched: Seq[Long],
+                               late: Set[Long]): Option[DataFrame]
+
+  /** Persist a kernel step's outputs — (table, touched buckets' rows,
+    * row identity keys) — so a reader sees all of them or none, and
+    * mark `batchId` committed where the store keeps progress. */
+  private[streaming] def persist(cfg: StarPipeline.Config, batchId: Long,
+                                 bitemporal: Boolean,
+                                 outputs: Seq[(String, DataFrame, Seq[String])],
+                                 touched: Seq[Long], late: Set[Long]): Unit
+
   /** Fold one micro-batch into persisted valid-axis state (S8/W1/W2
     * contract: incremental in touched keys, idempotent on replay,
     * atomic swap). Tables: "history" | "live" | "audit".
     */
-  def fold(batch: DataFrame, batchId: Long, cfg: StarPipeline.Config): Unit
+  final def fold(batch: DataFrame, batchId: Long,
+                 cfg: StarPipeline.Config): Unit =
+    StarPipeline.foldWith(batch, batchId, cfg, this, bitemporal = false)
 
   /** Fold one micro-batch into persisted BITEMPORAL state — the
     * stored-time axis the reference's audit contract requires
@@ -47,30 +79,9 @@ trait StarSink {
     * are immutable). Tables: "bt_messages" | "bt_table". Same
     * incremental / idempotent / atomic contract as [[fold]].
     */
-  def foldBitemporal(batch: DataFrame, batchId: Long,
-                     cfg: StarPipeline.Config): Unit
-
-  /** Read a state table ("history" | "live" | "audit" |
-    * "bt_messages" | "bt_table") as of the last committed fold; None
-    * before the first fold of the owning axis.
-    */
-  def read(spark: SparkSession, cfg: StarPipeline.Config,
-           table: String): Option[DataFrame]
-}
-
-/** The parquet+manifest store — delegates to [[StarPipeline]]. */
-object ManifestStarSink extends StarSink {
-  def fold(batch: DataFrame, batchId: Long, cfg: StarPipeline.Config): Unit =
-    StarPipeline.foldBatch(batch, batchId, cfg)
-  def foldBitemporal(batch: DataFrame, batchId: Long,
-                     cfg: StarPipeline.Config): Unit =
-    StarPipeline.foldBatchBitemporal(batch, batchId, cfg)
-  // readFull (hot ∪ cold): the sink contract is "the state as of the
-  // last fold", which after a compaction spans both tiers; before any
-  // compaction the cold side is absent and this is readState exactly.
-  def read(spark: SparkSession, cfg: StarPipeline.Config,
-           table: String): Option[DataFrame] =
-    StarPipeline.readFull(spark, cfg, table)
+  final def foldBitemporal(batch: DataFrame, batchId: Long,
+                           cfg: StarPipeline.Config): Unit =
+    StarPipeline.foldWith(batch, batchId, cfg, this, bitemporal = true)
 }
 
 /** JDBC MERGE sink: maintains the star in an RDBMS (the reference's
@@ -78,20 +89,17 @@ object ManifestStarSink extends StarSink {
   * JDBC engine on Spark's own classpath); the SQL is ANSI
   * MERGE/EXISTS, portable to postgres 15+.
   *
-  * Data path per fold — no driver-side row loop anywhere:
-  *   1. probe the batch's touched buckets (≤ nBuckets small longs);
-  *   2. `spark.read.jdbc` the touched buckets of the prior state, one
+  * Storage path per fold — no driver-side row loop anywhere:
+  *   1. `spark.read.jdbc` the touched buckets of the prior state, one
   *      predicate per bucket → one parallel JDBC partition each, the
   *      bucket filter pushed down to the DB's index;
-  *   3. kernel fold — the manifest path's own axis step
-  *      ([[StarPipeline.validStep]] / [[StarPipeline.bitemporalStep]]);
-  *   4. stage per-table touched-bucket rows to `*_STAGE` tables via
+  *   2. stage per-table touched-bucket rows to `*_STAGE` tables via
   *      Spark's parallel JDBC writer (executors write). Stage tables
   *      are created ONCE (first batch) and TRUNCATE-and-append
   *      thereafter — `mode("overwrite")` would DROP/CREATE per batch,
   *      i.e. DDL plus implicit commits outside the main transaction
   *      on every fold;
-  *   5. ONE driver transaction: per table an anti-join DELETE (rows
+  *   3. ONE driver transaction: per table an anti-join DELETE (rows
   *      of touched buckets absent from the new fold — covers run
   *      coalescing and emptied buckets) + a MERGE upsert from stage,
   *      then the progress mark — committed together, so a crash
@@ -185,10 +193,8 @@ final class JdbcStarSink(url: String, star: String = "",
     s"${prefix(cfg)}_${t.toUpperCase}"
   private def stage(cfg: StarPipeline.Config, t: String) =
     target(cfg, t) + "_STAGE"
-  private def progressTable(cfg: StarPipeline.Config) =
-    s"${prefix(cfg)}_PROGRESS"
-  private def btProgressTable(cfg: StarPipeline.Config) =
-    s"${prefix(cfg)}_BT_PROGRESS"
+  private def progressTable(cfg: StarPipeline.Config, bitemporal: Boolean) =
+    s"${prefix(cfg)}_${if (bitemporal) "BT_" else ""}PROGRESS"
 
   private def props: Properties = {
     val p = new Properties()
@@ -217,9 +223,10 @@ final class JdbcStarSink(url: String, star: String = "",
       s"""(S.${q(k)} = $t.${q(k)} OR (S.${q(k)} IS NULL AND $t.${q(k)} IS NULL))""")
       .mkString(" AND ")
 
-  /** True iff `batchId` is already committed under `progressTbl`. */
-  private def alreadyCommitted(progressTbl: String, batchId: Long): Boolean =
+  private[streaming] def committed(cfg: StarPipeline.Config, batchId: Long,
+                                   bitemporal: Boolean): Boolean =
     withConn { c =>
+      val progressTbl = progressTable(cfg, bitemporal)
       tableExists(c, progressTbl) && {
         val rs = c.createStatement().executeQuery(
           s"""SELECT MAX("batch_id") FROM $progressTbl""")
@@ -228,16 +235,19 @@ final class JdbcStarSink(url: String, star: String = "",
       }
     }
 
-  /** Touched buckets of target table `t`, one pushed-down predicate
-    * per bucket (one parallel JDBC partition each); None before the
-    * table exists.
-    */
-  private def readTouched(spark: SparkSession, cfg: StarPipeline.Config,
-                          t: String,
-                          touched: Array[Long]): Option[DataFrame] =
+  /** No cold tier: every row stays in its bucket. */
+  private[streaming] def horizon(cfg: StarPipeline.Config): Option[Long] =
+    None
+
+  /** One pushed-down predicate per touched bucket (one parallel JDBC
+    * partition each); None before the table exists. */
+  private[streaming] def prior(spark: SparkSession, cfg: StarPipeline.Config,
+                               t: String, schema: StructType,
+                               touched: Seq[Long],
+                               late: Set[Long]): Option[DataFrame] =
     if (!withConn(tableExists(_, target(cfg, t)))) None
     else Some(spark.read.jdbc(url, target(cfg, t),
-        touched.map(k => s"""${q("__bucket")} = $k"""), props)
+        touched.map(k => s"""${q("__bucket")} = $k""").toArray, props)
       .drop("__bucket"))
 
   /** Stage `df` into the family's stage table: CREATE (with VARCHAR
@@ -263,20 +273,24 @@ final class JdbcStarSink(url: String, star: String = "",
       .jdbc(url, stage(cfg, t), props)
   }
 
-  /** The shared swap: one driver transaction of per-table anti-join
-    * DELETE + MERGE from stage, plus the progress mark, committed
-    * together. `tables` maps table base-name → (staged columns, MERGE
-    * identity keys).
-    */
-  private def swapIn(cfg: StarPipeline.Config,
-                     tables: Seq[(String, Seq[String], Seq[String])],
-                     touched: Array[Long], progressTbl: String,
-                     batchId: Long): Unit =
+  /** Stage every output table, then swap them in with one driver
+    * transaction of per-table anti-join DELETE + MERGE from stage plus
+    * the progress mark, committed together. */
+  private[streaming] def persist(cfg: StarPipeline.Config, batchId: Long,
+                                 bitemporal: Boolean,
+                                 outputs: Seq[(String, DataFrame, Seq[String])],
+                                 touched: Seq[Long], late: Set[Long]): Unit = {
+    val staged = outputs.map { case (t, df0, keys) =>
+      val df = df0.withColumn("__bucket", StarPipeline.bucketOf(cfg))
+      stageTable(cfg, t, df)
+      (t, df.columns.toSeq, keys)
+    }
+    val progressTbl = progressTable(cfg, bitemporal)
     withConn { c =>
       c.setAutoCommit(false)
       val st = c.createStatement()
       val inList = touched.mkString(", ")
-      tables.foreach { case (t, cols, keys) =>
+      staged.foreach { case (t, cols, keys) =>
         val tgt = target(cfg, t)
         if (!tableExists(c, tgt))
           st.executeUpdate(
@@ -302,43 +316,7 @@ final class JdbcStarSink(url: String, star: String = "",
         s"""INSERT INTO $progressTbl ("batch_id") VALUES ($batchId)""")
       c.commit()
     }
-
-  /** Shared fold skeleton for both axes: replay guard → pin batch →
-    * touched-bucket probe → the axis's kernel step (which pins its pass)
-    * → stage → one-transaction swap → release the pins.
-    */
-  private def foldWith(batch0: DataFrame, batchId: Long,
-                       cfg: StarPipeline.Config, progressTbl: String)(
-      step: StarPipeline.Step): Unit = {
-    if (alreadyCommitted(progressTbl, batchId)) return
-    val pins = new StarPipeline.Pins
-    try {
-      val batch = pins(batch0)
-      val bucket = StarPipeline.bucketOf(cfg)
-      val touched = batch.select(bucket.as("__bucket")).distinct()
-        .collect().map(_.getLong(0)).sorted
-      if (touched.isEmpty) return
-
-      val outputs = step(batch, cfg,
-        (t, _) => readTouched(batch.sparkSession, cfg, t, touched),
-        touched.toSeq, pins)
-      val staged = outputs.map { case (t, df0, keys) =>
-        val df = df0.withColumn("__bucket", bucket)
-        stageTable(cfg, t, df)
-        (t, df.columns.toSeq, keys)
-      }
-      swapIn(cfg, staged, touched, progressTbl, batchId)
-    } finally pins.release()
   }
-
-  def fold(batch0: DataFrame, batchId: Long,
-           cfg: StarPipeline.Config): Unit =
-    foldWith(batch0, batchId, cfg, progressTable(cfg))(StarPipeline.validStep)
-
-  def foldBitemporal(batch0: DataFrame, batchId: Long,
-                     cfg: StarPipeline.Config): Unit =
-    foldWith(batch0, batchId, cfg, btProgressTable(cfg))(
-      StarPipeline.bitemporalStep)
 
   def read(spark: SparkSession, cfg: StarPipeline.Config,
            table: String): Option[DataFrame] =

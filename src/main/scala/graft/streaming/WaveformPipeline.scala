@@ -184,12 +184,6 @@ object WaveformPipeline {
   def start(lines: DataFrame, rawCol: String, metadata: DataFrame,
             cfg: Config, checkpointDir: String,
             trigger: Trigger = Trigger.ProcessingTime("10 seconds")): StreamingQuery =
-    lines.writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        foldBatch(batch, batchId, rawCol, metadata, cfg)
-      }
-      .start()
+    FoldStream.start(lines, checkpointDir, trigger)(
+      foldBatch(_, _, rawCol, metadata, cfg))
 }

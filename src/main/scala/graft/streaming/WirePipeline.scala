@@ -18,7 +18,8 @@ import graft.sources.{Hl7Wire, LabFunnel}
   *   adt/ labs/ flowsheets/ conditions/ consults/   → StarPipeline dirs
   *   dead/router/batch=N   → unroutable / unhandled-type frames
   *   dead/<family>/batch=N → family-guard rejects (missing key/time,
-  *                            unimplemented ADT trigger)
+  *                            unimplemented ADT trigger; a lab
+  *                            builder's error under labs_<system>)
   *
   * Dead-letter writes are per-batch overwrites — idempotent on replay,
   * like the folds themselves. Scale shape: one scan of the batch fans
@@ -53,14 +54,8 @@ object WirePipeline {
             trigger: Trigger = Trigger.ProcessingTime("10 seconds"),
             bitemporal: Boolean = false,
             sink: StarSink = ManifestStarSink): StreamingQuery =
-    raw.writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        foldBatch(batch, batchId, rawCol, stateRoot, bitemporal, sink)
-      }
-      .start()
+    FoldStream.start(raw, checkpointDir, trigger)(
+      foldBatch(_, _, rawCol, stateRoot, bitemporal, sink))
 
   /** S4's second half: re-ingest dead-lettered frames after repair —
     * the Spark analog of the reference's nack-no-requeue + manual
@@ -214,27 +209,23 @@ object WirePipeline {
     // ONE interchange shape and one fold — same state dir, one batch
     // id, no double-fold. Only channels PRESENT in this batch
     // contribute a branch (and a dead-letter write).
-    def deadErrors(ch0: DataFrame, name: String): DataFrame = {
-      val ch = mat(ch0)
-      ch.filter(col("error").isNotNull).write.mode("overwrite")
-        .parquet(s"$stateRoot/dead/labs_$name/batch=$batchId")
-      ch
-    }
+    def builderGuard(ch: DataFrame, name: String): DataFrame =
+      guard(ch, s"labs_$name", Seq("builder_error" -> col("error").isNotNull))
     val labMsgs =
       ifHolds("labOrders")(Hl7Wire.wireToLabMessages(guard(r.labOrders,
         "labs", Seq("missing_order" -> col("fillerOrderNumber").isNull,
           "missing_time" -> coalesce(col("observationDateTimeUs"),
             col("requestedDateTimeUs")).isNull)))) ++
       ifHolds("ablLabs")(LabFunnel.toLabMessages(
-        deadErrors(r.ablLabs, "abl"))) ++
+        builderGuard(r.ablLabs, "abl"))) ++
       ifHolds("bioConnectLabs")(LabFunnel.toLabMessages(
-        deadErrors(r.bioConnectLabs, "bioconnect"))) ++
+        builderGuard(r.bioConnectLabs, "bioconnect"))) ++
       ifHolds("bankManagerLabs")(LabFunnel.toLabMessages(
-        deadErrors(r.bankManagerLabs, "bankmanager"))) ++
+        builderGuard(r.bankManagerLabs, "bankmanager"))) ++
       ifHolds("coPathLabs")(LabFunnel.coPathToLabMessages(
-        deadErrors(r.coPathLabs, "copath"))) ++
+        builderGuard(r.coPathLabs, "copath"))) ++
       ifHolds("imagingLabs")(LabFunnel.imageToLabMessages(
-        deadErrors(r.imagingLabs, "imaging")))
+        builderGuard(r.imagingLabs, "imaging")))
     if (labMsgs.nonEmpty) foldStar(
       labMsgs.reduce(_ unionByName _),
       cfg(stateRoot, "labs", Seq("battery", "labSpecimenNumber"),

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.operators.{CascadingDelete, PendingMovements}
-import graft.streaming.{DeadLetter, EffectLog, StarPipeline}
+import graft.streaming.{EffectLog, StarPipeline, WirePipeline}
 
 import java.nio.file.Files
 import scala.jdk.CollectionConverters._
@@ -419,21 +419,11 @@ class PipelineSpec extends SparkSpecBase {
     assert(after == before)
     assert(hist(cfgA, full = true) == hist(cfgB, full = false))
 
-    // late arrivals (validFrom < horizon) split to the slow path
-    val mixed = Seq(StarMsg(1L, 2400L, 99L, "late", 0.0),
-      StarMsg(2L, 5000L, 98L, "ok", 5.0)).toDF()
-    val (ok, late) = StarPipeline.lateSplit(mixed, cfgA)
-    assert(ok.select("key").as[Long].collect().toSeq == Seq(2L))
-    assert(late.select("key").as[Long].collect().toSeq == Seq(1L))
-    // no horizon (dirB) → nothing splits late
-    val (okB, lateB) = StarPipeline.lateSplit(mixed, cfgB)
-    assert(okB.count() == 2 && lateB.count() == 0)
-
-    // repairLate: the pre-horizon arrival folds over hot ∪ cold of its
-    // bucket and lands exactly where arrival-order processing would put
-    // it; only that bucket un-compacts
+    // a pre-horizon arrival folds over hot ∪ cold of its bucket and
+    // lands exactly where arrival-order processing would put it; only
+    // that bucket un-compacts
     val lateMsg = Seq(StarMsg(1L, 1500L, 97L, "lateX", 1.5)).toDF()
-    StarPipeline.repairLate(lateMsg, 6L, cfgA)
+    StarPipeline.foldBatch(lateMsg, 6L, cfgA)
     StarPipeline.foldBatch(lateMsg, 6L, cfgB)
     assert(hist(cfgA, full = true) == hist(cfgB, full = false))
     assert(live(cfgA) == live(cfgB))
@@ -505,8 +495,8 @@ class PipelineSpec extends SparkSpecBase {
     assert(snap(StarPipeline.readBitemporal(spark, cfg).get) ==
       snap(StarPipeline.readBitemporal(spark, cfgB).get))
 
-    // late arrival BELOW the horizon: folds without an explicit
-    // lateSplit — its bucket un-compacts and the result still matches
+    // late arrival BELOW the horizon: its bucket un-compacts and the
+    // result still matches
     val late = Seq(StarMsg(3L, 1500L, 888L, "late", 1.5)).toDF()
       .withColumn("stored_us", lit(6L))
     StarPipeline.foldBatchBitemporal(late, 8L, cfg)
@@ -527,53 +517,40 @@ class PipelineSpec extends SparkSpecBase {
   test("end-to-end stream: raw HL7 wire → parse → bucketed star fold") {
     implicit val s = spark
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    import org.apache.spark.sql.streaming.Trigger
     def adt(trigger: String, id: Long, dtm: String, loc: String) = Seq(
       s"MSH|^~\\&|EPIC|UCLH|||$dtm||ADT^$trigger|M$id|P|2.4",
       "PID|1||40800000^^^MRN^MRN",
       (Seq("PV1", "1", "I", loc) ++ Seq.fill(15)("") :+ "V1").mkString("|")
     ).mkString("\r")
 
-    val stateDir = Files.createTempDirectory("hl7_star").toString
+    val root = Files.createTempDirectory("hl7_star").toString
     val ckpt = Files.createTempDirectory("hl7_ckpt").toString
-    val cfg = StarPipeline.Config(stateDir, Seq("mrn"), "ts_us", "msg_id",
-      Seq("patientClass", "location"), nBuckets = 4)
-
-    val deadDir = Files.createTempDirectory("hl7_dead").toString
     val input = MemoryStream[String](spark)
-    def start() = {
-      val parsed = graft.sources.Hl7Wire.parseAdt(
-        input.toDS().toDF("value"), "value")
-      StarPipeline.startWithDeadLetter(parsed, DeadLetter.adtRules,
-        clean => clean.select(col("mrn"),
-          col("validFromUs").as("ts_us"),
-          regexp_extract(col("sourceMessageId"), "^M(\\d+)$", 1).cast("long")
-            .as("msg_id"),
-          col("patientClass"), col("fullLocationString").as("location")),
-        cfg, deadDir, ckpt,
-        org.apache.spark.sql.streaming.Trigger.AvailableNow())
+    // one AvailableNow run per delivery, both on the one checkpoint
+    def run(frames: Seq[String]): Unit = {
+      input.addData(frames)
+      WirePipeline.start(input.toDS().toDF("value"), "value", root, ckpt,
+        Trigger.AvailableNow()).awaitTermination()
     }
-
-    val q = start()
-    input.addData(Seq(adt("A01", 2, "20240101100000", "W1"),
+    run(Seq(adt("A01", 2, "20240101100000", "W1"),
       adt("A02", 3, "20240101110000", "W2"),
       "GARBAGE frame"))
-    q.processAllAvailable(); q.stop()
-
     // late batch: an earlier-in-valid-time update lands after
-    val q2 = start()
-    input.addData(Seq(adt("A08", 1, "20240101090000", "W0")))
-    q2.processAllAvailable(); q2.stop()
+    run(Seq(adt("A08", 1, "20240101090000", "W0")))
 
-    val live = StarPipeline.readState(spark, cfg, "live").get
-      .select("mrn", "location").as[(String, String)].collect().toSeq
+    def adtState(table: String) = StarPipeline.readState(spark,
+      StarPipeline.Config(s"$root/adt", Nil, "", "", Nil), table).get
+    val live = adtState("live").select("mrn", "fullLocationString")
+      .as[(String, String)].collect().toSeq
     assert(live == Seq(("40800000", "W2"))) // newest valid-time wins
-    val audit = StarPipeline.readState(spark, cfg, "audit").get
-      .orderBy("ts_us").select("location", "valid_until_us")
+    val audit = adtState("audit").orderBy("validFromUs")
+      .select("fullLocationString", "valid_until_us")
       .as[(String, Long)].collect().toSeq
     // late 09:00 row retro-inserted and closed by the 10:00 admit
     assert(audit.map(_._1) == Seq("W0", "W1"))
     // the nacked frame is persisted with its reason, not dropped
-    val dead = spark.read.parquet(s"$deadDir/batch=0")
+    val dead = spark.read.parquet(s"$root/dead/router/batch=0")
       .select("value", "reason").as[(String, String)].collect().toSeq
     assert(dead == Seq(("GARBAGE frame", "unroutable")))
   }

@@ -64,4 +64,20 @@ class SourceGuardSpec extends AnyFunSuite {
     assert(mirrors.isEmpty, mirrors)
     assert(src.contains("DeadLetter.adtRules"))
   }
+
+  test("one fold body: only the star and wire folds pin frames") {
+    // every sink folds through StarPipeline.foldWith, which pins the
+    // batch, probes its buckets and runs the kernel step; a second body
+    // that pins would be a second fold skeleton to keep in step
+    val pinners = filesMatching("new (StarPipeline\\.)?Pins\\b",
+      "src/main/scala")
+    assert(pinners == List("graft/streaming/StarPipeline.scala",
+      "graft/streaming/WirePipeline.scala"), pinners)
+  }
+
+  test("one stream starter: only FoldStream starts a streaming query") {
+    // checkpoint, trigger, output mode and foreachBatch are wired once
+    val starters = filesMatching("\\.writeStream\\b", "src/main/scala")
+    assert(starters == List("graft/streaming/FoldStream.scala"), starters)
+  }
 }

@@ -606,6 +606,32 @@ class WirePipelineSpec extends SparkSpecBase {
       .select("visitId").as[String].collect().toSeq == Seq("VM1"))
   }
 
+  test("a BIO-CONNECT frame with two OBX lands in the bioconnect lab " +
+      "dead letter with reason builder_error; a single-OBX frame folds") {
+    val root = Files.createTempDirectory("wire_bioconnect").toString
+    val one = Seq(
+      "MSH|^~\\&|BIO-CONNECT|UCLH|||20240501120000||ORU^R01|BC01|P|2.4",
+      "PID|1||40800000^^^MRN^MRN",
+      "ORC|RE",
+      "OBR|1|PLACER9^X|FILLER1^Y|GLU^Glucose|||20240501115500|||||||20240501115800",
+      "OBX|1|NM|GLU^Glucose^BC||5.1|mmol/L||N|||F|||20240501115900").mkString("\r")
+    val two = Seq(
+      "MSH|^~\\&|BIO-CONNECT|UCLH|||20240501120000||ORU^R01|BC02|P|2.4",
+      "PID|1||40800001^^^MRN^MRN",
+      "ORC|RE",
+      "OBR|1|P1^X|F1^Y|GLU^Glucose|||20240501115500|||||||20240501115800",
+      "OBX|1|NM|GLU^Glucose||5.1|||||F",
+      "OBX|2|NM|K^Potassium||4.0|||||F").mkString("\r")
+    WirePipeline.foldBatch(Seq(one, two).toDF("raw"), 3L, "raw", root)
+    val dead = spark.read.parquet(s"$root/dead/labs_bioconnect/batch=3")
+      .select("sourceMessageId", "reason").as[(String, String)].collect()
+    assert(dead.toSeq == Seq(("BC02", "builder_error")))
+    val labs = StarPipeline.readState(spark,
+      StarPipeline.Config(s"$root/labs", Nil, "", "", Nil), "live").get
+    assert(labs.select("sourceMessageId").as[String].collect().toSeq ==
+      Seq("BC01"))
+  }
+
   private val adtOnly = Seq(
     "MSH|^~\\&|EPIC|UCLH|||20240701080000||ADT^A01|J1|P|2.4\r" +
       "PID|1||M1^^^MRN^MRN\r" + pv1("V1"),
