@@ -75,12 +75,11 @@ object BitemporalKernel {
     * @param validFromUsCol event time, epoch µs.
     * @param tieCol      deterministic tie-breaker (e.g. source message id).
     * @param payloadCols mutable payload columns (F6 diff is over these).
-    * @param materialize hook applied to the one keyed pass; live, audit
-    *   and history are all selections from it. A caller running several
-    *   actions over the result passes a pin here and releases it after
-    *   its last action (StarPipeline pins with `CacheBridge.pinned`, so
-    *   its table writes share one shuffle). The default, identity,
-    *   re-runs the pass per action and leaves no cache behind.
+    * @param materialize hook applied to the one keyed pass
+    *   ([[batchTables]]); live, audit and history are all selections
+    *   from it. A caller running several actions over the result passes
+    *   a pin here and releases it after its last action. The default,
+    *   identity, re-runs the pass per action and leaves no cache behind.
     * @param partitioning the pass's exchange; default: hash of the key
     *   columns over `spark.sql.shuffle.partitions`.
     */
@@ -94,16 +93,41 @@ object BitemporalKernel {
       materialize: DataFrame => DataFrame = identity,
       partitioning: Option[KeyPartitioning] = None): KernelResult = {
     val msgCols = keyCols ++ Seq(validFromUsCol, tieCol) ++ payloadCols
-    val out = materialize(keyedPass(state, updates, None, keyCols,
+    val out = materialize(batchTables(state, updates, keyCols,
       validFromUsCol, tieCol, payloadCols, partitioning))
-    val versions = out.filter(col(Kind) === VersionRow)
+    def table(name: String, cols: Seq[String]) =
+      out.filter(col(TableCol) === name).select(cols.map(col): _*)
     KernelResult(
-      live = versions.filter(col("valid_until_us").isNull)
-        .select(msgCols.map(col): _*),
-      audit = versions.filter(col("valid_until_us").isNotNull)
-        .select((msgCols :+ "valid_until_us").map(col): _*),
-      history = out.filter(col(Kind) === MessageRow)
-        .select(msgCols.map(col): _*))
+      live = table("live", msgCols),
+      audit = table("audit", msgCols :+ "valid_until_us"),
+      history = table("history", msgCols))
+  }
+
+  /** The column of [[batchTables]] and [[bitemporalTables]] naming each
+    * row's output table. */
+  val TableCol = "__table"
+
+  /** [[applyBatch]]'s three outputs as ONE frame — one keyed pass, one
+    * scan of it: the message columns, `valid_until_us` (null outside
+    * audit) and [[TableCol]], which is "history" for a deduplicated
+    * message, "live" for an open version and "audit" for a closed one. A
+    * writer of all three tables reads the pass once, in one job.
+    */
+  def batchTables(
+      state: DataFrame,
+      updates: DataFrame,
+      keyCols: Seq[String],
+      validFromUsCol: String,
+      tieCol: String,
+      payloadCols: Seq[String],
+      partitioning: Option[KeyPartitioning] = None): DataFrame = {
+    val msgCols = keyCols ++ Seq(validFromUsCol, tieCol) ++ payloadCols
+    keyedPass(state, updates, None, keyCols, validFromUsCol, tieCol,
+      payloadCols, partitioning)
+      .select(msgCols.map(col) :+ col("valid_until_us") :+
+        when(col(Kind) === MessageRow, "history")
+          .when(col("valid_until_us").isNull, "live")
+          .otherwise("audit").as(TableCol): _*)
   }
 
   private val Src = "__src"
@@ -349,8 +373,9 @@ object BitemporalKernel {
     * matches a record, and a key with a null part gets a null stamp
     * (equi-join semantics).
     *
-    * Both tables are selections from one keyed pass; `materialize` and
-    * `partitioning` are [[applyBatch]]'s.
+    * Both tables are selections from one keyed pass
+    * ([[bitemporalTables]]); `materialize` and `partitioning` are
+    * [[applyBatch]]'s.
     *
     * Stored-time granularity is the batch: all of a key's changes within
     * one batch share one stamp, `max(storedFromUs)` over the key's updates
@@ -379,14 +404,35 @@ object BitemporalKernel {
       materialize: DataFrame => DataFrame = identity,
       partitioning: Option[KeyPartitioning] = None): BitemporalState = {
     val msgCols = keyCols ++ Seq(validFromUsCol, tieCol) ++ payloadCols
-    val out = materialize(keyedPass(prev.messages, updates,
-      Some((prev.table, storedFromUsCol)), keyCols, validFromUsCol, tieCol,
-      payloadCols, partitioning))
+    val out = materialize(bitemporalTables(prev, updates, keyCols,
+      validFromUsCol, tieCol, storedFromUsCol, payloadCols, partitioning))
+    def table(name: String, cols: Seq[String]) =
+      out.filter(col(TableCol) === name).select(cols.map(col): _*)
     BitemporalState(
-      messages = out.filter(col(Kind) === MessageRow)
-        .select(msgCols.map(col): _*),
-      table = out.filter(col(Kind) === RecordRow)
-        .select((msgCols ++ StampCols).map(col): _*))
+      messages = table("messages", msgCols),
+      table = table("table", msgCols ++ StampCols))
+  }
+
+  /** [[applyBitemporal]]'s two outputs as ONE frame — one keyed pass, one
+    * scan of it: the message columns, the three stamp columns (null on a
+    * message) and [[TableCol]], "messages" for a deduplicated message and
+    * "table" for a version record.
+    */
+  def bitemporalTables(
+      prev: BitemporalState,
+      updates: DataFrame,
+      keyCols: Seq[String],
+      validFromUsCol: String,
+      tieCol: String,
+      storedFromUsCol: String,
+      payloadCols: Seq[String],
+      partitioning: Option[KeyPartitioning] = None): DataFrame = {
+    val msgCols = keyCols ++ Seq(validFromUsCol, tieCol) ++ payloadCols
+    keyedPass(prev.messages, updates, Some((prev.table, storedFromUsCol)),
+      keyCols, validFromUsCol, tieCol, payloadCols, partitioning)
+      .select((msgCols ++ StampCols).map(col) :+
+        when(col(Kind) === MessageRow, "messages").otherwise("table")
+          .as(TableCol): _*)
   }
 
   /** O3: delete-if-newer with audit (ref: core/.../PersonController.java:347-366).

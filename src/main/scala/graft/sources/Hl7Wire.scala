@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.Hl7Fields
@@ -138,9 +138,10 @@ object Hl7Wire {
     def dead: DataFrame
 
     /** Does any frame route to `channel` (a member name above, `"dead"`
-      * included)? The first call runs one aggregate over the batch — the
-      * set of channels its frames take, secondary ones and `dead`
-      * included — and every call reads its answer, so a consumer can
+      * included)? The first call runs one pass over the batch — a `noop`
+      * write observing the set of channels its frames take, secondary
+      * ones and `dead` included; one job, no shuffle — and every call
+      * reads its answer, so a consumer can
       * skip an absent family without analysing its parser. A frame
       * counts even where its parser yields no row (a PPR with no PRB
       * segment). An unknown name fails.
@@ -286,12 +287,18 @@ object Hl7Wire {
         .drop("__t", "__g", "__ch")
 
       // each frame's primary channel, then each secondary one it feeds
-      // and "dead"; collect_set skips the nulls
+      // and "dead", observed over a `noop` write of the batch: one job,
+      // no shuffle. collect_set skips the nulls.
       private lazy val present: Set[String] = {
         val tags = ch +: (secondary + ("dead" -> !handled)).toSeq.map {
           case (name, p) => when(p, name) }
-        tagged.select(explode(array(tags: _*)).as("ch"))
-          .agg(collect_set("ch")).head().getSeq[String](0).toSet
+        val sets = tags.zipWithIndex.map {
+          case (tag, i) => collect_set(tag).as(s"__ch$i") }
+        val seen = Observation()
+        tagged.observe(seen, sets.head, sets.tail: _*)
+          .write.format("noop").mode("overwrite").save()
+        seen.get.valuesIterator
+          .flatMap(_.asInstanceOf[scala.collection.Seq[String]]).toSet
       }
       def holds(channel: String): Boolean = {
         require(channels(channel), s"no router channel $channel")

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
@@ -24,8 +24,17 @@ import scala.jdk.CollectionConverters._
   *   stateDir/_CURRENT              → name of the live manifest file
   *   stateDir/manifest-v<N>         → lines `table \t bucket \t relPath`
   *   stateDir/_HORIZON              → compaction horizon (epoch µs)
-  *   stateDir/data/<table>/v<N>/__bucket=<k>/  (parquet files; a replay
-  *                                of batch N writes v<N>.<n> instead)
+  *   stateDir/data/v<N>/__table=<t>/__bucket=<k>/  (parquet files; a
+  *                                replay of batch N writes v<N>.<n>)
+  *
+  * One fold (or compaction) writes every table it produces — history,
+  * live and audit, or bt_messages and bt_table, plus the `.cold` tiers
+  * of a compaction — in ONE parquet write into one version dir, so all
+  * tables share one file schema: a table's files carry the stamp
+  * columns of the others as all-null columns, and [[readState]] drops
+  * the ones the table does not have. States written in the older
+  * per-table layout (`data/<table>/v<N>/__bucket=<k>`) read unchanged:
+  * a manifest line names its files whatever dir holds them.
   *
   * History is hash-partitioned into `nBuckets` buckets on the key. A
   * micro-batch reads ONLY the buckets its keys hash into, folds them with
@@ -38,7 +47,7 @@ import scala.jdk.CollectionConverters._
   *
   * One manifest covers history/live/audit together, and readers resolve
   * every table through the single `_CURRENT` pointer (one atomic rename,
-  * [[VersionedDir.commit]]), so a crash between table writes can never
+  * [[VersionedDir.commit]]), so a crash during the write can never
   * expose mixed versions — a reader joining live+audit always sees one
   * consistent fold. Version dirs follow [[VersionedDir.fresh]]: a write
   * never lands in a dir the live manifest references, so replaying a
@@ -53,6 +62,7 @@ import scala.jdk.CollectionConverters._
   * [[ManifestStarSink]]'s.
   */
 object StarPipeline {
+
 
   /** @param storedFromUsCol batch column holding the stored-time stamp
     *   (epoch µs, e.g. ingestion time) — consumed by the BITEMPORAL fold
@@ -80,6 +90,24 @@ object StarPipeline {
     private val held = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     def apply(df: DataFrame): DataFrame = { held += df; CacheBridge.pinned(df) }
     def release(): Unit = held.foreach(_.unpersist(false))
+  }
+
+  /** A kernel step's outputs: every output table's rows in ONE frame,
+    * `rows`, each row's table named in [[BitemporalKernel.TableCol]], and
+    * `tables` — (table, its columns, its row identity keys). A sink that
+    * writes all tables at once reads `rows`: one job over one kernel pass.
+    * [[table]] reads one table, over `rows` pinned on first use, so a sink
+    * that reads table by table runs the pass once too.
+    */
+  private[streaming] final class Outputs(
+      val rows: DataFrame, val tables: Seq[(String, Seq[String], Seq[String])],
+      pins: Pins) {
+    private lazy val pinned = pins(rows)
+    def table(name: String): DataFrame = {
+      val cols = tables.collectFirst { case (`name`, c, _) => c }.get
+      pinned.filter(col(BitemporalKernel.TableCol) === name)
+        .select(cols.map(col): _*)
+    }
   }
 
   private[streaming] def bucketOf(cfg: Config): Column =
@@ -126,43 +154,73 @@ object StarPipeline {
   private[streaming] def isBitemporal(stateDir: String): Boolean =
     readManifest(stateDir).keysIterator.exists(_.startsWith("bt_"))
 
-  /** Write `df` bucket-partitioned into a fresh version dir of `tbl` —
-    * `v<batchId>`, or `v<batchId>.<n>` while the manifest still
-    * references that name — and return the dir with the bucket ids it
-    * holds. A touched bucket with no output rows gets no directory.
+  /** The stamp columns the kernel emits: `valid_until_us` is carried by
+    * `audit` and `bt_table`, the stored pair by `bt_table` alone. */
+  private val StampCols = Seq("valid_until_us", "stored_from_us",
+    "stored_until_us")
+
+  private def stampsOf(table: String): Seq[String] =
+    table.stripSuffix(".cold") match {
+      case "audit"    => StampCols.take(1)
+      case "bt_table" => StampCols
+      case _          => Nil
+    }
+
+  /** A table's files under version dir `dir`, bucket `k`. */
+  private[streaming] def bucketPath(dir: String, table: String, k: Long): String =
+    s"$dir/${BitemporalKernel.TableCol}=$table/__bucket=$k"
+
+  /** Write `rows` — every table's rows, each row's table named in
+    * [[BitemporalKernel.TableCol]] — in ONE parquet write, partitioned by
+    * table and bucket, into a fresh version dir: `data/v<batchId>`, or
+    * `data/v<batchId>.<n>` while the manifest still references a version
+    * dir of that name (in this layout or the older per-table one). Return
+    * the dir with the bucket ids each table holds there; a table with no
+    * rows in a bucket gets no directory for it.
     */
   private[streaming] def writeVersion(cfg: Config, man: ManifestMap,
-                                      tbl: String, batchId: Long,
-                                      df: DataFrame): (String, Set[Long]) = {
-    val live = man.valuesIterator.flatMap(_.valuesIterator)
-      .map(p => p.substring(0, p.lastIndexOf("/__bucket="))).toSet
-    val dir = VersionedDir.fresh(s"data/$tbl/v$batchId", live)
-    df.withColumn("__bucket", bucketOf(cfg))
-      .write.mode("overwrite").partitionBy("__bucket")
+                                      batchId: Long, rows: DataFrame)
+      : (String, Map[String, Set[Long]]) = {
+    val live = man.valuesIterator.flatMap(_.valuesIterator).map { p =>
+      val d = p.substring(0, p.indexOf("/__"))
+      d.substring(d.lastIndexOf('/') + 1)
+    }.toSet
+    val dir = VersionedDir.fresh(s"data/v$batchId",
+      d => live(d.stripPrefix("data/")))
+    rows.withColumn("__bucket", bucketOf(cfg))
+      .write.mode("overwrite")
+      .partitionBy(BitemporalKernel.TableCol, "__bucket")
       .parquet(s"${cfg.stateDir}/$dir")
-    (dir, bucketsIn(cfg.stateDir, dir))
+    (dir, bucketsIn(Paths.get(cfg.stateDir, dir)))
   }
 
-  /** Bucket ids present under `stateDir/dir` — ONE directory listing per
-    * written version dir, instead of a `Files.exists` probe per bucket
-    * (object-store-friendly: N round-trips → 1 LIST per write).
+  /** table → bucket ids under a written version dir — one directory
+    * listing per table, instead of a `Files.exists` probe per bucket
+    * (object-store-friendly: N round-trips → 1 LIST per table).
     */
-  private def bucketsIn(stateDir: String, dir: String): Set[Long] = {
-    val p = Paths.get(stateDir, dir)
-    if (!Files.isDirectory(p)) return Set.empty
-    val s = Files.list(p)
-    try s.iterator().asScala.map(_.getFileName.toString)
-      .collect { case n if n.startsWith("__bucket=") =>
-        n.stripPrefix("__bucket=").toLong }
-      .toSet
-    finally s.close()
+  private def bucketsIn(dir: java.nio.file.Path): Map[String, Set[Long]] = {
+    def sub(p: java.nio.file.Path, col: String): Map[String, java.nio.file.Path] =
+      if (!Files.isDirectory(p)) Map.empty else {
+        val s = Files.list(p)
+        try s.iterator().asScala.map(d => d.getFileName.toString -> d)
+          .collect { case (n, d) if n.startsWith(s"$col=") =>
+            n.stripPrefix(s"$col=") -> d }
+          .toMap
+        finally s.close()
+      }
+    sub(dir, BitemporalKernel.TableCol).map { case (t, d) =>
+      t -> sub(d, "__bucket").keySet.map(_.toLong) }
   }
 
-  /** Read a table as of the current manifest (all buckets unioned). */
+  /** Read a table as of the current manifest (all buckets unioned), with
+    * the columns the table carries: the stamp columns its files hold only
+    * because another table shared their write are dropped.
+    */
   def readState(spark: SparkSession, cfg: Config, table: String): Option[DataFrame] =
     readManifest(cfg.stateDir).get(table).filter(_.nonEmpty).map { buckets =>
       spark.read.parquet(
         buckets.values.toSeq.sorted.map(p => s"${cfg.stateDir}/$p"): _*)
+        .drop(StampCols.filterNot(stampsOf(table).toSet): _*)
     }
 
   /** Fold one micro-batch into the persisted state. Idempotent on replay
@@ -177,27 +235,26 @@ object StarPipeline {
     * drop), so a fold can never diverge from full-replay history (F6
     * coalescing always compares against the true predecessor). Batches
     * with no such row pay nothing: the late-bucket probe rides the same
-    * touched-bucket aggregate.
+    * touched-bucket observation.
     */
   def foldBatch(batch0: DataFrame, batchId: Long, cfg: Config): Unit =
     ManifestStarSink.fold(batch0, batchId, cfg)
 
   /** The valid-time kernel step: history → history/live/audit. */
   private def validStep(batch: DataFrame, cfg: Config, prior: Prior,
-                        touched: Seq[Long], pins: Pins)
-      : Seq[(String, DataFrame, Seq[String])] = {
+                        touched: Seq[Long], pins: Pins): Outputs = {
     // history holds the message columns, as the kernel emits them
     val historySchema = BitemporalKernel.emptyBitemporal(batch, cfg.keyCols,
       cfg.validFromUsCol, cfg.tieCol, cfg.payloadCols).messages.schema
-    val r = BitemporalKernel.applyBatch(
-      prior("history", historySchema).getOrElse(batch.limit(0)), batch,
-      cfg.keyCols, cfg.validFromUsCol, cfg.tieCol, cfg.payloadCols, pins,
-      byBucket(cfg, touched, batch.sparkSession))
+    val msgCols = historySchema.fieldNames.toSeq
     // live is one row per key; history and audit one per version
     val versionKeys = cfg.keyCols ++ Seq(cfg.validFromUsCol, cfg.tieCol)
-    Seq(("history", r.history, versionKeys),
-      ("live", r.live, cfg.keyCols),
-      ("audit", r.audit, versionKeys))
+    new Outputs(BitemporalKernel.batchTables(
+        prior("history", historySchema).getOrElse(batch.limit(0)), batch,
+        cfg.keyCols, cfg.validFromUsCol, cfg.tieCol, cfg.payloadCols,
+        byBucket(cfg, touched, batch.sparkSession)),
+      Seq(("history", msgCols, versionKeys), ("live", msgCols, cfg.keyCols),
+        ("audit", msgCols :+ "valid_until_us", versionKeys)), pins)
   }
 
   /** The one fold body of both axes and every [[StarSink]]: skip a batch
@@ -213,24 +270,30 @@ object StarPipeline {
 
     // The batch feeds the bucket probe and the kernel; its lineage is
     // often an expression-heavy parse — evaluate it once, and plan the
-    // kernel over the cached relation, not that lineage. The step pins
-    // its kernel pass too, so every table write reads the one shuffle.
+    // kernel over the cached relation, not that lineage. A sink reading
+    // the step's tables one by one pins the kernel pass through them too
+    // ([[Outputs.table]]).
     val pins = new Pins
     try {
     val batch = pins(batch0)
 
     // Which buckets does this batch touch (≤ nBuckets small longs), and
     // which of them carry arrivals from before the sink's compaction
-    // horizon (those need their cold tier folded back in)?
-    val lateFlag = sink.horizon(cfg) match {
-      case Some(h) => max(when(col(cfg.validFromUsCol) < h, 1).otherwise(0))
-      case None    => max(lit(0))
-    }
-    val probe = batch.groupBy(bucketOf(cfg).as("__bucket"))
-      .agg(lateFlag.as("__late")).collect()
-    val touched = probe.map(_.getLong(0)).sorted.toSeq
+    // horizon (those need their cold tier folded back in)? Observed over
+    // a `noop` write of the pinned batch, which also fills its cache: one
+    // job, no shuffle.
+    val bucket = bucketOf(cfg)
+    val isLate = sink.horizon(cfg).fold(lit(false))(col(cfg.validFromUsCol) < _)
+    val probe = Observation()
+    batch.observe(probe, collect_set(bucket).as("__touched"),
+        collect_set(when(isLate, bucket)).as("__late"))
+      .write.format("noop").mode("overwrite").save()
+    val found = probe.get
+    def buckets(name: String) =
+      found(name).asInstanceOf[scala.collection.Seq[Long]].toSeq
+    val touched = buckets("__touched").sorted
     if (touched.isEmpty) return
-    val late = probe.filter(_.getInt(1) == 1).map(_.getLong(0)).toSet
+    val late = buckets("__late").toSet
 
     val prior: Prior = (tbl, schema) =>
       sink.prior(batch.sparkSession, cfg, tbl, schema, touched, late)
@@ -268,22 +331,26 @@ object StarPipeline {
 
   /** The both-axes kernel step: bt_messages/bt_table → both. */
   private def bitemporalStep(batch: DataFrame, cfg: Config, prior: Prior,
-                             touched: Seq[Long], pins: Pins)
-      : Seq[(String, DataFrame, Seq[String])] = {
+                             touched: Seq[Long], pins: Pins): Outputs = {
     val empty = BitemporalKernel.emptyBitemporal(batch, cfg.keyCols,
       cfg.validFromUsCol, cfg.tieCol, cfg.payloadCols)
     val prev = BitemporalKernel.BitemporalState(
       messages = prior("bt_messages", empty.messages.schema)
         .getOrElse(empty.messages),
       table = prior("bt_table", empty.table.schema).getOrElse(empty.table))
-    val r = BitemporalKernel.applyBitemporal(prev, batch, cfg.keyCols,
-      cfg.validFromUsCol, cfg.tieCol, cfg.storedFromUsCol, cfg.payloadCols,
-      pins, byBucket(cfg, touched, batch.sparkSession))
+    // the kernel's "messages"/"table" are this star's bt_messages/bt_table
+    val tableCol = BitemporalKernel.TableCol
+    val rows = BitemporalKernel.bitemporalTables(prev, batch, cfg.keyCols,
+        cfg.validFromUsCol, cfg.tieCol, cfg.storedFromUsCol, cfg.payloadCols,
+        byBucket(cfg, touched, batch.sparkSession))
+      .withColumn(tableCol, concat(lit("bt_"), col(tableCol)))
     // a message is (key, validFrom, tie); a version record is a message
     // opened at a stored stamp
     val msgKeys = cfg.keyCols ++ Seq(cfg.validFromUsCol, cfg.tieCol)
-    Seq(("bt_messages", r.messages, msgKeys),
-      ("bt_table", r.table, msgKeys :+ "stored_from_us"))
+    new Outputs(rows,
+      Seq(("bt_messages", empty.messages.columns.toSeq, msgKeys),
+        ("bt_table", empty.table.columns.toSeq, msgKeys :+ "stored_from_us")),
+      pins)
   }
 
   /** The complete bitemporal version table (hot ∪ cold) — query it with
@@ -387,22 +454,23 @@ object StarPipeline {
     * buckets, its cold rows are appended to `<table>.cold` under keys
     * `<bucket>-<version dir>` (`3-v7`, or `3-v7.1` when compaction 7 is
     * replayed), so a replay adds entries beside the first run's instead
-    * of replacing them.
+    * of replacing them. Both tiers of every table go out in one write.
     */
   private def retier(cfg: Config, horizonUs: Long, batchId: Long,
                      flagged: Seq[(String, DataFrame)]): Unit = {
     val man = readManifest(cfg.stateDir)
-    val newMan = flagged.foldLeft(man) { case (m, (tbl, df)) =>
-      def tier(t: String, rows: Column, cold: Boolean) = {
-        val (dir, buckets) = writeVersion(cfg, man, t, batchId,
-          df.filter(rows).drop("__cold"))
-        val suffix = if (cold) "-" + dir.substring(dir.lastIndexOf('/') + 1) else ""
-        buckets.map(k => s"$k$suffix" -> s"$dir/__bucket=$k").toMap
-      }
-      val hot = tier(tbl, !col("__cold"), cold = false)
-      val cold = tier(s"$tbl.cold", col("__cold"), cold = true)
-      m.updated(tbl, hot)
-        .updated(s"$tbl.cold", m.getOrElse(s"$tbl.cold", Map.empty) ++ cold)
+    val (dir, present) = writeVersion(cfg, man, batchId, flagged.map {
+      case (tbl, df) => df.withColumn(BitemporalKernel.TableCol,
+        when(col("__cold"), s"$tbl.cold").otherwise(tbl)).drop("__cold")
+    }.reduce(_.unionByName(_, allowMissingColumns = true)))
+    def entries(t: String, suffix: String) =
+      present.getOrElse(t, Set.empty)
+        .map(k => s"$k$suffix" -> bucketPath(dir, t, k)).toMap
+    val coldSuffix = "-" + dir.substring(dir.lastIndexOf('/') + 1)
+    val newMan = flagged.foldLeft(man) { case (m, (tbl, _)) =>
+      m.updated(tbl, entries(tbl, ""))
+        .updated(s"$tbl.cold", m.getOrElse(s"$tbl.cold", Map.empty) ++
+          entries(s"$tbl.cold", coldSuffix))
     }
     // Horizon FIRST, then the manifest swap: a crash between the two
     // leaves the horizon advanced over an un-compacted manifest, which
@@ -441,7 +509,7 @@ object StarPipeline {
   * Delta/Iceberg for multi-writer.
   */
 object ManifestStarSink extends StarSink {
-  import StarPipeline.{Config, ManifestMap, readManifest}
+  import StarPipeline.{Config, ManifestMap, Outputs, readManifest}
 
   private[streaming] def committed(cfg: Config, batchId: Long,
                                    bitemporal: Boolean): Boolean = false
@@ -469,17 +537,18 @@ object ManifestStarSink extends StarSink {
     else Some(spark.read.schema(schema).parquet(paths: _*))
   }
 
+  // every output table in one write, then one manifest swap
   private[streaming] def persist(cfg: Config, batchId: Long,
-                                 bitemporal: Boolean,
-                                 outputs: Seq[(String, DataFrame, Seq[String])],
+                                 bitemporal: Boolean, outputs: Outputs,
                                  touched: Seq[Long], late: Set[Long]): Unit = {
     val man = readManifest(cfg.stateDir)
-    val newMan = outputs.foldLeft(man) { case (m, (tbl, df, _)) =>
-      val (dir, present) =
-        StarPipeline.writeVersion(cfg, man, tbl, batchId, df)
+    val (dir, present) =
+      StarPipeline.writeVersion(cfg, man, batchId, outputs.rows)
+    val newMan = outputs.tables.foldLeft(man) { case (m, (tbl, _, _)) =>
+      val in = present.getOrElse(tbl, Set.empty[Long])
       // an emptied touched bucket drops its manifest entry
       val hot = touched.foldLeft(m.getOrElse(tbl, Map.empty)) { (tm, k) =>
-        if (present.contains(k)) tm.updated(k.toString, s"$dir/__bucket=$k")
+        if (in.contains(k)) tm.updated(k.toString, StarPipeline.bucketPath(dir, tbl, k))
         else tm - k.toString
       }
       // un-compacted buckets' cold rows are folded into hot now

@@ -56,12 +56,13 @@ trait StarSink {
                                touched: Seq[Long],
                                late: Set[Long]): Option[DataFrame]
 
-  /** Persist a kernel step's outputs — (table, touched buckets' rows,
-    * row identity keys) — so a reader sees all of them or none, and
-    * mark `batchId` committed where the store keeps progress. */
+  /** Persist a kernel step's outputs — each table's rows in the touched
+    * buckets, with its row identity keys — so a reader sees all of them
+    * or none, and mark `batchId` committed where the store keeps
+    * progress. */
   private[streaming] def persist(cfg: StarPipeline.Config, batchId: Long,
                                  bitemporal: Boolean,
-                                 outputs: Seq[(String, DataFrame, Seq[String])],
+                                 outputs: StarPipeline.Outputs,
                                  touched: Seq[Long], late: Set[Long]): Unit
 
   /** Fold one micro-batch into persisted valid-axis state (S8/W1/W2
@@ -278,10 +279,10 @@ final class JdbcStarSink(url: String, star: String = "",
     * the progress mark, committed together. */
   private[streaming] def persist(cfg: StarPipeline.Config, batchId: Long,
                                  bitemporal: Boolean,
-                                 outputs: Seq[(String, DataFrame, Seq[String])],
+                                 outputs: StarPipeline.Outputs,
                                  touched: Seq[Long], late: Set[Long]): Unit = {
-    val staged = outputs.map { case (t, df0, keys) =>
-      val df = df0.withColumn("__bucket", StarPipeline.bucketOf(cfg))
+    val staged = outputs.tables.map { case (t, _, keys) =>
+      val df = outputs.table(t).withColumn("__bucket", StarPipeline.bucketOf(cfg))
       stageTable(cfg, t, df)
       (t, df.columns.toSeq, keys)
     }

@@ -117,10 +117,13 @@ object WirePipeline {
     // it once so ten funnels don't re-read the source ten times. Spread
     // a narrow batch over the executors first: the family parsers are
     // expression-heavy, and a single-partition micro-batch would run
-    // EVERY channel's parse serially on one core.
+    // EVERY channel's parse serially on one core. (The partition count
+    // comes from the batch's physical plan: `batch.rdd` would post an
+    // SQL execution of its own.)
     val np = batch.sparkSession.sparkContext.defaultParallelism
     val spread =
-      if (batch.rdd.getNumPartitions < np) batch.repartition(np) else batch
+      if (batch.queryExecution.toRdd.getNumPartitions < np) batch.repartition(np)
+      else batch
     val cached = spread.persist(
       org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try foldRouted(cached, batchId, rawCol, stateRoot, bitemporal, sink)
@@ -280,9 +283,12 @@ object WirePipeline {
     // Infection progress survives restarts the same way the fold state
     // does — a tiny high-watermark file advanced per batch (the
     // reference holds it in the factory across a service run,
-    // PatientInfectionFactory.infectionProgress).
+    // PatientInfectionFactory.infectionProgress). It is committed only
+    // once the conditions fold holding the gated infections has
+    // persisted: a watermark ahead of the star would make the replay of
+    // a failed fold drop the batch's infections as already seen.
     val progressDir = s"$stateRoot/conditions"
-    val infMsgs = ifHolds("infections") {
+    val (infMsgs, infProgress) = if (!r.holds("infections")) (Nil, None) else {
       val infStart = VersionedDir.read(progressDir, "_INF_PROGRESS")
         .fold(0L)(_.toLong)
       val gatedInf = mat(Hl7Wire.infectionGate(
@@ -291,9 +297,8 @@ object WirePipeline {
       val newProgress = gatedInf
         .agg(max(col("addedTimeUs"))).collect().headOption
         .flatMap(rw => Option(rw.get(0)).map(_.asInstanceOf[Long]))
-      newProgress.filter(_ > infStart).foreach(p =>
-        VersionedDir.commit(progressDir, "_INF_PROGRESS", p.toString))
-      Hl7Wire.wireToInfectionMessages(gatedInf)
+      (Seq(Hl7Wire.wireToInfectionMessages(gatedInf)),
+        newProgress.filter(_ > infStart))
     }
 
     // ConditionVisits link table: problems and allergies (NOT
@@ -318,6 +323,8 @@ object WirePipeline {
       condMsgs.reduce(_ unionByName _)
         .withColumnRenamed("msgId", "sourceMessageId"),
       conditionsCfg(stateRoot))
+    infProgress.foreach(p =>
+      VersionedDir.commit(progressDir, "_INF_PROGRESS", p.toString))
 
     val consultClean = ifHolds("consults")(
       guardAndFold(r.consults, "consults",

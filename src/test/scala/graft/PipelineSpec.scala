@@ -86,7 +86,7 @@ class PipelineSpec extends SparkSpecBase {
       Seq("state", "value"), nBuckets = 8)
     val b1 = (1L to 8L).map(k => StarMsg(k, 1000L * k, k, "a", k.toDouble)).toDF()
     StarPipeline.foldBatch(b1, 1L, cfg)
-    def bucketDirs(v: String) = new java.io.File(s"$stateDir/data/history/$v")
+    def bucketDirs(v: String) = new java.io.File(s"$stateDir/data/$v/__table=history")
       .listFiles().filter(_.getName.startsWith("__bucket=")).map(_.getName).toSet
     val v1Before = bucketDirs("v1")
 
@@ -411,10 +411,10 @@ class PipelineSpec extends SparkSpecBase {
     assert(live(cfgA) == live(cfgB) && live(cfgA).size == 6)
 
     // cold entries are carried by reference across folds and compactions
-    val before = new java.io.File(s"$dirA/data/history.cold/v3")
+    val before = new java.io.File(s"$dirA/data/v3/__table=history.cold")
       .listFiles().map(f => f.getName -> f.lastModified).toMap
     StarPipeline.compact(spark, cfgA, horizonUs = 2500L, batchId = 5L)
-    val after = new java.io.File(s"$dirA/data/history.cold/v3")
+    val after = new java.io.File(s"$dirA/data/v3/__table=history.cold")
       .listFiles().map(f => f.getName -> f.lastModified).toMap
     assert(after == before)
     assert(hist(cfgA, full = true) == hist(cfgB, full = false))
@@ -607,13 +607,12 @@ class PipelineSpec extends SparkSpecBase {
     }
     def fails(what: String)(fold: => Unit): Unit =
       leaves(what)(intercept[Exception](fold))
-    // the second table of each fold cannot be written: its table dir
-    // is a plain file (manifest sink) or its stage table has the wrong
-    // columns (JDBC sink), so the first table's write has run the pass
-    def blocked(table: String) = {
+    // the fold's tables cannot be written: the data dir is a plain file
+    // (manifest sink), or the second table's stage table has the wrong
+    // columns (JDBC sink, so the first table's write has run the pass)
+    def blocked() = {
       val cfg = q70Config("star_cache")
-      Files.createDirectories(java.nio.file.Paths.get(cfg.stateDir, "data"))
-      Files.createFile(java.nio.file.Paths.get(cfg.stateDir, "data", table))
+      Files.createFile(java.nio.file.Paths.get(cfg.stateDir, "data"))
       cfg
     }
     val cfg = q70Config("star_cache")
@@ -621,9 +620,9 @@ class PipelineSpec extends SparkSpecBase {
     leaves("foldBatchBitemporal")(
       StarPipeline.foldBatchBitemporal(q70Batch(1), 1L, cfg))
     fails("foldBatch, failed write")(
-      StarPipeline.foldBatch(q70Batch(1), 1L, blocked("live")))
+      StarPipeline.foldBatch(q70Batch(1), 1L, blocked()))
     fails("foldBatchBitemporal, failed write")(
-      StarPipeline.foldBatchBitemporal(q70Batch(1), 1L, blocked("bt_table")))
+      StarPipeline.foldBatchBitemporal(q70Batch(1), 1L, blocked()))
 
     System.setProperty("derby.system.home",
       Files.createTempDirectory("derby_home_cache").toString)
@@ -644,7 +643,7 @@ class PipelineSpec extends SparkSpecBase {
       "touched bucket) in every fold's version dir") {
     val key = "spark.sql.shuffle.partitions"
     def bucketFiles(cfg: StarPipeline.Config, table: String, b: Long) = {
-      val dir = new java.io.File(s"${cfg.stateDir}/data/$table/v$b")
+      val dir = new java.io.File(s"${cfg.stateDir}/data/v$b/__table=$table")
       Option(dir.listFiles()).toSeq.flatten
         .filter(_.getName.startsWith("__bucket="))
         .map(d => d.getName -> d.listFiles().count(_.getName.endsWith(".parquet")))

@@ -149,15 +149,20 @@ class PlanShapeSpec extends SparkSpecBase {
     assert(!p.contains("PartitionFilters: []"), p)
   }
 
-  test("lateSplit filters push down to the parquet scan") {
-    val dir = java.nio.file.Files.createTempDirectory("planshape").toString
-    spark.range(0, 1000)
-      .select(col("id").as("k"), (col("id") * 10).as("ts_us"))
-      .write.mode("overwrite").parquet(dir)
-    val scan = spark.read.parquet(dir).filter(col("ts_us") >= 5000L)
-    val p = plan(scan)
-    assert(p.contains("PushedFilters: [IsNotNull(ts_us), GreaterThanOrEqual(ts_us,5000)]") ||
-      p.contains("GreaterThanOrEqual(ts_us,5000)"), p)
+  test("bitemporal liveConditions pushes IsNull stamps to the scan") {
+    val root = Files.createTempDirectory("planshape_btlive").toString
+    graft.streaming.WirePipeline.foldBatch(Seq(
+      "MSH|^~\\&|EPIC|Problem List|||20240101100000|X|PPR^PC1|L1|P|2.4\r" +
+        "PID|1||M1^^^MRN^MRN\r" +
+        "PRB|AD|20240101100000|C1^Asthma^I10UK|700|||20240101100000")
+      .toDF("raw"), 1L, "raw", root, bitemporal = true)
+    // the open-record filter of the live view reaches the bt_table scan
+    val p = plan(graft.streaming.WirePipeline.liveConditions(spark, root,
+      bitemporal = true).get)
+    val pushed = "PushedFilters: \\[[^\\]]*".r.findAllIn(p).toSeq
+    assert(pushed.size == 1, p)
+    assert(pushed.head.contains("IsNull(stored_until_us)") &&
+      pushed.head.contains("IsNull(valid_until_us)"), p)
   }
 
   test("stratified sample and PII scrub are shuffle-free per-row work") {
@@ -762,25 +767,26 @@ class PlanShapeSpec extends SparkSpecBase {
   test("wire family folds hand the kernel a one-node cached relation, " +
       "not the HL7 parse lineage beneath it") {
     import org.apache.spark.sql.catalyst.expressions.{ArrayFilter, ArrayTransform}
-    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LogicalPlan}
+    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, CollectMetrics, LogicalPlan}
     import org.apache.spark.sql.execution.QueryExecution
     import org.apache.spark.sql.execution.columnar.InMemoryRelation
     import org.apache.spark.sql.util.QueryExecutionListener
     import org.scalatest.concurrent.Eventually._
     import org.scalatest.time.SpanSugar._
-    // the star fold's first action is its touched-bucket probe, an
-    // aggregate (`__late`) directly over the batch the kernel folds
+    // the star fold's first action is its touched-bucket probe, metrics
+    // (`__late`) observed directly over the batch the kernel folds
     val kernelInputs =
       new java.util.concurrent.ConcurrentLinkedQueue[LogicalPlan]()
     @volatile var flushed = false
     val listener = new QueryExecutionListener {
       def onSuccess(f: String, qe: QueryExecution, d: Long): Unit =
         qe.analyzed match {
-          case a: Aggregate if a.aggregateExpressions.exists(_.name == "__late") =>
-            kernelInputs.add(a.child)
           case a: Aggregate if a.aggregateExpressions.exists(_.name == "__flush") =>
             flushed = true
-          case _ =>
+          case w => w.collectFirst {
+            case m: CollectMetrics if m.metrics.exists(_.name == "__late") =>
+              m.child
+          }.foreach(kernelInputs.add)
         }
       def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
     }
@@ -884,12 +890,12 @@ class PlanShapeSpec extends SparkSpecBase {
     val plans = executed.asScala.toSeq.filter(p => nodes(p).exists {
       case w: DataWritingCommandExec => w.cmd match {
         case i: InsertIntoHadoopFsRelationCommand =>
-          i.outputPath.toString.contains("/data/bt_")
+          i.outputPath.toString.contains("/data/v")
         case _ => false
       }
       case _ => false
     })
-    assert(plans.size == 2, plans.map(_.treeString).mkString("\n"))
+    assert(plans.size == 1, plans.map(_.treeString).mkString("\n"))
     val all = plans.flatMap(nodes)
     val exchanges = new java.util.IdentityHashMap[SparkPlan, Unit]()
     all.collect { case e: ShuffleExchangeExec => exchanges.put(e, ()) }
