@@ -75,13 +75,11 @@ object BitemporalKernel {
     * @param validFromUsCol event time, epoch µs.
     * @param tieCol      deterministic tie-breaker (e.g. source message id).
     * @param payloadCols mutable payload columns (F6 diff is over these).
-    * @param materialize hook applied to the one keyed pass
-    *   ([[batchTables]]); live, audit and history are all selections
-    *   from it. A caller running several actions over the result passes
-    *   a pin here and releases it after its last action. The default,
-    *   identity, re-runs the pass per action and leaves no cache behind.
     * @param partitioning the pass's exchange; default: hash of the key
     *   columns over `spark.sql.shuffle.partitions`.
+    *
+    * Live, audit and history are selections from one keyed pass
+    * ([[batchTables]]); each action over them re-runs it.
     */
   def applyBatch(
       state: DataFrame,
@@ -90,11 +88,10 @@ object BitemporalKernel {
       validFromUsCol: String,
       tieCol: String,
       payloadCols: Seq[String],
-      materialize: DataFrame => DataFrame = identity,
       partitioning: Option[KeyPartitioning] = None): KernelResult = {
     val msgCols = keyCols ++ Seq(validFromUsCol, tieCol) ++ payloadCols
-    val out = materialize(batchTables(state, updates, keyCols,
-      validFromUsCol, tieCol, payloadCols, partitioning))
+    val out = batchTables(state, updates, keyCols, validFromUsCol, tieCol,
+      payloadCols, partitioning)
     def table(name: String, cols: Seq[String]) =
       out.filter(col(TableCol) === name).select(cols.map(col): _*)
     KernelResult(
@@ -132,7 +129,8 @@ object BitemporalKernel {
 
   private val Src = "__src"
   private val Kind = "__kind"
-  private val StampCols = Seq("valid_until_us", "stored_from_us",
+  /** The pass's stamp columns, in output order. */
+  private[graft] val StampCols = Seq("valid_until_us", "stored_from_us",
     "stored_until_us")
   // sources of the pass's input rows, in the order they sort at one
   // (key, validFrom, tie)
@@ -374,8 +372,7 @@ object BitemporalKernel {
     * (equi-join semantics).
     *
     * Both tables are selections from one keyed pass
-    * ([[bitemporalTables]]); `materialize` and `partitioning` are
-    * [[applyBatch]]'s.
+    * ([[bitemporalTables]]); `partitioning` is [[applyBatch]]'s.
     *
     * Stored-time granularity is the batch: all of a key's changes within
     * one batch share one stamp, `max(storedFromUs)` over the key's updates
@@ -401,11 +398,10 @@ object BitemporalKernel {
       tieCol: String,
       storedFromUsCol: String,
       payloadCols: Seq[String],
-      materialize: DataFrame => DataFrame = identity,
       partitioning: Option[KeyPartitioning] = None): BitemporalState = {
     val msgCols = keyCols ++ Seq(validFromUsCol, tieCol) ++ payloadCols
-    val out = materialize(bitemporalTables(prev, updates, keyCols,
-      validFromUsCol, tieCol, storedFromUsCol, payloadCols, partitioning))
+    val out = bitemporalTables(prev, updates, keyCols, validFromUsCol,
+      tieCol, storedFromUsCol, payloadCols, partitioning)
     def table(name: String, cols: Seq[String]) =
       out.filter(col(TableCol) === name).select(cols.map(col): _*)
     BitemporalState(

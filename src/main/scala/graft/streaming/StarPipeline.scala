@@ -7,7 +7,7 @@ import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.graftbridge.CacheBridge
 import graft.kernel.BitemporalKernel
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 
 /** S8/W1: the streaming star-maintenance pipeline — every micro-batch of
@@ -62,7 +62,6 @@ import scala.jdk.CollectionConverters._
   * [[ManifestStarSink]]'s.
   */
 object StarPipeline {
-
 
   /** @param storedFromUsCol batch column holding the stored-time stamp
     *   (epoch µs, e.g. ingestion time) — consumed by the BITEMPORAL fold
@@ -154,15 +153,12 @@ object StarPipeline {
   private[streaming] def isBitemporal(stateDir: String): Boolean =
     readManifest(stateDir).keysIterator.exists(_.startsWith("bt_"))
 
-  /** The stamp columns the kernel emits: `valid_until_us` is carried by
-    * `audit` and `bt_table`, the stored pair by `bt_table` alone. */
-  private val StampCols = Seq("valid_until_us", "stored_from_us",
-    "stored_until_us")
-
+  /** The kernel's stamp columns a table carries: `valid_until_us` in
+    * `audit` and `bt_table`, the stored pair in `bt_table` alone. */
   private def stampsOf(table: String): Seq[String] =
     table.stripSuffix(".cold") match {
-      case "audit"    => StampCols.take(1)
-      case "bt_table" => StampCols
+      case "audit"    => BitemporalKernel.StampCols.take(1)
+      case "bt_table" => BitemporalKernel.StampCols
       case _          => Nil
     }
 
@@ -198,13 +194,14 @@ object StarPipeline {
     * listing per table, instead of a `Files.exists` probe per bucket
     * (object-store-friendly: N round-trips → 1 LIST per table).
     */
-  private def bucketsIn(dir: java.nio.file.Path): Map[String, Set[Long]] = {
-    def sub(p: java.nio.file.Path, col: String): Map[String, java.nio.file.Path] =
+  private def bucketsIn(dir: Path): Map[String, Set[Long]] = {
+    // partition value → its dir, for the `<column>=<value>` dirs under p
+    def sub(p: Path, column: String): Map[String, Path] =
       if (!Files.isDirectory(p)) Map.empty else {
         val s = Files.list(p)
         try s.iterator().asScala.map(d => d.getFileName.toString -> d)
-          .collect { case (n, d) if n.startsWith(s"$col=") =>
-            n.stripPrefix(s"$col=") -> d }
+          .collect { case (n, d) if n.startsWith(s"$column=") =>
+            n.stripPrefix(s"$column=") -> d }
           .toMap
         finally s.close()
       }
@@ -220,7 +217,7 @@ object StarPipeline {
     readManifest(cfg.stateDir).get(table).filter(_.nonEmpty).map { buckets =>
       spark.read.parquet(
         buckets.values.toSeq.sorted.map(p => s"${cfg.stateDir}/$p"): _*)
-        .drop(StampCols.filterNot(stampsOf(table).toSet): _*)
+        .drop(BitemporalKernel.StampCols.filterNot(stampsOf(table).toSet): _*)
     }
 
   /** Fold one micro-batch into the persisted state. Idempotent on replay
@@ -459,10 +456,13 @@ object StarPipeline {
   private def retier(cfg: Config, horizonUs: Long, batchId: Long,
                      flagged: Seq[(String, DataFrame)]): Unit = {
     val man = readManifest(cfg.stateDir)
-    val (dir, present) = writeVersion(cfg, man, batchId, flagged.map {
-      case (tbl, df) => df.withColumn(BitemporalKernel.TableCol,
-        when(col("__cold"), s"$tbl.cold").otherwise(tbl)).drop("__cold")
-    }.reduce(_.unionByName(_, allowMissingColumns = true)))
+    // (a state with no rows yet has nothing to write)
+    val (dir, present) = flagged.map { case (tbl, df) =>
+        df.withColumn(BitemporalKernel.TableCol,
+          when(col("__cold"), s"$tbl.cold").otherwise(tbl)).drop("__cold")
+      }.reduceOption(_.unionByName(_, allowMissingColumns = true))
+      .fold(("", Map.empty[String, Set[Long]]))(
+        writeVersion(cfg, man, batchId, _))
     def entries(t: String, suffix: String) =
       present.getOrElse(t, Set.empty)
         .map(k => s"$k$suffix" -> bucketPath(dir, t, k)).toMap

@@ -170,7 +170,7 @@ object WirePipeline {
       clean
     }
     // Every gate asks the router whether a channel holds rows: one
-    // aggregate over the cached batch, built from the router's own
+    // observed pass over the cached batch, built from the router's own
     // predicates, so an absent family costs ZERO jobs — not a
     // dead-letter write plus a bucket probe over an empty parse. (The
     // reference's consumer pays per message; our unit of work is the

@@ -288,11 +288,11 @@ class KeyedPassSpec extends SparkSpecBase {
     val batch = spark.range(0, 2000).select(col("id").as("key"),
       (col("id") % 5).as("vf"), col("id").as("tie"),
       lit("a").as("state"), lit(1.0).as("value"))
-    var pass: DataFrame = null
+    val named = Some(BitemporalKernel.KeyPartitioning(bucket, n))
+    val pass = BitemporalKernel.batchTables(batch.limit(0), batch,
+      Seq("key"), "vf", "tie", Seq("state", "value"), named)
     val r = BitemporalKernel.applyBatch(batch.limit(0), batch, Seq("key"),
-      "vf", "tie", Seq("state", "value"),
-      materialize = df => { pass = df; df },
-      partitioning = Some(BitemporalKernel.KeyPartitioning(bucket, n)))
+      "vf", "tie", Seq("state", "value"), partitioning = named)
     val placed = pass.select(bucket).rdd
       .mapPartitionsWithIndex((i, it) => it.map(b => (i, b.getLong(0))))
       .distinct().collect()
