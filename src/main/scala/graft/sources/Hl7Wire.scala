@@ -137,6 +137,10 @@ object Hl7Wire {
     def allergies: DataFrame
     def dead: DataFrame
 
+    /** The channel a member above is named after (`"dead"` included),
+      * read by name; an unknown name fails. */
+    def apply(channel: String): DataFrame
+
     /** Does any frame route to `channel` (a member name above, `"dead"`
       * included)? The first call runs one pass over the batch — a `noop`
       * write observing the set of channels its frames take, secondary
@@ -261,30 +265,46 @@ object Hl7Wire {
       branch(on("labOrderAcks") && cs === system,
         LabFunnel.parseOrderMessages(_, _, system))
 
+    val parsers: Map[String, (DataFrame, String) => DataFrame] = Map(
+      "adt" -> parseAdt, "labOrders" -> parseLabOrders,
+      "winPathLabs" -> LabFunnel.parseWinPathResults,
+      "coPathLabs" -> LabFunnel.parseCoPath, "ablLabs" -> LabFunnel.parseAbl90,
+      "bioConnectLabs" -> LabFunnel.parseBioConnect,
+      "bankManagerLabs" -> LabFunnel.parseBankManager,
+      "imagingLabs" -> LabFunnel.parseImage, "flowsheets" -> parseFlowsheets,
+      "problems" -> parseProblems, "consults" -> parseConsults,
+      "advanceDecisions" -> parseAdvanceDecisions, "impliedAdt" -> parseAdt,
+      "infections" -> parseInfections, "allergies" -> parseAllergies)
+
     new RoutedWire {
-      lazy val adt = channel("adt", parseAdt)
-      lazy val labOrders = channel("labOrders", parseLabOrders)
-      lazy val winPathLabs =
-        channel("winPathLabs", LabFunnel.parseWinPathResults)
-      lazy val coPathLabs = channel("coPathLabs", LabFunnel.parseCoPath)
-      lazy val ablLabs = channel("ablLabs", LabFunnel.parseAbl90)
-      lazy val bioConnectLabs =
-        channel("bioConnectLabs", LabFunnel.parseBioConnect)
-      lazy val bankManagerLabs =
-        channel("bankManagerLabs", LabFunnel.parseBankManager)
-      lazy val imagingLabs = channel("imagingLabs", LabFunnel.parseImage)
-      lazy val labOrderAcks = acksFor(LabFunnel.WinPath)
-        .unionByName(acksFor(LabFunnel.CoPath))
-      lazy val flowsheets = channel("flowsheets", parseFlowsheets)
-      lazy val problems = channel("problems", parseProblems)
-      lazy val consults = channel("consults", parseConsults)
-      lazy val advanceDecisions =
-        channel("advanceDecisions", parseAdvanceDecisions)
-      lazy val impliedAdt = channel("impliedAdt", parseAdt)
-      lazy val infections = channel("infections", parseInfections)
-      lazy val allergies = channel("allergies", parseAllergies)
-      lazy val dead = tagged.filter(!handled).withColumn("reason", reason)
-        .drop("__t", "__g", "__ch")
+      private val built = scala.collection.mutable.Map.empty[String, DataFrame]
+      def apply(name: String): DataFrame = {
+        require(channels(name), s"no router channel $name")
+        built.getOrElseUpdate(name, name match {
+          case "labOrderAcks" =>
+            acksFor(LabFunnel.WinPath).unionByName(acksFor(LabFunnel.CoPath))
+          case "dead" => tagged.filter(!handled).withColumn("reason", reason)
+            .drop("__t", "__g", "__ch")
+          case _ => channel(name, parsers(name))
+        })
+      }
+      def adt = this("adt")
+      def labOrders = this("labOrders")
+      def winPathLabs = this("winPathLabs")
+      def coPathLabs = this("coPathLabs")
+      def ablLabs = this("ablLabs")
+      def bioConnectLabs = this("bioConnectLabs")
+      def bankManagerLabs = this("bankManagerLabs")
+      def imagingLabs = this("imagingLabs")
+      def labOrderAcks = this("labOrderAcks")
+      def flowsheets = this("flowsheets")
+      def problems = this("problems")
+      def consults = this("consults")
+      def advanceDecisions = this("advanceDecisions")
+      def impliedAdt = this("impliedAdt")
+      def infections = this("infections")
+      def allergies = this("allergies")
+      def dead = this("dead")
 
       // each frame's primary channel, then each secondary one it feeds
       // and "dead", observed over a `noop` write of the batch: one job,

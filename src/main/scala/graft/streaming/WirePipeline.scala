@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.CacheBridge
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.operators.{IdentityMerge, LocationVisits, PendingMovements}
 import graft.sources.{Hl7Wire, LabFunnel}
@@ -11,28 +12,244 @@ import graft.sources.{Hl7Wire, LabFunnel}
   * routed by MSH-9 (S2), family-guarded (S3/S4 nack), funneled into each
   * family's interchange shape, and folded into that family's bitemporal
   * star state ([[StarPipeline]] bucketed fold) — every micro-batch, all
-  * families, one query.
+  * families, one query. The families are data: [[Guards]] and [[Stars]]
+  * below, which one loop folds.
   *
   * State layout under `stateRoot`:
   *
-  *   adt/ labs/ flowsheets/ conditions/ consults/   → StarPipeline dirs
+  *   adt/ labs/ lab_status/ flowsheets/ conditions/ condition_visits/
+  *   consults/ advance_decisions/ questions/  → StarPipeline dirs
+  *   conditions/_INF_PROGRESS → the infection gate's watermark
   *   dead/router/batch=N   → unroutable / unhandled-type frames
-  *   dead/<family>/batch=N → family-guard rejects (missing key/time,
-  *                            unimplemented ADT trigger; a lab
-  *                            builder's error under labs_<system>)
+  *   dead/<name>/batch=N   → a family guard's rejects (missing key/time,
+  *                            unimplemented ADT trigger, a builder's
+  *                            error), under adt, labs, labs_abl,
+  *                            labs_bioconnect, labs_bankmanager,
+  *                            labs_copath, labs_imaging, lab_status,
+  *                            flowsheets, conditions, allergies,
+  *                            consults or advance_decisions
   *
   * Dead-letter writes are per-batch overwrites — idempotent on replay,
-  * like the folds themselves. Scale shape: one scan of the batch fans
+  * like the folds themselves; a guard that rejects nothing in a batch
+  * leaves no `batch=N` dir. Scale shape: one scan of the batch fans
   * into narrow parse branches; each family fold touches only the state
   * buckets its keys hash into.
   */
 object WirePipeline {
 
-  /** Per-family kernel configs (natural key, event time, tie, payload). */
-  private def cfg(stateRoot: String, family: String, key: Seq[String],
-                  vf: String, payload: Seq[String]) =
-    StarPipeline.Config(s"$stateRoot/$family", key, vf, "sourceMessageId",
-      payload, nBuckets = 8)
+  /** A family guard: the router channel it checks, the dead-letter dir
+    * under `dead/` its rejects land in, and its ordered rules. */
+  private final case class Guard(channel: String, dead: String,
+                                 rules: Seq[(String, Column)])
+
+  private val Guards: Seq[Guard] = {
+    val builderError = "builder_error" -> col("error").isNotNull
+    def lab(channel: String, system: String) =
+      Guard(channel, s"labs_$system", Seq(builderError))
+    Seq(
+      // an unimplemented trigger or a frame without MRN is a nack
+      Guard("adt", "adt", DeadLetter.adtRules),
+      Guard("labOrders", "labs", Seq(
+        "missing_order" -> col("fillerOrderNumber").isNull,
+        "missing_time" -> coalesce(col("observationDateTimeUs"),
+          col("requestedDateTimeUs")).isNull)),
+      lab("ablLabs", "abl"), lab("bioConnectLabs", "bioconnect"),
+      lab("bankManagerLabs", "bankmanager"), lab("coPathLabs", "copath"),
+      lab("imagingLabs", "imaging"),
+      Guard("labOrderAcks", "lab_status", Seq(builderError,
+        "missing_specimen" -> col("labSpecimenNumber").isNull,
+        "missing_time" -> col("statusChangeTimeUs").isNull)),
+      Guard("flowsheets", "flowsheets", Seq(
+        "missing_visit" -> col("visitNumber").isNull,
+        "missing_type" -> col("interfaceId").isNull,
+        "missing_time" -> col("observationTimeUs").isNull)),
+      Guard("problems", "conditions", Seq(
+        "missing_mrn" -> col("mrn").isNull,
+        "missing_time" -> col("updatedTimeUs").isNull)),
+      Guard("allergies", "allergies", Seq(
+        "invalid_action" -> col("error").isNotNull,
+        "missing_mrn" -> col("mrn").isNull,
+        "missing_time" -> col("updatedTimeUs").isNull)),
+      Guard("consults", "consults", Seq(
+        "missing_id" -> col("epicConsultId").isNull,
+        "missing_time" -> col("statusChangeTimeUs").isNull)),
+      Guard("advanceDecisions", "advance_decisions", Seq(
+        "missing_id" -> col("advanceDecisionNumber").isNull,
+        "missing_time" -> col("statusChangeTimeUs").isNull)))
+  }
+
+  /** A star's input: a router channel, and the projection of its clean
+    * rows (guarded, if [[Guards]] has a row for it) into star messages.
+    */
+  private class Input(val channel: String, toMsgs: DataFrame => DataFrame) {
+    /** This input's messages in one fold of the star at `starDir`, and
+      * what to commit once that fold has persisted. */
+    def messages(clean: DataFrame, starDir: String,
+                 pin: DataFrame => DataFrame): (DataFrame, () => Unit) =
+      (toMsgs(clean), () => ())
+  }
+
+  /** Infections pass a serial gate: one folds only if it was added after
+    * every infection already seen. The high watermark survives restarts
+    * as `_INF_PROGRESS` in the star's dir (the reference holds it in the
+    * factory across a service run,
+    * PatientInfectionFactory.infectionProgress), and is committed only
+    * once the fold holding the gated infections has persisted: a
+    * watermark ahead of the star would make the replay of a failed fold
+    * drop the batch's infections as already seen. A row without MRN
+    * drops silently.
+    */
+  private object Infections extends Input("infections",
+      Hl7Wire.wireToInfectionMessages(_)
+        .withColumnRenamed("msgId", "sourceMessageId")) {
+    override def messages(parsed: DataFrame, starDir: String,
+                          pin: DataFrame => DataFrame) = {
+      val start = VersionedDir.read(starDir, "_INF_PROGRESS").fold(0L)(_.toLong)
+      val gated = pin(Hl7Wire.infectionGate(
+        parsed.filter(col("mrn").isNotNull), start,
+        Seq("sourceMessageId", "infectionIdx")))
+      val progress = gated.agg(max(col("addedTimeUs"))).collect().headOption
+        .flatMap(rw => Option(rw.get(0)).map(_.asInstanceOf[Long]))
+        .filter(_ > start)
+      (super.messages(gated, starDir, pin)._1, () => progress.foreach(p =>
+        VersionedDir.commit(starDir, "_INF_PROGRESS", p.toString)))
+    }
+  }
+
+  /** A star: its dir under the state root, its kernel config (natural
+    * key, event time and payload; the tie is `sourceMessageId`), and
+    * its inputs, whose messages union into one fold per batch. */
+  private final case class Star(name: String, key: Seq[String],
+                                validFrom: String, payload: Seq[String],
+                                inputs: Input*) {
+    def cfg(stateRoot: String) = StarPipeline.Config(s"$stateRoot/$name",
+      key, validFrom, "sourceMessageId", payload, nBuckets = 8)
+  }
+
+  /** The visit-op payload persisted in the `adt` star — everything the
+    * derived views need to re-derive location/identity/pending state
+    * from the message history alone.
+    */
+  private val AdtPayload = Seq("msgType", "patientClass",
+    "fullLocationString", "visitNumber", "previousMrn",
+    "previousVisitNumber", "otherVisitNumber", "pendingDestination",
+    "targetTimeUs", "dischargeTimeUs")
+
+  private val Stars: Seq[Star] = {
+    def in(channel: String)(toMsgs: DataFrame => DataFrame) =
+      new Input(channel, toMsgs)
+    def renamed(df: DataFrame) =
+      df.withColumnRenamed("msgId", "sourceMessageId")
+    val adtMsgs = (df: DataFrame) => df.select(Seq(col("mrn"),
+        col("validFromUs"), col("sourceMessageId"),
+        when(col("msgType").startsWith("Cancel"),
+          col("eventOccurredDateTimeUs")).as("targetTimeUs"),
+        col("dischargeDateTimeUs").as("dischargeTimeUs")) ++
+      AdtPayload.filterNot(Seq("targetTimeUs", "dischargeTimeUs").contains)
+        .map(col): _*)
+    val problems = Hl7Wire.wireToConditionMessages(_)
+    val allergies = Hl7Wire.wireToAllergyMessages(_: DataFrame)
+      .drop("reactions")
+    // ConditionVisits link table: problems and allergies (NOT
+    // infections) with a visit save an insert-once condition↔visit link
+    // (ref core/.../PatientConditionController.java:337-348 —
+    // savePatientConditionHospitalVisitLink inserts only when no row
+    // exists, never updates, never deletes; links outlive a condition
+    // tombstone). Fold shape: key = the whole link tuple, constant
+    // payload — F6 run-coalescing makes every re-sighting a no-op, so
+    // the live view IS the distinct pair set, permutation-invariant.
+    val links = (df: DataFrame) => df.filter(col("visitNumber").isNotNull)
+      .select(col("mrn"), col("conditionTypeId"), col("internalId"),
+        col("visitNumber"), col("updatedTimeUs"),
+        col("msgId").as("sourceMessageId"), lit(true).as("linked"))
+    val condition = (df: DataFrame) => renamed(df.drop("visitNumber"))
+    Seq(
+      // ADT proper is guarded; the implied ADT the reference derives
+      // from every ORU^R01/ORM^O01 (IdsOperations.buildAndAddAdtMessage,
+      // fromAdtStream=false) joins the same person/visit fold but fails
+      // SILENTLY, as in the reference — order messages legitimately
+      // arrive without patient context. The payload carries the full
+      // visit-op surface (cancel targets, discharge/pending/merge/swap/
+      // move identifiers) so the derived views ([[derived]]) re-derive
+      // the reference's location/identity state from the PERSISTED
+      // message history alone.
+      Star("adt", Seq("mrn"), "validFromUs", AdtPayload,
+        in("adt")(adtMsgs), in("impliedAdt")(df => adtMsgs(df.filter(
+          col("mrn").isNotNull && col("validFromUs").isNotNull)))),
+      // The WinPath result stream plus the point-of-care / blood-bank /
+      // histopathology / imaging funnel channels: ONE interchange shape
+      // and one fold.
+      Star("labs", Seq("battery", "labSpecimenNumber"), "statusChangeTimeUs",
+        Seq("epicOrderNumber", "mrn", "results"),
+        in("labOrders")(Hl7Wire.wireToLabMessages),
+        in("ablLabs")(LabFunnel.toLabMessages),
+        in("bioConnectLabs")(LabFunnel.toLabMessages),
+        in("bankManagerLabs")(LabFunnel.toLabMessages),
+        in("coPathLabs")(LabFunnel.coPathToLabMessages),
+        in("imagingLabs")(LabFunnel.imageToLabMessages)),
+      // ORM^O01 / ORR^O02 order messages carry no results but DO update
+      // order state (the reference's WinPath/CoPath order builders:
+      // number binding, status-change/sample-received times): a status
+      // side-table keyed like the labs star, so the read path joins them
+      // without risking a null-results overwrite of the result fold.
+      Star("lab_status", Seq("battery", "labSpecimenNumber"),
+        "statusChangeTimeUs", Seq("orderControlId", "orderStatus",
+          "epicOrderNumber", "orderTimeUs", "sampleReceivedTimeUs",
+          "resultStatus"),
+        in("labOrderAcks")(_.select(col("battery"), col("labSpecimenNumber"),
+          col("statusChangeTimeUs"), col("sourceMessageId"),
+          col("orderControlId"), col("orderStatus"), col("epicOrderNumber"),
+          col("orderTimeUs"), col("sampleReceivedTimeUs"),
+          col("resultStatus")))),
+      Star("flowsheets", Seq("visitId", "observationTypeId",
+          "observationTimeUs"), "updatedTimeUs", Seq("valueType",
+          "numericValue", "stringValue", "dateValue", "unit", "comment"),
+        in("flowsheets")(df => renamed(Hl7Wire.wireToFlowsheetMessages(df)))),
+      // problems (PPR) + allergies (A60 IAM) + gated infections (A05 ZIF):
+      // the reference's three condition factories meeting in
+      // PatientConditionController
+      Star("conditions", Seq("mrn", "conditionTypeId", "internalId"),
+        "updatedTimeUs", Seq("status", "severity", "onsetDate", "comment",
+          "action"),
+        in("problems")(problems andThen condition),
+        in("allergies")(allergies andThen condition), Infections),
+      Star("condition_visits",
+        Seq("mrn", "conditionTypeId", "internalId", "visitNumber"),
+        "updatedTimeUs", Seq("linked"),
+        in("problems")(problems andThen links),
+        in("allergies")(allergies andThen links)),
+      Star("consults", Seq("epicConsultId"), "statusChangeTimeUs",
+        Seq("mrn", "visitNumber", "consultationType", "cancelled",
+          "closedDueToDischarge"),
+        in("consults")(_.select(col("epicConsultId"),
+          col("statusChangeTimeUs"), col("sourceMessageId"), col("mrn"),
+          col("visitNumber"), col("consultationType"), col("cancelled"),
+          col("closedDueToDischarge")))),
+      // O20's second half: same ORM shape, own star
+      // (ref core/.../AdvanceDecisionController.java)
+      Star("advance_decisions", Seq("advanceDecisionNumber"),
+        "statusChangeTimeUs", Seq("mrn", "visitNumber", "careCode",
+          "typeName", "requestedTimeUs", "cancelled", "closedDueToDischarge"),
+        in("advanceDecisions")(_.select(col("advanceDecisionNumber"),
+          col("statusChangeTimeUs"), col("sourceMessageId"), col("mrn"),
+          col("visitNumber"), col("careCode"), col("typeName"),
+          col("requestedTimeUs"), col("cancelled"),
+          col("closedDueToDischarge")))),
+      // O18: consult + advance-decision NTE questions → ONE
+      // question/answer star keyed by (parent table, parent id, question
+      // text) — the reference dedups question rows by text and keys
+      // answers by (question, parent request), QuestionController; newest
+      // answer wins under the kernel's F7.
+      Star("questions", Seq("parentTable", "parentId", "questionText"),
+        "updatedTimeUs", Seq("answer"),
+        in("consults")(df => renamed(Hl7Wire.wireToQuestionMessages(df))),
+        in("advanceDecisions")(df => renamed(Hl7Wire.wireToQuestionMessages(
+          df, parentTable = "ADVANCE_DECISION",
+          parentIdCol = "advanceDecisionNumber")))))
+  }
+
+  private def starCfg(star: String, stateRoot: String) =
+    Stars.find(_.name == star).get.cfg(stateRoot)
 
   /** Was this state root folded in bitemporal mode? Decided from the
     * persisted manifests alone (any family star folded on the stored
@@ -71,9 +288,11 @@ object WirePipeline {
     * have; frames the repair did NOT fix route straight back to the
     * dead letter under `newBatchId` and the state is untouched.
     *
-    * @param source   which dead channel: "router" or a family name
-    *                 (e.g. "adt", "labs")
-    * @param batches  the dead batch ids to drain
+    * @param source   which dead channel: "router" or a guard's dead-letter
+    *                 name (e.g. "adt", "labs", "labs_bioconnect"); any
+    *                 other name fails
+    * @param batches  the dead batch ids to drain; a batch whose guard
+    *                 rejected nothing has no dir and adds no frame
     * @param repair   frame fixer applied before re-ingest (default:
     *                 replay as-is, e.g. after an allowlist/config fix)
     */
@@ -82,6 +301,9 @@ object WirePipeline {
                         batches: Seq[Long], newBatchId: Long,
                         repair: DataFrame => DataFrame = identity,
                         sink: StarSink = ManifestStarSink): Unit = {
+    val sources = "router" +: Guards.map(_.dead).distinct
+    require(sources.contains(source), s"no dead-letter source $source; " +
+      s"known: ${sources.mkString(", ")}")
     val dirs = batches.map(b => s"$stateRoot/dead/$source/batch=$b")
       .filter(d => java.nio.file.Files.exists(java.nio.file.Paths.get(d)))
     if (dirs.isEmpty) return
@@ -93,7 +315,7 @@ object WirePipeline {
     // no manifests, so ask it whether any family's stored-axis table
     // exists (the adt star folds on every pipeline shape).
     val bt = isBitemporal(stateRoot) ||
-      sink.read(spark, adtCfg(stateRoot), "bt_messages").isDefined
+      sink.read(spark, starCfg("adt", stateRoot), "bt_messages").isDefined
     foldBatch(repair(dead).select(col(rawCol)), newBatchId, rawCol,
       stateRoot, bitemporal = bt, sink = sink)
   }
@@ -113,285 +335,98 @@ object WirePipeline {
   def foldBatch(batch: DataFrame, batchId: Long, rawCol: String,
                 stateRoot: String, bitemporal: Boolean = false,
                 sink: StarSink = ManifestStarSink): Unit = {
-    // every family channel is a separate action over this batch — cache
-    // it once so ten funnels don't re-read the source ten times. Spread
-    // a narrow batch over the executors first: the family parsers are
-    // expression-heavy, and a single-partition micro-batch would run
-    // EVERY channel's parse serially on one core. (The partition count
-    // comes from the batch's physical plan: `batch.rdd` would post an
-    // SQL execution of its own.)
+    // Every family channel is a separate action over this batch, and
+    // each parsed channel feeds its guard, one or more star folds and
+    // sometimes a gate aggregate, while the parse is the expensive part
+    // of this pipeline: the fold pins the batch, each guarded channel
+    // and the gated infections ONCE, in one set of pins released at the
+    // end. Downstream frames are PLANNED over the cached relations too:
+    // over a persisted channel itself, every guard, funnel and kernel
+    // step would be re-analysed over the lambda-heavy parse beneath it,
+    // which takes longer than the fold's Spark jobs. No frame built on a
+    // pinned leaf may escape the fold: after the release, running one
+    // would silently rebuild a cache that nothing tracks.
+    //
+    // A narrow batch is spread over the executors first: the family
+    // parsers are expression-heavy, and a single-partition micro-batch
+    // would run EVERY channel's parse serially on one core. (The
+    // partition count comes from the batch's physical plan: `batch.rdd`
+    // would post an SQL execution of its own.)
     val np = batch.sparkSession.sparkContext.defaultParallelism
     val spread =
       if (batch.queryExecution.toRdd.getNumPartitions < np) batch.repartition(np)
       else batch
-    val cached = spread.persist(
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try foldRouted(cached, batchId, rawCol, stateRoot, bitemporal, sink)
-    finally cached.unpersist()
+    val pins = new StarPipeline.Pins
+    try foldRouted(pins(spread), batchId, rawCol, stateRoot, bitemporal,
+      sink, pins)
+    finally pins.release()
   }
 
+  /** Route the batch, fold every star an input channel of which holds
+    * rows, then write each guard's rejects. */
   private def foldRouted(batch: DataFrame, batchId: Long, rawCol: String,
                          stateRoot: String, bitemporal: Boolean,
-                         sink: StarSink): Unit = {
-    val r = Hl7Wire.route(batch, rawCol)
-
-    // Each parsed family channel feeds at least two actions (its guard's
-    // dead-letter write + the star fold, sometimes a progress aggregate
-    // too), and the parse is the expensive part of this pipeline —
-    // materialize each channel ONCE and let every action read the cache.
-    // Downstream frames are also PLANNED over the cached relation: over
-    // the persisted channel itself, every guard, funnel and kernel step
-    // would be re-analysed over the lambda-heavy parse beneath it, which
-    // takes longer than the fold's Spark jobs. No frame built on
-    // a `mat` leaf may escape this fold: after the `finally` below
-    // unpersists the channels, running one would silently rebuild a
-    // cache that nothing tracks.
-    val mat = new StarPipeline.Pins
-    // valid-time fold, or the stored-stamped bitemporal twin — through
-    // the deployment's StarSink (parquet+manifest or RDBMS MERGE)
-    def foldStar(msgs: DataFrame, cfgC: StarPipeline.Config): Unit =
-      if (!bitemporal) sink.fold(msgs, batchId, cfgC)
-      else sink.foldBitemporal(
-        msgs.withColumn("storedFromUs", lit(batchId)), batchId, cfgC)
-    // a family guard: rejects go to dead/<family>, the clean rows on
-    def guard(parsed: DataFrame, family: String,
-              rules: Seq[(String, Column)]): DataFrame = {
-      val routed = DeadLetter.route(mat(parsed), rules)
-      routed.dead.write.mode("overwrite")
-        .parquet(s"$stateRoot/dead/$family/batch=$batchId")
-      routed.clean
-    }
-    def guardAndFold(parsed: DataFrame, family: String,
-                     rules: Seq[(String, Column)],
-                     toMsgs: DataFrame => DataFrame,
-                     c: StarPipeline.Config): DataFrame = {
-      val clean = guard(parsed, family, rules)
-      foldStar(toMsgs(clean), c)
-      clean
-    }
+                         sink: StarSink, pin: StarPipeline.Pins): Unit = {
     // Every gate asks the router whether a channel holds rows: one
     // observed pass over the cached batch, built from the router's own
-    // predicates, so an absent family costs ZERO jobs — not a
-    // dead-letter write plus a bucket probe over an empty parse. (The
-    // reference's consumer pays per message; our unit of work is the
-    // family fold.)
-    def ifHolds(channel: String)(body: => DataFrame): Seq[DataFrame] =
-      if (r.holds(channel)) Seq(body) else Nil
-    try {
-
+    // predicates, so an absent family costs ZERO jobs — not a guard, a
+    // parse and a bucket probe over an empty channel. (The reference's
+    // consumer pays per message; our unit of work is the family fold.)
+    val r = Hl7Wire.route(batch, rawCol)
     if (r.holds("dead")) r.dead.write.mode("overwrite")
       .parquet(s"$stateRoot/dead/router/batch=$batchId")
 
-    // ADT proper is guarded by DeadLetter.adtRules (an unimplemented
-    // trigger or a frame without MRN is a nack); the implied ADT the
-    // reference derives from every ORU^R01/ORM^O01
-    // (IdsOperations.buildAndAddAdtMessage, fromAdtStream=false) joins
-    // the same person/visit fold but fails SILENTLY, as in the reference
-    // — order messages legitimately arrive without patient context.
-    // The payload carries the full visit-op surface (cancel targets,
-    // discharge/pending/merge/swap/move identifiers) so the derived
-    // views ([[visitIntervals]], [[mrnToLive]], [[pendingTransfers]])
-    // re-derive the reference's location/identity state from the
-    // PERSISTED message history alone.
-    val implied = ifHolds("impliedAdt")(r.impliedAdt.filter(
-      col("mrn").isNotNull && col("validFromUs").isNotNull))
-    if (r.holds("adt") || implied.nonEmpty)
-      guardAndFold(r.adt, "adt", DeadLetter.adtRules,
-        clean => (clean +: implied).reduce(_.unionByName(_,
-          allowMissingColumns = true))
-          .select(Seq(col("mrn"), col("validFromUs"), col("sourceMessageId"),
-            when(col("msgType").startsWith("Cancel"),
-              col("eventOccurredDateTimeUs")).as("targetTimeUs"),
-            col("dischargeDateTimeUs").as("dischargeTimeUs")) ++
-            AdtPayload.filterNot(Seq("targetTimeUs", "dischargeTimeUs")
-              .contains).map(col): _*),
-        adtCfg(stateRoot))
+    // A channel's clean rows, guarded and pinned on first use and shared
+    // by every star that reads it. The pinned channel carries an
+    // observation of its reject count, which the first star fold's probe
+    // collects as it fills the cache.
+    val guarded = scala.collection.mutable.LinkedHashMap
+      .empty[Guard, (DataFrame, DataFrame)]
+    val cleanOf = scala.collection.mutable.Map.empty[String, DataFrame]
+    val clean = (channel: String) => cleanOf.getOrElseUpdate(channel,
+      Guards.find(_.channel == channel).fold(r(channel)) { g =>
+        val rejected = g.rules.map(_._2).reduce(_ || _)
+        val pinned = pin(r(channel).observe(g.dead, count_if(rejected).as("n")))
+        val routed = DeadLetter.route(pinned, g.rules)
+        guarded(g) = (pinned, routed.dead)
+        routed.clean
+      })
 
-    // Labs: the WinPath result stream plus the point-of-care /
-    // blood-bank / histopathology / imaging funnel channels union into
-    // ONE interchange shape and one fold — same state dir, one batch
-    // id, no double-fold. Only channels PRESENT in this batch
-    // contribute a branch (and a dead-letter write).
-    def builderGuard(ch: DataFrame, name: String): DataFrame =
-      guard(ch, s"labs_$name", Seq("builder_error" -> col("error").isNotNull))
-    val labMsgs =
-      ifHolds("labOrders")(Hl7Wire.wireToLabMessages(guard(r.labOrders,
-        "labs", Seq("missing_order" -> col("fillerOrderNumber").isNull,
-          "missing_time" -> coalesce(col("observationDateTimeUs"),
-            col("requestedDateTimeUs")).isNull)))) ++
-      ifHolds("ablLabs")(LabFunnel.toLabMessages(
-        builderGuard(r.ablLabs, "abl"))) ++
-      ifHolds("bioConnectLabs")(LabFunnel.toLabMessages(
-        builderGuard(r.bioConnectLabs, "bioconnect"))) ++
-      ifHolds("bankManagerLabs")(LabFunnel.toLabMessages(
-        builderGuard(r.bankManagerLabs, "bankmanager"))) ++
-      ifHolds("coPathLabs")(LabFunnel.coPathToLabMessages(
-        builderGuard(r.coPathLabs, "copath"))) ++
-      ifHolds("imagingLabs")(LabFunnel.imageToLabMessages(
-        builderGuard(r.imagingLabs, "imaging")))
-    if (labMsgs.nonEmpty) foldStar(
-      labMsgs.reduce(_ unionByName _),
-      cfg(stateRoot, "labs", Seq("battery", "labSpecimenNumber"),
-        "statusChangeTimeUs", Seq("epicOrderNumber", "mrn", "results")))
-
-    // ORM^O01 / ORR^O02 order messages carry no results but DO update
-    // order state (the reference's WinPath/CoPath order builders:
-    // number binding, status-change/sample-received times). They fold
-    // into a status side-table keyed like the labs star, so the read
-    // path joins them without risking a null-results overwrite of the
-    // result-bearing fold.
-    if (r.holds("labOrderAcks")) guardAndFold(r.labOrderAcks, "lab_status",
-      Seq("builder_error" -> col("error").isNotNull,
-        "missing_specimen" -> col("labSpecimenNumber").isNull,
-        "missing_time" -> col("statusChangeTimeUs").isNull),
-      _.select(col("battery"), col("labSpecimenNumber"),
-        col("statusChangeTimeUs"), col("sourceMessageId"),
-        col("orderControlId"), col("orderStatus"), col("epicOrderNumber"),
-        col("orderTimeUs"), col("sampleReceivedTimeUs"),
-        col("resultStatus")),
-      cfg(stateRoot, "lab_status", Seq("battery", "labSpecimenNumber"),
-        "statusChangeTimeUs", Seq("orderControlId", "orderStatus",
-          "epicOrderNumber", "orderTimeUs", "sampleReceivedTimeUs",
-          "resultStatus")))
-
-    if (r.holds("flowsheets")) guardAndFold(r.flowsheets, "flowsheets",
-      Seq("missing_visit" -> col("visitNumber").isNull,
-        "missing_type" -> col("interfaceId").isNull,
-        "missing_time" -> col("observationTimeUs").isNull),
-      Hl7Wire.wireToFlowsheetMessages(_)
-        .withColumnRenamed("msgId", "sourceMessageId"),
-      cfg(stateRoot, "flowsheets",
-        Seq("visitId", "observationTypeId", "observationTimeUs"),
-        "updatedTimeUs", Seq("valueType", "numericValue", "stringValue",
-          "dateValue", "unit", "comment")))
-
-    // Conditions: problems (PPR) + allergies (A60 IAM) + infections
-    // (A05 ZIF, behind the serial progress gate) are three funnels into
-    // ONE patient_condition fold — the reference's three condition
-    // factories meeting in PatientConditionController.
-    val probMsgs = ifHolds("problems")(Hl7Wire.wireToConditionMessages(
-      guard(r.problems, "conditions",
-        Seq("missing_mrn" -> col("mrn").isNull,
-          "missing_time" -> col("updatedTimeUs").isNull))))
-    val allerMsgs = ifHolds("allergies")(Hl7Wire.wireToAllergyMessages(
-      guard(r.allergies, "allergies",
-        Seq("invalid_action" -> col("error").isNotNull,
-          "missing_mrn" -> col("mrn").isNull,
-          "missing_time" -> col("updatedTimeUs").isNull)))
-      .drop("reactions"))
-
-    // Infection progress survives restarts the same way the fold state
-    // does — a tiny high-watermark file advanced per batch (the
-    // reference holds it in the factory across a service run,
-    // PatientInfectionFactory.infectionProgress). It is committed only
-    // once the conditions fold holding the gated infections has
-    // persisted: a watermark ahead of the star would make the replay of
-    // a failed fold drop the batch's infections as already seen.
-    val progressDir = s"$stateRoot/conditions"
-    val (infMsgs, infProgress) = if (!r.holds("infections")) (Nil, None) else {
-      val infStart = VersionedDir.read(progressDir, "_INF_PROGRESS")
-        .fold(0L)(_.toLong)
-      val gatedInf = mat(Hl7Wire.infectionGate(
-        r.infections.filter(col("mrn").isNotNull),
-        infStart, Seq("sourceMessageId", "infectionIdx")))
-      val newProgress = gatedInf
-        .agg(max(col("addedTimeUs"))).collect().headOption
-        .flatMap(rw => Option(rw.get(0)).map(_.asInstanceOf[Long]))
-      (Seq(Hl7Wire.wireToInfectionMessages(gatedInf)),
-        newProgress.filter(_ > infStart))
+    for (star <- Stars) {
+      val present = star.inputs.filter(i => r.holds(i.channel))
+      if (present.nonEmpty) {
+        val cfg = star.cfg(stateRoot)
+        val (parts, commits) = present.map(i =>
+          i.messages(clean(i.channel), cfg.stateDir, pin)).unzip
+        val msgs = parts.reduce(_ unionByName _)
+        // valid-time fold, or the stored-stamped bitemporal twin — through
+        // the deployment's StarSink (parquet+manifest or RDBMS MERGE)
+        if (!bitemporal) sink.fold(msgs, batchId, cfg)
+        else sink.foldBitemporal(
+          msgs.withColumn("storedFromUs", lit(batchId)), batchId, cfg)
+        commits.foreach(_())
+      }
     }
 
-    // ConditionVisits link table: problems and allergies (NOT
-    // infections) with a visit save an insert-once condition↔visit link
-    // (ref core/.../PatientConditionController.java:337-348 —
-    // savePatientConditionHospitalVisitLink inserts only when no row
-    // exists, never updates, never deletes; links outlive a condition
-    // tombstone). Fold shape: key = the whole link tuple, constant
-    // payload — F6 run-coalescing makes every re-sighting a no-op, so
-    // the live view IS the distinct pair set, permutation-invariant.
-    val linkMsgs = probMsgs ++ allerMsgs
-    if (linkMsgs.nonEmpty) foldStar(
-      linkMsgs.reduce(_ unionByName _)
-        .filter(col("visitNumber").isNotNull)
-        .select(col("mrn"), col("conditionTypeId"), col("internalId"),
-          col("visitNumber"), col("updatedTimeUs"),
-          col("msgId").as("sourceMessageId"), lit(true).as("linked")),
-      conditionVisitsCfg(stateRoot))
-
-    val condMsgs = linkMsgs.map(_.drop("visitNumber")) ++ infMsgs
-    if (condMsgs.nonEmpty) foldStar(
-      condMsgs.reduce(_ unionByName _)
-        .withColumnRenamed("msgId", "sourceMessageId"),
-      conditionsCfg(stateRoot))
-    infProgress.foreach(p =>
-      VersionedDir.commit(progressDir, "_INF_PROGRESS", p.toString))
-
-    val consultClean = ifHolds("consults")(
-      guardAndFold(r.consults, "consults",
-        Seq("missing_id" -> col("epicConsultId").isNull,
-          "missing_time" -> col("statusChangeTimeUs").isNull),
-        _.select(col("epicConsultId"), col("statusChangeTimeUs"),
-          col("sourceMessageId"), col("mrn"), col("visitNumber"),
-          col("consultationType"), col("cancelled"),
-          col("closedDueToDischarge")),
-        cfg(stateRoot, "consults", Seq("epicConsultId"),
-          "statusChangeTimeUs", Seq("mrn", "visitNumber",
-            "consultationType", "cancelled", "closedDueToDischarge"))))
-
-    // Advance decisions (O20's second half): same ORM shape, own star
-    // (ref core/.../AdvanceDecisionController.java).
-    val advClean = ifHolds("advanceDecisions")(
-      guardAndFold(r.advanceDecisions, "advance_decisions",
-        Seq("missing_id" -> col("advanceDecisionNumber").isNull,
-          "missing_time" -> col("statusChangeTimeUs").isNull),
-        _.select(col("advanceDecisionNumber"), col("statusChangeTimeUs"),
-          col("sourceMessageId"), col("mrn"), col("visitNumber"),
-          col("careCode"), col("typeName"), col("requestedTimeUs"),
-          col("cancelled"), col("closedDueToDischarge")),
-        cfg(stateRoot, "advance_decisions", Seq("advanceDecisionNumber"),
-          "statusChangeTimeUs", Seq("mrn", "visitNumber", "careCode",
-            "typeName", "requestedTimeUs", "cancelled",
-            "closedDueToDischarge"))))
-
-    // O18: consult + advance-decision NTE questions → ONE
-    // question/answer star keyed by (parent table, parent id, question
-    // text) — the reference dedups question rows by text and keys
-    // answers by (question, parent request), QuestionController; newest
-    // answer wins under the kernel's F7.
-    val qMsgs = consultClean.map(Hl7Wire.wireToQuestionMessages(_)) ++
-      advClean.map(Hl7Wire.wireToQuestionMessages(_,
-        parentTable = "ADVANCE_DECISION",
-        parentIdCol = "advanceDecisionNumber"))
-    if (qMsgs.nonEmpty) foldStar(
-      qMsgs.reduce(_ unionByName _)
-        .withColumnRenamed("msgId", "sourceMessageId"),
-      cfg(stateRoot, "questions",
-        Seq("parentTable", "parentId", "questionText"), "updatedTimeUs",
-        Seq("answer")))
-    } finally mat.release()
+    // A guard's rejects go to dead/<name>/batch=N. A star fold counted
+    // them as it filled the channel's cache; a batch with none writes no
+    // batch dir, and an earlier run's is removed (the family's dead/<name>
+    // dir stays, as a write leaves it). A sink that skipped a committed
+    // batch filled no cache: write as ever.
+    for ((g, (pinned, dead)) <- guarded) {
+      val dir = new org.apache.hadoop.fs.Path(
+        s"$stateRoot/dead/${g.dead}/batch=$batchId")
+      val rejects = CacheBridge.observed(pinned).flatMap(_.get(g.dead))
+        .map(_.getLong(0))
+      if (!rejects.contains(0L)) dead.write.mode("overwrite").parquet(dir.toString)
+      else {
+        val fs = dir.getFileSystem(
+          batch.sparkSession.sparkContext.hadoopConfiguration)
+        fs.delete(dir, true)
+        fs.mkdirs(dir.getParent)
+      }
+    }
   }
-
-  /** The visit-op payload persisted in the `adt` star — everything the
-    * derived views need to re-derive location/identity/pending state
-    * from the message history alone.
-    */
-  private val AdtPayload = Seq("msgType", "patientClass",
-    "fullLocationString", "visitNumber", "previousMrn",
-    "previousVisitNumber", "otherVisitNumber", "pendingDestination",
-    "targetTimeUs", "dischargeTimeUs")
-
-  private def adtCfg(stateRoot: String) =
-    cfg(stateRoot, "adt", Seq("mrn"), "validFromUs", AdtPayload)
-
-  private def conditionsCfg(stateRoot: String) =
-    cfg(stateRoot, "conditions", Seq("mrn", "conditionTypeId", "internalId"),
-      "updatedTimeUs", Seq("status", "severity", "onsetDate", "comment",
-        "action"))
-
-  private def conditionVisitsCfg(stateRoot: String) =
-    cfg(stateRoot, "condition_visits",
-      Seq("mrn", "conditionTypeId", "internalId", "visitNumber"),
-      "updatedTimeUs", Seq("linked"))
 
   /** Derived read views over the persisted ADT star — the Spark-first
     * counterpart of the reference's imperatively-maintained
@@ -433,7 +468,7 @@ object WirePipeline {
               bitemporal: Boolean = false,
               sink: StarSink = ManifestStarSink)
       : Option[DerivedState] = {
-    val c = adtCfg(stateRoot)
+    val c = starCfg("adt", stateRoot)
     val hist =
       if (bitemporal) btHistory(spark, c, sink)
       else sink.read(spark, c, "history")
@@ -513,7 +548,7 @@ object WirePipeline {
                      stateRoot: String,
                      bitemporal: Boolean = false,
                      sink: StarSink = ManifestStarSink): Option[DataFrame] = {
-    val c = conditionsCfg(stateRoot)
+    val c = starCfg("conditions", stateRoot)
     (if (bitemporal) btLive(spark, c, sink)
      else sink.read(spark, c, "live"))
       .map(_.filter(coalesce(col("action") =!= "DE", lit(true))))
@@ -532,7 +567,7 @@ object WirePipeline {
                       stateRoot: String,
                       bitemporal: Boolean = false,
                       sink: StarSink = ManifestStarSink): Option[DataFrame] = {
-    val c = conditionVisitsCfg(stateRoot)
+    val c = starCfg("condition_visits", stateRoot)
     (if (bitemporal) btLive(spark, c, sink)
      else sink.read(spark, c, "live"))
       .map(_.select(col("mrn"), col("conditionTypeId"),

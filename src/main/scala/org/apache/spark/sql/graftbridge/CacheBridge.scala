@@ -1,6 +1,7 @@
 package org.apache.spark.sql.graftbridge
 
-import org.apache.spark.sql.{classic, DataFrame}
+import org.apache.spark.sql.{classic, DataFrame, Row}
+import org.apache.spark.sql.execution.CollectMetricsExec
 import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.storage.StorageLevel
 
@@ -46,4 +47,17 @@ object CacheBridge {
       case None => df
     }
   }
+
+  /** The metrics `Dataset.observe` collected in the plan a [[pinned]]
+    * leaf caches, by observation name, once that cache is built: the
+    * action that filled it collected them, so reading them runs nothing.
+    * None while the cache is unbuilt. (An `Observation` cannot report
+    * them: it completes only for a node in the action's own logical
+    * plan, and a cached plan sits below the `InMemoryRelation` leaf.)
+    */
+  def observed(pinned: DataFrame): Option[Map[String, Row]] =
+    pinned.asInstanceOf[classic.Dataset[_]].logicalPlan.collectFirst {
+      case r: InMemoryRelation => r.cacheBuilder
+    }.filter(_.isCachedColumnBuffersLoaded)
+      .map(b => CollectMetricsExec.collect(b.cachedPlan))
 }

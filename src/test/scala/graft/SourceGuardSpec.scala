@@ -65,6 +65,27 @@ class SourceGuardSpec extends AnyFunSuite {
     assert(src.contains("DeadLetter.adtRules"))
   }
 
+  test("one guard site and one star-fold site in WirePipeline") {
+    // the families are rows of a table the fold loops over: a guard or a
+    // star fold reached through a helper called once per family is the
+    // hand-written chain again
+    val src = new String(Files.readAllBytes(
+      Paths.get("src/main/scala/graft/streaming/WirePipeline.scala")), UTF_8)
+    def sites(call: String): Int = call.r.findAllIn(src).size
+    // how often the def around the first `call` is itself called
+    def callsOfEnclosingDef(call: String): Int = {
+      val at = call.r.findFirstMatchIn(src).get.start
+      val name = "\\bdef (\\w+)".r.findAllMatchIn(src.substring(0, at))
+        .toList.last.group(1)
+      sites(s"\\b$name\\(") - 1
+    }
+    assert(sites("DeadLetter\\.route\\(") == 1)
+    assert(sites("\\bsink\\.fold\\(") == 1)
+    assert(sites("\\bsink\\.foldBitemporal\\(") == 1)
+    for (call <- Seq("DeadLetter\\.route\\(", "\\bsink\\.fold\\("))
+      assert(callsOfEnclosingDef(call) == 1, call)
+  }
+
   test("one fold body: only the star and wire folds pin frames") {
     // every sink folds through StarPipeline.foldWith, which pins the
     // batch, probes its buckets and runs the kernel step; a second body

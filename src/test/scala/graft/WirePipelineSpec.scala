@@ -365,6 +365,15 @@ class WirePipelineSpec extends SparkSpecBase {
     assert(replayed == expect)
   }
 
+  test("replaying dead letters from an unknown source fails, naming the " +
+      "known sources") {
+    val root = Files.createTempDirectory("wire_replay_source").toString
+    val e = intercept[IllegalArgumentException](WirePipeline
+      .replayDeadLetters(spark, root, "raw", "adts", Seq(1L), 2L))
+    assert(Seq("adts", "router", "adt", "labs_bioconnect",
+      "advance_decisions").forall(e.getMessage.contains), e.getMessage)
+  }
+
   test("bitemporal mode: wire folds stamp the stored axis; current views " +
       "match the valid-time pipeline; old beliefs remain answerable") {
     val adt = (n: Int, mrn: String, loc: String, dtm: String) =>
@@ -657,6 +666,180 @@ class WirePipelineSpec extends SparkSpecBase {
       Seq("BC01"))
   }
 
+  /** For each family guard, one frame its rules reject, named `dead dir
+    * → (frame, its dead rows as (sourceMessageId, reason))`; fixtures
+    * after `Hl7WireSpec` and `LabFunnelSpec`. */
+  private val guardRejects: Map[String, (String, Seq[(String, String)])] = Map(
+    "adt" -> ("MSH|^~\\&|EPIC|UCLH|||20240801080000||ADT^A01|G1|P|2.4\r" +
+      "PID|1||^^^MRN^MRN\r" + pv1("V9"), Seq("G1" -> "missing_mrn")),
+    "labs" -> ("MSH|^~\\&|WP|UCLH|||20240801090000||ORU^R01|G2|P|2.4\r" +
+      "OBR|1|||FBC^FBC^WinPath|||20240801090000\r" +
+      "OBX|1|NM|HGB||13.5|g/dL|||||F", Seq("G2" -> "missing_order")),
+    "labs_abl" -> (Seq(
+      "MSH|^~\\&|ABL90 FLEX Plus|UCLH|||20240801||ORU^R30|G3|P|2.4",
+      "OBR|1|1^A|2^B|VBG^Gas|||20240801115500|||||||20240801115800|" +
+        "Proficiency Testing",
+      "OBX|1|NM|pH^pH||7.4|||||F").mkString("\r"),
+      Seq("G3" -> "builder_error")),
+    "labs_bioconnect" -> (Seq(
+      "MSH|^~\\&|BIO-CONNECT|UCLH|||20240801120000||ORU^R01|G4|P|2.4",
+      "ORC|RE",
+      "OBR|1|P1^X|F1^Y|GLU^Glucose|||20240801115500|||||||20240801115800",
+      "OBX|1|NM|GLU^Glucose||5.1|||||F",
+      "OBX|2|NM|K^Potassium||4.0|||||F").mkString("\r"),
+      Seq("G4" -> "builder_error")),
+    // two order groups: each group's order is a nack
+    "labs_bankmanager" -> (Seq(
+      "MSH|^~\\&|BM|UCLH|||20240801120000||ORU^R01|G5|P|2.4",
+      "ORC|RE|EP1",
+      "OBR|1|EP1|SPEC1|PROF1^Profile^^Profiles|||20240801100000",
+      "OBX|1|ST|ABO^Blood group||A Pos||||||F",
+      "OBR|2|EP1|SPEC2|PROF1^Profile^^Profiles|||20240801100000",
+      "OBX|1|ST|ABO^Blood group||A Pos||||||F").mkString("\r"),
+      Seq("G5" -> "builder_error", "G5" -> "builder_error")),
+    "labs_copath" -> (Seq(
+      "MSH|^~\\&|Bridges|UCLH|||20240801||ORU^R01|G6|P|2.4",
+      "ORC|XX|UH24-7|UH24-7||CM",
+      "OBR|1|UH24-7|UH24-7|C^Cyto^CPEAP|||20240801100000",
+      "OBX|1|TX|UH24-7^^CPEAP||Cells seen||||||F").mkString("\r"),
+      Seq("G6_01" -> "builder_error")),
+    "labs_imaging" -> (Seq(
+      "MSH|^~\\&|IMG_RESULT|UCLH|||20240801||ORU^R01|G7|P|2.4",
+      "ORC|NW|IMG9|ACC9",
+      "OBR|1|IMG9|ACC9|XR^Xray|||20240801100000|||||||||||||||" +
+        "20240801113000|||F",
+      "OBX|1|TX|GDT^^||All normal||||||F").mkString("\r"),
+      Seq("G7_01" -> "builder_error")),
+    // ORC-2 and OBR-2 disagree on the epic order number
+    "lab_status" -> (Seq(
+      "MSH|^~\\&|EPIC|EPIC|||20240801120000||ORM^O01|G8|P|2.4",
+      "ORC|NW|94000010|123456789||||||20240801115000",
+      "OBR|1|94000099|123456789|FBC^FBC^WinPath|||20240801114500")
+      .mkString("\r"), Seq("G8_01" -> "builder_error")),
+    // no PV1: no visit to hang the observation on
+    "flowsheets" -> ("MSH|^~\\&|CV|Vitals|||20240801000000||ORU^R01|G9|P|2.4" +
+      "\rOBX|1|NM|5^HR||80|bpm|||||F", Seq("G9$01" -> "missing_visit")),
+    "conditions" -> ("MSH|^~\\&|EPIC|PL|||20240801000000|X|PPR^PC1|G10|P|2.4" +
+      "\rPRB|AD|20240801000000|A^B^C|9", Seq("G10" -> "missing_mrn")),
+    "allergies" -> ("MSH|^~\\&|EPIC|UCLH|||20240801110000||ADT^A60|G11|P|2.4" +
+      "\rEVN|A60|20240801110000\rPID|1||M4^^^MRN^MRN\r" +
+      "IAM|2|DA^Drug|2^ASPIRIN^ALG||R|Q|772^EPIC",
+      Seq("G11" -> "invalid_action")),
+    "consults" -> ("MSH|^~\\&|EPIC|Consult Orders|||20240801000000|X|ORM^O01" +
+      "|G12|P|2.4\rPID|1||M2^^^MRN^MRN\rORC|NW||||||||20240801000000",
+      Seq("G12" -> "missing_id")),
+    "advance_decisions" -> ("MSH|^~\\&|EPIC|DNACPR|||20240801000000|X|" +
+      "ORM^O01|G13|P|2.4\rPID|1||M2^^^MRN^MRN\rORC|NW||||||||20240801000000",
+      Seq("G13" -> "missing_id")))
+
+  /** One frame per family that every guard passes, named `star → (frame,
+    * the MSH-10 its star rows carry)`; the five lab systems share the
+    * labs star. */
+  private val guardClean: Seq[(String, String, String)] = Seq(
+    ("adt", "K1", "MSH|^~\\&|EPIC|UCLH|||20240801080000||ADT^A01|K1|P|2.4\r" +
+      "PID|1||M1^^^MRN^MRN\r" + pv1("V1")),
+    ("labs", "K2", "MSH|^~\\&|WP|UCLH|||20240801090000||ORU^R01|K2|P|2.4\r" +
+      "PID|1||M2^^^MRN^MRN\r" + pv1("V2") + "\r" +
+      "OBR|1||ORD1^LAB|FBC^FBC^WinPath|||20240801090000\r" +
+      "OBX|1|NM|HGB||13.5|g/dL|||||F"),
+    ("labs", "K3", Seq(
+      "MSH|^~\\&|ABL90 FLEX Plus|UCLH|||20240801120000||ORU^R30|K3|P|2.4",
+      "PID|1||40800000^^^MRN^MRN",
+      "OBR|1|12345^A|54321^B|VBG^Venous blood gas|||20240801115500|||||||" +
+        "20240801115800|Venous blood&Blood venous",
+      "OBX|1|NM|pH^pH^ABL|1|7.35|||N|||F|||20240801115900").mkString("\r")),
+    ("labs", "K4", Seq(
+      "MSH|^~\\&|BIO-CONNECT|UCLH|||20240801120000||ORU^R01|K4|P|2.4",
+      "PID|1||40800000^^^MRN^MRN",
+      "ORC|RE",
+      "OBR|1|PLACER9^X|FILLER1^Y|GLU^Glucose|||20240801115500|||||||" +
+        "20240801115800",
+      "OBX|1|NM|GLU^Glucose^BC||5.1|mmol/L||N|||F|||20240801115900")
+      .mkString("\r")),
+    ("labs", "K5", Seq(
+      "MSH|^~\\&|BM|UCLH|||20240801120000||ORU^R01|K5|P|2.4",
+      "PID|1||40800000^^^MRN^MRN",
+      "ORC|RE|EP123",
+      "OBR|1|EP123|SPEC77|PROF1^Profile^^Profiles|||20240801100000|||||||||" +
+        "||||||20240801113000",
+      "OBX|1|ST|ABO^Blood group||A Pos||||||F").mkString("\r")),
+    ("labs", "K6", "MSH|^~\\&|Co-Path|UCLH|||20240801130000||ORU^R01|K6|P|2.4" +
+      "\rPID|1||P1^^^MRN^MRN\rORC|RE|CP100|SPEC100^CoPathPlus||CM\r" +
+      "OBR|1|CP100|SPEC100^CoPathPlus|UH^Histology^CPEAP|||20240801120000\r" +
+      "OBX|1|TX|TX^Report^CoPath||Malignant cells seen||||||F"),
+    ("labs", "K7", "MSH|^~\\&|IMG_RESULT|UCLH|||20240801140000||ORU^R01|K7|P|" +
+      "2.4\rPID|1||P2^^^MRN^MRN\rORC|RE|IMG200|ACC200||CM\r" +
+      "OBR|1|IMG200|ACC200|XR^Chest XRay^PACS|||20240801130000\r" +
+      "OBX|1|TX|GDT^^PACS||No acute findings||||||F"),
+    ("lab_status", "K8", "MSH|^~\\&|WP|UCLH|||20240801120000||ORR^O02|K8|P|" +
+      "2.4\rPID|1||M2^^^MRN^MRN\rORC|NA|94000010|123456789||||||" +
+      "20240801113000\rOBR|1|94000010|123456789|FBC^F^WinPath|||" +
+      "20240801090000"),
+    ("flowsheets", "K9", Seq(
+      "MSH|^~\\&|CAREVUE|Vitals|||20240801120000||ORU^R01|K9|P|2.4",
+      "PID|1||40800000^^^MRN^MRN",
+      (Seq("PV1", "1", "I", "T03") ++ Seq.fill(15)("") :+ "777333")
+        .mkString("|"),
+      "OBX|1|NM|5^HEART RATE||92|bpm|||||F|||20240801115500").mkString("\r")),
+    ("conditions", "K10", "MSH|^~\\&|EPIC|Problem List|||20240801100000|X|" +
+      "PPR^PC1|K10|P|2.4\rPID|1||M3^^^MRN^MRN\r" +
+      "PRB|AD|20240801100000|C1^Asthma^I10UK|700|||20240801100000"),
+    ("conditions", "K11", "MSH|^~\\&|EPIC|UCLH|||20240801110000||ADT^A60|K11|" +
+      "P|2.4\rEVN|A60|20240801110000\rPID|1||M4^^^MRN^MRN\r" +
+      "IAM|1|DA^Drug|1^PENICILLIN^ALG|SV^Severe|RASH|A|771^EPIC" +
+      "||||20230115||20240801110000||||Active"),
+    ("consults", "K12", "MSH|^~\\&|EPIC|Consult Orders|||20240801120000|X|" +
+      "ORM^O01|K12|P|2.4\rPID|1||M2^^^MRN^MRN\r" + pv1("V2") + "\r" +
+      "ORC|NW|9001^EPC|||||||20240801120000"),
+    ("advance_decisions", "K13", Seq(
+      "MSH|^~\\&|EPIC|DNACPR|||20240801140020|OP9|ORM^O01|K13|P|2.4",
+      "PID|1||40800000^^^MRN^MRN",
+      "ORC|NW|555777^EPC|||||||20240801140000",
+      (Seq("OBR", "1", "555777^EPC", "", "COD4^^^^DNACPR decision") ++
+        Seq.fill(31)("") ++ Seq("20240801115500") ++ Seq.fill(7)("") :+
+        "COD4").mkString("|")).mkString("\r")))
+
+  /** MSH-10 of every row in a star's live table (a lab builder's
+    * `_NN` / a flowsheet's `$NN` sub-id cut off). */
+  private def starIds(root: String, star: String): Set[String] =
+    StarPipeline.readState(spark,
+      StarPipeline.Config(s"$root/$star", Nil, "", "", Nil), "live")
+      .fold(Set.empty[String])(_.select("sourceMessageId").as[String]
+        .collect().map(_.takeWhile(c => c != '_' && c != '$')).toSet)
+
+  test("every family guard dead-letters exactly the frame it rejects, " +
+      "under its own name, and passes the clean frames to their stars") {
+    val root = Files.createTempDirectory("wire_guards").toString
+    WirePipeline.foldBatch((guardRejects.values.map(_._1).toSeq ++
+      guardClean.map(_._3)).toDF("raw"), 4L, "raw", root)
+    for ((name, (_, want)) <- guardRejects) {
+      val got = spark.read.parquet(s"$root/dead/$name/batch=4")
+        .select("sourceMessageId", "reason").as[(String, String)]
+        .collect().toSeq.sorted
+      assert(got == want.sorted, name)
+    }
+    for ((star, frames) <- guardClean.groupBy(_._1))
+      assert(frames.map(_._2).toSet.subsetOf(starIds(root, star)), star)
+  }
+
+  test("a guard that rejects nothing leaves no dead-letter batch dir, " +
+      "and a refold of the batch id removes an earlier run's") {
+    val root = Files.createTempDirectory("wire_guards_clean").toString
+    def batchDirs(id: Long) = guardRejects.keys.filter(name =>
+      Files.exists(java.nio.file.Paths.get(s"$root/dead/$name/batch=$id")))
+    WirePipeline.foldBatch(guardClean.map(_._3).toDF("raw"), 5L, "raw", root)
+    assert(batchDirs(5L).isEmpty, batchDirs(5L))
+    for ((star, frames) <- guardClean.groupBy(_._1))
+      assert(frames.map(_._2).toSet.subsetOf(starIds(root, star)), star)
+
+    // batch 6 first runs with every reject, then replays with none
+    val all = guardRejects.values.map(_._1).toSeq ++ guardClean.map(_._3)
+    WirePipeline.foldBatch(all.toDF("raw"), 6L, "raw", root)
+    assert(batchDirs(6L).toSet == guardRejects.keySet)
+    WirePipeline.foldBatch(guardClean.map(_._3).toDF("raw"), 6L, "raw", root)
+    assert(batchDirs(6L).isEmpty, batchDirs(6L))
+  }
+
   private val adtOnly = Seq(
     "MSH|^~\\&|EPIC|UCLH|||20240701080000||ADT^A01|J1|P|2.4\r" +
       "PID|1||M1^^^MRN^MRN\r" + pv1("V1"),
@@ -692,13 +875,15 @@ class WirePipelineSpec extends SparkSpecBase {
     // A second fold reads its touched buckets with the schemas its steps
     // know; inferring them from the files cost 15 and 62 jobs. Each star
     // fold writes its tables in one write, and the router and bucket
-    // probes are shuffle-free observations: 9 and 24 jobs.
+    // probes are shuffle-free observations: 9 and 24 jobs. A guard that
+    // rejects nothing writes no dead-letter batch (the mixed batch's labs,
+    // conditions and consults guards): 9 and 21.
     val ((adtJobs, adtAgain), (mixedJobs, mixedAgain)) =
       (jobs(adtOnly), jobs(mixed))
     assert(adtJobs <= 9, adtJobs)
-    assert(mixedJobs <= 24, mixedJobs)
+    assert(mixedJobs <= 21, mixedJobs)
     assert(adtAgain <= 9, adtAgain)
-    assert(mixedAgain <= 24, mixedAgain)
+    assert(mixedAgain <= 21, mixedAgain)
   }
 
   test("a fold leaves its session's conf as it found it") {
