@@ -99,9 +99,8 @@ object WirePipeline {
     * drop the batch's infections as already seen. A row without MRN
     * drops silently.
     */
-  private object Infections extends Input("infections",
-      Hl7Wire.wireToInfectionMessages(_)
-        .withColumnRenamed("msgId", "sourceMessageId")) {
+  private object Infections
+      extends Input("infections", Hl7Wire.wireToInfectionMessages) {
     override def messages(parsed: DataFrame, starDir: String,
                           pin: DataFrame => DataFrame) = {
       val start = VersionedDir.read(starDir, "_INF_PROGRESS").fold(0L)(_.toLong)
@@ -118,7 +117,8 @@ object WirePipeline {
 
   /** A star: its dir under the state root, its kernel config (natural
     * key, event time and payload; the tie is `sourceMessageId`), and
-    * its inputs, whose messages union into one fold per batch. */
+    * its inputs, whose messages, cut to those columns, union into one
+    * fold per batch. */
   private final case class Star(name: String, key: Seq[String],
                                 validFrom: String, payload: Seq[String],
                                 inputs: Input*) {
@@ -138,18 +138,11 @@ object WirePipeline {
   private val Stars: Seq[Star] = {
     def in(channel: String)(toMsgs: DataFrame => DataFrame) =
       new Input(channel, toMsgs)
-    def renamed(df: DataFrame) =
-      df.withColumnRenamed("msgId", "sourceMessageId")
-    val adtMsgs = (df: DataFrame) => df.select(Seq(col("mrn"),
-        col("validFromUs"), col("sourceMessageId"),
-        when(col("msgType").startsWith("Cancel"),
-          col("eventOccurredDateTimeUs")).as("targetTimeUs"),
-        col("dischargeDateTimeUs").as("dischargeTimeUs")) ++
-      AdtPayload.filterNot(Seq("targetTimeUs", "dischargeTimeUs").contains)
-        .map(col): _*)
-    val problems = Hl7Wire.wireToConditionMessages(_)
-    val allergies = Hl7Wire.wireToAllergyMessages(_: DataFrame)
-      .drop("reactions")
+    val adtMsgs = (df: DataFrame) => df.withColumn("targetTimeUs", when(
+        col("msgType").startsWith("Cancel"), col("eventOccurredDateTimeUs")))
+      .withColumn("dischargeTimeUs", col("dischargeDateTimeUs"))
+    val (problems, allergies) = (Hl7Wire.wireToConditionMessages _,
+      Hl7Wire.wireToAllergyMessages _)
     // ConditionVisits link table: problems and allergies (NOT
     // infections) with a visit save an insert-once condition↔visit link
     // (ref core/.../PatientConditionController.java:337-348 —
@@ -158,11 +151,8 @@ object WirePipeline {
     // tombstone). Fold shape: key = the whole link tuple, constant
     // payload — F6 run-coalescing makes every re-sighting a no-op, so
     // the live view IS the distinct pair set, permutation-invariant.
-    val links = (df: DataFrame) => df.filter(col("visitNumber").isNotNull)
-      .select(col("mrn"), col("conditionTypeId"), col("internalId"),
-        col("visitNumber"), col("updatedTimeUs"),
-        col("msgId").as("sourceMessageId"), lit(true).as("linked"))
-    val condition = (df: DataFrame) => renamed(df.drop("visitNumber"))
+    val links = (df: DataFrame) =>
+      df.filter(col("visitNumber").isNotNull).withColumn("linked", lit(true))
     Seq(
       // ADT proper is guarded; the implied ADT the reference derives
       // from every ORU^R01/ORM^O01 (IdsOperations.buildAndAddAdtMessage,
@@ -196,23 +186,18 @@ object WirePipeline {
         "statusChangeTimeUs", Seq("orderControlId", "orderStatus",
           "epicOrderNumber", "orderTimeUs", "sampleReceivedTimeUs",
           "resultStatus"),
-        in("labOrderAcks")(_.select(col("battery"), col("labSpecimenNumber"),
-          col("statusChangeTimeUs"), col("sourceMessageId"),
-          col("orderControlId"), col("orderStatus"), col("epicOrderNumber"),
-          col("orderTimeUs"), col("sampleReceivedTimeUs"),
-          col("resultStatus")))),
+        in("labOrderAcks")(identity)),
       Star("flowsheets", Seq("visitId", "observationTypeId",
           "observationTimeUs"), "updatedTimeUs", Seq("valueType",
           "numericValue", "stringValue", "dateValue", "unit", "comment"),
-        in("flowsheets")(df => renamed(Hl7Wire.wireToFlowsheetMessages(df)))),
+        in("flowsheets")(Hl7Wire.wireToFlowsheetMessages)),
       // problems (PPR) + allergies (A60 IAM) + gated infections (A05 ZIF):
       // the reference's three condition factories meeting in
       // PatientConditionController
       Star("conditions", Seq("mrn", "conditionTypeId", "internalId"),
         "updatedTimeUs", Seq("status", "severity", "onsetDate", "comment",
           "action"),
-        in("problems")(problems andThen condition),
-        in("allergies")(allergies andThen condition), Infections),
+        in("problems")(problems), in("allergies")(allergies), Infections),
       Star("condition_visits",
         Seq("mrn", "conditionTypeId", "internalId", "visitNumber"),
         "updatedTimeUs", Seq("linked"),
@@ -221,20 +206,13 @@ object WirePipeline {
       Star("consults", Seq("epicConsultId"), "statusChangeTimeUs",
         Seq("mrn", "visitNumber", "consultationType", "cancelled",
           "closedDueToDischarge"),
-        in("consults")(_.select(col("epicConsultId"),
-          col("statusChangeTimeUs"), col("sourceMessageId"), col("mrn"),
-          col("visitNumber"), col("consultationType"), col("cancelled"),
-          col("closedDueToDischarge")))),
+        in("consults")(identity)),
       // O20's second half: same ORM shape, own star
       // (ref core/.../AdvanceDecisionController.java)
       Star("advance_decisions", Seq("advanceDecisionNumber"),
         "statusChangeTimeUs", Seq("mrn", "visitNumber", "careCode",
           "typeName", "requestedTimeUs", "cancelled", "closedDueToDischarge"),
-        in("advanceDecisions")(_.select(col("advanceDecisionNumber"),
-          col("statusChangeTimeUs"), col("sourceMessageId"), col("mrn"),
-          col("visitNumber"), col("careCode"), col("typeName"),
-          col("requestedTimeUs"), col("cancelled"),
-          col("closedDueToDischarge")))),
+        in("advanceDecisions")(identity)),
       // O18: consult + advance-decision NTE questions → ONE
       // question/answer star keyed by (parent table, parent id, question
       // text) — the reference dedups question rows by text and keys
@@ -242,10 +220,10 @@ object WirePipeline {
       // answer wins under the kernel's F7.
       Star("questions", Seq("parentTable", "parentId", "questionText"),
         "updatedTimeUs", Seq("answer"),
-        in("consults")(df => renamed(Hl7Wire.wireToQuestionMessages(df))),
-        in("advanceDecisions")(df => renamed(Hl7Wire.wireToQuestionMessages(
-          df, parentTable = "ADVANCE_DECISION",
-          parentIdCol = "advanceDecisionNumber")))))
+        in("consults")(Hl7Wire.wireToQuestionMessages(_)),
+        in("advanceDecisions")(Hl7Wire.wireToQuestionMessages(_,
+          parentTable = "ADVANCE_DECISION",
+          parentIdCol = "advanceDecisionNumber"))))
   }
 
   private def starCfg(star: String, stateRoot: String) =
@@ -398,7 +376,11 @@ object WirePipeline {
         val cfg = star.cfg(stateRoot)
         val (parts, commits) = present.map(i =>
           i.messages(clean(i.channel), cfg.stateDir, pin)).unzip
-        val msgs = parts.reduce(_ unionByName _)
+        // the wire funnels name the message id `msgId`, the kernel's tie
+        // `sourceMessageId`; the kernel keeps the config's columns alone
+        val msgs = parts.map(_.withColumnRenamed("msgId", cfg.tieCol)
+          .select((cfg.keyCols ++ Seq(cfg.validFromUsCol, cfg.tieCol) ++
+            cfg.payloadCols).map(col): _*)).reduce(_ unionByName _)
         // valid-time fold, or the stored-stamped bitemporal twin — through
         // the deployment's StarSink (parquet+manifest or RDBMS MERGE)
         if (!bitemporal) sink.fold(msgs, batchId, cfg)
