@@ -72,7 +72,8 @@ class SourceGuardSpec extends AnyFunSuite {
     val src = new String(Files.readAllBytes(
       Paths.get("src/main/scala/graft/streaming/WirePipeline.scala")), UTF_8)
     def sites(call: String): Int = call.r.findAllIn(src).size
-    // how often the def around the first `call` is itself called
+    // how often the def around the first `call` (the nearest `def`
+    // before it) is itself called
     def callsOfEnclosingDef(call: String): Int = {
       val at = call.r.findFirstMatchIn(src).get.start
       val name = "\\bdef (\\w+)".r.findAllMatchIn(src.substring(0, at))
