@@ -1679,7 +1679,7 @@ object SparkEntry {
 
   /** q272/q275 shared FIM chain: the seeded 90% draw, both salted
     * cut hashes, and the exact rebuilt PSM strings (fixed separators
-    * — concat_ws is NOT portable: DuckDB stringifies an empty list
+    * — concat_ws is NOT portable, as DuckDB stringifies an empty list
     * slice to NULL and concat_ws skips it, Spark keeps ''). Ends at
     * `fdoc` (doc_id, fim, n_prefix, n_middle, n_suffix, text).
     */
@@ -2010,15 +2010,14 @@ object SparkEntry {
     "q21_minhash_lsh" -> ((s, dir) => {
       Dedup.minhashLsh(t(s, dir, "documents"), "doc_id", "text",
           shingleN = 2, numPerm = 64, bands = 8,
-          estThreshold = 0.125, maxBucketSize = 100, portable = true)
+          estThreshold = 0.125, maxBucketSize = 100)
         .orderBy(col("est_jaccard").desc, col("doc_a"), col("doc_b"))
         .limit(500)
     }),
 
     // ---- dedup: SimHash signatures (portable-hash oracle) -----------
     "q22_simhash" -> ((s, dir) => {
-      Dedup.simhashSigs(t(s, dir, "documents"), "doc_id", "text",
-          portable = true)
+      Dedup.simhashSigs(t(s, dir, "documents"), "doc_id", "text")
         .orderBy(col("doc_id"))
     }),
 
@@ -2132,8 +2131,7 @@ object SparkEntry {
     "q33_ann_lsh" -> ((s, dir) => {
       val em = t(s, dir, "embeddings")
       Ann.lshBucketTopK(em.filter(col("vec_id") < 8), em,
-          "vec_id", "embedding", dim = 64, nPlanes = 8, k = 5,
-          portable = true)
+          "vec_id", "embedding", dim = 64, nPlanes = 8, k = 5)
         .orderBy(col("query_id"), col("rank"))
     }),
 
@@ -2575,15 +2573,13 @@ object SparkEntry {
       val b0 = all.filter(pmod(col("doc_id"), lit(2)) === 0)
       val b1 = all.filter(pmod(col("doc_id"), lit(2)) === 1)
       val s0 = Dedup.emptyMinhashState(all, "doc_id", "text",
-        shingleN = 2, numPerm = 64, bands = 8, portable = true)
+        shingleN = 2, numPerm = 64, bands = 8)
       val (p0, st1r) = Dedup.incrementalMinhash(s0, b0, "doc_id", "text",
-        shingleN = 2, numPerm = 64, bands = 8, estThreshold = 0.125,
-        portable = true)
+        shingleN = 2, numPerm = 64, bands = 8, estThreshold = 0.125)
       val st1 = Dedup.MinhashState(st1r.signatures.localCheckpoint(),
         st1r.buckets.localCheckpoint())
       val (p1, _) = Dedup.incrementalMinhash(st1, b1, "doc_id", "text",
-        shingleN = 2, numPerm = 64, bands = 8, estThreshold = 0.125,
-        portable = true)
+        shingleN = 2, numPerm = 64, bands = 8, estThreshold = 0.125)
       // n/64 is exactly representable — bit-equal in both engines (q21)
       p0.unionByName(p1)
         .orderBy(col("est_jaccard").desc, col("doc_a"), col("doc_b"))
@@ -2788,7 +2784,7 @@ object SparkEntry {
     }),
 
     // ---- SemDeDup over TRAINED clusters: the full paper pipeline ----
-    // Lloyd's spherical k-means (portable: lowest-id init, rounded-
+    // Lloyd's spherical k-means (portable — lowest-id init, rounded-
     // cosine assignment, exact-integer centroid means) → argmax
     // assignment → within-cluster SemDeDup prune. The oracle replays
     // BOTH training iterations and the prune — no externally-supplied
@@ -2811,7 +2807,7 @@ object SparkEntry {
     "q56_dup_clusters" -> ((s, dir) => {
       val pairs = Dedup.minhashLsh(t(s, dir, "documents"), "doc_id", "text",
         shingleN = 2, numPerm = 64, bands = 8,
-        estThreshold = 0.125, maxBucketSize = 100, portable = true)
+        estThreshold = 0.125, maxBucketSize = 100)
       Dedup.dupClusters(pairs, "doc_a", "doc_b")
         .select(col("doc_id").cast("long").as("doc_id"),
           col("cluster_id").cast("long").as("cluster_id"))
@@ -2823,7 +2819,7 @@ object SparkEntry {
       val d = t(s, dir, "documents")
       val pairs = Dedup.minhashLsh(d, "doc_id", "text",
         shingleN = 2, numPerm = 64, bands = 8,
-        estThreshold = 0.125, maxBucketSize = 100, portable = true)
+        estThreshold = 0.125, maxBucketSize = 100)
       val clusters = Dedup.dupClusters(pairs, "doc_a", "doc_b")
         .select(col("doc_id").cast("long").as("doc_id"),
           col("cluster_id").cast("long").as("cluster_id"))
@@ -6776,15 +6772,15 @@ object SparkEntry {
       val b0 = all.filter(pmod(col("doc_id"), lit(3)) === 0)
       val b1 = all.filter(pmod(col("doc_id"), lit(3)) =!= 0)
       val s0 = Dedup.emptyMinhashState(all, "doc_id", "text",
-        shingleN = 2, numPerm = 64, bands = 32, portable = true)
+        shingleN = 2, numPerm = 64, bands = 32)
       val (p0, st1r) = Dedup.incrementalMinhash(s0, b0, "doc_id",
         "text", shingleN = 2, numPerm = 64, bands = 32,
-        estThreshold = 0.5, portable = true)
+        estThreshold = 0.5)
       val st1 = Dedup.MinhashState(st1r.signatures.localCheckpoint(),
         st1r.buckets.localCheckpoint())
       val (p1, _) = Dedup.incrementalMinhash(st1, b1, "doc_id",
         "text", shingleN = 2, numPerm = 64, bands = 32,
-        estThreshold = 0.5, portable = true)
+        estThreshold = 0.5)
       TextAnalysis.splitLeakageFromPairs(p0.unionByName(p1),
           all, "doc_id",
           Seq("train" -> 8000L, "val" -> 1000L, "test" -> 1000L))

@@ -208,10 +208,4 @@ object BpeOps {
                     merges: Seq[(String, String)]): Column =
     ColumnBridge.column(BpeApply(ColumnBridge.expression(word), merges,
       byteLevel = true))
-
-  /** Byte-level [[bpeApplyBc]]. */
-  def bpeApplyBytesBc(word: Column,
-      bc: Broadcast[Array[(String, String)]]): Column =
-    ColumnBridge.column(BpeApplyBroadcast(ColumnBridge.expression(word),
-      bc, byteLevel = true))
 }

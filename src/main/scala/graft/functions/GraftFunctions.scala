@@ -7,8 +7,9 @@ import org.apache.spark.sql.functions._
   * everything here stays inside whole-stage codegen; no UDFs).
   *
   * Shapes derived from the reference's scalar/array/datetime surface
-  * (SURVEY.md §2.8): X1 coalesce event time, X3 interval arithmetic,
-  * X5 posexplode+sample-timestamp, X6 cardinality, X12 sine generator.
+  * (SURVEY.md §2.8): X3 interval arithmetic, X5 posexplode+sample-
+  * timestamp, X6 cardinality, X12 sine generator. X1 (coalesce event
+  * time) is `Hl7Wire.parseAdt`'s `validFromUs`.
   */
 object GraftFunctions {
 
@@ -27,20 +28,6 @@ object GraftFunctions {
     * engines and is exact under comparison/arithmetic.
     */
   def tsUs(c: Column): Column = unix_micros(c.cast("timestamp"))
-
-  /** X1: bestGuessAtValidFrom — prefer event-occurred time, fall back to
-    * recorded time (ref: emap-interchange interchange/adt/AdtMessage.java:53-55).
-    */
-  def bestValidFrom(eventOccurred: Column, recorded: Column): Column =
-    coalesce(eventOccurred, recorded)
-
-  /** F10: the canonical bitemporal time-travel predicate
-    * (ref: emap-star informdb/AuditCore.java:83-86). All cols epoch-µs.
-    */
-  def validAsOf(tUs: Column, validFromUs: Column, validUntilUs: Column,
-                storedUntilUs: Column): Column =
-    storedUntilUs.isNull && validFromUs <= tUs &&
-      (validUntilUs.isNull || tUs < validUntilUs)
 
   /** F10, both axes: "state as the database knew it at stored time S,
     * effective at event time t" — the reproducibility predicate over a

@@ -10,8 +10,7 @@ import org.apache.spark.unsafe.types.UTF8String
 
 /** Fused tokenize → shingle-hash → numPerm-way min-hash, as one native
   * expression returning `array<long>` of the per-permutation minima —
-  * the per-row kernel of [[graft.operators.Dedup.minhashSignatures]]
-  * (portable mode).
+  * the per-row kernel of [[graft.operators.Dedup.minhashSignatures]].
   *
   * Semantically identical to the relational formulation it replaces
   * (explode(array_distinct(shingleHashes(text))) → 64 `min(pmod(a*h+b,

@@ -275,7 +275,7 @@ object Ann {
     * the query-side probe set matching [[cosineCluster]]'s assignment
     * geometry. Sorting key is `1 − sim_r` (ascending): the same order
     * as sim descending, avoids an IEEE −0.0 appearing in the sort key.
-    * Engine-portable: an oracle replays it as
+    * Engine-portable — an oracle replays it as
     * `row_number() OVER (ORDER BY round(cos, 4) + 0.0 DESC, cid)`.
     */
   def cosineProbes(v: Column, cents: Seq[Seq[Double]],
@@ -384,16 +384,16 @@ object Ann {
       "__ivf_cl", k)
   }
 
-  /** Fixed-seed ±1 (Rademacher) hyperplane weights for the portable LSH
-    * variant — shared with the DuckDB oracle builder (q33) so both
-    * engines compute identical buckets.
+  /** Fixed-seed ±1 (Rademacher) hyperplane weights for [[lshBucketTopK]]
+    * — shared with the DuckDB oracle builder (q33) so both engines
+    * compute identical buckets.
     */
   def lshSignPlanes(dim: Int, nPlanes: Int, seed: Long): Seq[Seq[Long]] = {
     val rnd = new scala.util.Random(seed)
     Seq.fill(nPlanes)(Seq.fill(dim)(if (rnd.nextBoolean()) 1L else -1L))
   }
 
-  /** Coordinate quantization for the portable LSH projections: integer
+  /** Coordinate quantization for the LSH projections: integer
     * micro-units make the projection sum exact (order-independent) in any
     * engine. 2^20 preserves ~6 decimal digits of a float coordinate.
     */
@@ -403,39 +403,28 @@ object Ann {
     * fixed-seed hyperplanes) — the candidate-generation scale path when no
     * precomputed clustering exists. Same-bucket pairs only.
     *
-    * Default planes are Gaussian. `portable = true` uses ±1 Rademacher
-    * weights (sign random projection — same locality guarantee family)
-    * over [[LshQuantScale]]-quantized integer coordinates, so the bucket
-    * bits are exact integer arithmetic replayable by the DuckDB oracle:
-    * an IEEE float sum's value depends on evaluation order, an integer
-    * sum's does not.
+    * The planes are ±1 Rademacher weights ([[lshSignPlanes]]; sign
+    * random projection) over [[LshQuantScale]]-quantized integer
+    * coordinates, so the bucket bits are exact integer arithmetic
+    * replayable by the DuckDB oracle: an IEEE float sum's value depends
+    * on evaluation order, an integer sum's does not.
     */
   def lshBucketTopK(queries: DataFrame, candidates: DataFrame, idCol: String,
                     vecCol: String, dim: Int, nPlanes: Int, k: Int,
-                    seed: Long = 42L, portable: Boolean = false): DataFrame = {
-    val rnd = new scala.util.Random(seed)
-    def bucket(v: org.apache.spark.sql.Column) =
-      if (portable) {
-        val planes = lshSignPlanes(dim, nPlanes, seed)
-        // floor, not round: x is a float cast to double and 2^20 scaling is
-        // exact (exponent shift), so floor is unambiguous — round() could
-        // split engines on an exact .5
-        val vq = transform(v, x => floor(x * lit(LshQuantScale)).cast("long"))
-        planes.zipWithIndex.map { case (p, i) =>
-          val proj = aggregate(
-            zip_with(vq, typedLit(p), (x, w) => x * w),
-            lit(0L), (a, x) => a + x)
-          when(proj >= 0, shiftleft(lit(1L), i)).otherwise(lit(0L))
-        }.reduce(_.bitwiseOR(_))
-      } else {
-        val planes = Seq.fill(nPlanes)(Array.fill(dim)(rnd.nextGaussian()))
-        planes.zipWithIndex.map { case (p, i) =>
-          val proj = aggregate(
-            zip_with(v, typedLit(p.toSeq), (x, w) => x * w),
-            lit(0.0), (a, x) => a + x)
-          when(proj >= 0, shiftleft(lit(1L), i)).otherwise(lit(0L))
-        }.reduce(_.bitwiseOR(_))
-      }
+                    seed: Long = 42L): DataFrame = {
+    val planes = lshSignPlanes(dim, nPlanes, seed)
+    def bucket(v: org.apache.spark.sql.Column) = {
+      // floor, not round: x is a float cast to double and 2^20 scaling is
+      // exact (exponent shift), so floor is unambiguous — round() could
+      // split engines on an exact .5
+      val vq = transform(v, x => floor(x * lit(LshQuantScale)).cast("long"))
+      planes.zipWithIndex.map { case (p, i) =>
+        val proj = aggregate(
+          zip_with(vq, typedLit(p), (x, w) => x * w),
+          lit(0L), (a, x) => a + x)
+        when(proj >= 0, shiftleft(lit(1L), i)).otherwise(lit(0L))
+      }.reduce(_.bitwiseOR(_))
+    }
 
     val q = broadcast(queries.select(col(idCol).as("query_id"),
         toDoubleVec(col(vecCol)).as("qv"))
@@ -460,7 +449,7 @@ object Ann {
     * embeddings this is the 4× scan-rate/storage win a brute-force
     * rerank pass actually ships; cosine similarity needs no
     * dequantization at all (the per-vector scale cancels in the
-    * ratio, up to quantization error). Engine-portable: cast-to-double,
+    * ratio, up to quantization error). Engine-portable — cast-to-double,
     * multiply, divide, floor — every step IEEE-correctly-rounded, so
     * the quantized integers replay bit-identically in the oracle.
     * Zero vectors (max|x| = 0) are dropped — they have no direction to

@@ -283,80 +283,23 @@ object Dedup {
                        rnd.nextInt(1 << 30).toLong))
   }
 
-  /** MinHash + LSH near-dup detection — the scale path.
-    *
-    * Pipeline: shingle → explode to (doc, shingle) rows → hash ONCE per
-    * shingle → 64-way `min()` hash-aggregate per doc (map-side partial
-    * aggregation: the shuffle carries only docs × numPerm longs, not the
-    * shingle stream) → band buckets (explode, SKINNY rows: doc_id + band +
-    * bucket only) → hot-bucket cap → bucket self-join (the only quadratic
-    * step, confined to same-bucket docs) → pair-dedup BEFORE scoring →
-    * join signatures back once per unique pair → estimated Jaccard.
-    *
-    * Ordering matters at scale: the bucket join shuffles 3 narrow columns,
-    * pairs are deduped while still skinny, and the 2×numPerm-long
-    * signature arrays are attached exactly once per unique pair (the
-    * earlier form carried both arrays through the join and scored every
-    * band collision — up to `bands`× redundant shuffle + compute; it was
-    * the round-1 bench outlier at 44 s). The signature aggregate is
-    * persisted: it feeds the bucket explode and both pair joins, and at
-    * 100 TB you would materialize signatures anyway.
-    *
-    * `maxBucketSize` drops degenerate buckets (boilerplate docs hashing
-    * identically) whose membership exceeds the cap — without it one hot
-    * bucket goes quadratic at 100×. The count window shares the bucket
-    * join's (band, bucket) partitioning, so the cap costs no extra
-    * exchange.
-    *
-    * `portable = true` swaps xxhash64 for the oracle-replayable
-    * [[graft.functions.GraftFunctions.charPolyHash]] and emits the band
-    * bucket as the raw min-value concatenation instead of its xxhash64 —
-    * bit-identical replay in ANSI SQL (DuckDB oracle q21).
-    *
-    * Each shingle hash is evaluated exactly once; every stage is
-    * whole-stage-codegen'd. (An all-array-function formulation rebuilt
-    * the shingle pipeline inside each of the 64 permutation expressions —
-    * 64× recompute, codegen-breaking tree. Measured minutes → seconds.)
-    */
   /** MinHash signature table (doc_id, s0..s{numPerm-1}) — the reusable
     * first stage of [[minhashLsh]] and [[incrementalMinhash]]. Persisted:
     * one computation feeds every consumer.
     */
   def minhashSignatures(docs: DataFrame, idCol: String, textCol: String,
-                        shingleN: Int, numPerm: Int, seed: Long,
-                        portable: Boolean): DataFrame = {
-    val P = 2147483647L // 2^31-1; keeps a*h+b far from Long overflow (ANSI)
-    val perms = minhashPerms(numPerm, seed)
-
-    // Portable path (round 16, guide §2.4): the signature is a pure
-    // function of the row's own text, so the whole explode → 64-way
-    // min-aggregate → Exchange shape collapses into ONE native
-    // expression call per row ([[graft.functions.MinHashSig]] — the
-    // fused ShingleHash kernel plus the permutation minima in a single
+                        shingleN: Int, numPerm: Int, seed: Long): DataFrame = {
+    // The signature is a pure function of the row's own text: ONE native
+    // expression call per row ([[graft.functions.MinHashSig]] — the fused
+    // ShingleHash kernel plus the permutation minima in a single
     // generated loop). Zero Exchange; a zero-shingle doc returns null
-    // and is filtered, matching the groupBy's row set exactly.
-    val sigCols =
-      if (portable) {
-        docs.select(col(idCol).as("doc_id"),
-            graft.functions.MinHashSig
-              .minhashSig(col(textCol), shingleN, perms).as("__sig"))
-          .filter(col("__sig").isNotNull)
-          .select(col("doc_id") +: (0 until numPerm).map(i =>
-            col("__sig").getItem(i).as(s"s$i")): _*)
-      } else {
-        docs.select(col(idCol).as("doc_id"),
-            explode(array_distinct(shingles(tokens(col(textCol)), shingleN)))
-              .as("s"))
-          .withColumn("h", pmod(xxhash64(col("s")), lit(P)))
-          .groupBy(col("doc_id"))
-          .agg(min(pmod(lit(perms.head._1) * col("h") + lit(perms.head._2),
-              lit(P))).as("s0"),
-            perms.tail.zipWithIndex.map { case ((a, b), i) =>
-              min(pmod(lit(a) * col("h") + lit(b), lit(P))).as(s"s${i + 1}")
-            }: _*)
-      }
-
-    sigCols
+    // and is filtered.
+    docs.select(col(idCol).as("doc_id"),
+        graft.functions.MinHashSig.minhashSig(col(textCol), shingleN,
+          minhashPerms(numPerm, seed)).as("__sig"))
+      .filter(col("__sig").isNotNull)
+      .select(col("doc_id") +: (0 until numPerm).map(i =>
+        col("__sig").getItem(i).as(s"s$i")): _*)
       // computed once, reused by 3 consumers (bucket explode + both pair
       // joins). localCheckpoint, measured against the alternatives at
       // sf0.1 in the full bench sequence (round 8): lazy MEMORY_AND_DISK
@@ -374,15 +317,14 @@ object Dedup {
       .localCheckpoint(false)
   }
 
-  /** LSH band buckets (doc_id, band, bucket) from a signature table. */
-  def bandBuckets(sig: DataFrame, numPerm: Int, bands: Int,
-                  portable: Boolean): DataFrame = {
+  /** LSH band buckets (doc_id, band, bucket) from a signature table; the
+    * bucket is the band's min values joined with "," (an oracle builds
+    * the same string).
+    */
+  def bandBuckets(sig: DataFrame, numPerm: Int, bands: Int): DataFrame = {
     val rowsPerBand = numPerm / bands
-    def bucketOf(b: Int) = {
-      val cat = concat_ws(",",
-        (0 until rowsPerBand).map(r => col(s"s${b * rowsPerBand + r}")): _*)
-      if (portable) cat else xxhash64(cat).cast("string")
-    }
+    def bucketOf(b: Int) = concat_ws(",",
+      (0 until rowsPerBand).map(r => col(s"s${b * rowsPerBand + r}")): _*)
     val bandStructs = array((0 until bands).map { b =>
       struct(lit(b).as("band"), bucketOf(b).as("bucket"))
     }: _*)
@@ -391,13 +333,39 @@ object Dedup {
         col("bk.band").as("band"), col("bk.bucket").as("bucket"))
   }
 
+  /** MinHash + LSH near-dup detection — the scale path.
+    *
+    * Pipeline: per-doc signature ([[minhashSignatures]]: shingles hashed
+    * with the oracle-replayable
+    * [[graft.functions.GraftFunctions.charPolyHash]] family, numPerm
+    * affine-permutation minima, one native call per row, no shuffle) →
+    * band buckets ([[bandBuckets]]: explode, SKINNY rows: doc_id + band +
+    * bucket only) → hot-bucket cap → bucket self-join (the only quadratic
+    * step, confined to same-bucket docs) → pair-dedup BEFORE scoring →
+    * join signatures back once per unique pair → estimated Jaccard.
+    * Every step replays bit-identically in ANSI SQL (DuckDB oracle q21).
+    *
+    * Ordering matters at scale: the bucket join shuffles 3 narrow columns,
+    * pairs are deduped while still skinny, and the 2×numPerm-long
+    * signature arrays are attached exactly once per unique pair (the
+    * earlier form carried both arrays through the join and scored every
+    * band collision — up to `bands`× redundant shuffle + compute; it was
+    * the round-1 bench outlier at 44 s). The signature table is
+    * checkpointed: it feeds the bucket explode and both pair joins.
+    *
+    * `maxBucketSize` drops degenerate buckets (boilerplate docs hashing
+    * identically) whose membership exceeds the cap — without it one hot
+    * bucket goes quadratic at 100×. The count window shares the bucket
+    * join's (band, bucket) partitioning, so the cap costs no extra
+    * exchange.
+    */
   def minhashLsh(docs: DataFrame, idCol: String, textCol: String,
                  shingleN: Int = 3, numPerm: Int = 64, bands: Int = 16,
                  estThreshold: Double = 0.0, seed: Long = 42L,
-                 maxBucketSize: Int = 0, portable: Boolean = false): DataFrame = {
+                 maxBucketSize: Int = 0): DataFrame = {
     val sig = minhashSignatures(docs, idCol, textCol, shingleN, numPerm,
-      seed, portable)
-    val buckets = bandBuckets(sig, numPerm, bands, portable)
+      seed)
+    val buckets = bandBuckets(sig, numPerm, bands)
 
     val capped = if (maxBucketSize > 0) {
       val w = Window.partitionBy(col("band"), col("bucket"))
@@ -447,7 +415,7 @@ object Dedup {
       .select(col("doc_a"), col("doc_b"), lit(1L).as("__t"))
     val cand = minhashLsh(docs, idCol, textCol, shingleN = shingleN,
         numPerm = numPerm, bands = bands, estThreshold = threshold,
-        maxBucketSize = maxBucketSize, portable = true)
+        maxBucketSize = maxBucketSize)
       .filter(evalPred(col("doc_a")) && evalPred(col("doc_b")))
       .select(col("doc_a"), col("doc_b"), lit(1L).as("__c"))
     truth.join(cand, Seq("doc_a", "doc_b"), "full_outer")
@@ -493,11 +461,11 @@ object Dedup {
                          idCol: String, textCol: String,
                          shingleN: Int = 3, numPerm: Int = 64,
                          bands: Int = 16, estThreshold: Double = 0.0,
-                         seed: Long = 42L, portable: Boolean = false)
+                         seed: Long = 42L)
       : (DataFrame, MinhashState) = {
     val bSig = minhashSignatures(batch, idCol, textCol, shingleN, numPerm,
-      seed, portable)
-    val bBuckets = bandBuckets(bSig, numPerm, bands, portable)
+      seed)
+    val bBuckets = bandBuckets(bSig, numPerm, bands)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
     // batch drives the probe: new×old needs any id order (normalized
@@ -532,30 +500,27 @@ object Dedup {
   /** Empty state with the right schemas, derived from any batch. */
   def emptyMinhashState(batch: DataFrame, idCol: String, textCol: String,
                         shingleN: Int = 3, numPerm: Int = 64,
-                        bands: Int = 16, seed: Long = 42L,
-                        portable: Boolean = false): MinhashState = {
+                        bands: Int = 16, seed: Long = 42L): MinhashState = {
     val sig0 = minhashSignatures(batch.limit(0), idCol, textCol, shingleN,
-      numPerm, seed, portable)
-    MinhashState(sig0, bandBuckets(sig0, numPerm, bands, portable))
+      numPerm, seed)
+    MinhashState(sig0, bandBuckets(sig0, numPerm, bands))
   }
 
-  /** SimHash signatures: bit b of the signature is the sign of the vote
-    * sum over token hashes' bit b. Same scale shape as minhashLsh:
-    * explode → hash once → per-bit sum-aggregates (map-side partial agg)
-    * → recombine bits from materialized columns.
-    *
-    * Default: 64-bit xxhash64 signature. `portable = true`: 31-bit
-    * signature over [[graft.functions.GraftFunctions.charPolyHash]] —
-    * every step exact integer arithmetic an ANSI SQL oracle replays
-    * bit-for-bit (DuckDB q22).
+  /** SimHash signatures: bit b of the 31-bit signature is the sign of
+    * the vote sum over the distinct tokens'
+    * [[graft.functions.GraftFunctions.charPolyHash]] bit b. Explode →
+    * hash once → per-bit sum-aggregates (map-side partial agg) →
+    * recombine bits from materialized columns; every step is exact
+    * integer arithmetic an ANSI SQL oracle replays bit-for-bit (DuckDB
+    * q22).
     */
-  def simhashSigs(docs: DataFrame, idCol: String, textCol: String,
-                  portable: Boolean = false): DataFrame = {
-    val nBits = if (portable) 31 else 64
+  def simhashSigs(docs: DataFrame, idCol: String,
+                  textCol: String): DataFrame = {
+    val nBits = 31
     val tokRows = docs
       .select(col(idCol).as("doc_id"),
         explode(array_distinct(tokens(col(textCol)))).as("t"))
-      .withColumn("h", if (portable) charPolyHash(col("t")) else xxhash64(col("t")))
+      .withColumn("h", charPolyHash(col("t")))
     val votes = tokRows.groupBy(col("doc_id")).agg(
       sum(bitVote(0)).as("v0"),
       (1 until nBits).map(b => sum(bitVote(b)).as(s"v$b")): _*)
@@ -567,20 +532,6 @@ object Dedup {
 
   private def bitVote(b: Int) =
     when(shiftright(col("h"), b).bitwiseAND(lit(1L)) === 1L, 1L).otherwise(-1L)
-
-  /** SimHash near-dup pairs — delegates to the shared
-    * [[hammingNearDup]] banding (ONE implementation for every 64-bit
-    * fingerprint family: SimHash text signatures, dHash image
-    * fingerprints). Band count AUTO-WIDENS with the radius
-    * (pigeonhole-complete at any `maxHamming` < 64), closing the two
-    * historical gaps at radius ≥ 4: the pre-r13 inline banding
-    * silently MISSED pairs there (a 4-bit difference can straddle all
-    * four 16-bit bands), and the r13 delegation failed loudly.
-    */
-  def simhashPairs(sigs: DataFrame, maxHamming: Int): DataFrame =
-    hammingNearDup(sigs, "doc_id", "simhash", maxHamming)
-      .select(col("id_a").as("doc_a"), col("id_b").as("doc_b"),
-        col("dist").as("hamming"))
 
   /** Embedding-cosine near-dup: pairs above simThreshold, using the IVF
     * bucket (or any coarse cluster id) as the blocking key.

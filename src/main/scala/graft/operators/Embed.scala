@@ -77,8 +77,7 @@ object Embed {
                          maxBucketSize: Int): DataFrame = {
     val pos = Dedup.minhashLsh(docs, idCol, textCol,
         shingleN = shingleN, numPerm = numPerm, bands = bands,
-        estThreshold = estThreshold, maxBucketSize = maxBucketSize,
-        portable = true)
+        estThreshold = estThreshold, maxBucketSize = maxBucketSize)
       .select(col("doc_a").as("anchor"), col("doc_b").as("positive"),
         col("est_jaccard"))
     // pinned once: the ring feeds both successor joins AND the count

@@ -37,9 +37,6 @@ import org.apache.spark.sql.functions._
   */
 object LocationVisits {
 
-  val MsgCols = Seq("visitId", "msgType", "location", "validFromUs",
-    "sourceMessageId", "targetTimeUs", "dischargeTimeUs")
-
   /** Valid intervals only (the reference rejects zero/negative-length
     * visits, PatientLocationController.java:384-387); the rejects go to
     * [[intervalErrors]].

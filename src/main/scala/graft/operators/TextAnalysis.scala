@@ -519,13 +519,12 @@ object TextAnalysis {
                          benchIdCol: String, benchTextCol: String,
                          shingleN: Int = 2, numPerm: Int = 64,
                          bands: Int = 8, threshold: Double = 0.8,
-                         seed: Long = 42L,
-                         portable: Boolean = true): DataFrame = {
+                         seed: Long = 42L): DataFrame = {
     val benchSig = Dedup.minhashSignatures(benchmark, benchIdCol,
-      benchTextCol, shingleN, numPerm, seed, portable)
+      benchTextCol, shingleN, numPerm, seed)
       .withColumnRenamed("doc_id", "bench_id")
     fuzzyDecontaminateAgainst(docs, benchSig, idCol, textCol,
-      shingleN, numPerm, bands, threshold, seed, portable)
+      shingleN, numPerm, bands, threshold, seed)
   }
 
   /** The probe half of [[fuzzyDecontaminate]], against an already-
@@ -538,10 +537,9 @@ object TextAnalysis {
   def fuzzyDecontaminateAgainst(docs: DataFrame, benchSig: DataFrame,
                                 idCol: String, textCol: String,
                                 shingleN: Int, numPerm: Int, bands: Int,
-                                threshold: Double, seed: Long,
-                                portable: Boolean): DataFrame = {
+                                threshold: Double, seed: Long): DataFrame = {
     val scored = fuzzyPairs(docs, benchSig, idCol, textCol, shingleN,
-      numPerm, bands, threshold, seed, portable)
+      numPerm, bands, threshold, seed)
     val perDoc = scored.groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_matches"),
         max(col("est_jaccard")).as("max_est_jaccard"))
@@ -566,7 +564,7 @@ object TextAnalysis {
                                numPerm: Int, seed: Long,
                                indexDir: String): Unit =
     Dedup.minhashSignatures(benchmark, benchIdCol, benchTextCol,
-        shingleN, numPerm, seed, portable = true)
+        shingleN, numPerm, seed)
       .withColumnRenamed("doc_id", "bench_id")
       .write.mode("overwrite").parquet(indexDir)
 
@@ -582,8 +580,7 @@ object TextAnalysis {
                                     threshold: Double = 0.8,
                                     seed: Long = 42L): DataFrame =
     fuzzyDecontaminateAgainst(batch, spark.read.parquet(indexDir),
-      idCol, textCol, shingleN, numPerm, bands, threshold, seed,
-      portable = true)
+      idCol, textCol, shingleN, numPerm, bands, threshold, seed)
 
   /** Candidate-quality eval of the fuzzy decon path — the q180
     * (`Dedup.lshEval`) discipline applied cross-corpus: EXACT
@@ -619,10 +616,10 @@ object TextAnalysis {
       .select(col("doc_id"), col("bench_id"), lit(1L).as("__t"))
     val cand = {
       val benchSig = Dedup.minhashSignatures(benchmark, benchIdCol,
-          benchTextCol, shingleN, numPerm, seed, portable = true)
+          benchTextCol, shingleN, numPerm, seed)
         .withColumnRenamed("doc_id", "bench_id")
       fuzzyPairs(docs, benchSig, idCol, textCol, shingleN, numPerm,
-        bands, threshold, seed, portable = true)
+        bands, threshold, seed)
         .filter(evalPred(col("doc_id")))
         .select(col("doc_id"), col("bench_id"), lit(1L).as("__c"))
     }
@@ -645,14 +642,14 @@ object TextAnalysis {
   private def fuzzyPairs(docs: DataFrame, benchSig: DataFrame,
                          idCol: String, textCol: String, shingleN: Int,
                          numPerm: Int, bands: Int, threshold: Double,
-                         seed: Long, portable: Boolean): DataFrame = {
+                         seed: Long): DataFrame = {
     val benchBk = Dedup.bandBuckets(
         benchSig.withColumnRenamed("bench_id", "doc_id"),
-        numPerm, bands, portable)
+        numPerm, bands)
       .withColumnRenamed("doc_id", "bench_id")
     val docSig = Dedup.minhashSignatures(docs, idCol, textCol, shingleN,
-      numPerm, seed, portable)
-    val docBk = Dedup.bandBuckets(docSig, numPerm, bands, portable)
+      numPerm, seed)
+    val docBk = Dedup.bandBuckets(docSig, numPerm, bands)
     val sigArr = array((0 until numPerm).map(i => col(s"s$i")): _*)
     val matches = size(filter(
       zip_with(col("sa"), col("sb"), (x, y) => x === y), m => m))
@@ -868,7 +865,7 @@ object TextAnalysis {
       Dedup.minhashLsh(docs, idCol, textCol,
         shingleN = shingleN, numPerm = numPerm, bands = bands,
         estThreshold = threshold, seed = seed,
-        maxBucketSize = maxBucketSize, portable = true),
+        maxBucketSize = maxBucketSize),
       docs.select(col(idCol)), idCol, splits)
 
   /** The audit's report tail over PRECOMPUTED near-dup pairs — the
@@ -2426,7 +2423,7 @@ object TextAnalysis {
     * (RefinedWeb's line-wise correction, Penedo et al. 2023 §3.2 /
     * App. E: web pages carry nav chrome, share buttons, and repeated
     * lines that survive document-level filters). Four rules per
-    * non-empty trimmed line, each engine-portable:
+    * non-empty trimmed line, each engine-portable.
     *
     *   - `r_dup`    exact duplicate of an EARLIER line in the same
     *     document (first occurrence kept; compared post-trim,

@@ -161,21 +161,4 @@ object WaveformListener {
     parsed.filter(col("error").isNull).select(
       col("locationId"), col("streamId"), col("obsTimeUs"),
       col("samplingRate"), col("unit"), col("values"))
-
-  /** The reference's full socket path: TCP lines → MLLP deframe → HL7
-    * ORU^R01 parse (metadata-enriched) → W4 collation.
-    */
-  def listenHl7(spark: SparkSession, host: String, port: Int,
-                metadata: DataFrame,
-                locationMapping: Map[String, String] = Map.empty,
-                cfg: Config = Config(),
-                timeout: GroupStateTimeout =
-                  GroupStateTimeout.ProcessingTimeTimeout): Dataset[WaveChunk] = {
-    import spark.implicits._
-    val lines = spark.readStream.format("socket")
-      .option("host", host).option("port", port).load()
-    val msgs = toWaveMessages(parseWaveformHl7(
-      frameMllp(lines, "value"), "hl7", metadata, locationMapping)).as[WaveMsg]
-    WaveformCollator.collateStream(msgs, cfg, timeout)(spark)
-  }
 }

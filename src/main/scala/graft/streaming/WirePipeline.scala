@@ -30,10 +30,10 @@ import graft.sources.{Hl7Wire, LabFunnel}
   *                            consults or advance_decisions
   *
   * Dead-letter writes are per-batch overwrites — idempotent on replay,
-  * like the folds themselves; a guard that rejects nothing in a batch
-  * leaves no `batch=N` dir. Scale shape: one scan of the batch fans
-  * into narrow parse branches; each family fold touches only the state
-  * buckets its keys hash into.
+  * like the folds themselves; a batch with no unroutable frame, or of
+  * which a guard rejects nothing, leaves no `batch=N` dir there. Scale
+  * shape: one scan of the batch fans into narrow parse branches; each
+  * family fold touches only the state buckets its keys hash into.
   */
 object WirePipeline {
 
@@ -341,7 +341,7 @@ object WirePipeline {
   }
 
   /** Route the batch, fold every star an input channel of which holds
-    * rows, then write each guard's rejects. */
+    * rows, then write the router's and each guard's dead letters. */
   private def foldRouted(batch: DataFrame, batchId: Long, rawCol: String,
                          stateRoot: String, bitemporal: Boolean,
                          sink: StarSink, pin: StarPipeline.Pins): Unit = {
@@ -351,8 +351,6 @@ object WirePipeline {
     // parse and a bucket probe over an empty channel. (The reference's
     // consumer pays per message; our unit of work is the family fold.)
     val r = Hl7Wire.route(batch, rawCol)
-    if (r.holds("dead")) r.dead.write.mode("overwrite")
-      .parquet(s"$stateRoot/dead/router/batch=$batchId")
 
     // A channel's clean rows, guarded and pinned on first use and shared
     // by every star that reads it. The pinned channel carries an
@@ -390,17 +388,22 @@ object WirePipeline {
       }
     }
 
-    // A guard's rejects go to dead/<name>/batch=N. A star fold counted
-    // them as it filled the channel's cache; a batch with none writes no
-    // batch dir, and an earlier run's is removed (the family's dead/<name>
-    // dir stays, as a write leaves it). A sink that skipped a committed
-    // batch filled no cache: write as ever.
-    for ((g, (pinned, dead)) <- guarded) {
+    // Dead letters go to dead/<name>/batch=N: the router's under
+    // "router", each guard's under its own name. A batch known to hold
+    // none writes no batch dir, and an earlier run's is removed (the
+    // dead/<name> dir stays, as a write leaves it). The router knows from
+    // `holds`; a guard's count was observed by the star fold that filled
+    // the channel's cache, and a sink that skipped a committed batch
+    // filled no cache, so its count is unknown: write as ever.
+    val deadLetters = ("router", r.dead, !r.holds("dead")) +:
+      guarded.toSeq.map { case (g, (pinned, dead)) =>
+        (g.dead, dead, CacheBridge.observed(pinned).flatMap(_.get(g.dead))
+          .exists(_.getLong(0) == 0L))
+      }
+    for ((name, dead, none) <- deadLetters) {
       val dir = new org.apache.hadoop.fs.Path(
-        s"$stateRoot/dead/${g.dead}/batch=$batchId")
-      val rejects = CacheBridge.observed(pinned).flatMap(_.get(g.dead))
-        .map(_.getLong(0))
-      if (!rejects.contains(0L)) dead.write.mode("overwrite").parquet(dir.toString)
+        s"$stateRoot/dead/$name/batch=$batchId")
+      if (!none) dead.write.mode("overwrite").parquet(dir.toString)
       else {
         val fs = dir.getFileSystem(
           batch.sparkSession.sparkContext.hadoopConfiguration)

@@ -43,7 +43,7 @@ class MinHashSigSpec extends SparkSpecBase {
     val df = docs.toDF("doc_id", "text")
     for ((n, k) <- Seq((3, 16), (2, 64))) {
       val got = graft.operators.Dedup.minhashSignatures(df, "doc_id",
-        "text", n, k, seed = 42L, portable = true).orderBy("doc_id")
+        "text", n, k, seed = 42L).orderBy("doc_id")
       val want = referenceSigs(df, n, k, 42L).orderBy("doc_id")
       val g = got.collect(); val w = want.collect()
       assert(g.map(_.getLong(0)).toSeq == w.map(_.getLong(0)).toSeq,
@@ -60,7 +60,7 @@ class MinHashSigSpec extends SparkSpecBase {
   test("signature build plan has zero Exchange") {
     val df = docs.toDF("doc_id", "text")
     val plan = graft.operators.Dedup.minhashSignatures(df, "doc_id",
-        "text", 3, 16, seed = 42L, portable = true)
+        "text", 3, 16, seed = 42L)
       .queryExecution.executedPlan.toString
     assert(!plan.contains("Exchange"), plan)
   }
@@ -68,8 +68,7 @@ class MinHashSigSpec extends SparkSpecBase {
   test("LSH pairs unchanged through the new kernel") {
     val df = docs.toDF("doc_id", "text")
     val pairs = graft.operators.Dedup.minhashLsh(df, "doc_id", "text",
-        shingleN = 3, numPerm = 16, bands = 8, estThreshold = 0.5,
-        portable = true)
+        shingleN = 3, numPerm = 16, bands = 8, estThreshold = 0.5)
       .select("doc_a", "doc_b").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(pairs.contains((1L, 2L)))

@@ -97,6 +97,15 @@ class SourceGuardSpec extends AnyFunSuite {
       "graft/streaming/WirePipeline.scala"), pinners)
   }
 
+  test("one hash family: no near-dup or LSH operator takes a portable flag") {
+    // the oracle-replayable poly-hash / sign-plane path is the only one;
+    // a flag choosing another hash would put the same text into buckets
+    // that never meet the oracle's or another caller's
+    val flagged = filesMatching(
+      "\\bportable\\s*:\\s*Boolean|\\bportable\\s*=(?!=)", "src/main/scala")
+    assert(flagged.isEmpty, flagged)
+  }
+
   test("one stream starter: only FoldStream starts a streaming query") {
     // checkpoint, trigger, output mode and foreachBatch are wired once
     val starters = filesMatching("\\.writeStream\\b", "src/main/scala")

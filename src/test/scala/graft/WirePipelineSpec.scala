@@ -832,12 +832,17 @@ class WirePipelineSpec extends SparkSpecBase {
     for ((star, frames) <- guardClean.groupBy(_._1))
       assert(frames.map(_._2).toSet.subsetOf(starIds(root, star)), star)
 
-    // batch 6 first runs with every reject, then replays with none
-    val all = guardRejects.values.map(_._1).toSeq ++ guardClean.map(_._3)
+    // batch 6 first runs with every reject and an unroutable frame, then
+    // replays with none: the router's dead letter follows the same rule
+    val routerDir = java.nio.file.Paths.get(s"$root/dead/router/batch=6")
+    val all = guardRejects.values.map(_._1).toSeq ++ guardClean.map(_._3) :+
+      "GARBAGE frame"
     WirePipeline.foldBatch(all.toDF("raw"), 6L, "raw", root)
     assert(batchDirs(6L).toSet == guardRejects.keySet)
+    assert(Files.exists(routerDir))
     WirePipeline.foldBatch(guardClean.map(_._3).toDF("raw"), 6L, "raw", root)
     assert(batchDirs(6L).isEmpty, batchDirs(6L))
+    assert(!Files.exists(routerDir))
   }
 
   private val adtOnly = Seq(
