@@ -29,18 +29,6 @@ object GraftFunctions {
     */
   def tsUs(c: Column): Column = unix_micros(c.cast("timestamp"))
 
-  /** F10, both axes: "state as the database knew it at stored time S,
-    * effective at event time t" — the reproducibility predicate over a
-    * [[graft.kernel.BitemporalKernel.BitemporalState]] table
-    * (ref: emap-star informdb/AuditCore.java:83-86 generalized to the
-    * stored axis per TemporalCore.java:29-32). All cols epoch-µs.
-    */
-  def validAsOfBitemporal(tUs: Column, sUs: Column,
-                          validFromUs: Column, validUntilUs: Column,
-                          storedFromUs: Column, storedUntilUs: Column): Column =
-    storedFromUs <= sUs && (storedUntilUs.isNull || sUs < storedUntilUs) &&
-      validFromUs <= tUs && (validUntilUs.isNull || tUs < validUntilUs)
-
   /** Belief snapshot on the stored axis only: every version record the
     * database held at stored time S (its valid-time history as then known).
     */

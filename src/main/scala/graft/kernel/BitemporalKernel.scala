@@ -385,10 +385,10 @@ object BitemporalKernel {
     * without updates are diff-identity and produce no churn, so folding
     * only buckets containing batch keys is exact.
     *
-    * Time-travel over the result: [[graft.functions.GraftFunctions.validAsOfBitemporal]]
-    * — `stored_from <= S < stored_until AND valid_from <= t < valid_until`
-    * answers "state as the database knew it at S, effective at t"
-    * (ref informdb/AuditCore.java:83-86).
+    * Time-travel over the result: [[graft.functions.GraftFunctions.storedAsOf]]
+    * plus the valid-interval filter — `stored_from <= S < stored_until AND
+    * valid_from <= t < valid_until` answers "state as the database knew it
+    * at S, effective at t" (ref informdb/AuditCore.java:83-86).
     */
   def applyBitemporal(
       prev: BitemporalState,

@@ -25,26 +25,6 @@ object IValue {
   }
 }
 
-/** ADT message family core fields (FIXTURES.md §1). */
-final case class AdtMessage(
-    msgType: String,
-    sourceMessageId: String,
-    sourceSystem: String,
-    recordedDateTimeUs: Long,
-    eventOccurredDateTimeUs: Option[Long],
-    mrn: String,
-    nhsNumber: Option[String],
-    visitNumber: Option[String],
-    fullLocationString: IValue[String],
-    patientClass: IValue[String],
-    patientGivenName: IValue[String],
-    patientFamilyName: IValue[String],
-    admissionDateTimeUs: Option[Long],
-    dischargeDateTimeUs: Option[Long]) {
-  /** X1: bestGuessAtValidFrom. */
-  def validFromUs: Long = eventOccurredDateTimeUs.getOrElse(recordedDateTimeUs)
-}
-
 object TriState {
   import org.apache.spark.sql.Column
   import org.apache.spark.sql.functions._

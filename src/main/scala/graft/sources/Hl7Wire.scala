@@ -20,9 +20,10 @@ import graft.functions.Hl7Timestamp.hl7TsUs
   * it compiles into whole-stage codegen, a segment or field read twice in
   * one projection is scanned once (subexpression elimination), and a
   * raw-message DataFrame at any scale parses in one narrow map stage. The
-  * positional builders (OBX/NTE ownership, lab order groups) still group
-  * the native segment array with array higher-order functions, which run
-  * interpreted.
+  * positional builders (the lab orders, problems and flowsheets here, the
+  * lab order groups of [[LabFunnel.orderGroups]]) share one ownership
+  * rule, [[owned]], over the native segment array; it runs as array
+  * higher-order functions, interpreted.
   *
   * Conventions:
   *  - segments split on CR (wire standard) or LF (file corpora);
@@ -47,6 +48,51 @@ object Hl7Wire {
   /** All segments with the given id (OBX/OBR/NTE repeat). */
   def segmentsOf(raw: Column, id: String): Column =
     Hl7Fields.segments(raw, Some(id))
+
+  /** The segments of a raw message as `(seg, pos)` structs, `pos` the
+    * segment's 0-based index: the positions [[owned]] compares. */
+  def positioned(raw: Column): Column =
+    transform(segments(raw), (s, i) => struct(s.as("seg"), i.as("pos")))
+
+  /** The [[positioned]] entries with segment id `id`, in message order. */
+  def positionedOf(ps: Column, id: String): Column =
+    filter(ps, x => substring(x.getField("seg"), 1, 3) === id)
+
+  /** The wire format's ownership rule. HL7 v2 has no nesting markers: a
+    * segment belongs to the last anchor above it (an OBX to its OBR, an
+    * NTE to its PRB or OBX). Of `members`, the entries that anchor `k` of
+    * `anchors` owns: those after it and before anchor `k + 1`, or before
+    * the end of the message for the last anchor. `k = -1` names the
+    * message head, the entries before the first anchor, which no anchor
+    * owns. Both arrays are [[positioned]] entries in message order.
+    */
+  def owned(anchors: Column, k: Column, members: Column): Column = {
+    val lo = coalesce(get(anchors, k).getField("pos"), lit(-1))
+    val hi = coalesce(get(anchors, k + 1).getField("pos"), lit(Int.MaxValue))
+    filter(members, x => x.getField("pos") > lo && x.getField("pos") < hi)
+  }
+
+  /** `df` with one row per `anchorId` segment of the frame in `raw` (a
+    * frame with none yields no row): `__idx`, the anchor's 0-based index
+    * among its kind; `__anchor`, its text; `__owned`, the [[positioned]]
+    * `memberId` segments it [[owned owns]]. The anchor and member arrays
+    * are columns, so a frame evaluates each once, however many anchors
+    * it has; `explode_outer` plus a null filter, not `explode`, keeps the
+    * optimizer from inferring a `size()` filter that re-runs them.
+    */
+  private def byAnchor(df: DataFrame, raw: Column, anchorId: String,
+                       memberId: String): DataFrame = {
+    val ps = positioned(raw)
+    df.withColumn("__anchors", positionedOf(ps, anchorId))
+      .withColumn("__members", positionedOf(ps, memberId))
+      .select(col("*"),
+        posexplode_outer(col("__anchors")).as(Seq("__idx", "__a")))
+      .filter(col("__a").isNotNull)
+      .withColumn("__anchor", col("__a").getField("seg"))
+      .withColumn("__owned",
+        owned(col("__anchors"), col("__idx"), col("__members")))
+      .drop("__anchors", "__members", "__a")
+  }
 
   private[graft] def nullIfEmpty(c: Column): Column = when(c === "", lit(null)).otherwise(c)
 
@@ -87,7 +133,6 @@ object Hl7Wire {
     *
     *   ADT^*                      → adt
     *   ORU^R01  WIN_PATH          → labOrders (generic nested star shape)
-    *                                + winPathLabs (full-fidelity builder)
     *   ORU^R01  CO_PATH           → coPathLabs
     *   ORU^R01  BIO_CONNECT       → bioConnectLabs
     *   ORU^R01  BANK_MANAGER      → bankManagerLabs
@@ -106,8 +151,8 @@ object Hl7Wire {
     *   ADT with no trigger        → dead (unhandled_type:ADT^)
     *
     * Every frame lands in exactly one of the primary channels or in
-    * `dead`; `winPathLabs`, `impliedAdt` and `infections` re-read frames
-    * a primary channel already takes.
+    * `dead`; `impliedAdt` and `infections` re-read frames a primary
+    * channel already takes.
     *
     * Every channel is built on its first read and then kept. Building a
     * channel means constructing its family parser over the tagged input,
@@ -116,12 +161,11 @@ object Hl7Wire {
     * more than parsing a small micro-batch. A consumer that reads two
     * channels (an ADT-only batch reads `adt`, and `dead` only when the
     * batch holds an unroutable frame) therefore never analyses the other
-    * fifteen parsers, nor the tagging projection when it reads none.
+    * fourteen parsers, nor the tagging projection when it reads none.
     */
   sealed trait RoutedWire {
     def adt: DataFrame
     def labOrders: DataFrame
-    def winPathLabs: DataFrame
     def coPathLabs: DataFrame
     def ablLabs: DataFrame
     def bioConnectLabs: DataFrame
@@ -233,7 +277,6 @@ object Hl7Wire {
     val handled = ch.isNotNull
     // Secondary channels re-read frames a primary channel already takes.
     val secondary = Map(
-      "winPathLabs" -> on("labOrders"),
       // the reference also derives an implied ADT (person/visit context)
       // from every ORU^R01 and ORM^O01 (IdsOperations.java:431-460
       // buildAndAddAdtMessage with fromAdtStream=false) — parse failures
@@ -267,7 +310,6 @@ object Hl7Wire {
 
     val parsers: Map[String, (DataFrame, String) => DataFrame] = Map(
       "adt" -> parseAdt, "labOrders" -> parseLabOrders,
-      "winPathLabs" -> LabFunnel.parseWinPathResults,
       "coPathLabs" -> LabFunnel.parseCoPath, "ablLabs" -> LabFunnel.parseAbl90,
       "bioConnectLabs" -> LabFunnel.parseBioConnect,
       "bankManagerLabs" -> LabFunnel.parseBankManager,
@@ -290,7 +332,6 @@ object Hl7Wire {
       }
       def adt = this("adt")
       def labOrders = this("labOrders")
-      def winPathLabs = this("winPathLabs")
       def coPathLabs = this("coPathLabs")
       def ablLabs = this("ablLabs")
       def bioConnectLabs = this("bioConnectLabs")
@@ -367,8 +408,8 @@ object Hl7Wire {
     triggerToOp(trigger, lit(null).cast("string"))
 
   /** Parse raw ADT messages into the interchange ADT shape
-    * ([[graft.model.AdtMessage]] column-for-column, plus `trigger` and
-    * the X1 `validFromUs` best-guess). Messages missing MSH parse to
+    * (the AdtMessage family of FIXTURES.md §1, plus `trigger` and the X1
+    * `validFromUs` best-guess). Messages missing MSH parse to
     * null fields — route through [[graft.streaming.DeadLetter.adtRules]]
     * for the clean/dead split. Input columns ride along after the parsed
     * fields (name clashes resolve to the parsed field), so the dead
@@ -542,10 +583,9 @@ object Hl7Wire {
     * IdsOperations.java:442-477).
     *
     * Grouping is positional, as the wire format defines it: an OBX
-    * belongs to the most recent OBR above it. Implemented entirely with
-    * array higher-order functions (transform-with-index / filter /
-    * posexplode; the lambdas run interpreted), so the builder stays a
-    * narrow projection —
+    * belongs to the most recent OBR above it ([[owned]]). Implemented
+    * entirely with array higher-order functions and posexplode (the
+    * lambdas run interpreted), so the builder stays a narrow projection —
     * message count in, order count out, zero shuffles at any scale.
     *
     * Output per order: sourceMessageId/sourceSystem/mrn context,
@@ -557,35 +597,11 @@ object Hl7Wire {
     */
   def parseLabOrders(df: DataFrame, rawCol: String): DataFrame = {
     val raw = col(rawCol)
-    val segs = segments(raw)
-    // (segment text, position) pairs; positions anchor OBX→OBR ownership
-    val withPos = transform(segs,
-      (s, i) => struct(s.as("seg"), i.as("pos")))
-    val obrs = filter(withPos,
-      x => substring(x.getField("seg"), 1, 3) === "OBR")
-    val obxs = filter(withPos,
-      x => substring(x.getField("seg"), 1, 3) === "OBX")
-
     val msh = segment(raw, "MSH")
     val pid = segment(raw, "PID")
-
-    val exploded = df
-      .withColumn("__obrs", obrs)
-      .withColumn("__obxs", obxs)
-      .select(col("*"),
-        posexplode_outer(col("__obrs")).as(Seq("orderIdx", "__obr")))
-      .filter(col("__obr").isNotNull)
-
-    val obrSeg = col("__obr").getField("seg")
-    val obrPos = col("__obr").getField("pos")
-    // this order owns OBX rows strictly between its OBR and the next OBR
-    val nextPos = coalesce(
-      get(col("__obrs"), col("orderIdx") + 1).getField("pos"),
-      size(segments(raw)))
-    val mine = filter(col("__obxs"),
-      o => o.getField("pos") > obrPos && o.getField("pos") < nextPos)
+    val obrSeg = col("__anchor")
     // one split per OBX, not one per field — HOF lambdas get no CSE
-    val results = transform(mine, o =>
+    val results = transform(col("__owned"), o =>
       let(split(o.getField("seg"), "\\|")) { xf =>
         struct(
           gf(xf, 1).cast("int").as("setId"),
@@ -604,12 +620,12 @@ object Hl7Wire {
       "orderIdx", "fillerOrderNumber", "testId", "codingSystem",
       "requestedDateTimeUs", "observationDateTimeUs", "resultStatus",
       "results")
-    exploded.select(
+    byAnchor(df, raw, "OBR", "OBX").select(
       Seq(
         mshFld(msh, 10).as("sourceMessageId"),
         mshFld(msh, 3).as("sourceSystem"),
         cmp(rep1(fld(pid, 3)), 1).as("mrn"),
-        col("orderIdx"),
+        col("__idx").as("orderIdx"),
         cmp(fld(obrSeg, 3), 1).as("fillerOrderNumber"),
         cmp(fld(obrSeg, 4), 1).as("testId"),
         cmp(fld(obrSeg, 4), 3).as("codingSystem"),
@@ -634,34 +650,17 @@ object Hl7Wire {
     val msh = segment(raw, "MSH")
     val pid = segment(raw, "PID")
     val pv1 = segment(raw, "PV1")
-    val prb = col("__prb").getField("seg")
-    val withPos = transform(segments(raw),
-      (s, i) => struct(s.as("seg"), i.as("pos")))
-    def ofId(id: String) = filter(withPos,
-      x => substring(x.getField("seg"), 1, 3) === id)
-
-    val exploded = df
-      .withColumn("__prbs", ofId("PRB"))
-      .withColumn("__ntes", ofId("NTE"))
-      .select(col("*"),
-        posexplode_outer(col("__prbs")).as(Seq("__prbIdx", "__prb")))
-      .filter(col("__prb").isNotNull)
-
+    val prb = col("__anchor")
     // a problem's comment = all NTE comment repetitions under its PRB,
     // space-joined (PatientProblemFactory.java:44-50 concatenates every
     // NTE-3 repetition; we trim the factory's leading-space artifact)
-    val prbPos = col("__prb").getField("pos")
-    val nextPrbPos = coalesce(
-      get(col("__prbs"), col("__prbIdx") + 1).getField("pos"),
-      size(segments(raw)))
-    val myNtes = filter(col("__ntes"),
-      n => n.getField("pos") > prbPos && n.getField("pos") < nextPrbPos)
+    val myNtes = col("__owned")
     val commentParts = flatten(transform(myNtes,
       n => split(coalesce(fld(n.getField("seg"), 3), lit("")), "~")))
     val comment = when(size(myNtes) > 0,
       nullIfEmpty(trim(array_join(commentParts, " "))))
 
-    exploded
+    byAnchor(df, raw, "PRB", "NTE")
       .withColumn("comment", comment)
       .withColumn("sourceMessageId", mshFld(msh, 10))
       .withColumn("sourceSystem", mshFld(msh, 3))
@@ -677,7 +676,7 @@ object Hl7Wire {
       .withColumn("resolvedTimeUs", hl7TsUs(fld(prb, 9)))
       .withColumn("status", cmp(fld(prb, 13), 1))
       .withColumn("onsetTimeUs", hl7TsUs(fld(prb, 16)))
-      .drop("__prb", "__prbs", "__ntes", "__prbIdx")
+      .drop("__idx", "__anchor", "__owned")
   }
 
   /** ADT^A05 → patient-infection rows, one per repetition of the custom
@@ -870,36 +869,16 @@ object Hl7Wire {
     */
   def parseFlowsheets(df: DataFrame, rawCol: String): DataFrame = {
     val raw = col(rawCol)
-    val withPos = transform(segments(raw),
-      (s, i) => struct(s.as("seg"), i.as("pos")))
-    def ofId(id: String) = filter(withPos,
-      x => substring(x.getField("seg"), 1, 3) === id)
-
     val msh = segment(raw, "MSH")
     val pid = segment(raw, "PID")
     val pv1 = segment(raw, "PV1")
-
-    val exploded = df
-      .withColumn("__obxs", ofId("OBX"))
-      .withColumn("__ntes", ofId("NTE"))
-      .select(col("*"),
-        posexplode_outer(col("__obxs")).as(Seq("obxIdx", "__obx")))
-      .filter(col("__obx").isNotNull)
-
-    val x = col("__obx").getField("seg")
-    val obxPos = col("__obx").getField("pos")
-    val nextObxPos = coalesce(
-      get(col("__obxs"), col("obxIdx") + 1).getField("pos"),
-      size(segments(raw)))
-    val comments = transform(
-      filter(col("__ntes"),
-        n => n.getField("pos") > obxPos && n.getField("pos") < nextObxPos),
-      n => fld(n.getField("seg"), 3))
+    val x = col("__anchor")
+    val comments = transform(col("__owned"), n => fld(n.getField("seg"), 3))
     val rawType = fld(x, 2)
     val value = rep1(fld(x, 5))
     val setId = fld(x, 1).cast("int")
 
-    exploded.select(
+    byAnchor(df, raw, "OBX", "NTE").select(
       Seq(
         concat(mshFld(msh, 10), lit("$"),
           lpad(setId.cast("string"), 2, "0")).as("sourceMessageId"),

@@ -78,17 +78,10 @@ object LabFunnel {
   // positional segment groups
   // ------------------------------------------------------------------
 
-  private def segsWithPos(raw: Column): Column =
-    transform(segments(raw), (s, i) => struct(s.as("seg"), i.as("pos")))
-
-  private def ofId(wp: Column, id: String): Column =
-    filter(wp, x => substring(x.getField("seg"), 1, 3) === id)
-
   /** Per-message order groups: one struct per anchor segment (OBR for
     * result messages, ORC for order messages), each carrying its ORC/OBR
-    * pair plus the OBX and NTE segments (with positions) that sit between
-    * this anchor and the next — the wire format's positional ownership
-    * rule, same anchoring as [[Hl7Wire.parseLabOrders]].
+    * pair plus the OBX and NTE segments (with positions) the anchor
+    * [[Hl7Wire.owned owns]].
     */
   def orderGroups(raw: Column, anchorId: String): Column =
     // bind the shared per-row arrays once: inside the per-anchor lambda
@@ -96,28 +89,22 @@ object LabFunnel {
     // subtree (the positional transform + filter over the message's
     // segment array) per anchor — HOF lambdas get no subexpression
     // elimination
-    let(segsWithPos(raw)) { wp =>
-    let(ofId(wp, anchorId)) { anchors =>
-    let(ofId(wp, "ORC")) { orcs =>
-    let(ofId(wp, "OBR")) { obrs =>
-    let(ofId(wp, "OBX")) { obxs =>
-    let(ofId(wp, "NTE")) { ntes =>
-    let(size(wp)) { total =>
+    let(positioned(raw)) { ps =>
+    let(positionedOf(ps, anchorId)) { anchors =>
+    let(positionedOf(ps, "ORC")) { orcs =>
+    let(positionedOf(ps, "OBR")) { obrs =>
+    let(positionedOf(ps, "OBX")) { obxs =>
+    let(positionedOf(ps, "NTE")) { ntes =>
     transform(anchors, (a, k) => {
-      val lo = a.getField("pos")
-      val hi = coalesce(get(anchors, k + 1).getField("pos"), total)
-      val prevLo = coalesce(get(anchors, k - 1).getField("pos"), lit(-1))
-      def within(arr: Column) =
-        filter(arr, x => x.getField("pos") > lo && x.getField("pos") < hi)
       val obrSeg =
         if (anchorId == "OBR") a.getField("seg")
-        else get(within(obrs), lit(0)).getField("seg")
+        else get(owned(anchors, k, obrs), lit(0)).getField("seg")
       val orcSeg =
         if (anchorId == "ORC") a.getField("seg")
         else {
-          // the ORC directly preceding this OBR (optional in ORU)
-          val cands = filter(orcs,
-            x => x.getField("pos") > prevLo && x.getField("pos") < lo)
+          // the ORC directly preceding this OBR (optional in ORU): the
+          // last one the previous anchor, or the message head, owns
+          val cands = owned(anchors, k - 1, orcs)
           get(cands, size(cands) - 1).getField("seg")
         }
       // Segments split into field arrays ONCE at group construction —
@@ -130,15 +117,14 @@ object LabFunnel {
       // reads it has not been re-measured.)
       struct(orcSeg.as("orc"), obrSeg.as("obr"),
         split(orcSeg, "\\|").as("orcF"), split(obrSeg, "\\|").as("obrF"),
-        transform(within(obxs), x => struct(
+        transform(owned(anchors, k, obxs), x => struct(
           x.getField("seg").as("seg"),
           split(x.getField("seg"), "\\|").as("f"),
           x.getField("pos").as("pos"))).as("obxs"),
-        transform(within(ntes), x => struct(
+        transform(owned(anchors, k, ntes), x => struct(
           split(x.getField("seg"), "\\|").as("f"),
-          x.getField("pos").as("pos"))).as("ntes"),
-        lo.as("lo"), hi.as("hi"))
-    })}}}}}}}
+          x.getField("pos").as("pos"))).as("ntes"))
+    })}}}}}}
 
   // ------------------------------------------------------------------
   // NTE notes → questions + comments
@@ -458,9 +444,9 @@ object LabFunnel {
     val results =
       if (!withResults) lit(null).cast("string") // placeholder, rebuilt below
       else {
-        val raws = transform(g.getField("obxs"), o =>
+        val raws = transform(g.getField("obxs"), (o, j) =>
           resultStruct(o.getField("f"), o.getField("pos"),
-            obxNotes(g, o), resultTime, None, forceNumeric = false,
+            obxNotes(g, j), resultTime, None, forceNumeric = false,
             epicOrderNumber = obrNum))
         winPathResults(raws, obrNum)
       }
@@ -486,16 +472,12 @@ object LabFunnel {
     }
   }
 
-  /** NTE lines owned by one OBX: positions between it and the next OBX
-    * (LabResultBuilder.setComments via per-observation notes).
+  /** NTE lines owned by the group's OBX `j`: the group's NTEs between it
+    * and the next OBX (LabResultBuilder.setComments via per-observation
+    * notes).
     */
-  private def obxNotes(g: Column, o: Column): Column = {
-    val pos = o.getField("pos")
-    val nexts = filter(g.getField("obxs"), n => n.getField("pos") > pos)
-    val hi = coalesce(get(nexts, lit(0)).getField("pos"), g.getField("hi"))
-    array_join(noteTexts(filter(g.getField("ntes"),
-      n => n.getField("pos") > pos && n.getField("pos") < hi)), "\n")
-  }
+  private def obxNotes(g: Column, j: Column): Column =
+    array_join(noteTexts(owned(g.getField("obxs"), j, g.getField("ntes"))), "\n")
 
   /** WinPath per-order result post-processing: ISOLATE typing + sub-id
     * merging. An OBX with test code ISOLATE becomes a LAB_ISOLATE result
@@ -704,8 +686,8 @@ object LabFunnel {
       val core = orderCore(g)
       val obrF = g.getField("obrF")
       val t = hl7TsUs(gf(obrF, 14))
-      val results = transform(g.getField("obxs"), o =>
-        resultStruct(o.getField("f"), o.getField("pos"), obxNotes(g, o),
+      val results = transform(g.getField("obxs"), (o, j) =>
+        resultStruct(o.getField("f"), o.getField("pos"), obxNotes(g, j),
           hl7TsUs(gf(o.getField("f"), 14)), Some("N"), forceNumeric = true,
           epicOrderNumber = lit(null).cast("string")))
       val base = Map(
@@ -741,8 +723,8 @@ object LabFunnel {
       val core = orderCore(g)
       val obrF = g.getField("obrF")
       val t = hl7TsUs(gf(obrF, 14))
-      val results = transform(g.getField("obxs"), o =>
-        resultStruct(o.getField("f"), o.getField("pos"), obxNotes(g, o),
+      val results = transform(g.getField("obxs"), (o, j) =>
+        resultStruct(o.getField("f"), o.getField("pos"), obxNotes(g, j),
           hl7TsUs(gf(o.getField("f"), 14)), Some("N"), forceNumeric = true,
           epicOrderNumber = lit(null).cast("string")))
       val base = Map(
@@ -782,8 +764,8 @@ object LabFunnel {
       val obrF = g.getField("obrF")
       val t = hl7TsUs(gf(obrF, 7))
       val oc = core("orderControlId")
-      val results = transform(g.getField("obxs"), o =>
-        resultStruct(o.getField("f"), o.getField("pos"), obxNotes(g, o),
+      val results = transform(g.getField("obxs"), (o, j) =>
+        resultStruct(o.getField("f"), o.getField("pos"), obxNotes(g, j),
           hl7TsUs(gf(o.getField("f"), 14)), None, forceNumeric = false,
           epicOrderNumber = lit(null).cast("string")))
       val base = Map(

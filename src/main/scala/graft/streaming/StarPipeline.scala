@@ -351,8 +351,9 @@ object StarPipeline {
   }
 
   /** The complete bitemporal version table (hot ∪ cold) — query it with
-    * [[graft.functions.GraftFunctions.validAsOfBitemporal]] /
-    * `storedAsOf` for both-axes time travel over the persisted star.
+    * [[graft.functions.GraftFunctions.storedAsOf]] plus the valid-interval
+    * filter `valid_from <= t < valid_until` for both-axes time travel over
+    * the persisted star.
     */
   def readBitemporal(spark: SparkSession, cfg: Config): Option[DataFrame] =
     readFull(spark, cfg, "bt_table")

@@ -236,13 +236,21 @@ class Hl7WireSpec extends SparkSpecBase {
       "PRB|AD|20240101000000|C2^Two^I10|2",
       "PRB|AD|20240101000000|C3^Three^I10|3",
       "NTE|1||only for three").mkString("\r")
-    val rows = Hl7Wire.parseProblems(Seq(raw).toDF("raw"), "raw")
+    // an NTE above the first PRB belongs to no problem
+    val headNote = Seq(
+      "MSH|^~\\&|EPIC|PL|||20240101000000|X|PPR^PC1|M2|P|2.4",
+      "PID|1||P2^^^MRN^MRN",
+      "NTE|1||before any problem",
+      "PRB|AD|20240101000000|C4^Four^I10|4").mkString("\r")
+    val rows = Hl7Wire.parseProblems(Seq(raw, headNote).toDF("raw"), "raw")
       .orderBy("conditionCode").select("conditionCode", "comment")
       .as[(String, Option[String])].collect().toSeq
+    // C2 owns nothing; C3, the last PRB, owns the message tail
     assert(rows == Seq(
       ("C1", Some("first note second rep third")),
       ("C2", None),
-      ("C3", Some("only for three"))))
+      ("C3", Some("only for three")),
+      ("C4", None)))
   }
 
   test("golden demographics: PID/PV2 fields the factory reads") {
@@ -379,10 +387,19 @@ class Hl7WireSpec extends SparkSpecBase {
       "OBR|2||ORD2^LAB|UE^Urea and Electrolytes^WinPath|||20240102040000",
       "OBX|1|NM|NA^Sodium||140|mmol/L|135-145|N||||||20240102040000"
     ).mkString("\r")
+    // an OBX above the first OBR belongs to no order; an OBR directly
+    // followed by the next one owns no result
+    val edges = Seq(
+      "MSH|^~\\&|WINPATH|UCLH|||20240102030405||ORU^R01|MSG004|P|2.4",
+      "OBX|1|NM|STRAY^Stray||1|||||F",
+      "OBR|1||ORD3^LAB|MG^Magnesium^WinPath|||20240102030405",
+      "OBR|2||ORD4^LAB|K^Potassium^WinPath|||20240102030405",
+      "OBX|1|NM|K^Potassium||4.1|mmol/L|||||F"
+    ).mkString("\r")
 
-    val rows = Hl7Wire.parseLabOrders(Seq(oruRaw).toDF("raw"), "raw")
-      .orderBy("orderIdx").collect()
-    assert(rows.length == 2)
+    val rows = Hl7Wire.parseLabOrders(Seq(oruRaw, edges).toDF("raw"), "raw")
+      .orderBy("sourceMessageId", "orderIdx").collect()
+    assert(rows.length == 4)
 
     val fbc = rows(0)
     assert(fbc.getAs[String]("sourceMessageId") == "MSG003")
@@ -407,6 +424,13 @@ class Hl7WireSpec extends SparkSpecBase {
       .map(_.getAs[String]("observationId")) == Seq("NA"))
     // trailing-order DTM parsed from its own OBR (OBR-7 observation time)
     assert(ue.getAs[Long]("observationDateTimeUs") == 1704168000000000L)
+
+    def resultIds(r: org.apache.spark.sql.Row) =
+      r.getSeq[org.apache.spark.sql.Row](r.fieldIndex("results"))
+        .map(_.getAs[String]("observationId"))
+    assert(rows.drop(2).map(r =>
+      (r.getAs[String]("fillerOrderNumber"), resultIds(r))).toSeq == Seq(
+      ("ORD3", Seq()), ("ORD4", Seq("K"))))
   }
 
   test("golden PPR: problem-list message explodes one row per PRB") {
@@ -545,10 +569,17 @@ class Hl7WireSpec extends SparkSpecBase {
       "OBX|3|DT|21^LAST MENSTRUAL PERIOD||20240321||||||F|||20240405115500",
       "OBX|4|NM|5^HEART RATE||||||||F|||20240405120000" // tombstone
     ).mkString("\r")
+    // an NTE above the first OBX belongs to no observation; the last
+    // OBX owns the message tail
+    val edges = Seq(
+      "MSH|^~\\&|CAREVUE|Vitals|||20240405120000||ORU^R01|FS02|P|2.4",
+      "NTE|1||before any observation",
+      "OBX|1|NM|5^HEART RATE||88|bpm|||||F|||20240405115500",
+      "NTE|1||tail note").mkString("\r")
 
-    val rows = Hl7Wire.parseFlowsheets(Seq(r30).toDF("raw"), "raw")
+    val rows = Hl7Wire.parseFlowsheets(Seq(r30, edges).toDF("raw"), "raw")
       .orderBy("sourceMessageId").collect()
-    assert(rows.length == 4)
+    assert(rows.length == 5)
     val hr = rows(0)
     assert(hr.getAs[String]("sourceMessageId") == "FS01$01")
     assert(hr.getAs[String]("mrn") == "40800000")
@@ -574,6 +605,9 @@ class Hl7WireSpec extends SparkSpecBase {
     val del = rows(3)
     assert(del.getAs[String]("status") == "DELETE")
     assert(del.isNullAt(del.fieldIndex("numericValue")))
+
+    assert(rows(4).getAs[String]("sourceMessageId") == "FS02$01")
+    assert(rows(4).getAs[String]("comment") == "tail note")
   }
 
   test("end-to-end: flowsheet wire messages fold into visit_observation") {
@@ -735,9 +769,6 @@ class Hl7WireSpec extends SparkSpecBase {
       Seq("R1"))
     assert(r.labOrders.select("sourceMessageId").as[String].collect()
       .toSeq == Seq("R2"))
-    // the WinPath result stream also feeds the full-fidelity builder
-    assert(r.winPathLabs.select("sourceMessageId").as[String].collect()
-      .toSeq == Seq("R2_01"))
     assert(r.flowsheets.select("sourceMessageId").as[String].collect()
       .toSeq == Seq("R3$01"))
     assert(r.problems.select("sourceMessageId").as[String].collect()
@@ -751,8 +782,7 @@ class Hl7WireSpec extends SparkSpecBase {
     val dead = r.dead.select("reason").as[String].collect().toSet
     assert(dead == Set("unhandled_type:SIU^S12", "unroutable",
       "unknown_coding_system"))
-    // channels + dead partition the input exactly (winPathLabs mirrors
-    // labOrders over the same WIN_PATH rows, so it is excluded)
+    // channels + dead partition the input exactly
     assert(r.adt.count() + r.labOrders.count() + r.flowsheets.count() +
       r.problems.count() + r.consults.count() + r.ablLabs.count() +
       r.labOrderAcks.count() + r.dead.count() == 10)
@@ -786,7 +816,7 @@ class Hl7WireSpec extends SparkSpecBase {
     val frames = (mixedRaws ++ extra).zipWithIndex.toDF("raw", "frame")
     val r = Hl7Wire.route(frames, "raw", adtSenderAllowlist = Seq("EPIC"))
     val primary = channels.filterNot { case (name, _) =>
-      Set("winPathLabs", "impliedAdt", "infections").contains(name) }
+      Set("impliedAdt", "infections").contains(name) }
     val landed = primary.flatMap { case (name, ch) =>
       ch(r).select("frame").distinct().as[Int].collect().map(_ -> name) }
     val byFrame = landed.groupBy(_._1).map { case (f, ls) => f -> ls.map(_._2) }
@@ -797,9 +827,6 @@ class Hl7WireSpec extends SparkSpecBase {
       Set("unhandled_type:SIU^S12", "unroutable", "unknown_coding_system",
         "unhandled_type:ADT^", "skipped_sender:ROGUE",
         "ignored_coding_system:BLOOD_PRODUCTS"))
-    // winPathLabs mirrors labOrders
-    assert(r.winPathLabs.select("frame").distinct().as[Int].collect().toSet ==
-      r.labOrders.select("frame").distinct().as[Int].collect().toSet)
     // the presence probe agrees with every channel it names
     for ((name, ch) <- channels)
       assert(r.holds(name) == !ch(r).isEmpty, name)
@@ -809,7 +836,7 @@ class Hl7WireSpec extends SparkSpecBase {
   /** Every channel of [[Hl7Wire.RoutedWire]], in declaration order. */
   private val channels: Seq[(String, Hl7Wire.RoutedWire => DataFrame)] = Seq(
     "adt" -> (_.adt), "labOrders" -> (_.labOrders),
-    "winPathLabs" -> (_.winPathLabs), "coPathLabs" -> (_.coPathLabs),
+    "coPathLabs" -> (_.coPathLabs),
     "ablLabs" -> (_.ablLabs), "bioConnectLabs" -> (_.bioConnectLabs),
     "bankManagerLabs" -> (_.bankManagerLabs),
     "imagingLabs" -> (_.imagingLabs), "labOrderAcks" -> (_.labOrderAcks),
@@ -875,7 +902,6 @@ class Hl7WireSpec extends SparkSpecBase {
     val expected = Map[String, (Long, String)](
       "adt" -> (1L, "cd106f41571fe518"),
       "labOrders" -> (1L, "a438642f61ce2f8e"),
-      "winPathLabs" -> (1L, "db20ab78c715fb12"),
       "coPathLabs" -> (0L, "599fbc9239487fc0"),
       "ablLabs" -> (1L, "5c38196949fc54ce"),
       "bioConnectLabs" -> (0L, "71c40fd938c9a180"),

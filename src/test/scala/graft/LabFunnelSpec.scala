@@ -319,14 +319,37 @@ class LabFunnelSpec extends SparkSpecBase {
       "OBR|1|P1^X|F1^Y|GLU^Glucose|||20240501115500|||||||20240501115800",
       "OBX|1|NM|GLU^Glucose||5.1|||||F",
       "OBX|2|NM|K^Potassium||4.0|||||F").mkString("\r")
-    val rows = LabFunnel.parseBioConnect(df(ok, two), "raw")
-      .orderBy("sourceMessageId").collect()
+    // order groups: an NTE above the first OBR belongs to no order, an
+    // OBR directly followed by the next one owns nothing, and the last
+    // OBR owns the message tail
+    val edges = Seq(
+      "MSH|^~\\&|BIO-CONNECT|UCLH|||20240501120000||ORU^R01|BC03|P|2.4",
+      "NTE|1||before any order",
+      "ORC|RE",
+      "OBR|1|P3^X|F3^Y|GLU^Glucose|||20240501115500|||||||20240501115800",
+      "OBR|2|P4^X|F4^Y|K^Potassium|||20240501115500|||||||20240501115800",
+      "OBX|1|NM|K^Potassium||4.0|||||F",
+      "NTE|1||tail note").mkString("\r")
+    val rows = LabFunnel.parseBioConnect(df(ok, two, edges), "raw")
+      .orderBy("sourceMessageId", "labSpecimenNumber").collect()
     val o = rows(0)
     assert(o.getAs[String]("sourceMessageId") == "BC01")
     assert(o.getAs[String]("labSpecimenNumber") == "PLACER9")
     assert(o.isNullAt(o.fieldIndex("requestedTimeUs"))) // deliberately unknown
     assert(o.isNullAt(o.fieldIndex("error")))
     assert(rows(1).getAs[String]("error") == "bioconnect_not_single_obx")
+    val empty = rows(2)
+    assert(empty.getAs[String]("labSpecimenNumber") == "P3")
+    assert(empty.getSeq[Row](empty.fieldIndex("results")).isEmpty)
+    assert(empty.isNullAt(empty.fieldIndex("comments")))
+    assert(empty.getAs[String]("error") == "bioconnect_not_single_obx")
+    val tail = rows(3)
+    assert(tail.getAs[String]("labSpecimenNumber") == "P4")
+    assert(tail.getAs[String]("comments") == "tail note")
+    assert(tail.getSeq[Row](tail.fieldIndex("results"))
+      .map(r => (r.getAs[String]("testCode"), r.getAs[String]("notes"))) ==
+      Seq(("K", "tail note")))
+    assert(tail.isNullAt(tail.fieldIndex("error")))
   }
 
   test("golden Bank Manager: OBR temporal split, notes → clinical info, CA delete") {

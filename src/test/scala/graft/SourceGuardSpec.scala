@@ -11,19 +11,24 @@ import scala.jdk.CollectionConverters._
   */
 class SourceGuardSpec extends AnyFunSuite {
 
-  /** Files under `roots` whose text matches `token`, relative to their
-    * root, sorted. */
-  private def filesMatching(token: String, roots: String*): List[String] =
+  /** One entry per match of `token` in the files under `roots`: the
+    * file's path relative to its root, sorted. */
+  private def sitesMatching(token: String, roots: String*): List[String] =
     roots.toList.flatMap { r =>
       val root = Paths.get(r)
       val walk = Files.walk(root)
       try walk.iterator().asScala
         .filter(_.toString.endsWith(".scala"))
-        .filter(p => token.r.findFirstIn(
-          new String(Files.readAllBytes(p), UTF_8)).isDefined)
-        .map(p => root.relativize(p).toString).toList
+        .flatMap(p => token.r.findAllIn(
+          new String(Files.readAllBytes(p), UTF_8))
+          .map(_ => root.relativize(p).toString)).toList
       finally walk.close()
     }.sorted
+
+  /** Files under `roots` whose text matches `token`, relative to their
+    * root, sorted. */
+  private def filesMatching(token: String, roots: String*): List[String] =
+    sitesMatching(token, roots: _*).distinct
 
   test("one commit path: only VersionedDir renames a file atomically") {
     // every persisted family swaps its pointer through
@@ -104,6 +109,16 @@ class SourceGuardSpec extends AnyFunSuite {
     val flagged = filesMatching(
       "\\bportable\\s*:\\s*Boolean|\\bportable\\s*=(?!=)", "src/main/scala")
     assert(flagged.isEmpty, flagged)
+  }
+
+  test("one segment-ownership rule: one site pairs segments with their " +
+      "index") {
+    // which segments an HL7 anchor owns is Hl7Wire.owned, over the
+    // (seg, pos) entries of Hl7Wire.positioned; a second pairing is a
+    // second copy of the OBR/OBX grouping to keep in step with it
+    val pairings = sitesMatching(
+      "\\w+\\.as\\(\"seg\"\\)\\s*,\\s*\\w+\\.as\\(\"pos\"\\)", "src/main/scala")
+    assert(pairings == List("graft/sources/Hl7Wire.scala"), pairings)
   }
 
   test("one stream starter: only FoldStream starts a streaming query") {
