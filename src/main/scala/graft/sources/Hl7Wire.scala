@@ -64,7 +64,8 @@ object Hl7Wire {
     * `anchors` owns: those after it and before anchor `k + 1`, or before
     * the end of the message for the last anchor. `k = -1` names the
     * message head, the entries before the first anchor, which no anchor
-    * owns. Both arrays are [[positioned]] entries in message order.
+    * owns. Both arrays hold structs with the segment's `pos` (the
+    * [[positioned]] entries, or structs built from them) in message order.
     */
   def owned(anchors: Column, k: Column, members: Column): Column = {
     val lo = coalesce(get(anchors, k).getField("pos"), lit(-1))
